@@ -123,16 +123,6 @@ object IndexMaintenance {
     }
   }
 
-  /** Fixed-cadence form (the pre-r15 signature; the five index-backed
-    * streams pass their `compactEvery` knob through here when no cost
-    * threshold is configured).
-    */
-  def maybeCompact(every: Option[Int], batchId: Long,
-                   gaugePrefix: String, dir: String)
-                  (compact: => CompactStats): Unit =
-    maybeCompact(CompactPolicy(every = every), batchId, gaugePrefix, dir,
-      0L)(compact)
-
   /** Count of data files under `path` (sidecars and `_SUCCESS`
     * markers excluded) — the probe-cost gauge gate_stages tracks.
     */

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{BinaryType, StructField}
 import graft.ext.Cdc
 
 /** Incremental shift-invariant BINARY dedup against a persisted CDC
@@ -46,58 +45,18 @@ object StreamingCdcDup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
-    val matchesPath = s"$workDir/matches"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("blob", BinaryType))))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // registry-delta cleanup (the StreamingNearDup convention)
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          // The fused kernel: cross-index + within-batch pairs →
-          // matches/batch_id=N, then the index append — from ONE
-          // chunking of the batch (the unfused probe + pairs + append
-          // form chunked every blob four times). First batch builds
-          // the index with the caller's parameters; afterwards the
-          // sidecar's pinned chunking regime wins. No batch
-          // checkpoint: file-source micro-batches re-read cheaply, and
-          // the fold persists the chunk cache, the one genuinely
-          // multi-consumed intermediate.
-          Cdc.foldCdcBatch(batch, "id", "blob", indexPath,
-            s"$matchesPath/batch_id=$batchId",
-            minSize, avgBits, maxSize, hashBuckets,
-            maxDocsPerChunk, minShared)
-          // between-batches = the single writer's maintenance window
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamCdcDup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            Cdc.compactCdcIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
+    MaintainedStream.fold(spark, inputDir, workDir,
+        StructField("blob", BinaryType), "streamCdcDup", trigger,
+        maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
+      (batch, indexPath, matchesPath) =>
+        // The fused kernel: cross-index + within-batch pairs, then the
+        // index append — from ONE chunking of the batch (the unfused
+        // probe + pairs + append form chunked every blob four times).
+        // First batch builds the index with the caller's parameters;
+        // afterwards the sidecar's pinned chunking regime wins.
+        Cdc.foldCdcBatch(batch, "id", "blob", indexPath, matchesPath,
+          minSize, avgBits, maxSize, hashBuckets,
+          maxDocsPerChunk, minShared)
+    }(Cdc.compactCdcIndex(spark, _))
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{StringType, StructField}
 import graft.ext.Winnow
 
 /** Incremental EXACT-substring dedup against a persisted winnowing
@@ -45,59 +44,19 @@ object StreamingExactDup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
-    val matchesPath = s"$workDir/matches"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("text", StringType))))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // registry-delta cleanup (the StreamingNearDup convention):
-        // free every storage block this batch pinned once its outputs
-        // are written, so a long-lived stream cannot leak blocks
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          // The fused kernel: cross-index + within-batch matches →
-          // matches/batch_id=N, then the index append — from ONE
-          // fingerprinting of the batch (the unfused probe + pairs +
-          // append form fingerprinted it three times and re-joined the
-          // texts to verify; the fold verifies gram-vs-gram from its
-          // own cache). First batch builds the index with the caller's
-          // parameters; afterwards the sidecar's pinned regime wins.
-          // No batch checkpoint: file-source micro-batches re-read
-          // cheaply.
-          Winnow.foldWinnowBatch(batch, "id", "text", indexPath,
-            s"$matchesPath/batch_id=$batchId",
-            k, w, fpBuckets, maxDocsPerFp, minMatches)
-          // between-batches = the single writer's maintenance window
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamExactDup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            Winnow.compactWinnowIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
+    MaintainedStream.fold(spark, inputDir, workDir,
+        StructField("text", StringType), "streamExactDup", trigger,
+        maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
+      (batch, indexPath, matchesPath) =>
+        // The fused kernel: cross-index + within-batch matches, then
+        // the index append — from ONE fingerprinting of the batch (the
+        // unfused probe + pairs + append form fingerprinted it three
+        // times and re-joined the texts to verify; the fold verifies
+        // gram-vs-gram from its own cache). First batch builds the
+        // index with the caller's parameters; afterwards the sidecar's
+        // pinned regime wins.
+        Winnow.foldWinnowBatch(batch, "id", "text", indexPath, matchesPath,
+          k, w, fpBuckets, maxDocsPerFp, minMatches)
+    }(Winnow.compactWinnowIndex(spark, _))
   }
 }

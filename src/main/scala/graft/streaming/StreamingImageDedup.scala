@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{BinaryType, StructField}
 import graft.ext.{DocDedup, Multimodal}
 
 /** Incremental IMAGE near-dup detection against a persisted Hamming
@@ -40,60 +40,22 @@ object StreamingImageDedup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
-    val matchesPath = s"$workDir/matches"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("blob", BinaryType))))
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // registry-delta cleanup (the StreamingNearDup pattern): free
-        // every block this batch pinned once its outputs are written
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          // The fused kernel: cross-index + within-batch matches →
-          // matches/batch_id=N, then the index append — the batch's
-          // images are DECODED ONCE into the fold's quarter cache (the
-          // unfused probe + pairs + append form checkpointed the
-          // signatures and still exploded them three times, and
-          // hammingPairs re-joined the signature table twice to
-          // verify). First batch builds the index with the caller's
-          // qBuckets; afterwards the sidecar's pinned value wins.
-          val sig = Multimodal.imageHash(batch, "blob")
-            .where(col("img.ok"))
-            .select(col("id"), col("img.ahash").as("ahash"))
-          DocDedup.foldHammingBatch(sig, "id", "ahash", indexPath,
-            s"$matchesPath/batch_id=$batchId", maxDist, qBuckets)
-          // between-batches = the single writer's maintenance window
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamImageDedup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            DocDedup.compactHammingIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
+    MaintainedStream.fold(spark, inputDir, workDir,
+        StructField("blob", BinaryType), "streamImageDedup", trigger,
+        maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
+      (batch, indexPath, matchesPath) =>
+        // The fused kernel: cross-index + within-batch matches, then
+        // the index append — the batch's images are DECODED ONCE into
+        // the fold's quarter cache (the unfused probe + pairs + append
+        // form checkpointed the signatures and still exploded them
+        // three times, and hammingPairs re-joined the signature table
+        // twice to verify). First batch builds the index with the
+        // caller's qBuckets; afterwards the sidecar's pinned value wins.
+        val sig = Multimodal.imageHash(batch, "blob")
+          .where(col("img.ok"))
+          .select(col("id"), col("img.ahash").as("ahash"))
+        DocDedup.foldHammingBatch(sig, "id", "ahash", indexPath,
+          matchesPath, maxDist, qBuckets)
+    }(DocDedup.compactHammingIndex(spark, _))
   }
 }

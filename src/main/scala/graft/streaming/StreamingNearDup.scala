@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{StringType, StructField}
 import graft.ext.DocDedup
 
 /** Incremental NEAR-dup detection against a persisted MinHash index —
@@ -20,8 +20,8 @@ import graft.ext.DocDedup
   * append in four Spark actions, banding and shingling the batch once
   * (the unfused probe + pairs + two writes form cost eight actions,
   * and the r13 bench attribution showed action count, not compute,
-  * dominates the micro-batch floor). Two more actions per batch here:
-  * the batch checkpoint and the corpus append.
+  * dominates the micro-batch floor). One more action per batch here:
+  * the corpus append.
   *
   * State lives entirely in external storage (index + corpus parquet),
   * not the state store — the same unbounded-key trade as
@@ -29,10 +29,9 @@ import graft.ext.DocDedup
   * probe (∝ batch) + append (∝ batch), never ∝ history. The flip side
   * of per-batch appends is small-file accumulation (one file set per
   * touched partition per batch); `compactEvery = Some(n)` runs
-  * [[graft.ext.DocDedup.compactMinHashIndex]] after every n-th batch
-  * ON the foreachBatch thread — the stream is the index's single
-  * writer, so the between-batches window is exactly the maintenance
-  * window the compaction contract requires. Probe results are
+  * [[graft.ext.DocDedup.compactMinHashIndex]] after every n-th batch,
+  * in the between-batches maintenance window of
+  * [[MaintainedStream.fold]]. Probe results are
   * bit-identical across a compaction, so match output is unaffected
   * (IndexMaintenanceSpec + the q238 gate pin this).
   *
@@ -60,83 +59,36 @@ object StreamingNearDup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    // (compactMaxFiles fires on the index's measured data-file count,
-    // the probe-cost signal, instead of a fixed batch cadence)
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
     val corpusPath = s"$workDir/corpus"
-    val matchesPath = s"$workDir/matches"
     val fs = new org.apache.hadoop.fs.Path(workDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("text", StringType))))
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Registry-delta cleanup: the batch checkpoint and the fold's
-        // internal persists would otherwise pin storage blocks for the
-        // stream's whole lifetime (the round-7 per-commit leak class).
-        // Everything this batch produces is written out below, so
-        // freeing all of it at batch end is safe.
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          // No batch checkpoint: a FILE-source micro-batch re-reads its
-          // own parquet files deterministically and cheaply (narrow
-          // scan), so materializing it would spend an extra action per
-          // batch for nothing — the fold persists the banded projection,
-          // which is the one genuinely multi-consumed intermediate.
-          val b = batch
-          // The fused kernel: cross-index + within-batch matches →
-          // matches/batch_id=N (batch_id comes back as a partition
-          // column on read; writing it into the files too would collide
-          // with partition discovery), then the index append — from ONE
-          // banding of the batch. First batch: builds the index with
-          // the caller's (bands, rows, sigBuckets); afterwards the
-          // index sidecar's pinned parameters win, so a replayed or
-          // later batch can never mix banding regimes.
-          // gate on COMMITTED corpus data, not directory existence: a
-          // crash between the committer creating the directory and the
-          // first task commit would otherwise leave every replay dying
-          // on parquet schema inference over an empty dir
-          val corpusHasData = {
-            val p = new org.apache.hadoop.fs.Path(corpusPath)
-            fs.exists(p) && fs.listStatus(p).exists { s =>
-              val nm = s.getPath.getName
-              !nm.startsWith("_") && !nm.startsWith(".")
-            }
+    MaintainedStream.fold(spark, inputDir, workDir,
+        StructField("text", StringType), "streamNearDup", trigger,
+        maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
+      (batch, indexPath, matchesPath) =>
+        // The fused kernel: cross-index + within-batch matches, then
+        // the index append — from ONE banding of the batch. First
+        // batch: builds the index with the caller's (bands, rows,
+        // sigBuckets); afterwards the index sidecar's pinned parameters
+        // win, so a replayed or later batch can never mix banding
+        // regimes.
+        // gate on COMMITTED corpus data, not directory existence: a
+        // crash between the committer creating the directory and the
+        // first task commit would otherwise leave every replay dying
+        // on parquet schema inference over an empty dir
+        val corpusHasData = {
+          val p = new org.apache.hadoop.fs.Path(corpusPath)
+          fs.exists(p) && fs.listStatus(p).exists { s =>
+            val nm = s.getPath.getName
+            !nm.startsWith("_") && !nm.startsWith(".")
           }
-          DocDedup.foldMinHashBatch(b,
-            if (corpusHasData) spark.read.parquet(corpusPath)
-            else b.where(org.apache.spark.sql.functions.lit(false)),
-            "id", "text", indexPath, s"$matchesPath/batch_id=$batchId",
-            num, den, bands, rows, sigBuckets)
-          b.write.mode("append").parquet(corpusPath)
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamNearDup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            DocDedup.compactMinHashIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
         }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
+        DocDedup.foldMinHashBatch(batch,
+          if (corpusHasData) spark.read.parquet(corpusPath)
+          else batch.where(org.apache.spark.sql.functions.lit(false)),
+          "id", "text", indexPath, matchesPath,
+          num, den, bands, rows, sigBuckets)
+        batch.write.mode("append").parquet(corpusPath)
+    }(DocDedup.compactMinHashIndex(spark, _))
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
 import graft.ext.Similarity
 
 /** Incremental EMBEDDING near-dup detection against a persisted IVF
@@ -42,76 +42,44 @@ object StreamingVecDup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
-    val matchesPath = s"$workDir/matches"
     val fs = new org.apache.hadoop.fs.Path(workDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("vec", ArrayType(FloatType)))))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          val b = batch.localCheckpoint()
-          val indexExists = fs.exists(
-            new org.apache.hadoop.fs.Path(indexPath, "_graft_ivf_meta"))
-          // 1. cross-batch: probe the accumulated index, exact-cosine
-          //    threshold over the top-k candidates
-          val cross =
-            if (indexExists)
-              Similarity.probeIvfIndex(b, "id", "vec", indexPath, k, nprobe)
-                .where(col("sim") >= threshold)
-                .select(col("query_id").as("id_a"),
-                  col("neighbor_id").as("id_b"), col("sim"))
-                .distinct()
-            else
-              b.select(col("id").as("id_a"), col("id").as("id_b"),
-                lit(0.0).as("sim")).where(lit(false))
-          // 2. within-batch: LSH-blocked exact-verified pairs on the
-          //    small batch (a twin arriving twice in ONE batch)
-          // unordered variant: the matches parquet write needs no row
-          // order, and the ordered form paid a range exchange +
-          // sampling pass per micro-batch
-          val within = Similarity
-            .cosineNearDupPairs(b, "id", "vec", threshold,
-              bits = 8, tables = 6, ordered = false)
-            .select(col("id_a"), col("id_b"), col("sim"))
-          cross.unionByName(within)
-            .write.mode("overwrite")
-            .parquet(s"$matchesPath/batch_id=$batchId")
-          // 3. fold the batch into the index
+    MaintainedStream.fold(spark, inputDir, workDir,
+        StructField("vec", ArrayType(FloatType)), "streamVecDup", trigger,
+        maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
+      (batch, indexPath, matchesPath) =>
+        val b = batch.localCheckpoint()
+        val indexExists = fs.exists(
+          new org.apache.hadoop.fs.Path(indexPath, "_graft_ivf_meta"))
+        // 1. cross-batch: probe the accumulated index, exact-cosine
+        //    threshold over the top-k candidates
+        val cross =
           if (indexExists)
-            Similarity.appendToIvfIndex(b, "id", "vec", indexPath)
+            Similarity.probeIvfIndex(b, "id", "vec", indexPath, k, nprobe)
+              .where(col("sim") >= threshold)
+              .select(col("query_id").as("id_a"),
+                col("neighbor_id").as("id_b"), col("sim"))
+              .distinct()
           else
-            Similarity.buildIvfIndex(b, "id", "vec", indexPath, nlist)
-          // between-batches = the single writer's maintenance window
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamVecDup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            Similarity.compactIvfIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
+            b.select(col("id").as("id_a"), col("id").as("id_b"),
+              lit(0.0).as("sim")).where(lit(false))
+        // 2. within-batch: LSH-blocked exact-verified pairs on the
+        //    small batch (a twin arriving twice in ONE batch)
+        // unordered variant: the matches parquet write needs no row
+        // order, and the ordered form paid a range exchange +
+        // sampling pass per micro-batch
+        val within = Similarity
+          .cosineNearDupPairs(b, "id", "vec", threshold,
+            bits = 8, tables = 6, ordered = false)
+          .select(col("id_a"), col("id_b"), col("sim"))
+        cross.unionByName(within)
+          .write.mode("overwrite")
+          .parquet(matchesPath)
+        // 3. fold the batch into the index
+        if (indexExists)
+          Similarity.appendToIvfIndex(b, "id", "vec", indexPath)
+        else
+          Similarity.buildIvfIndex(b, "id", "vec", indexPath, nlist)
+    }(Similarity.compactIvfIndex(spark, _))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 class StreamingNearDupSpec extends SparkFunSuite {
@@ -67,67 +66,5 @@ class StreamingNearDupSpec extends SparkFunSuite {
     val leaked =
       spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
     assert(leaked.isEmpty, s"leaked blocks: $leaked")
-  }
-
-  test("mid-stream index compaction: matches identical to the " +
-    "uncompacted stream, index files drop") {
-    val s = spark; import s.implicits._
-    def batches: Seq[DataFrame] = Seq(
-      (0L to 9L).map(i => (i, s"base document $i about topic ${i % 3} " +
-        "with plenty of shared phrasing between documents")),
-      (0L to 4L).map(i => (i + 100L, s"base document $i about topic " +
-        s"${i % 3} with plenty of shared phrasing between documents")),
-      (5L to 9L).map(i => (i + 200L, s"base document $i about topic " +
-        s"${i % 3} with plenty of shared phrasing between documents")))
-      .map(_.toDF("id", "text"))
-
-    def run(tag: String, compactEvery: Option[Int]): (Set[(Long, Long)], String) = {
-      val dir = tempDir(s"sndc-$tag")
-      val inDir = s"$dir/in"; val work = s"$dir/work"
-      Files.createDirectories(Paths.get(inDir))
-      batches.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$dir/stage-$i"
-        df.repartition(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dest = Paths.get(s"$inDir/b$i.parquet")
-        Files.copy(part.toPath, dest)
-        // mod-time order = batch order under maxFilesPerTrigger=1
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + i * 60000L))
-      }
-      val handle = StreamingNearDup.start(spark, inDir, work, 7, 10,
-        bands = 8, rows = 4, sigBuckets = 4,
-        maxFilesPerTrigger = Some(1), compactEvery = compactEvery)
-      handle.awaitTermination()
-      // the index stream's handle reports ITS maintenance events since
-      // start: 3 batches at compactEvery=2 fire once; no policy, never
-      val fires = handle.maintenanceStats()
-        .getOrElse(graft.ext.MaintenanceEvents.CompactFire, 0L)
-      assert(fires == compactEvery.map(_ => 1L).getOrElse(0L),
-        s"handle stats: expected fire count for $compactEvery, got $fires")
-      assert(handle.maintainedDirs == Seq(s"$work/index"))
-      (spark.read.parquet(s"$work/matches").select("id_a", "id_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-        s"$work/index")
-    }
-
-    val (plain, _) = run("plain", None)
-    val (compacted, idx) = run("compact", Some(2))
-    // batch 1 compacts after batch index 1 (the 2nd); batch 2 then
-    // probes the COMPACTED index — every cross-batch twin must still
-    // be found, and nothing extra may appear
-    assert(compacted == plain,
-      s"compaction changed stream output:\n plain=$plain\n comp=$compacted")
-    assert((5L to 9L).forall(i => compacted.contains((i + 200L, i))),
-      s"post-compaction probe missed a twin: $compacted")
-    // the compacted index holds one file per touched partition, fewer
-    // than the 3 appends stacked (gauges recorded by the stream)
-    val gauges = graft.Instr.snapshot().toMap
-    val before = gauges("streamNearDup.compact_files_before").last
-    val after = gauges("streamNearDup.compact_files_after").last
-    assert(after < before, s"compaction did not drop files: $before -> $after")
   }
 }
