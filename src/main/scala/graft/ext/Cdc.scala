@@ -235,13 +235,23 @@ object Cdc {
   // binary dedup against an accumulated corpus).
   // ------------------------------------------------------------------
 
-  private def chunkIdentities(df: DataFrame, idCol: String, binCol: String,
-                              minSize: Int, avgBits: Int,
-                              maxSize: Int): DataFrame =
+  /** The index's signing projection: per-doc distinct chunk identities
+    * (id, chash, csize, csum) with `hb = chash mod hashBuckets`.
+    */
+  private def signedChunks(df: DataFrame, idCol: String, binCol: String,
+                           minSize: Int, avgBits: Int, maxSize: Int,
+                           hashBuckets: Int): DataFrame =
     cdcChunks(df.select(col(idCol).as("id"), col(binCol)), binCol,
         minSize, avgBits, maxSize)
       .select(col("id"), col("chash"), col("csize"), col("csum"))
       .distinct()
+      .withColumn("hb", pmod(col("chash"), lit(hashBuckets.toLong)).cast("int"))
+
+  private val CdcLayout = SignatureIndex.intsLayout("_graft_cdc_meta", "hb")
+
+  private def requireHashBuckets(hashBuckets: Int): Unit =
+    require(hashBuckets >= 1 && hashBuckets <= 4096,
+      s"cdc: hashBuckets must be in [1,4096], got $hashBuckets")
 
   /** Persist a corpus's CDC chunk identities partitioned by
     * `hb = chash mod hashBuckets` — probes prune to their own buckets
@@ -257,32 +267,10 @@ object Cdc {
   def buildCdcIndex(corpus: DataFrame, idCol: String, binCol: String,
                     path: String, minSize: Int = 2048, avgBits: Int = 13,
                     maxSize: Int = 65536, hashBuckets: Int = 64): Unit = {
-    require(hashBuckets >= 1 && hashBuckets <= 4096,
-      s"cdc: hashBuckets must be in [1,4096], got $hashBuckets")
-    val ss = corpus.sparkSession
-    chunkIdentities(corpus, idCol, binCol, minSize, avgBits, maxSize)
-      .withColumn("hb", pmod(col("chash"), lit(hashBuckets.toLong)).cast("int"))
-      // pinned reducer count: see DocDedup.buildMinHashIndex
-      .repartition(ss.sessionState.conf.numShufflePartitions, col("hb"))
-      .write.mode("overwrite").partitionBy("hb").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_cdc_meta"), true)
-    try out.write(s"$minSize,$avgBits,$maxSize,$hashBuckets".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readCdcMeta(df: DataFrame, path: String): (Int, Int, Int, Int) = {
-    IndexMaintenance.ensureReadable(df.sparkSession, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path, "_graft_cdc_meta"))
-    val Array(mn, ab, mx, hb) =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .trim.split(",").map(_.toInt)
-      finally in.close()
-    (mn, ab, mx, hb)
+    requireHashBuckets(hashBuckets)
+    SignatureIndex.build(signedChunks(corpus, idCol, binCol, minSize,
+        avgBits, maxSize, hashBuckets), path, CdcLayout,
+      Seq(minSize, avgBits, maxSize, hashBuckets))
   }
 
   /** Append a blob batch into the same (hb) layout — cost ∝ batch
@@ -291,15 +279,10 @@ object Cdc {
     */
   def appendToCdcIndex(newDocs: DataFrame, idCol: String, binCol: String,
                        path: String): Unit =
-    WriterLock.withLock(newDocs.sparkSession, path, "appendToCdcIndex") {
-      IndexMaintenance.ensureReadable(newDocs.sparkSession, path)
-      val (mn, ab, mx, hb) = readCdcMeta(newDocs, path)
-      chunkIdentities(newDocs, idCol, binCol, mn, ab, mx)
-        .withColumn("hb", pmod(col("chash"), lit(hb.toLong)).cast("int"))
-        // pinned reducer count: see DocDedup.buildMinHashIndex
-        .repartition(newDocs.sparkSession.sessionState.conf
-          .numShufflePartitions, col("hb"))
-        .write.mode("append").partitionBy("hb").parquet(path)
+    SignatureIndex.append(newDocs.sparkSession, path, CdcLayout,
+        "appendToCdcIndex") {
+      case Seq(mn, ab, mx, hb) =>
+        signedChunks(newDocs, idCol, binCol, mn, ab, mx, hb)
     }
 
   /** Compact a [[buildCdcIndex]] layout back to one file per (hb)
@@ -308,58 +291,60 @@ object Cdc {
     */
   def compactCdcIndex(ss: org.apache.spark.sql.SparkSession,
                       path: String): IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("hb"))
+    IndexMaintenance.compactIndex(ss, path, CdcLayout.partitionCols)
+
+  /** Shared-chunk matches of a probe side (id_a, chash, csize, csum, hb)
+    * against a pruned index read, with the hot-chunk cap applied over
+    * that read — an identity's doc count lives entirely inside its own
+    * bucket partition, so the pruned count IS the global count,
+    * appends included.
+    */
+  private def probeVerify(index: DataFrame, probeSide: DataFrame,
+                          maxDocsPerChunk: Int, minShared: Int): DataFrame = {
+    val hot = index.groupBy("chash", "csize", "csum")
+      .agg(countDistinct(col("id")).as("n_docs"))
+      .where(col("n_docs") > maxDocsPerChunk)
+      .select("chash", "csize", "csum")
+    index.join(broadcast(hot), Seq("chash", "csize", "csum"), "left_anti")
+      .join(probeSide, Seq("chash", "csize", "csum", "hb"))
+      .where(col("id_a") =!= col("id"))
+      .select(col("id_a"), col("id").as("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_shared"))
+      .where(col("n_shared") >= minShared)
+  }
 
   /** Shared-chunk matches of a probe batch against the index:
     * `(id_a = probe id, id_b = indexed id, n_shared)` over distinct
-    * chunk identities. The hot-chunk cap is applied over the pruned
-    * read — an identity's doc count lives entirely inside its own
-    * bucket partition, so the pruned count IS the global count,
-    * appends included.
+    * chunk identities, the hot-chunk cap applied over the pruned read.
     *
     * Probe batch is the small side by contract: its distinct buckets
     * are collected driver-side (bounded, ≤ `hashBuckets` values) and
-    * the probe identity set broadcasts into the candidate join.
+    * the probe identity set broadcasts into the candidate join
+    * (row-guarded like every [[SignatureIndex.probe]]).
     */
   def probeCdcIndex(probes: DataFrame, idCol: String, binCol: String,
                     path: String, maxDocsPerChunk: Int = 256,
                     minShared: Int = 1): DataFrame = {
     val ss = probes.sparkSession
-    val (mn, ab, mx, hbuckets) = readCdcMeta(probes, path)
-    val p = chunkIdentities(probes, idCol, binCol, mn, ab, mx)
-      .withColumn("hb", pmod(col("chash"), lit(hbuckets.toLong)).cast("int"))
+    val Seq(mn, ab, mx, hbuckets) = SignatureIndex.read(ss, path, CdcLayout)
+    val p = signedChunks(probes, idCol, binCol, mn, ab, mx, hbuckets)
       .select(col("id").as("id_a"), col("chash"), col("csize"),
         col("csum"), col("hb"))
       .persist()
-    try {
-      def emptyResult = probes.select(col(idCol).as("id_a"),
-          col(idCol).as("id_b"), lit(0L).as("n_shared"))
-        .where(lit(false))
-      val buckets = p.select("hb").distinct().collect().map(_.getInt(0))
-      if (buckets.isEmpty) return emptyResult
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      if (!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(_.getPath.getName.startsWith("hb="))) return emptyResult
-      val idxRead = ss.read.parquet(path)
-        .where(col("hb").isin(buckets.toSeq: _*))
-      val hot = idxRead.groupBy("chash", "csize", "csum")
-        .agg(countDistinct(col("id")).as("n_docs"))
-        .where(col("n_docs") > maxDocsPerChunk)
-        .select("chash", "csize", "csum")
-      idxRead.join(broadcast(hot), Seq("chash", "csize", "csum"), "left_anti")
-        .join(broadcast(p), Seq("chash", "csize", "csum", "hb"))
-        .where(col("id_a") =!= col("id"))
-        .select(col("id_a"), col("id").as("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("n_shared"))
-        .where(col("n_shared") >= minShared)
-        // materialize while `p` is still cached (the unpersist below
-        // runs before any caller action) — and so a caller's ordering
-        // sort samples a tiny in-memory result instead of re-chunking
-        // the probes and re-running the pruned-read joins per
-        // evaluation (the probeMinHashIndex discipline)
-        .localCheckpoint()
+    try SignatureIndex.probe(ss, path, CdcLayout, "probeCdcIndex", p,
+        4L << 20) match {
+      case None =>
+        probes.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
+          lit(0L).as("n_shared")).where(lit(false))
+      case Some(idx) =>
+        probeVerify(idx.index, idx.guarded(p), maxDocsPerChunk, minShared)
+          // materialize while `p` is still cached (the unpersist below
+          // runs before any caller action) — and so a caller's ordering
+          // sort samples a tiny in-memory result instead of re-chunking
+          // the probes and re-running the pruned-read joins per
+          // evaluation (the probeMinHashIndex discipline)
+          .localCheckpoint()
     } finally p.unpersist()
   }
 
@@ -368,17 +353,15 @@ object Cdc {
     * .foldMinHashBatch]] discipline applied to the CDC family: the
     * batch is CHUNKED ONCE (FastCDC over every blob byte is the
     * CPU-heavy step; the unfused probe + within-pairs + append form
-    * chunked it four times), persisted pre-clustered by the index
-    * partition column, and spent across exactly three Spark actions:
-    * (1) one groupBy-collect for the pruning buckets + the broadcast
-    * row-guard, materializing the cache; (2) the matches WRITE (cross
-    * pairs with the index-side hot cap ∪ within-batch pairs with the
-    * batch-side hot cap — the [[probeCdcIndex]] and
-    * [[sharedChunkPairs]] semantics verbatim, on the shared cache);
-    * (3) the index append straight from the cache — shuffle-free.
-    * First batch: the append becomes the initial [[buildCdcIndex]]
-    * layout + sidecar; afterwards the sidecar's pinned chunking
-    * parameters win, exactly like [[appendToCdcIndex]].
+    * chunked it four times) into the [[SignatureIndex.fold]] cache and
+    * spent across exactly three Spark actions: (1) the bucket collect;
+    * (2) the matches WRITE (cross pairs with the index-side hot cap ∪
+    * within-batch pairs with the batch-side hot cap — the
+    * [[probeCdcIndex]] and [[sharedChunkPairs]] semantics verbatim, on
+    * the shared cache); (3) the index append straight from the cache —
+    * shuffle-free. First batch: the append becomes the initial
+    * [[buildCdcIndex]] layout + sidecar; afterwards the sidecar's pinned
+    * chunking parameters win, exactly like [[appendToCdcIndex]].
     */
   def foldCdcBatch(batch: DataFrame, idCol: String, binCol: String,
                    indexPath: String, matchesPath: String,
@@ -388,59 +371,21 @@ object Cdc {
                    broadcastLimit: Long = 4L << 20): Unit = {
     require(maxDocsPerChunk >= 2,
       s"cdc: maxDocsPerChunk >= 2, got $maxDocsPerChunk")
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
-    val ss = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val indexExists = fs.exists(
-      new org.apache.hadoop.fs.Path(indexPath, "_graft_cdc_meta"))
-    val (mn, ab, mx, hbuckets) =
-      if (indexExists) readCdcMeta(batch, indexPath)
-      else (minSize, avgBits, maxSize, hashBuckets)
-    require(hbuckets >= 1 && hbuckets <= 4096,
-      s"cdc: hashBuckets must be in [1,4096], got $hbuckets")
-    val pChunks = chunkIdentities(batch, idCol, binCol, mn, ab, mx)
-      .withColumn("hb", pmod(col("chash"), lit(hbuckets.toLong)).cast("int"))
-      // pinned reducer count: see DocDedup.foldMinHashBatch
-      .repartition(batch.sparkSession.sessionState.conf
-        .numShufflePartitions, col("hb")).persist()
-    try {
-      // action 1: pruning buckets + row count, materializing the cache
-      val bucketCounts = graft.Instr.timed("foldCdc.buckets")(
-        pChunks.groupBy("hb").agg(count(lit(1)).as("n")).collect())
-      val buckets = bucketCounts.map(_.getInt(0))
-      val nRows = bucketCounts.map(_.getLong(1)).sum
-      val hasIndexData = indexExists && fs.listStatus(
-        new org.apache.hadoop.fs.Path(indexPath))
-        .exists(_.getPath.getName.startsWith("hb="))
-      val pA = pChunks.select(col("id").as("id_a"), col("chash"),
-        col("csize"), col("csum"), col("hb"))
-      def noPairs = pChunks.select(col("id").as("id_a"),
-          col("id").as("id_b"), lit(0L).as("n_shared"))
-        .where(lit(false))
-      val cross =
-        if (!hasIndexData || buckets.isEmpty) noPairs
-        else {
-          val idxRead = ss.read.parquet(indexPath)
-            .where(col("hb").isin(buckets.toSeq: _*))
-          // the hot cap over the pruned read IS the global count: an
-          // identity's docs all live in its own bucket partition
-          val hot = idxRead.groupBy("chash", "csize", "csum")
-            .agg(countDistinct(col("id")).as("n_docs"))
-            .where(col("n_docs") > maxDocsPerChunk)
-            .select("chash", "csize", "csum")
-          val probeSide =
-            if (nRows <= broadcastLimit) broadcast(pA) else pA
-          idxRead.join(broadcast(hot), Seq("chash", "csize", "csum"),
-              "left_anti")
-            .join(probeSide, Seq("chash", "csize", "csum", "hb"))
-            .where(col("id_a") =!= col("id"))
-            .select(col("id_a"), col("id").as("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(count(lit(1)).as("n_shared"))
-            .where(col("n_shared") >= minShared)
-        }
+    SignatureIndex.fold(batch, indexPath, matchesPath, CdcLayout,
+        Seq(minSize, avgBits, maxSize, hashBuckets), "foldCdcBatch",
+        broadcastLimit) {
+      case Seq(mn, ab, mx, hbuckets) =>
+        requireHashBuckets(hbuckets)
+        signedChunks(batch, idCol, binCol, mn, ab, mx, hbuckets)
+    } { b =>
+      val pChunks = b.signed
+      val cross = b.cross.fold(
+        pChunks.select(col("id").as("id_a"), col("id").as("id_b"),
+          lit(0L).as("n_shared")).where(lit(false))) { idx =>
+        probeVerify(idx.index, idx.guarded(pChunks.select(
+          col("id").as("id_a"), col("chash"), col("csize"), col("csum"),
+          col("hb"))), maxDocsPerChunk, minShared)
+      }
       // within-batch pairs: sharedChunkPairs semantics on the SAME
       // chunk cache (batch-side hot cap; rows are per-doc distinct)
       val hotW = pChunks.groupBy("chash", "csize", "csum")
@@ -452,33 +397,14 @@ object Cdc {
         // re-pin column ORDER: a usingColumns join fronts the join
         // keys, and the positional toDF renames below depend on it
         .select("id", "chash", "csize", "csum")
-      val within = keptIds.toDF("id_a", "chash", "csize", "csum")
+      cross.unionByName(keptIds.toDF("id_a", "chash", "csize", "csum")
         .join(keptIds.toDF("id_b", "chash", "csize", "csum"),
           Seq("chash", "csize", "csum"))
         .where(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(count(lit(1)).as("n_shared"))
-        .where(col("n_shared") >= minShared)
-      // action 2: the matches write IS the pair-plan materialization
-      graft.Instr.timed("foldCdc.matches")(
-        cross.unionByName(within)
-          .write.mode("overwrite").parquet(matchesPath))
-      // action 3: fold the batch into the index straight from the
-      // pre-clustered cache — no re-chunk, no re-shuffle
-      // (index mutation → writer lock, reentrant on the stream thread)
-      WriterLock.withLock(batch.sparkSession, indexPath,
-        "foldCdcBatch.append") {
-        graft.Instr.timed("foldCdc.append")(
-          pChunks.write.mode(if (indexExists) "append" else "overwrite")
-            .partitionBy("hb").parquet(indexPath))
-        if (!indexExists) {
-          val out = fs.create(new org.apache.hadoop.fs.Path(indexPath,
-            "_graft_cdc_meta"), true)
-          try out.write(s"$mn,$ab,$mx,$hbuckets".getBytes("UTF-8"))
-          finally out.close()
-        }
-      }
-    } finally pChunks.unpersist()
+        .where(col("n_shared") >= minShared))
+    }
   }
 
   /** Fixed-size chunk identities of a binary column — the reference's

@@ -506,29 +506,22 @@ object DocDedup {
   def buildMinHashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         path: String, bands: Int = 16, rows: Int = 8,
                         sigBuckets: Int = 8): Unit = {
+    requireMinHashParams(Seq(bands, rows, sigBuckets))
+    graft.functions.VecExpressions.register(corpus.sparkSession)
+    SignatureIndex.build(
+      bandedSignatures(corpus, idCol, textCol, bands, rows, sigBuckets),
+      path, MinHashLayout, Seq(bands, rows, sigBuckets))
+  }
+
+  private val MinHashLayout =
+    SignatureIndex.intsLayout("_graft_minhash_meta", "band", "sb")
+
+  private def requireMinHashParams(p: Seq[Int]): Unit = {
+    val Seq(bands, rows, sigBuckets) = p
     require(bands >= 1 && rows >= 1 && bands * rows <= 4096,
       s"bands*rows must be in [1,4096], got $bands*$rows")
     require(sigBuckets >= 1 && sigBuckets <= 4096,
       s"sigBuckets must be in [1,4096], got $sigBuckets")
-    val ss = corpus.sparkSession
-    graft.functions.VecExpressions.register(ss)
-    bandedSignatures(corpus, idCol, textCol, bands, rows, sigBuckets)
-      // cluster by partition cols before the partitioned write: files ≈
-      // max(bands·sigBuckets, shuffle partitions), not tasks × dirs.
-      // The reducer count is pinned (not left to AQE): coalescing a
-      // small build to ONE reducer serializes the write of every
-      // (band, sb) directory through a single task — the file count is
-      // identical either way (each dir's rows hash to one reducer), so
-      // the pin only buys back write parallelism.
-      .repartition(corpus.sparkSession.sessionState.conf
-        .numShufflePartitions, col("band"), col("sb"))
-      .write.mode("overwrite").partitionBy("band", "sb").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_minhash_meta"), true)
-    try out.write(s"$bands,$rows,$sigBuckets".getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** The index/probe banding projection all minhash-index ops share:
@@ -565,14 +558,9 @@ object DocDedup {
                            textCol: String, path: String): Unit = {
     val ss = newDocs.sparkSession
     graft.functions.VecExpressions.register(ss)
-    WriterLock.withLock(ss, path, "appendToMinHashIndex") {
-      IndexMaintenance.ensureReadable(ss, path)
-      val (bands, rows, sigBuckets) = readMinHashMeta(ss, path)
-      bandedSignatures(newDocs, idCol, textCol, bands, rows, sigBuckets)
-        // pinned reducer count: see buildMinHashIndex
-        .repartition(ss.sessionState.conf.numShufflePartitions,
-          col("band"), col("sb"))
-        .write.mode("append").partitionBy("band", "sb").parquet(path)
+    SignatureIndex.append(ss, path, MinHashLayout, "appendToMinHashIndex") {
+      case Seq(bands, rows, sigBuckets) =>
+        bandedSignatures(newDocs, idCol, textCol, bands, rows, sigBuckets)
     }
   }
 
@@ -586,21 +574,7 @@ object DocDedup {
     */
   def compactMinHashIndex(ss: SparkSession, path: String)
       : IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("band", "sb"))
-
-  private def readMinHashMeta(ss: SparkSession,
-                              path: String): (Int, Int, Int) = {
-    IndexMaintenance.ensureReadable(ss, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val metaIn = fs.open(
-      new org.apache.hadoop.fs.Path(path, "_graft_minhash_meta"))
-    val Array(bands, rows, sigBuckets) =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").mkString
-        .trim.split(",").map(_.toInt)
-      finally metaIn.close()
-    (bands, rows, sigBuckets)
-  }
+    IndexMaintenance.compactIndex(ss, path, MinHashLayout.partitionCols)
 
   /** Near-dup pairs of a PROBE batch against a [[buildMinHashIndex]]
     * corpus: band the probes with the index's own (bands, rows), read
@@ -613,28 +587,23 @@ object DocDedup {
     * dropped so a corpus member can be probed against its own index.
     *
     * The probe batch is the SMALL side by contract — its distinct
-    * (band, sb) coordinates are collected driver-side to build the
-    * partition-pruning filter, exactly like
-    * [[graft.ext.Similarity.probeLshIndex]] (bounded, fails loudly
-    * past 65536 coordinates). The broadcast contract is ENFORCED on
-    * ROWS, not just coordinates: `pBanded` holds probes × bands rows,
-    * so a caller with few buckets but millions of probes would OOM
-    * the driver inside `broadcast(...)` — above `broadcastLimit` rows
-    * the candidate join falls back to a shuffle join (same
-    * partition-pruned scan, same result), the
-    * [[probeHammingIndex]] discipline.
+    * (band, sb) coordinates build the partition-pruning filter
+    * ([[SignatureIndex.probe]]: bounded, fails loudly past 65536
+    * coordinates). The broadcast contract is ENFORCED on ROWS, not
+    * just coordinates: `pBanded` holds probes × bands rows, so a caller
+    * with few buckets but millions of probes would OOM the driver
+    * inside `broadcast(...)` — above `broadcastLimit` rows the
+    * candidate join falls back to a shuffle join (same partition-pruned
+    * scan, same result).
     */
   def probeMinHashIndex(probes: DataFrame, corpus: DataFrame,
                         idCol: String, textCol: String, path: String,
                         num: Int, den: Int,
                         broadcastLimit: Long = 4L << 20): DataFrame = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
     val ss = probes.sparkSession
     graft.functions.VecExpressions.register(ss)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val (bands, rows, sigBuckets) = readMinHashMeta(ss, path)
+    val Seq(bands, rows, sigBuckets) =
+      SignatureIndex.read(ss, path, MinHashLayout)
     // NOT persisted: the probe batch is small by contract, re-banding
     // it costs one narrow map — and the r12 bench attribution showed
     // this function's cost is ACTION COUNT (per-job scheduling floor ×
@@ -646,104 +615,99 @@ object DocDedup {
     // pass ran twice per probe. Freed in the finally below.
     val pBanded = bandedSignatures(probes, idCol, textCol,
       bands, rows, sigBuckets).withColumnRenamed("id", "id_a").persist()
-    try {
-    // one action: distinct (band, sb) coordinates + exploded row count —
-    // materializes the banded cache as a side effect
-    val coordCounts = graft.Instr.timed("probeMinHash.coords")(
-      pBanded.groupBy("band", "sb").agg(count(lit(1)).as("n")).collect())
-    val nProbeRows = coordCounts.map(_.getLong(2)).sum
-    val coords = coordCounts.map(r => (r.getInt(0), r.getInt(1)))
-    def emptyResult = probes.select(col(idCol).as("id_a"),
-        col(idCol).as("id_b"), lit(0L).as("common"),
-        lit(0L).as("na"), lit(0L).as("nb"))
-      .where(lit(false))
-    if (coords.isEmpty) return emptyResult
-    // An index built from a shingle-less corpus has the sidecar but
-    // zero part files; read.parquet would fail schema inference.
-    if (!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .exists(_.getPath.getName.startsWith("band="))) return emptyResult
-    require(coords.length <= 65536,
-      s"probeMinHashIndex: ${coords.length} distinct (band, sb) " +
-        "coordinates exceed the small-probe-side contract (<= 65536); " +
-        "batch the probe set or use minHashPairs' join form")
-    // one In-expression over a combined key, partition columns only →
-    // evaluated against partition values at file-listing time
-    val bucketFilter = (col("band").cast("long") * 4096L +
-      col("sb").cast("long")).isin(
-      coords.map { case (b, s) => b.toLong * 4096L + s }.toSeq: _*)
-    val probeSide =
-      if (nProbeRows <= broadcastLimit) broadcast(pBanded) else pBanded
-    val cand = ss.read.parquet(path).where(bucketFilter)
-      .join(probeSide, Seq("band", "bsig", "sb"))
-      .where(col("id_a") =!= col("id"))
-      .select(col("id_a"), col("id").as("id_b")).distinct()
-      .persist()
-    try {
-      val corpusCand = corpus.select(col(idCol), col(textCol))
-        .join(cand.select(col("id_b").as(idCol)).distinct(), Seq(idCol),
-          "left_semi")
-      // BOTH shingle sides in one cache so one count materializes
-      // everything (cand included, via the semi-join inside side "b") —
-      // eager warming still matters: concurrent first-computation of
-      // the same persisted blocks from several exchange threads
-      // serializes on the block locks (observed multi-minute stalls).
-      val sh = shingles(probes, idCol, textCol)
-        .withColumn("side", lit("a"))
-        .unionByName(shingles(corpusCand, idCol, textCol)
-          .withColumn("side", lit("b")))
-        .persist()
-      val shA = sh.where(col("side") === "a").drop("side")
-      val shB = sh.where(col("side") === "b").drop("side")
-      try {
-        graft.Instr.timed("probeMinHash.warm")(sh.count())
-        val common = shA.toDF("id_a", "shingle")
-          .join(cand, "id_a")
-          .join(shB.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-        // ONE (side, id) aggregation feeds both count sides: the two
-        // per-side groupBys had non-identical children (different side
-        // filters below the exchange), so each paid its own scan +
-        // exchange over the shingle cache; keyed (side, id) the subtree
-        // is identical and the second branch is a ReusedExchange.
-        val counts = sh.groupBy("side", "id")
-          .agg(count(lit(1)).as("n"))
-        val na = counts.where(col("side") === "a")
-          .select(col("id").as("id_a"), col("n").as("na"))
-        val nb = counts.where(col("side") === "b")
-          .select(col("id").as("id_b"), col("n").as("nb"))
-        graft.Instr.timed("probeMinHash.verify")(
-          common.join(na, "id_a").join(nb, "id_b")
-            .where(lit(den) * col("common") >=
-              lit(num) * (col("na") + col("nb") - col("common")))
-            .select("id_a", "id_b", "common", "na", "nb")
-            // no determinism orderBy here (guide §2.4): every caller
-            // joins/aggregates the pair set or re-orders its own final
-            // output, so the range exchange + sampling pass it cost per
-            // probe bought nothing
-            .localCheckpoint()) // materialize while the caches are alive
-      } finally sh.unpersist()
-    } finally cand.unpersist()
+    try SignatureIndex.probe(ss, path, MinHashLayout, "probeMinHashIndex",
+        pBanded, broadcastLimit) match {
+      case None =>
+        probes.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
+            lit(0L).as("common"), lit(0L).as("na"), lit(0L).as("nb"))
+          .where(lit(false))
+      case Some(idx) =>
+        val cand = idx.index
+          .join(idx.guarded(pBanded), Seq("band", "bsig", "sb"))
+          .where(col("id_a") =!= col("id"))
+          .select(col("id_a"), col("id").as("id_b")).distinct()
+          .persist()
+        try {
+          val corpusCand = corpus.select(col(idCol), col(textCol))
+            .join(cand.select(col("id_b").as(idCol)).distinct(), Seq(idCol),
+              "left_semi")
+          // BOTH shingle sides in one cache so one count materializes
+          // everything (cand included, via the semi-join inside side "b") —
+          // eager warming still matters: concurrent first-computation of
+          // the same persisted blocks from several exchange threads
+          // serializes on the block locks (observed multi-minute stalls).
+          val sh = shingleSides(probes, corpusCand, idCol, textCol).persist()
+          try {
+            graft.Instr.timed("probeMinHashIndex.warm")(sh.count())
+            graft.Instr.timed("probeMinHashIndex.verify")(
+              verifySides(sh, sh.where(col("side") === "b").drop("side"),
+                  cand, num, den)(
+                  _.where(col("side") === "b")
+                    .select(col("id").as("id_b"), col("n").as("nb")))
+                // no determinism orderBy here (guide §2.4): every caller
+                // joins/aggregates the pair set or re-orders its own final
+                // output, so the range exchange + sampling pass it cost per
+                // probe bought nothing
+                .localCheckpoint()) // materialize while the caches are alive
+          } finally sh.unpersist()
+        } finally cand.unpersist()
     } finally pBanded.unpersist()
+  }
+
+  /** Shingles of both verify sides in ONE frame, tagged `side` "a"
+    * (probe/batch docs) and "b" (candidate corpus docs), so one count
+    * warms everything and one (side, id) aggregation feeds both
+    * per-doc shingle counts.
+    */
+  private def shingleSides(a: DataFrame, b: DataFrame, idCol: String,
+                           textCol: String): DataFrame =
+    shingles(a, idCol, textCol).withColumn("side", lit("a"))
+      .unionByName(shingles(b, idCol, textCol).withColumn("side", lit("b")))
+
+  /** Exact n-gram Jaccard ≥ num/den over candidate pairs (id_a, id_b)
+    * from a [[shingleSides]] frame: `shB` is the id_b shingle set and
+    * `nb` picks the id_b counts out of the (side, id) → n aggregation.
+    * ONE (side, id) aggregation feeds both count sides: the two per-side
+    * groupBys had non-identical children (different side filters below
+    * the exchange), so each paid its own scan + exchange over the
+    * shingle cache; keyed (side, id) the subtree is identical and the
+    * second branch is a ReusedExchange.
+    */
+  private def verifySides(sh: DataFrame, shB: DataFrame, cand: DataFrame,
+                          num: Int, den: Int)(
+                          nb: DataFrame => DataFrame): DataFrame = {
+    val common = sh.where(col("side") === "a").drop("side")
+      .toDF("id_a", "shingle")
+      .join(cand, "id_a")
+      .join(shB.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
+    val counts = sh.groupBy("side", "id").agg(count(lit(1)).as("n"))
+    val na = counts.where(col("side") === "a")
+      .select(col("id").as("id_a"), col("n").as("na"))
+    common.join(na, "id_a").join(nb(counts), "id_b")
+      .where(lit(den) * col("common") >=
+        lit(num) * (col("na") + col("nb") - col("common")))
+      .select("id_a", "id_b", "common", "na", "nb")
   }
 
   /** The streaming micro-batch kernel behind
     * [[graft.streaming.StreamingNearDup]]: cross-index matches,
     * within-batch matches, the matches write, AND the index
     * append/build — banding and shingling the batch ONCE and spending
-    * exactly four Spark actions. The unfused form (probeMinHashIndex +
-    * minHashPairs + two writes) costs eight: the r13 bench attribution
-    * showed the per-micro-batch cost of the streaming gates is ACTION
-    * COUNT (per-job scheduling floor), not compute — the q55 lesson
-    * applied to q106.
+    * exactly four Spark actions through [[SignatureIndex.fold]]. The
+    * unfused form (probeMinHashIndex + minHashPairs + two writes) costs
+    * eight: the r13 bench attribution showed the per-micro-batch cost of
+    * the streaming gates is ACTION COUNT (per-job scheduling floor), not
+    * compute — the q55 lesson applied to q106.
     *
-    * Actions: (1) one groupBy-collect over the batch's banded
+    * Actions: (1) the fold's coordinate collect over the batch's banded
     * signatures — the probe's pruning coordinates, its broadcast
     * row-guard, and the banded cache's materialization in one job;
     * (2) one cache-warming count over the union of both shingle sides;
     * (3) the matches WRITE, which doubles as the verify plan's
-    * materialization (no separate checkpoint); (4) the index
-    * append — reusing the same banded cache, so the batch is banded
-    * once, not three times.
+    * materialization (no separate checkpoint); (4) the index append
+    * from the same banded cache, so the batch is banded once, not
+    * three times.
     *
     * Match rows are the [[probeMinHashIndex]] shape. Cross-index pairs
     * come out (id_a = batch id, id_b = indexed id); within-batch pairs
@@ -767,134 +731,46 @@ object DocDedup {
                        bands: Int = 16, rows: Int = 8,
                        sigBuckets: Int = 8,
                        broadcastLimit: Long = 4L << 20): Unit = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
-    val ss = batch.sparkSession
-    graft.functions.VecExpressions.register(ss)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val indexExists = fs.exists(
-      new org.apache.hadoop.fs.Path(indexPath, "_graft_minhash_meta"))
-    val (eBands, eRows, eSigBuckets) =
-      if (indexExists) readMinHashMeta(ss, indexPath)
-      else (bands, rows, sigBuckets)
-    require(eBands >= 1 && eRows >= 1 && eBands * eRows <= 4096,
-      s"bands*rows must be in [1,4096], got $eBands*$eRows")
-    require(eSigBuckets >= 1 && eSigBuckets <= 4096,
-      s"sigBuckets must be in [1,4096], got $eSigBuckets")
-    // persisted PRE-CLUSTERED by the index partition cols: the append
-    // then writes straight from the cache (no per-batch re-shuffle),
-    // and each task holds whole (band, sb) groups → one file per
-    // touched partition dir, the small-files discipline of the builds
-    val banded = bandedSignatures(batch, idCol, textCol,
-      eBands, eRows, eSigBuckets)
-      // pinned reducer count (see buildMinHashIndex): the cache feeds
-      // the append write below, so an AQE-coalesced single partition
-      // would serialize every touched dir's file write through one task
-      .repartition(ss.sessionState.conf.numShufflePartitions,
-        col("band"), col("sb")).persist()
-    try {
-      // action 1: pruning coordinates + banded row count (row-guard),
-      // materializing the banded cache as a side effect
-      val coordCounts = graft.Instr.timed("foldMinHash.coords")(
-        banded.groupBy("band", "sb").agg(count(lit(1)).as("n")).collect())
-      val nBatchRows = coordCounts.map(_.getLong(2)).sum
-      val coords = coordCounts.map(r => (r.getInt(0), r.getInt(1)))
-      require(coords.length <= 65536,
-        s"foldMinHashBatch: ${coords.length} distinct (band, sb) " +
-          "coordinates exceed the small-batch contract (<= 65536)")
-      val hasIndexData = indexExists && fs.listStatus(
-        new org.apache.hadoop.fs.Path(indexPath))
-        .exists(_.getPath.getName.startsWith("band="))
-      val pBanded = banded.select(col("id").as("id_a"),
-        col("band"), col("bsig"), col("sb"))
-      def noPairs = banded.select(col("id").as("id_a"),
-          col("id").as("id_b")).where(lit(false))
-      val crossCand =
-        if (!hasIndexData || coords.isEmpty) noPairs
-        else {
-          // partition-column-only In over a combined key → pruned at
-          // file-listing time, the probeMinHashIndex discipline
-          val bucketFilter = (col("band").cast("long") * 4096L +
-            col("sb").cast("long")).isin(
-            coords.map { case (b, sb) => b.toLong * 4096L + sb }
-              .toSeq: _*)
-          val probeSide =
-            if (nBatchRows <= broadcastLimit) broadcast(pBanded)
-            else pBanded
-          ss.read.parquet(indexPath).where(bucketFilter)
-            .join(probeSide, Seq("band", "bsig", "sb"))
-            .where(col("id_a") =!= col("id"))
-            .select(col("id_a"), col("id").as("id_b"))
-        }
+    graft.functions.VecExpressions.register(batch.sparkSession)
+    SignatureIndex.fold(batch, indexPath, matchesPath, MinHashLayout,
+        Seq(bands, rows, sigBuckets), "foldMinHashBatch", broadcastLimit) {
+      case p @ Seq(eBands, eRows, eSigBuckets) =>
+        requireMinHashParams(p)
+        bandedSignatures(batch, idCol, textCol, eBands, eRows, eSigBuckets)
+    } { b =>
+      val banded = b.signed
+      val crossCand = b.cross.fold(
+        banded.select(col("id").as("id_a"), col("id").as("id_b"))
+          .where(lit(false))) { idx =>
+        idx.index.join(idx.guarded(banded.select(col("id").as("id_a"),
+            col("band"), col("bsig"), col("sb"))), Seq("band", "bsig", "sb"))
+          .where(col("id_a") =!= col("id"))
+          .select(col("id_a"), col("id").as("id_b"))
+      }
       // same proven self-join form as minHashPairs (toDF re-aliasing)
       val bandedIds = banded.select("id", "band", "bsig")
       val withinCand = bandedIds.toDF("id_a", "band", "bsig")
         .join(bandedIds.toDF("id_b", "band", "bsig"), Seq("band", "bsig"))
         .where(col("id_a") < col("id_b"))
         .select("id_a", "id_b")
-      val cand = crossCand.unionByName(withinCand).distinct().persist()
-      try {
-        // corpus text only for the ids the cross side actually hit —
-        // batch-id id_b values simply never match (ids are disjoint)
-        val corpusCand = corpus.select(col(idCol), col(textCol))
-          .join(cand.select(col("id_b").as(idCol)).distinct(),
-            Seq(idCol), "left_semi")
-        // BOTH shingle sides in one cache so one count materializes
-        // everything, cand included via the semi-join inside side "b"
-        val sh = shingles(batch, idCol, textCol)
-          .withColumn("side", lit("a"))
-          .unionByName(shingles(corpusCand, idCol, textCol)
-            .withColumn("side", lit("b")))
-          .persist()
-        // within-pair id_b values are BATCH docs: resolve id_b shingle
-        // counts against both sides (ids are disjoint across sides)
-        val shA = sh.where(col("side") === "a").drop("side")
-        val shAll = sh.drop("side")
-        try {
-          // action 2: warm the shingle + candidate caches in one job
-          graft.Instr.timed("foldMinHash.warm")(sh.count())
-          val common = shA.toDF("id_a", "shingle")
-            .join(cand, "id_a")
-            .join(shAll.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
-            .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-          // ONE (side, id) aggregation feeds both count sides (see
-          // probeMinHashIndex). nb must count per id over BOTH sides
-          // (within-batch id_b values are batch docs); batch and corpus
-          // ids are disjoint by this function's contract, but the
-          // side-sum below is exact even if they were not.
-          val counts = sh.groupBy("side", "id")
-            .agg(count(lit(1)).as("n"))
-          val na = counts.where(col("side") === "a")
-            .select(col("id").as("id_a"), col("n").as("na"))
-          val nb = counts.groupBy("id").agg(sum("n").as("nb"))
-            .toDF("id_b", "nb")
-          // action 3: the matches write IS the verify materialization
-          graft.Instr.timed("foldMinHash.matches")(
-            common.join(na, "id_a").join(nb, "id_b")
-              .where(lit(den) * col("common") >=
-                lit(num) * (col("na") + col("nb") - col("common")))
-              .select("id_a", "id_b", "common", "na", "nb")
-              .write.mode("overwrite").parquet(matchesPath))
-        } finally sh.unpersist()
-      } finally cand.unpersist()
-      // action 4: fold the batch into the index straight from the
-      // banded cache — already clustered by (band, sb), so this is a
-      // shuffle-free write (no third banding pass, no re-shuffle).
-      // Index mutation → writer lock (reentrant on the stream's
-      // foreachBatch thread, which may also hold it around compaction).
-      WriterLock.withLock(ss, indexPath, "foldMinHashBatch.append") {
-        graft.Instr.timed("foldMinHash.append")(
-          banded.write.mode(if (indexExists) "append" else "overwrite")
-            .partitionBy("band", "sb").parquet(indexPath))
-        if (!indexExists) {
-          val out = fs.create(new org.apache.hadoop.fs.Path(indexPath,
-            "_graft_minhash_meta"), true)
-          try out.write(s"$eBands,$eRows,$eSigBuckets".getBytes("UTF-8"))
-          finally out.close()
-        }
-      }
-    } finally banded.unpersist()
+      val cand = b.persist(crossCand.unionByName(withinCand).distinct())
+      // corpus text only for the ids the cross side actually hit —
+      // batch-id id_b values simply never match (ids are disjoint)
+      val corpusCand = corpus.select(col(idCol), col(textCol))
+        .join(cand.select(col("id_b").as(idCol)).distinct(),
+          Seq(idCol), "left_semi")
+      // BOTH shingle sides in one cache so one count materializes
+      // everything, cand included via the semi-join inside side "b"
+      val sh = b.persist(shingleSides(batch, corpusCand, idCol, textCol))
+      // action 2: warm the shingle + candidate caches in one job
+      graft.Instr.timed("foldMinHashBatch.warm")(sh.count())
+      // within-pair id_b values are BATCH docs: resolve id_b shingles
+      // and counts against both sides. Batch and corpus ids are
+      // disjoint by this function's contract, but the side-sum is
+      // exact even if they were not.
+      verifySides(sh, sh.drop("side"), cand, num, den)(
+        _.groupBy("id").agg(sum("n").as("nb")).toDF("id_b", "nb"))
+    }
   }
 
   // ------------------------------------------------------- clustering
@@ -1135,26 +1011,30 @@ object DocDedup {
     */
   def buildHammingIndex(sig: DataFrame, idCol: String, hashCol: String,
                         path: String, qBuckets: Int = 64): Unit = {
+    requireQBuckets(qBuckets)
+    SignatureIndex.build(quarters(sig, idCol, hashCol, qBuckets), path,
+      HammingLayout, Seq(qBuckets))
+  }
+
+  private val HammingLayout =
+    SignatureIndex.intsLayout("_graft_hamming_meta", "q", "qb")
+
+  private def requireQBuckets(qBuckets: Int): Unit =
     require(qBuckets >= 1 && qBuckets <= 4096,
       s"qBuckets must be in [1,4096], got $qBuckets")
-    val ss = sig.sparkSession
+
+  /** The Hamming index's signing projection: each signature exploded to
+    * its four 16-bit quarters, (id, sh, q, qv, qb) with qb the quarter
+    * value's bucket.
+    */
+  private def quarters(sig: DataFrame, idCol: String, hashCol: String,
+                       qBuckets: Int): DataFrame =
     sig.select(col(idCol).as("id"), col(hashCol).as("sh"))
       .select(col("id"), col("sh"),
         posexplode(array((0 until 4).map(q =>
           shiftright(col("sh"), q * 16).bitwiseAND(0xFFFFL)): _*))
           .as(Seq("q", "qv")))
       .withColumn("qb", pmod(col("qv"), lit(qBuckets.toLong)).cast("int"))
-      // pinned reducer count: see buildMinHashIndex
-      .repartition(ss.sessionState.conf.numShufflePartitions,
-        col("q"), col("qb"))
-      .write.mode("overwrite").partitionBy("q", "qb").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_hamming_meta"), true)
-    try out.write(s"$qBuckets".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Cluster form of signature near-dup — the shape that survives MASS
     * duplication (a blank image or boilerplate logo hashing millions of
@@ -1184,17 +1064,6 @@ object DocDedup {
       .select(col("id"), col("cluster"))
   }
 
-  private def readHammingMeta(ss: SparkSession, path: String): Int = {
-    IndexMaintenance.ensureReadable(ss, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val metaIn = fs.open(
-      new org.apache.hadoop.fs.Path(path, "_graft_hamming_meta"))
-    try new String(
-      org.apache.commons.io.IOUtils.toByteArray(metaIn), "UTF-8").trim.toInt
-    finally metaIn.close()
-  }
-
   /** Incremental batch append into an existing [[buildHammingIndex]]
     * layout — new signatures land in the SAME (q, qb) partition
     * scheme (qBuckets from the sidecar, so mixing regimes is
@@ -1204,29 +1073,17 @@ object DocDedup {
     */
   def appendToHammingIndex(sig: DataFrame, idCol: String, hashCol: String,
                            path: String): Unit =
-    WriterLock.withLock(sig.sparkSession, path, "appendToHammingIndex") {
-      IndexMaintenance.ensureReadable(sig.sparkSession, path)
-      val qBuckets = readHammingMeta(sig.sparkSession, path)
-      sig.select(col(idCol).as("id"), col(hashCol).as("sh"))
-        .select(col("id"), col("sh"),
-          posexplode(array((0 until 4).map(q =>
-            shiftright(col("sh"), q * 16).bitwiseAND(0xFFFFL)): _*))
-            .as(Seq("q", "qv")))
-        .withColumn("qb", pmod(col("qv"), lit(qBuckets.toLong)).cast("int"))
-        // pinned reducer count: see buildMinHashIndex
-        .repartition(sig.sparkSession.sessionState.conf
-          .numShufflePartitions, col("q"), col("qb"))
-        .write.mode("append").partitionBy("q", "qb").parquet(path)
+    SignatureIndex.append(sig.sparkSession, path, HammingLayout,
+        "appendToHammingIndex") {
+      case Seq(qBuckets) => quarters(sig, idCol, hashCol, qBuckets)
     }
 
   /** The streaming micro-batch kernel behind
     * [[graft.streaming.StreamingImageDedup]] — the [[foldMinHashBatch]]
     * discipline for the Hamming family: the batch's signatures are
-    * quarter-exploded ONCE into a cache persisted pre-clustered by the
-    * index partition columns, then spent across three actions:
-    * (1) one groupBy-collect for the pruning coordinates + broadcast
-    * row-guard, materializing the cache; (2) the matches write —
-    * cross pairs against the pruned index read
+    * quarter-exploded ONCE into the [[SignatureIndex.fold]] cache, then
+    * spent across three actions: (1) the coordinate collect; (2) the
+    * matches write — cross pairs against the pruned index read
     * ([[probeHammingIndex]] semantics) ∪ within-batch pairs via the
     * quarter self-join with the signature carried in-row (so
     * [[hammingPairs]]' two re-joins back to the signature table are
@@ -1242,95 +1099,52 @@ object DocDedup {
                        broadcastLimit: Long = 4L << 20): Unit = {
     require(maxDist >= 0 && maxDist <= 3,
       s"quarter blocking guarantees recall only to distance 3, got $maxDist")
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
-    val ss = sig.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val indexExists = fs.exists(
-      new org.apache.hadoop.fs.Path(indexPath, "_graft_hamming_meta"))
-    val eQBuckets =
-      if (indexExists) readHammingMeta(ss, indexPath) else qBuckets
-    require(eQBuckets >= 1 && eQBuckets <= 4096,
-      s"qBuckets must be in [1,4096], got $eQBuckets")
-    val quarters = sig.select(col(idCol).as("id"), col(hashCol).as("sh"))
-      .select(col("id"), col("sh"),
-        posexplode(array((0 until 4).map(q =>
-          shiftright(col("sh"), q * 16).bitwiseAND(0xFFFFL)): _*))
-          .as(Seq("q", "qv")))
-      .withColumn("qb", pmod(col("qv"), lit(eQBuckets.toLong)).cast("int"))
-      // pinned reducer count: see foldMinHashBatch
-      .repartition(ss.sessionState.conf.numShufflePartitions,
-        col("q"), col("qb")).persist()
-    try {
-      // action 1: pruning coordinates + row count, materializing the
-      // cache (one image decode / signature pass total)
-      val coordCounts = graft.Instr.timed("foldHamming.coords")(
-        quarters.groupBy("q", "qb").agg(count(lit(1)).as("n")).collect())
-      val coords = coordCounts.map(r => (r.getInt(0), r.getInt(1)))
-      val nRows = coordCounts.map(_.getLong(2)).sum
-      val hasIndexData = indexExists && fs.listStatus(
-        new org.apache.hadoop.fs.Path(indexPath))
-        .exists(_.getPath.getName.startsWith("q="))
-      val pA = quarters.select(col("id").as("id_a"),
-        col("sh").as("sh_a"), col("q"), col("qv"))
-      def noPairs = quarters.select(col("id").as("id_a"),
-          col("id").as("id_b"), lit(0).as("hamming"))
-        .where(lit(false))
-      val cross =
-        if (!hasIndexData || coords.isEmpty) noPairs
-        else {
-          val bucketFilter = (col("q").cast("long") * 4096L +
-            col("qb").cast("long")).isin(
-            coords.map { case (q, b) => q.toLong * 4096L + b }.toSeq: _*)
-          val probeSide =
-            if (nRows <= broadcastLimit) broadcast(pA) else pA
-          ss.read.parquet(indexPath).where(bucketFilter)
-            .join(probeSide, Seq("q", "qv"))
-            .where(col("id_a") =!= col("id"))
-            .select(col("id_a"), col("id").as("id_b"),
-              bit_count(col("sh_a").bitwiseXOR(col("sh"))).as("hamming"))
-            .where(col("hamming") <= maxDist)
-            .distinct()
-        }
+    SignatureIndex.fold(sig, indexPath, matchesPath, HammingLayout,
+        Seq(qBuckets), "foldHammingBatch", broadcastLimit) {
+      case Seq(eQBuckets) =>
+        requireQBuckets(eQBuckets)
+        quarters(sig, idCol, hashCol, eQBuckets)
+    } { b =>
+      val cross = b.cross.fold(
+        b.signed.select(col("id").as("id_a"), col("id").as("id_b"),
+          lit(0).as("hamming")).where(lit(false))) { idx =>
+        probeVerify(idx.index, idx.guarded(b.signed.select(
+          col("id").as("id_a"), col("sh").as("sh_a"), col("q"), col("qv"))),
+          maxDist)
+      }
       // within-batch pairs: hammingPairs semantics with the signature
       // carried through the candidate join (hamming is a function of
       // the pair, so distinct over the triple == distinct candidates)
-      val qIds = quarters.select("id", "sh", "q", "qv")
-      val within = qIds.toDF("id_a", "sh_a", "q", "qv")
+      val qIds = b.signed.select("id", "sh", "q", "qv")
+      cross.unionByName(qIds.toDF("id_a", "sh_a", "q", "qv")
         .join(qIds.toDF("id_b", "sh_b", "q", "qv"), Seq("q", "qv"))
         .where(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"),
           bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
         .where(col("hamming") <= maxDist)
-        .distinct()
-      // action 2: the matches write IS the pair-plan materialization
-      graft.Instr.timed("foldHamming.matches")(
-        cross.unionByName(within)
-          .write.mode("overwrite").parquet(matchesPath))
-      // action 3: append straight from the pre-clustered cache
-      // (index mutation → writer lock, reentrant on the stream thread)
-      WriterLock.withLock(sig.sparkSession, indexPath,
-        "foldHammingBatch.append") {
-        graft.Instr.timed("foldHamming.append")(
-          quarters.write.mode(if (indexExists) "append" else "overwrite")
-            .partitionBy("q", "qb").parquet(indexPath))
-        if (!indexExists) {
-          val out = fs.create(new org.apache.hadoop.fs.Path(indexPath,
-            "_graft_hamming_meta"), true)
-          try out.write(s"$eQBuckets".getBytes("UTF-8"))
-          finally out.close()
-        }
-      }
-    } finally quarters.unpersist()
+        .distinct())
+    }
   }
+
+  /** Cross pairs of a quarter-exploded probe side (id_a, sh_a, q, qv)
+    * against a pruned index read: quarter equality, then the exact
+    * `bit_count(xor)` verify.
+    */
+  private def probeVerify(index: DataFrame, probeSide: DataFrame,
+                          maxDist: Int): DataFrame =
+    index.join(probeSide, Seq("q", "qv"))
+      .where(col("id_a") =!= col("id"))
+      .select(col("id_a"), col("id").as("id_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh"))).as("hamming"))
+      .where(col("hamming") <= maxDist)
+      .distinct()
 
   /** Compact a [[buildHammingIndex]] layout back to one file per
     * (q, qb) partition — same contract as [[compactMinHashIndex]].
     */
   def compactHammingIndex(ss: SparkSession, path: String)
       : IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("q", "qb"))
+    IndexMaintenance.compactIndex(ss, path, HammingLayout.partitionCols)
 
   /** Probe the [[buildHammingIndex]] layout: candidates from quarter
     * equality against ONLY the touched (q, qb) partitions, then the
@@ -1348,45 +1162,23 @@ object DocDedup {
   def probeHammingIndex(probes: DataFrame, idCol: String, hashCol: String,
                         path: String, maxDist: Int,
                         broadcastLimit: Long = 4L << 20): DataFrame = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
     require(maxDist >= 0 && maxDist <= 3,
       s"quarter blocking guarantees recall only to distance 3, got $maxDist")
     val ss = probes.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val qBuckets = readHammingMeta(ss, path)
+    val Seq(qBuckets) = SignatureIndex.read(ss, path, HammingLayout)
     // NOT persisted: re-deriving the 4-rows-per-signature explode is a
-    // narrow map; one groupBy-collect yields coordinates AND the row
-    // count for the broadcast guard (the probeMinHashIndex discipline —
-    // fewer Spark actions dominate these gates' cost, r13 attribution)
-    val p = probes.select(col(idCol).as("id_a"), col(hashCol).as("sh_a"))
-      .select(col("id_a"), col("sh_a"),
-        posexplode(array((0 until 4).map(q =>
-          shiftright(col("sh_a"), q * 16).bitwiseAND(0xFFFFL)): _*))
-          .as(Seq("q", "qv")))
-      .withColumn("qb", pmod(col("qv"), lit(qBuckets.toLong)).cast("int"))
-    val coordCounts = p.groupBy("q", "qb")
-      .agg(count(lit(1)).as("n")).collect()
-    val nProbeRows = coordCounts.map(_.getLong(2)).sum
-    val coords = coordCounts.map(r => (r.getInt(0), r.getInt(1)))
-    def emptyResult = probes.select(col(idCol).as("id_a"),
-        col(idCol).as("id_b"), lit(0).as("hamming")).where(lit(false))
-    if (coords.isEmpty) return emptyResult
-    if (!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .exists(_.getPath.getName.startsWith("q="))) return emptyResult
-    // partition-column-only predicate → evaluated at file listing
-    val bucketFilter = (col("q").cast("long") * 4096L +
-      col("qb").cast("long")).isin(
-      coords.map { case (q, b) => q.toLong * 4096L + b }.toSeq: _*)
-    val probeSide = if (nProbeRows <= broadcastLimit) broadcast(p) else p
-    ss.read.parquet(path).where(bucketFilter)
-      .join(probeSide, Seq("q", "qv"))
-      .where(col("id_a") =!= col("id"))
-      .select(col("id_a"), col("id").as("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh"))).as("hamming"))
-      .where(col("hamming") <= maxDist)
-      .distinct()
+    // narrow map; the probe's one groupBy-collect yields coordinates AND
+    // the row count for the broadcast guard (fewer Spark actions
+    // dominate these gates' cost, r13 attribution)
+    val p = quarters(probes, idCol, hashCol, qBuckets)
+      .select(col("id").as("id_a"), col("sh").as("sh_a"), col("q"),
+        col("qv"), col("qb"))
+    SignatureIndex.probe(ss, path, HammingLayout, "probeHammingIndex", p,
+        broadcastLimit)
+      .fold(probes.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
+        lit(0).as("hamming")).where(lit(false))) { idx =>
+        probeVerify(idx.index, idx.guarded(p), maxDist)
+      }
     // not checkpointed here (unlike probeMinHashIndex): the executed
     // probe plan is part of this operator's observable contract
     // (DocDedupSpec pins the pruned scan and the broadcast strategy on

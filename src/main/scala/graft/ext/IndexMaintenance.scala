@@ -48,8 +48,9 @@ import org.apache.spark.sql.functions.col
   * corrupt (the live path is either the old layout, the new layout, or
   * absent; it never mixes the two), and AUTO-HEALED since r15 (r14
   * verdict ask #3): [[recoverInterruptedSwap]] detects the residue and
-  * deterministically completes or rolls back; probes and appends call
-  * [[ensureReadable]] at open, so a month-old unattended stream
+  * deterministically completes or rolls back; every index open
+  * ([[SignatureIndex]]: probes, appends and fold batches) calls
+  * [[ensureReadable]] first, so a month-old unattended stream
   * recovers on its next touch instead of needing a human.
   */
 object IndexMaintenance {

@@ -147,9 +147,7 @@ object Similarity {
     // (posexplode, pos ≙ table index) — a per-table union would scan
     // and re-hash the corpus `tables` times.
     def signed(df: DataFrame, id: String): DataFrame =
-      df.select(col(idCol).as(id),
-        posexplode(array((0 until tables).map(t =>
-          lshSignature(col(vecCol), bits, t)): _*)).as(Seq("tbl", "sig")))
+      df.select(col(idCol).as(id), lshSignatures(col(vecCol), bits, tables))
     // Candidate generation is ids-only — vectors are re-joined after
     // the dedup so the (tables×) exploded rows and the dedup shuffle
     // never carry the embedding payload.
@@ -199,29 +197,23 @@ object Similarity {
                     path: String, bits: Int = 8, tables: Int = 4): Unit = {
     require(bits >= 1 && bits <= 30 && tables >= 1,
       s"need 1 <= bits <= 30 and tables >= 1, got bits=$bits tables=$tables")
-    val ss = corpus.sparkSession
-    graft.functions.VecExpressions.register(ss)
-    corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-        posexplode(array((0 until tables).map(t =>
-          lshSignature(col(vecCol), bits, t)): _*)).as(Seq("tbl", "sig")))
-      .select("tbl", "sig", "id", "vec")
-      // Cluster rows by bucket before the partitioned write: without
-      // this EVERY write task opens a file in EVERY bucket it sees —
-      // up to tasks × tables·2^bits tiny files (the classic partitioned-
-      // write small-files explosion). After it, each bucket is written
-      // by one task: total files ≈ max(buckets, shuffle partitions).
-      // Reducer count pinned (not left to AQE): a coalesced single
-      // reducer would serialize every bucket file through one task.
-      .repartition(ss.sessionState.conf.numShufflePartitions,
-        col("tbl"), col("sig"))
-      .write.mode("overwrite").partitionBy("tbl", "sig").parquet(path)
-    // Underscore-prefixed sidecar: invisible to parquet file discovery.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_lsh_meta"), true)
-    try out.write(s"$bits,$tables".getBytes("UTF-8")) finally out.close()
+    graft.functions.VecExpressions.register(corpus.sparkSession)
+    SignatureIndex.build(corpus.select(col(idCol).as("id"),
+          col(vecCol).as("vec"), lshSignatures(col(vecCol), bits, tables))
+        .select("tbl", "sig", "id", "vec"),
+      path, LshLayout, Seq(bits, tables))
   }
+
+  private val LshLayout =
+    SignatureIndex.intsLayout("_graft_lsh_meta", "tbl", "sig")
+
+  /** All `tables` signatures of a vector in ONE projection — (tbl, sig)
+    * rows via posexplode (pos ≙ table index); a per-table union would
+    * scan and re-hash the input `tables` times.
+    */
+  private def lshSignatures(vec: Column, bits: Int, tables: Int): Column =
+    posexplode(array((0 until tables).map(t =>
+      lshSignature(vec, bits, t)): _*)).as(Seq("tbl", "sig"))
 
   /** Approximate top-k against a [[buildLshIndex]] index: compute the
     * queries' bucket coordinates with the index's own (bits, tables),
@@ -240,70 +232,35 @@ object Similarity {
   def probeLshIndex(queries: DataFrame, idCol: String, vecCol: String,
                     path: String, k: Int,
                     broadcastLimit: Long = 4L << 20): DataFrame = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
     val ss = queries.sparkSession
     graft.functions.VecExpressions.register(ss)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    IndexMaintenance.ensureReadable(ss, path)
-    val metaIn = fs.open(new org.apache.hadoop.fs.Path(path, "_graft_lsh_meta"))
-    val Array(bits, tables) =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").mkString
-        .trim.split(",").map(_.toInt)
-      finally metaIn.close()
+    val Seq(bits, tables) = SignatureIndex.read(ss, path, LshLayout)
     val qsig = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        posexplode(array((0 until tables).map(t =>
-          lshSignature(col(vecCol), bits, t)): _*)).as(Seq("tbl", "sig")))
-    def emptyResult = qsig
-      .select(col("query_id"), col("query_id").as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("sim")).where(lit(false))
-    // one action: distinct (tbl, sig) buckets AND the exploded row
-    // count — the broadcast guard below is on ROWS, not coordinates
-    // (the r12 minhash-probe adjudication, applied to every sibling)
-    val bucketCounts = qsig.groupBy("tbl", "sig")
-      .agg(count(lit(1)).as("n")).collect()
-    val nQsigRows = bucketCounts.map(_.getLong(2)).sum
-    val probes = bucketCounts.map(r => (r.getInt(0), r.getLong(1)))
-    if (probes.isEmpty) return emptyResult
-    // An index built from an EMPTY corpus has the sidecar but no data
-    // files (zero rows → zero part files); read.parquet would fail
-    // schema inference where lshTopK — whose results this contracts to
-    // match — returns empty.
-    if (!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .exists(_.getPath.getName.startsWith("tbl="))) return emptyResult
-    // The small-side contract made explicit (round-7 advice): the
-    // bucket filter is driver-built from tables·|queries| coordinates,
-    // so an oversized query batch must fail loudly, not produce a
-    // megabyte Catalyst predicate.
-    require(probes.length <= 65536,
-      s"probeLshIndex: ${probes.length} distinct (tbl, sig) buckets " +
-        "exceed the small-query-side contract (<= 65536); batch the " +
-        "query set or use lshTopK's join form")
-    // ONE In-expression over a combined (tbl, sig) key instead of an
-    // OR-chain of per-bucket conjuncts: linear-size predicate, and it
-    // still references only partition columns, so Catalyst evaluates it
-    // against partition values at file-listing time (the pruned-scan
-    // file count is asserted by SimilaritySpec). bits <= 30 keeps sig
-    // in int range; 2^31 separates the tbl and sig halves losslessly.
-    val bucketFilter = (col("tbl").cast("long") * 2147483648L +
-      col("sig").cast("long")).isin(
-      probes.map { case (t, s) => t.toLong * 2147483648L + s }.toSeq: _*)
-    def guarded(df: DataFrame): DataFrame =
-      if (nQsigRows <= broadcastLimit) broadcast(df) else df
-    val cand = ss.read.parquet(path).where(bucketFilter)
-      .join(guarded(qsig.drop("qv")), Seq("tbl", "sig"))
-      .where(col("query_id") =!= col("id"))
-      // the index carries the vector, so scoring needs no corpus join;
-      // same-pair rows from several tables are identical — dedup keeps one
-      .select(col("query_id"), col("id").as("neighbor_id"), col("vec"))
-      .dropDuplicates("query_id", "neighbor_id")
-    topKPerQuery(
-      cand.join(guarded(queries.select(col(idCol).as("query_id"),
-          col(vecCol).as("qv"))), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          cosine(col("vec"), col("qv")).as("sim")),
-      k)
+      lshSignatures(col(vecCol), bits, tables))
+    // the (tbl, sig) bucket filter is driver-built from tables·|queries|
+    // coordinates, so an oversized query batch fails loudly in
+    // SignatureIndex.probe instead of producing a megabyte predicate
+    SignatureIndex.probe(ss, path, LshLayout, "probeLshIndex", qsig,
+        broadcastLimit) match {
+      case None =>
+        qsig.select(col("query_id"), col("query_id").as("neighbor_id"),
+          lit(1).as("rank"), lit(0.0).as("sim")).where(lit(false))
+      case Some(idx) =>
+        val cand = idx.index
+          .join(idx.guarded(qsig.drop("qv")), Seq("tbl", "sig"))
+          .where(col("query_id") =!= col("id"))
+          // the index carries the vector, so scoring needs no corpus
+          // join; same-pair rows from several tables are identical —
+          // dedup keeps one
+          .select(col("query_id"), col("id").as("neighbor_id"), col("vec"))
+          .dropDuplicates("query_id", "neighbor_id")
+        topKPerQuery(
+          cand.join(idx.guarded(queries.select(col(idCol).as("query_id"),
+              col(vecCol).as("qv"))), "query_id")
+            .select(col("query_id"), col("neighbor_id"),
+              cosine(col("vec"), col("qv")).as("sim")),
+          k)
+    }
   }
 
   /** IVF (inverted-file) approximate top-k — the third ANN tier and the
@@ -420,35 +377,28 @@ object Similarity {
         .orderBy("h", "id").limit(nlist)
         .select("vec").collect()
         .map(_.getSeq[Float](0).toArray)
-      val cdf = centroidsDf(ss, cents)
-      // Cell assignment (ids-only, map-side max_by), vectors re-joined
-      // by id, then clustered by cell before the partitioned write —
-      // same small-files discipline as buildLshIndex.
-      val cells = c.crossJoin(cdf)
-        .select(col("id"), col("cid"),
-          cosine(col("vec"), col("cvec")).as("csim"))
-        .groupBy("id")
-        .agg(expr("max_by(cid, struct(csim, -cid))").as("cid"))
-      c.join(cells, "id")
-        .select("cid", "id", "vec")
-        // pinned reducer count: see buildLshIndex
-        .repartition(ss.sessionState.conf.numShufflePartitions,
-          col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(path)
-      // Underscore-prefixed sidecar: nlist + bit-exact centroids,
-      // invisible to parquet file discovery.
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(path, "_graft_ivf_meta"), true)
-      val body = new StringBuilder(s"$nlist\n")
-      cents.foreach { v =>
-        body.append(v.map(java.lang.Float.floatToRawIntBits)
-          .mkString(",")).append('\n')
-      }
-      try out.write(body.toString.getBytes("UTF-8")) finally out.close()
+      // cell assignment (ids-only, map-side max_by), vectors re-joined
+      // by id; the sidecar holds nlist + the bit-exact centroids
+      SignatureIndex.build(
+        c.join(assignCells(c, "vec", centroidsDf(ss, cents)), "id")
+          .select("cid", "id", "vec"),
+        path, IvfLayout, Quantizer(Seq(nlist), Seq(cents)))
     } finally c.unpersist()
   }
+
+  private[graft] val IvfLayout = quantizerLayout("_graft_ivf_meta", "cid")
+
+  /** Argmax-cosine cell of every (id, `vecCol`) row against broadcast
+    * centroids — (id, cid), ties to the lowest cid; the slim ids-only
+    * rows partial-aggregate map-side.
+    */
+  private def assignCells(c: DataFrame, vecCol: String,
+                          cdf: DataFrame): DataFrame =
+    c.crossJoin(cdf)
+      .select(col("id"), col("cid"),
+        cosine(col(vecCol), col("cvec")).as("csim"))
+      .groupBy("id")
+      .agg(expr("max_by(cid, struct(csim, -cid))").as("cid"))
 
   /** Incremental batch append into a [[buildIvfIndex]] layout: new
     * vectors are assigned to their argmax-cosine cell against the
@@ -461,29 +411,12 @@ object Similarity {
                        path: String): Unit = {
     val ss = corpus.sparkSession
     graft.functions.VecExpressions.register(ss)
-    WriterLock.withLock(ss, path, "appendToIvfIndex") {
-    IndexMaintenance.ensureReadable(ss, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val metaIn = fs.open(new org.apache.hadoop.fs.Path(path, "_graft_ivf_meta"))
-    val lines =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").getLines().toArray
-      finally metaIn.close()
-    val cents: Array[Array[Float]] = lines.drop(1).filter(_.nonEmpty)
-      .map(_.split(",").map(b =>
-        java.lang.Float.intBitsToFloat(b.trim.toInt)))
-    require(cents.nonEmpty, "cannot append into an empty-centroid index")
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val cells = c.crossJoin(centroidsDf(ss, cents))
-      .select(col("id"), col("cid"),
-        cosine(col("vec"), col("cvec")).as("csim"))
-      .groupBy("id")
-      .agg(expr("max_by(cid, struct(csim, -cid))").as("cid"))
-    c.join(cells, "id")
-      .select("cid", "id", "vec")
-      // pinned reducer count: see buildLshIndex
-      .repartition(ss.sessionState.conf.numShufflePartitions, col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(path)
+    SignatureIndex.append(ss, path, IvfLayout, "appendToIvfIndex") { q =>
+      val Seq(cents) = q.blocks
+      require(cents.nonEmpty, "cannot append into an empty-centroid index")
+      val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
+      c.join(assignCells(c, "vec", centroidsDf(ss, cents)), "id")
+        .select("cid", "id", "vec")
     }
   }
 
@@ -494,7 +427,7 @@ object Similarity {
     */
   def compactIvfIndex(ss: SparkSession, path: String)
       : IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("cid"))
+    IndexMaintenance.compactIndex(ss, path, IvfLayout.partitionCols)
 
   /** Compact a flat [[buildPqIndex]] code table — appends stack file
     * sets at the root; this rewrites them into at most
@@ -503,14 +436,14 @@ object Similarity {
     */
   def compactPqIndex(ss: SparkSession, path: String)
       : IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq.empty)
+    IndexMaintenance.compactIndex(ss, path, PqLayout.partitionCols)
 
   /** Compact a [[buildIvfPqIndex]] layout back to one file per (cid)
     * partition — probe results bit-identical, sidecar preserved.
     */
   def compactIvfPqIndex(ss: SparkSession, path: String)
       : IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("cid"))
+    IndexMaintenance.compactIndex(ss, path, IvfPqLayout.partitionCols)
 
   /** Approximate top-k against a [[buildIvfIndex]] index: assign each
     * query to its `nprobe` nearest persisted centroids, read ONLY
@@ -526,63 +459,45 @@ object Similarity {
   def probeIvfIndex(queries: DataFrame, idCol: String, vecCol: String,
                     path: String, k: Int, nprobe: Int = 4,
                     broadcastLimit: Long = 4L << 20): DataFrame = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
     val ss = queries.sparkSession
     graft.functions.VecExpressions.register(ss)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    IndexMaintenance.ensureReadable(ss, path)
-    val metaIn = fs.open(new org.apache.hadoop.fs.Path(path, "_graft_ivf_meta"))
-    val lines =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").getLines().toArray
-      finally metaIn.close()
-    val nlist = lines.head.trim.toInt
-    val cents: Array[Array[Float]] = lines.drop(1).filter(_.nonEmpty)
-      .map(_.split(",").map(b =>
-        java.lang.Float.intBitsToFloat(b.trim.toInt)))
+    val Quantizer(Seq(nlist), Seq(cents)) =
+      SignatureIndex.read(ss, path, IvfLayout)
     require(nprobe >= 1 && nprobe <= nlist,
       s"need 1 <= nprobe <= nlist=$nlist, got nprobe=$nprobe")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     def emptyResult = q
       .select(col("query_id"), col("query_id").as("neighbor_id"),
         lit(1).as("rank"), lit(0.0).as("sim")).where(lit(false))
-    // An index built from an EMPTY corpus has the sidecar but no cid=
-    // partition dirs; read.parquet would fail schema inference where
-    // ivfTopK — whose results this contracts to match — returns empty.
-    if (cents.isEmpty ||
-      !fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(_.getPath.getName.startsWith("cid="))) return emptyResult
+    // an index built from an EMPTY corpus has no centroids (and no cid=
+    // partitions): ivfTopK — whose results this contracts to match —
+    // returns empty
+    if (cents.isEmpty) return emptyResult
     // Query → nprobe nearest cells (queries are the small side by
-    // contract; the window is per-query over nlist rows).
+    // contract; the window is per-query over nlist rows). The touched
+    // cells are ≤ nlist by construction; the broadcasts below are
+    // row-guarded (q rows <= qCells rows = queries · nprobe).
     val w = Window.partitionBy("query_id").orderBy(desc("csim"), col("cid"))
     val qCells = q.crossJoin(centroidsDf(ss, cents))
       .select(col("query_id"), col("cid"),
         cosine(col("qv"), col("cvec")).as("csim"))
       .withColumn("r", row_number().over(w)).where(col("r") <= nprobe)
       .select("query_id", "cid")
-    // one action: touched cells AND the qCells row count — broadcasts
-    // below are row-guarded (q rows <= qCells rows = queries · nprobe)
-    val cellCounts = qCells.groupBy("cid")
-      .agg(count(lit(1)).as("n")).collect()
-    val nQCellRows = cellCounts.map(_.getLong(1)).sum
-    val cids = cellCounts.map(_.getInt(0))
-    if (cids.isEmpty) return emptyResult
-    def guarded(df: DataFrame): DataFrame =
-      if (nQCellRows <= broadcastLimit) broadcast(df) else df
-    // ≤ nlist literals; references only the partition column, so
-    // Catalyst prunes at file-listing time (asserted by SimilaritySpec).
-    val cand = ss.read.parquet(path).where(col("cid").isin(cids.toSeq: _*))
-      .join(guarded(qCells), "cid")
-      .where(col("query_id") =!= col("id"))
-      // a corpus vector lives in exactly ONE cell, so (query, id) pairs
-      // are already distinct — no dedup stage needed (unlike LSH)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("vec"))
-    topKPerQuery(
-      cand.join(guarded(q), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          cosine(col("vec"), col("qv")).as("sim")),
-      k)
+    SignatureIndex.probe(ss, path, IvfLayout, "probeIvfIndex", qCells,
+        broadcastLimit) match {
+      case None => emptyResult
+      case Some(idx) =>
+        val cand = idx.index.join(idx.guarded(qCells), "cid")
+          .where(col("query_id") =!= col("id"))
+          // a corpus vector lives in exactly ONE cell, so (query, id)
+          // pairs are already distinct — no dedup stage (unlike LSH)
+          .select(col("query_id"), col("id").as("neighbor_id"), col("vec"))
+        topKPerQuery(
+          cand.join(idx.guarded(q), "query_id")
+            .select(col("query_id"), col("neighbor_id"),
+              cosine(col("vec"), col("qv")).as("sim")),
+          k)
+    }
   }
 
   /** Broadcast-ready (cid, cvec) relation from driver-held centroids —
@@ -880,24 +795,17 @@ object Similarity {
       val dim = if (sample.isEmpty) m else sample.head.length
       require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
       val dsub = dim / m
-      if (sample.nonEmpty)
-        pqEncode(c, codewordsDf(ss, sample, m, dsub), dsub)
-          .write.mode("overwrite").parquet(path)
-      else // empty corpus: no code rows, sidecar only
-        c.select(col("id"), lit(0).as("s"), lit(0).as("code"))
-          .where(lit(false)).write.mode("overwrite").parquet(path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(path, "_graft_pq_meta"), true)
-      val body = new StringBuilder(s"$m $ksub $dsub\n")
-      sample.foreach { v =>
-        body.append(v.map(java.lang.Float.floatToRawIntBits)
-          .mkString(",")).append('\n')
-      }
-      try out.write(body.toString.getBytes("UTF-8")) finally out.close()
+      SignatureIndex.build(
+        if (sample.nonEmpty)
+          pqEncode(c, codewordsDf(ss, sample, m, dsub), dsub)
+        else // empty corpus: no code rows, sidecar only
+          c.select(col("id"), lit(0).as("s"), lit(0).as("code"))
+            .where(lit(false)),
+        path, PqLayout, Quantizer(Seq(m, ksub, dsub), Seq(sample)))
     } finally c.unpersist()
   }
+
+  private val PqLayout = quantizerLayout("_graft_pq_meta")
 
   /** ADC search against a [[buildPqIndex]] code table: one scan of
     * m-codes-per-vector rows joined to the broadcast query distance
@@ -911,25 +819,13 @@ object Similarity {
     require(broadcastLimit >= 1,
       s"broadcastLimit must be >= 1, got $broadcastLimit")
     val ss = queries.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    IndexMaintenance.ensureReadable(ss, path)
-    val metaIn = fs.open(
-      new org.apache.hadoop.fs.Path(path, "_graft_pq_meta"))
-    val lines =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").getLines()
-        .toArray
-      finally metaIn.close()
-    val Array(m, _, dsub) = lines.head.trim.split(" ").map(_.toInt)
-    val sample: Array[Array[Float]] = lines.drop(1).filter(_.nonEmpty)
-      .map(_.split(",").map(b =>
-        java.lang.Float.intBitsToFloat(b.trim.toInt)))
+    val Quantizer(Seq(m, _, dsub), Seq(sample)) =
+      SignatureIndex.read(ss, path, PqLayout)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     def emptyResult = q.select(col("query_id"),
       col("query_id").as("neighbor_id"), lit(1).as("rank"),
       lit(0.0).as("adc")).where(lit(false))
-    if (sample.isEmpty || fs.globStatus(
-      new org.apache.hadoop.fs.Path(path, "*.parquet")).isEmpty)
+    if (sample.isEmpty || !SignatureIndex.hasData(ss, path, PqLayout))
       return emptyResult
     // flat PQ has no coordinate collect to reuse: one count on the
     // (small by contract) probe batch prices the distance table
@@ -975,41 +871,20 @@ object Similarity {
       val dim = if (sample.isEmpty) m else sample.head.length
       require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
       val dsub = dim / m
-      if (sample.nonEmpty) {
-        import ss.implicits._
-        val cdf = broadcast(cents.toSeq.zipWithIndex
-          .map { case (v, i) => (i, v) }.toDF("cid", "cvec"))
-        val cells = c.crossJoin(cdf)
-          .select(col("id"), col("cid"),
-            cosine(col("v"), col("cvec")).as("csim"))
-          .groupBy("id")
-          .agg(expr("max_by(cid, struct(csim, -cid))").as("cid"))
-        pqEncode(c, codewordsDf(ss, sample, m, dsub), dsub)
-          .join(cells, "id")
-          .select("cid", "id", "s", "code")
-          // pinned reducer count: see buildLshIndex
-          .repartition(ss.sessionState.conf.numShufflePartitions,
-            col("cid"))
-          .write.mode("overwrite").partitionBy("cid").parquet(path)
-      }
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(path, "_graft_ivfpq_meta"), true)
-      val body = new StringBuilder(
-        s"${cents.length} $m $ksub $dsub\n")
-      cents.foreach { v =>
-        body.append(v.map(java.lang.Float.floatToRawIntBits)
-          .mkString(",")).append('\n')
-      }
-      body.append("--\n")
-      sample.foreach { v =>
-        body.append(v.map(java.lang.Float.floatToRawIntBits)
-          .mkString(",")).append('\n')
-      }
-      try out.write(body.toString.getBytes("UTF-8")) finally out.close()
+      val params = Quantizer(Seq(cents.length, m, ksub, dsub),
+        Seq(cents, sample))
+      if (sample.nonEmpty)
+        SignatureIndex.build(
+          pqEncode(c, codewordsDf(ss, sample, m, dsub), dsub)
+            .join(assignCells(c, "v", centroidsDf(ss, cents)), "id")
+            .select("cid", "id", "s", "code"),
+          path, IvfPqLayout, params)
+      else // empty corpus: no code rows, sidecar only
+        SignatureIndex.writeSidecar(ss, path, IvfPqLayout, params)
     } finally c.unpersist()
   }
+
+  private val IvfPqLayout = quantizerLayout("_graft_ivfpq_meta", "cid")
 
   /** ADC search against a [[buildIvfPqIndex]] index: each query picks
     * its `nprobe` nearest persisted centroids, reads ONLY those cid
@@ -1020,88 +895,69 @@ object Similarity {
                       path: String, k: Int, nprobe: Int = 4,
                       broadcastLimit: Long = 4L << 20)
       : DataFrame = {
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
     val ss = queries.sparkSession
     graft.functions.VecExpressions.register(ss)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    IndexMaintenance.ensureReadable(ss, path)
-    val metaIn = fs.open(
-      new org.apache.hadoop.fs.Path(path, "_graft_ivfpq_meta"))
-    val lines =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").getLines()
-        .toArray
-      finally metaIn.close()
-    val Array(nlist, m, _, dsub) = lines.head.trim.split(" ").map(_.toInt)
-    val sep = lines.indexOf("--")
-    def parse(ls: Array[String]): Array[Array[Float]] =
-      ls.filter(_.nonEmpty).map(_.split(",").map(b =>
-        java.lang.Float.intBitsToFloat(b.trim.toInt)))
-    val cents = parse(lines.slice(1, sep))
-    val sample = parse(lines.drop(sep + 1))
+    val Quantizer(Seq(nlist, m, _, dsub), Seq(cents, sample)) =
+      SignatureIndex.read(ss, path, IvfPqLayout)
     require(nprobe >= 1 && (nlist == 0 || nprobe <= nlist),
       s"need 1 <= nprobe <= nlist=$nlist, got nprobe=$nprobe")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     def emptyResult = q.select(col("query_id"),
       col("query_id").as("neighbor_id"), lit(1).as("rank"),
       lit(0.0).as("adc")).where(lit(false))
-    if (cents.isEmpty || sample.isEmpty ||
-      !fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(_.getPath.getName.startsWith("cid="))) return emptyResult
-    import ss.implicits._
-    val cdf = broadcast(cents.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v) }.toDF("cid", "cvec"))
+    if (cents.isEmpty || sample.isEmpty) return emptyResult
     val w = Window.partitionBy("query_id").orderBy(desc("csim"), col("cid"))
-    val qCells = q.crossJoin(cdf)
+    val qCells = q.crossJoin(centroidsDf(ss, cents))
       .select(col("query_id"), col("cid"),
         cosine(col("qv"), col("cvec")).as("csim"))
       .withColumn("r", row_number().over(w)).where(col("r") <= nprobe)
       .select("query_id", "cid")
-    // one action: touched cells AND the qCells row count (row-guard)
-    val cellCounts = qCells.groupBy("cid")
-      .agg(count(lit(1)).as("n")).collect()
-    val nQCellRows = cellCounts.map(_.getLong(1)).sum
-    // exact query count by construction, no extra action: row_number
-    // over the crossJoin with ALL centroids gives every query exactly
-    // min(nprobe, |centroids|) qCells rows — dividing by nprobe alone
-    // would undercount queries (and under-guard the dtable broadcast)
-    // whenever the index was built from fewer than nlist vectors
-    val nQueries = nQCellRows / math.min(nprobe, cents.length)
-    val cids = cellCounts.map(_.getInt(0))
-    if (cids.isEmpty) return emptyResult
-    // partition-column-only predicate → pruned at file-listing time;
-    // joining qCells binds each code row to exactly the queries that
-    // probed its cell, so adcTopK scores only pruned candidates
-    val qCellsSide =
-      if (nQCellRows <= broadcastLimit) broadcast(qCells) else qCells
-    val codes = ss.read.parquet(path)
-      .where(col("cid").isin(cids.toSeq: _*))
-      .join(qCellsSide, Seq("cid"))
-    // dtable rows = queries × m·ksub, with the EXACT query count
-    adcTopK(codes, q, codewordsDf(ss, sample, m, dsub), dsub, m, k,
-      broadcastDtable = nQueries * m * sample.length <= broadcastLimit)
+    SignatureIndex.probe(ss, path, IvfPqLayout, "probeIvfPqIndex", qCells,
+        broadcastLimit) match {
+      case None => emptyResult
+      case Some(idx) =>
+        // exact query count by construction, no extra action: row_number
+        // over the crossJoin with ALL centroids gives every query exactly
+        // min(nprobe, |centroids|) qCells rows — dividing by nprobe alone
+        // would undercount queries (and under-guard the dtable broadcast)
+        // whenever the index was built from fewer than nlist vectors
+        val nQueries = idx.rows / math.min(nprobe, cents.length)
+        // joining qCells binds each code row to exactly the queries that
+        // probed its cell, so adcTopK scores only pruned candidates;
+        // dtable rows = queries × m·ksub, with the EXACT query count
+        adcTopK(idx.index.join(idx.guarded(qCells), Seq("cid")), q,
+          codewordsDf(ss, sample, m, dsub), dsub, m, k,
+          broadcastDtable = nQueries * m * sample.length <= broadcastLimit)
+    }
   }
 
-  private def readPqMeta(ss: org.apache.spark.sql.SparkSession,
-                         path: String, metaFile: String)
-      : (Array[Int], Array[Array[Float]], Array[Array[Float]]) = {
-    IndexMaintenance.ensureReadable(ss, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val metaIn = fs.open(new org.apache.hadoop.fs.Path(path, metaFile))
-    val lines =
-      try scala.io.Source.fromInputStream(metaIn, "UTF-8").getLines()
-        .toArray
-      finally metaIn.close()
-    def parse(ls: Array[String]): Array[Array[Float]] =
-      ls.filter(l => l.nonEmpty && l != "--").map(_.split(",").map(b =>
-        java.lang.Float.intBitsToFloat(b.trim.toInt)))
-    val header = lines.head.trim.split(" ").map(_.toInt)
-    val sep = lines.indexOf("--")
-    if (sep < 0) (header, Array.empty, parse(lines.drop(1)))
-    else (header, parse(lines.slice(1, sep)), parse(lines.drop(sep + 1)))
-  }
+  /** A quantizer sidecar: a header line of space-separated ints, then
+    * blocks of raw-float-bit vectors (one per line, comma-separated),
+    * blocks separated by a `--` line — IVF (nlist; centroids), PQ
+    * (m ksub dsub; codebook), IVF-PQ (nlist m ksub dsub; centroids --
+    * codebook). Bit-exact: a float text round-trip would drift cell and
+    * code geometry between build and probe.
+    */
+  private[graft] final case class Quantizer(header: Seq[Int],
+                                            blocks: Seq[Array[Array[Float]]])
+
+  private def quantizerLayout(sidecar: String, partitionCols: String*)
+      : SignatureIndex.Layout[Quantizer] =
+    SignatureIndex.Layout[Quantizer](sidecar, partitionCols,
+      body => {
+        val lines = body.linesIterator.toSeq
+        val blocks = lines.tail.foldLeft(Vector(Vector.empty[Array[Float]])) {
+          case (acc, "--") => acc :+ Vector.empty
+          case (acc, "") => acc
+          case (acc, l) => acc.init :+ (acc.last :+ l.split(",").map(b =>
+            java.lang.Float.intBitsToFloat(b.trim.toInt)))
+        }
+        Quantizer(lines.head.trim.split(" ").map(_.toInt).toSeq,
+          blocks.map(_.toArray))
+      },
+      q => q.header.mkString(" ") + "\n" + q.blocks.map(_.map(v =>
+        v.map(java.lang.Float.floatToRawIntBits).mkString(",") + "\n")
+        .mkString).mkString("--\n"))
 
   /** Incremental batch append into a [[buildPqIndex]] layout: the new
     * vectors encode against the SIDECAR codebook (never re-sampled —
@@ -1112,14 +968,11 @@ object Similarity {
   def appendToPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       path: String): Unit = {
     val ss = corpus.sparkSession
-    WriterLock.withLock(ss, path, "appendToPqIndex") {
-      IndexMaintenance.ensureReadable(ss, path)
-      val (header, _, sample) = readPqMeta(ss, path, "_graft_pq_meta")
-      val Array(m, _, dsub) = header
+    SignatureIndex.append(ss, path, PqLayout, "appendToPqIndex") { q =>
+      val Quantizer(Seq(m, _, dsub), Seq(sample)) = q
       require(sample.nonEmpty, "cannot append to an empty-codebook index")
       pqEncode(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
-          codewordsDf(ss, sample, m, dsub), dsub)
-        .write.mode("append").parquet(path)
+        codewordsDf(ss, sample, m, dsub), dsub)
     }
   }
 
@@ -1132,32 +985,17 @@ object Similarity {
                          vecCol: String, path: String): Unit = {
     val ss = corpus.sparkSession
     graft.functions.VecExpressions.register(ss)
-    WriterLock.withLock(ss, path, "appendToIvfPqIndex") {
-    IndexMaintenance.ensureReadable(ss, path)
-    val (header, cents, sample) = readPqMeta(ss, path, "_graft_ivfpq_meta")
-    val Array(_, m, _, dsub) = header
-    require(cents.nonEmpty && sample.nonEmpty,
-      "cannot append to an empty-quantizer index")
-    import ss.implicits._
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .persist()
-    try {
+    try SignatureIndex.append(ss, path, IvfPqLayout,
+        "appendToIvfPqIndex") { q =>
+      val Quantizer(Seq(_, m, _, dsub), Seq(cents, sample)) = q
+      require(cents.nonEmpty && sample.nonEmpty,
+        "cannot append to an empty-quantizer index")
       c.count()
-      val cdf = broadcast(cents.toSeq.zipWithIndex
-        .map { case (v, i) => (i, v) }.toDF("cid", "cvec"))
-      val cells = c.crossJoin(cdf)
-        .select(col("id"), col("cid"),
-          cosine(col("v"), col("cvec")).as("csim"))
-        .groupBy("id")
-        .agg(expr("max_by(cid, struct(csim, -cid))").as("cid"))
       pqEncode(c, codewordsDf(ss, sample, m, dsub), dsub)
-        .join(cells, "id")
+        .join(assignCells(c, "v", centroidsDf(ss, cents)), "id")
         .select("cid", "id", "s", "code")
-        // pinned reducer count: see buildLshIndex
-        .repartition(ss.sessionState.conf.numShufflePartitions,
-          col("cid"))
-        .write.mode("append").partitionBy("cid").parquet(path)
     } finally c.unpersist()
-    }
   }
 }

@@ -186,33 +186,25 @@ object Winnow {
   def buildWinnowIndex(corpus: DataFrame, idCol: String, textCol: String,
                        path: String, k: Int = 8, w: Int = 16,
                        fpBuckets: Int = 64): Unit = {
-    require(fpBuckets >= 1 && fpBuckets <= 4096,
-      s"fpBuckets must be in [1,4096], got $fpBuckets")
-    val ss = corpus.sparkSession
-    fingerprintsWithGrams(corpus, idCol, textCol, k, w)
-      .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)).cast("int"))
-      // pinned reducer count: see DocDedup.buildMinHashIndex
-      .repartition(ss.sessionState.conf.numShufflePartitions, col("fb"))
-      .write.mode("overwrite").partitionBy("fb").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_winnow_meta"), true)
-    try out.write(s"$k,$w,$fpBuckets".getBytes("UTF-8"))
-    finally out.close()
+    requireFpBuckets(fpBuckets)
+    SignatureIndex.build(
+      signedFingerprints(corpus, idCol, textCol, k, w, fpBuckets), path,
+      WinnowLayout, Seq(k, w, fpBuckets))
   }
 
-  private def readWinnowMeta(df: DataFrame, path: String): (Int, Int, Int) = {
-    IndexMaintenance.ensureReadable(df.sparkSession, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path, "_graft_winnow_meta"))
-    val Array(k, w, fb) =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .trim.split(",").map(_.toInt)
-      finally in.close()
-    (k, w, fb)
-  }
+  private val WinnowLayout =
+    SignatureIndex.intsLayout("_graft_winnow_meta", "fb")
+
+  private def requireFpBuckets(fpBuckets: Int): Unit =
+    require(fpBuckets >= 1 && fpBuckets <= 4096,
+      s"fpBuckets must be in [1,4096], got $fpBuckets")
+
+  /** The index's signing projection: (id, pos, fp, gram, fb). */
+  private def signedFingerprints(df: DataFrame, idCol: String,
+                                 textCol: String, k: Int, w: Int,
+                                 fpBuckets: Int): DataFrame =
+    fingerprintsWithGrams(df, idCol, textCol, k, w)
+      .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)).cast("int"))
 
   /** Append a document batch into the same (fb) layout — cost ∝ batch
     * only; existing files are never rewritten. Parameters come from
@@ -220,15 +212,10 @@ object Winnow {
     */
   def appendToWinnowIndex(newDocs: DataFrame, idCol: String,
                           textCol: String, path: String): Unit =
-    WriterLock.withLock(newDocs.sparkSession, path, "appendToWinnowIndex") {
-      IndexMaintenance.ensureReadable(newDocs.sparkSession, path)
-      val (k, w, fpBuckets) = readWinnowMeta(newDocs, path)
-      fingerprintsWithGrams(newDocs, idCol, textCol, k, w)
-        .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)).cast("int"))
-        // pinned reducer count: see DocDedup.buildMinHashIndex
-        .repartition(newDocs.sparkSession.sessionState.conf
-          .numShufflePartitions, col("fb"))
-        .write.mode("append").partitionBy("fb").parquet(path)
+    SignatureIndex.append(newDocs.sparkSession, path, WinnowLayout,
+        "appendToWinnowIndex") {
+      case Seq(k, w, fpBuckets) =>
+        signedFingerprints(newDocs, idCol, textCol, k, w, fpBuckets)
     }
 
   /** Compact a [[buildWinnowIndex]] layout back to one file per (fb)
@@ -237,24 +224,44 @@ object Winnow {
     */
   def compactWinnowIndex(ss: org.apache.spark.sql.SparkSession,
                          path: String): IndexMaintenance.CompactStats =
-    IndexMaintenance.compactIndex(ss, path, Seq("fb"))
+    IndexMaintenance.compactIndex(ss, path, WinnowLayout.partitionCols)
+
+  /** Gram-verified matches of a fingerprint probe side (id_a, fp, gram,
+    * fb) against a pruned index read, with the hot-fingerprint cap
+    * applied over that read — a fingerprint's doc count lives entirely
+    * inside its own bucket partition, so the count seen through the
+    * pruned read IS the global count, appends included.
+    */
+  private def probeVerify(index: DataFrame, probeSide: DataFrame,
+                          maxDocsPerFp: Int, minMatches: Int): DataFrame = {
+    val hot = index.groupBy("fp")
+      .agg(countDistinct(col("id")).as("n_docs"))
+      .where(col("n_docs") > maxDocsPerFp)
+      .select("fp")
+    index.join(broadcast(hot), Seq("fp"), "left_anti")
+      .join(probeSide, Seq("fp", "gram", "fb")) // gram-verified
+      .where(col("id_a") =!= col("id"))
+      .select(col("id_a"), col("id").as("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_matches"))
+      .where(col("n_matches") >= minMatches)
+  }
 
   /** The streaming micro-batch kernel behind
     * [[graft.streaming.StreamingExactDup]] — the
     * [[graft.ext.DocDedup.foldMinHashBatch]] discipline for the
-    * winnow family: the batch is FINGERPRINTED ONCE (with grams),
-    * persisted pre-clustered by the index partition column, and spent
-    * across three actions: (1) one groupBy-collect for the pruning
-    * buckets + broadcast row-guard, materializing the cache; (2) the
-    * matches write — cross pairs with the index-side hot cap
-    * ([[probeWinnowIndex]] semantics) ∪ within-batch pairs with the
-    * batch-side hot cap, verified gram-vs-gram straight from the
-    * cache (`gram_a = gram_b` IS [[verifiedPairs]]' substring check —
-    * the gram is `text.substring(pos, pos+k)` — so no text re-join);
-    * (3) the index append from the same cache, shuffle-free. First
-    * batch: the append becomes the initial [[buildWinnowIndex]]
-    * layout + sidecar; afterwards the sidecar's pinned (k, w,
-    * fpBuckets) win, exactly like [[appendToWinnowIndex]].
+    * winnow family: the batch is FINGERPRINTED ONCE (with grams) into
+    * the [[SignatureIndex.fold]] cache and spent across three actions:
+    * (1) the bucket collect; (2) the matches write — cross pairs with
+    * the index-side hot cap ([[probeWinnowIndex]] semantics) ∪
+    * within-batch pairs with the batch-side hot cap, verified
+    * gram-vs-gram straight from the cache (`gram_a = gram_b` IS
+    * [[verifiedPairs]]' substring check — the gram is
+    * `text.substring(pos, pos+k)` — so no text re-join); (3) the index
+    * append from the same cache, shuffle-free. First batch: the append
+    * becomes the initial [[buildWinnowIndex]] layout + sidecar;
+    * afterwards the sidecar's pinned (k, w, fpBuckets) win, exactly
+    * like [[appendToWinnowIndex]].
     */
   def foldWinnowBatch(batch: DataFrame, idCol: String, textCol: String,
                       indexPath: String, matchesPath: String,
@@ -263,57 +270,19 @@ object Winnow {
                       broadcastLimit: Long = 4L << 20): Unit = {
     require(maxDocsPerFp >= 2,
       s"winnow: maxDocsPerFp >= 2, got $maxDocsPerFp")
-    require(broadcastLimit >= 1,
-      s"broadcastLimit must be >= 1, got $broadcastLimit")
-    val ss = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val indexExists = fs.exists(
-      new org.apache.hadoop.fs.Path(indexPath, "_graft_winnow_meta"))
-    val (ek, ew, eBuckets) =
-      if (indexExists) readWinnowMeta(batch, indexPath)
-      else (k, w, fpBuckets)
-    require(eBuckets >= 1 && eBuckets <= 4096,
-      s"fpBuckets must be in [1,4096], got $eBuckets")
-    val pFps = fingerprintsWithGrams(batch, idCol, textCol, ek, ew)
-      .withColumn("fb", pmod(col("fp"), lit(eBuckets.toLong)).cast("int"))
-      // pinned reducer count: see DocDedup.foldMinHashBatch
-      .repartition(batch.sparkSession.sessionState.conf
-        .numShufflePartitions, col("fb")).persist()
-    try {
-      // action 1: pruning buckets + row count, materializing the cache
-      val bucketCounts = graft.Instr.timed("foldWinnow.buckets")(
-        pFps.groupBy("fb").agg(count(lit(1)).as("n")).collect())
-      val buckets = bucketCounts.map(_.getInt(0))
-      val nRows = bucketCounts.map(_.getLong(1)).sum
-      val hasIndexData = indexExists && fs.listStatus(
-        new org.apache.hadoop.fs.Path(indexPath))
-        .exists(_.getPath.getName.startsWith("fb="))
-      val pA = pFps.select(col("id").as("id_a"), col("fp"),
-        col("gram"), col("fb"))
-      def noPairs = pFps.select(col("id").as("id_a"),
-          col("id").as("id_b"), lit(0L).as("n_matches"))
-        .where(lit(false))
-      val cross =
-        if (!hasIndexData || buckets.isEmpty) noPairs
-        else {
-          val idxRead = ss.read.parquet(indexPath)
-            .where(col("fb").isin(buckets.toSeq: _*))
-          // hot cap over the pruned read (== the global per-fp count)
-          val hot = idxRead.groupBy("fp")
-            .agg(countDistinct(col("id")).as("n_docs"))
-            .where(col("n_docs") > maxDocsPerFp)
-            .select("fp")
-          val probeSide =
-            if (nRows <= broadcastLimit) broadcast(pA) else pA
-          idxRead.join(broadcast(hot), Seq("fp"), "left_anti")
-            .join(probeSide, Seq("fp", "gram", "fb")) // gram-verified
-            .where(col("id_a") =!= col("id"))
-            .select(col("id_a"), col("id").as("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(count(lit(1)).as("n_matches"))
-            .where(col("n_matches") >= minMatches)
-        }
+    SignatureIndex.fold(batch, indexPath, matchesPath, WinnowLayout,
+        Seq(k, w, fpBuckets), "foldWinnowBatch", broadcastLimit) {
+      case Seq(ek, ew, eBuckets) =>
+        requireFpBuckets(eBuckets)
+        signedFingerprints(batch, idCol, textCol, ek, ew, eBuckets)
+    } { b =>
+      val pFps = b.signed
+      val cross = b.cross.fold(
+        pFps.select(col("id").as("id_a"), col("id").as("id_b"),
+          lit(0L).as("n_matches")).where(lit(false))) { idx =>
+        probeVerify(idx.index, idx.guarded(pFps.select(col("id").as("id_a"),
+          col("fp"), col("gram"), col("fb"))), maxDocsPerFp, minMatches)
+      }
       // within-batch pairs: verifiedPairs semantics on the cache —
       // batch-side hot cap, then gram-verified candidates
       val hotW = pFps.groupBy("fp")
@@ -325,86 +294,48 @@ object Winnow {
         // re-pin column ORDER: a usingColumns join fronts the join
         // keys, and the positional toDF renames below depend on it
         .select("id", "fp", "gram")
-      val within = keptFps.toDF("id_a", "fp", "gram")
+      cross.unionByName(keptFps.toDF("id_a", "fp", "gram")
         .join(keptFps.toDF("id_b", "fp", "gram"), Seq("fp", "gram"))
         .where(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(count(lit(1)).as("n_matches"))
-        .where(col("n_matches") >= minMatches)
-      // action 2: the matches write IS the pair-plan materialization
-      graft.Instr.timed("foldWinnow.matches")(
-        cross.unionByName(within)
-          .write.mode("overwrite").parquet(matchesPath))
-      // action 3: fold the batch into the index straight from the
-      // pre-clustered cache — no re-fingerprint, no re-shuffle
-      // (index mutation → writer lock, reentrant on the stream thread)
-      WriterLock.withLock(batch.sparkSession, indexPath,
-        "foldWinnowBatch.append") {
-        graft.Instr.timed("foldWinnow.append")(
-          pFps.write.mode(if (indexExists) "append" else "overwrite")
-            .partitionBy("fb").parquet(indexPath))
-        if (!indexExists) {
-          val out = fs.create(new org.apache.hadoop.fs.Path(indexPath,
-            "_graft_winnow_meta"), true)
-          try out.write(s"$ek,$ew,$eBuckets".getBytes("UTF-8"))
-          finally out.close()
-        }
-      }
-    } finally pFps.unpersist()
+        .where(col("n_matches") >= minMatches))
+    }
   }
 
   /** Exact-substring matches of a probe batch against the index:
     * `(id_a = probe id, id_b = indexed id, n_matches)` with every
     * match gram-verified against the STORED gram (no corpus re-read,
-    * no hash-collision false pairs). The hot-fingerprint cap is
-    * applied over the pruned read — a fingerprint's doc count lives
-    * entirely inside its own bucket partition, so the count seen
-    * through the pruned read IS the global count, appends included.
+    * no hash-collision false pairs), the hot-fingerprint cap applied
+    * over the pruned read.
     *
     * Probe batch is the small side by contract: its distinct buckets
     * are collected driver-side for the pruning filter (bounded,
-    * `fpBuckets` ≤ 4096 values) and the banded probe set broadcasts
-    * into the candidate join.
+    * `fpBuckets` ≤ 4096 values) and the fingerprinted probe set
+    * broadcasts into the candidate join (row-guarded like every
+    * [[SignatureIndex.probe]]).
     */
   def probeWinnowIndex(probes: DataFrame, idCol: String, textCol: String,
                        path: String, maxDocsPerFp: Int = 256,
                        minMatches: Int = 1): DataFrame = {
     val ss = probes.sparkSession
-    val (k, w, fpBuckets) = readWinnowMeta(probes, path)
-    val p = fingerprintsWithGrams(probes, idCol, textCol, k, w)
-      .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)).cast("int"))
+    val Seq(k, w, fpBuckets) = SignatureIndex.read(ss, path, WinnowLayout)
+    val p = signedFingerprints(probes, idCol, textCol, k, w, fpBuckets)
       .select(col("id").as("id_a"), col("fp"), col("gram"), col("fb"))
       .persist()
-    try {
-      def emptyResult = probes.select(col(idCol).as("id_a"),
-          col(idCol).as("id_b"), lit(0L).as("n_matches"))
-        .where(lit(false))
-      val buckets = p.select("fb").distinct().collect().map(_.getInt(0))
-      if (buckets.isEmpty) return emptyResult
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      if (!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(_.getPath.getName.startsWith("fb="))) return emptyResult
-      val idxRead = ss.read.parquet(path)
-        .where(col("fb").isin(buckets.toSeq: _*))
-      // hot cap over the pruned read (== the global per-fp count)
-      val hot = idxRead.groupBy("fp")
-        .agg(countDistinct(col("id")).as("n_docs"))
-        .where(col("n_docs") > maxDocsPerFp)
-        .select("fp")
-      idxRead.join(broadcast(hot), Seq("fp"), "left_anti")
-        .join(broadcast(p), Seq("fp", "gram", "fb")) // gram-verified
-        .where(col("id_a") =!= col("id"))
-        .select(col("id_a"), col("id").as("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("n_matches"))
-        .where(col("n_matches") >= minMatches)
-        // materialize while `p` is still cached (the unpersist below
-        // runs before any caller action) — and so a caller's ordering
-        // sort samples a tiny in-memory result instead of re-running
-        // the pruned-read joins per evaluation (the probeMinHashIndex
-        // discipline; output is matched pairs only)
-        .localCheckpoint()
+    try SignatureIndex.probe(ss, path, WinnowLayout, "probeWinnowIndex", p,
+        4L << 20) match {
+      case None =>
+        probes.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
+          lit(0L).as("n_matches")).where(lit(false))
+      case Some(idx) =>
+        probeVerify(idx.index, idx.guarded(p), maxDocsPerFp, minMatches)
+          // materialize while `p` is still cached (the unpersist below
+          // runs before any caller action) — and so a caller's ordering
+          // sort samples a tiny in-memory result instead of re-running
+          // the pruned-read joins per evaluation (the probeMinHashIndex
+          // discipline; output is matched pairs only)
+          .localCheckpoint()
     } finally p.unpersist()
   }
 }

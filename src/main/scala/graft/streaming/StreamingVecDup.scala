@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
-import graft.ext.Similarity
+import graft.ext.{Similarity, SignatureIndex}
 
 /** Incremental EMBEDDING near-dup detection against a persisted IVF
   * index — the streaming production shape of semantic dedup,
@@ -42,15 +42,15 @@ object StreamingVecDup {
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("vec", ArrayType(FloatType)), "streamVecDup", trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         val b = batch.localCheckpoint()
-        val indexExists = fs.exists(
-          new org.apache.hadoop.fs.Path(indexPath, "_graft_ivf_meta"))
+        // heal a crashed compaction BEFORE deciding "first batch": an
+        // index caught between its swap renames is not a missing index
+        val indexExists =
+          SignatureIndex.exists(spark, indexPath, Similarity.IvfLayout)
         // 1. cross-batch: probe the accumulated index, exact-cosine
         //    threshold over the top-k candidates
         val cross =
