@@ -118,6 +118,15 @@ class Deduplicator(spark: SparkSession, workDir: String,
     // the first file's encoded output and corrupt cross-file pointers
     require(names.distinct.size == names.size,
       s"duplicate output names in one batch: ${names.diff(names.distinct).distinct}")
+    // A committed name's encoded file would be overwritten below while
+    // the catalog's links still point into it: every later recovery
+    // through those links would read the new bytes. Refused before
+    // anything is written. An uncommitted orphan (a crash between the
+    // data write and the commit) is not held and is overwritten — the
+    // crash-retry path.
+    val held = committedNames(names)
+    require(held.isEmpty,
+      s"output name(s) already committed to the catalog: ${held.mkString(", ")}")
 
     // ---- one scan of the whole batch → (fidx, pos, chunk). Small files
     // share one binaryFile load; each huge file keeps its own ranged
@@ -322,17 +331,39 @@ class Deduplicator(spark: SparkSession, workDir: String,
     }
   }
 
+  /** The names among `names` the catalog already holds. A run's
+    * encoded file is written before its commit, so only a name whose
+    * encoded file exists can be held: the catalog is read only then,
+    * and the common path runs no job.
+    */
+  private[graft] def committedNames(names: Seq[String]): Set[String] = {
+    val fs = new org.apache.hadoop.fs.Path(workDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = names.filter(n =>
+      fs.exists(new org.apache.hadoop.fs.Path(parquetPath(n))))
+    if (present.isEmpty) Set.empty
+    else catalog.files().where(col("filename").isin(present: _*))
+      .select("filename").collect().map(_.getString(0)).toSet
+  }
+
+  /** An encoded run, read with the schema [[deduplicateBatch]] writes. */
+  private def readEncoded(name: String): DataFrame =
+    spark.read.schema(Recovery.encodedSchema).parquet(parquetPath(name))
+
   /** Recover a deduplicated run to its original bytes at `outputPath`. */
   def recoverFile(encodedName: String, outputPath: String): Unit = {
-    val fileRow = catalog.getFile(encodedName).collect()
-    require(fileRow.nonEmpty, s"unknown encoded file: $encodedName") // files.ex:25-26
-    val fid = fileRow.head.getAs[Long]("file_id")
-    val names = catalog.files().select("file_id", "filename").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val enc = spark.read.parquet(parquetPath(encodedName))
-    val resolved = Recovery.resolve(enc, fid,
-      id => spark.read.parquet(parquetPath(names(id))))
-    OrderedBinarySink.write(resolved, "pos", "chunk", outputPath)
+    // ONE files collect: this run's id and the id → name map
+    val files = catalog.files().select("file_id", "filename").collect()
+      .map(r => r.getLong(0) -> r.getString(1))
+    val fids = files.collect { case (id, `encodedName`) => id }
+    require(fids.nonEmpty, s"unknown encoded file: $encodedName") // files.ex:25-26
+    require(fids.length == 1,
+      s"recoverFile: '$encodedName' has ${fids.length} catalog rows, need 1")
+    val names = files.toMap
+    val r = Recovery.resolveRanged(readEncoded(encodedName), fids.head,
+      id => readEncoded(names(id)))
+    OrderedBinarySink.write(r.chunks, "pos", "chunk", outputPath,
+      r.minPos, r.maxPos)
   }
 
   /** Recover original bytes directly from a tagged `.bin` file — the
@@ -356,15 +387,16 @@ class Deduplicator(spark: SparkSession, workDir: String,
         (tmp, () => { BinFormat.deleteFile(tmp, hconf); () })
       } else (binFile, () => ())
     try {
-      // localCheckpoint: Recovery.resolve evaluates its input three
-      // times (pointer-id collect + the raws and targets branches);
-      // without pinning, each evaluation re-reads and re-parses the
-      // whole tagged file.
+      // localCheckpoint: Recovery evaluates its input four times (the
+      // narrow id/range pass, then the raws, pointers and targets
+      // branches); without pinning, each evaluation re-reads and
+      // re-parses the whole tagged file.
       val enc = BinFormat.read(spark, path, chunkBytes)
         .withColumn("cat_file_id", lit(null).cast("long"))
         .localCheckpoint()
-      val resolved = Recovery.resolve(enc, 0L, _ => enc)
-      OrderedBinarySink.write(resolved, "pos", "chunk", outputPath)
+      val r = Recovery.resolveRanged(enc, 0L, _ => enc)
+      OrderedBinarySink.write(r.chunks, "pos", "chunk", outputPath,
+        r.minPos, r.maxPos)
     } finally cleanup()
   }
 

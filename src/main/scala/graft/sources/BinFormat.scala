@@ -119,7 +119,11 @@ object BinFormat {
     val recs = df.select(col("pos"),
       encodeUdf(col("is_pointer"), col("chunk"), col("ref_line"), catFid)
         .as("rec"))
-    OrderedBinarySink.write(recs, "pos", "rec", dest)
+    // the sink's part ranges: one aggregate, no range-sampling job
+    val range = df.agg(coalesce(min("pos").cast("long"), lit(Long.MaxValue)),
+      coalesce(max("pos").cast("long"), lit(Long.MinValue))).head()
+    OrderedBinarySink.write(recs, "pos", "rec", dest,
+      range.getLong(0), range.getLong(1))
   }
 
   /** Whole-file zip / unzip / delete (reference: lib/deduplicator/files.ex:64-94).

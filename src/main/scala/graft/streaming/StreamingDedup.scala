@@ -106,14 +106,20 @@ object StreamingDedup {
         // not 10k times (round-3 verdict, scale-killer #3). The
         // collect() is of file *paths* only — the file list of one
         // micro-batch — never data.
-        val paths = batch.select("path").collect().map(_.getString(0)).sorted
-        if (paths.nonEmpty) {
+        val named = batch.select("path").collect().map(_.getString(0))
+          .sorted.toSeq.map(p => p -> nameFor(p, batchId))
+        // A replay of a batch whose catalog commit landed before the
+        // checkpoint recorded it (the process died in between) finds
+        // its runs already committed: those files are skipped, never
+        // re-encoded against a catalog that already holds their chunks.
+        val held = dedup.committedNames(named.map(_._2))
+        val todo = named.filterNot { case (_, name) => held(name) }
+        if (todo.nonEmpty) {
           // computeCounts = false: the per-file (chunks, pointers)
           // DedupResults are discarded here, and their grouped collect
           // is one whole Spark action per micro-batch, forever
-          dedup.deduplicateBatch(paths.toSeq, opts,
-            outputNames = paths.toSeq.map(nameFor(_, batchId)),
-            computeCounts = false)
+          dedup.deduplicateBatch(todo.map(_._1), opts,
+            outputNames = todo.map(_._2), computeCounts = false)
         }
         // the catalog has its OWN versioned compaction (touched-bucket
         // rewrite + atomic version swap); between micro-batches this

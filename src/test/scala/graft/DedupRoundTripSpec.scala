@@ -165,4 +165,40 @@ class DedupRoundTripSpec extends SparkFunSuite {
       .toMap
     assert(rows == Map("h1" -> (0L, 2L), "h2" -> (1L, 4L)))
   }
+
+  test("a committed output name is refused before anything is written, " +
+    "so cross-run pointers into it keep recovering byte-exact") {
+    val s = spark; import s.implicits._
+    val dir = tempDir("rt-reuse")
+    val a = Fixtures.highEntropy(64 * 64, seed = 21)
+    val b = Fixtures.highEntropy(64 * 64, seed = 22)
+    val c = a.take(20 * 64)
+    val engine = new Deduplicator(spark, s"$dir/work")
+    val asX = DedupOptions(chunkBytes = 64, outputName = Some("x"))
+    engine.deduplicateFile(Fixtures.writeTemp(dir, "a", a), asX)
+    val v = engine.catalog.currentVersion
+    val e = intercept[IllegalArgumentException] {
+      engine.deduplicateFile(Fixtures.writeTemp(dir, "b", b), asX)
+    }
+    assert(e.getMessage.contains("already committed"), e.getMessage)
+    assert(engine.catalog.currentVersion == v)
+    assert(engine.catalog.files().count() == 1)
+    // C's pointers reach run x, which must still hold A's data
+    val rc = engine.deduplicateFile(Fixtures.writeTemp(dir, "c", c),
+      DedupOptions(chunkBytes = 64, outputName = Some("c")))
+    assert(rc.pointers == 20)
+    engine.recoverFile("c", s"$dir/rec-c")
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(s"$dir/rec-c")), c))
+    engine.recoverFile("x", s"$dir/rec-x")
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(s"$dir/rec-x")), a))
+    // a name with two catalog rows (a catalog written without this
+    // check) is ambiguous: recovery fails loudly instead of guessing
+    engine.catalog.commitRun("x", 64, "sha",
+      Seq.empty[(String, Long, Long)].toDF("hash", "line", "refs_num"),
+      Seq.empty[(String, Long)].toDF("hash", "delta"))
+    val e2 = intercept[IllegalArgumentException] {
+      engine.recoverFile("x", s"$dir/rec-x2")
+    }
+    assert(e2.getMessage.contains("2 catalog rows"), e2.getMessage)
+  }
 }

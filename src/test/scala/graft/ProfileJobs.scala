@@ -1,8 +1,9 @@
 package graft
 // Scratch per-job profiler for gate queries (test scope only): runs the
 // named SparkEntry queries with a listener that records every job's
-// wall time, task count and description, so fixed scheduling cost vs
-// compute is attributable. Usage:
+// wall time, task count, description and call site (graft sets no job
+// description, so the call site is what names the code that launched a
+// job), so fixed scheduling cost vs compute is attributable. Usage:
 //   sbt "Test/runMain graft.ProfileJobs q103_minhash_index_append [q55_...]"
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -26,15 +27,21 @@ object ProfileJobs {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    final case class Job(id: Int, var desc: String = "", var stages: Int = 0,
+    final case class Job(id: Int, var desc: String = "", var site: String = "",
+                         var stages: Int = 0,
                          var tasks: Int = 0, var t0: Long = 0, var t1: Long = 0)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val j = Job(e.jobId)
-        j.desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        // one line per job: a streaming batch's description spans lines
+        j.desc = prop("spark.job.description").replace('\n', ' ').trim
+        // the call site a caller set, else the job's own: the short form
+        // Spark names the result stage (the job's last-created stage) by
+        j.site = Some(prop("callSite.short")).filter(_.nonEmpty)
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name)
         j.stages = e.stageInfos.size
         j.tasks = e.stageInfos.map(_.numTasks).sum
         j.t0 = e.time
@@ -64,7 +71,7 @@ object ProfileJobs {
         prevEnd = math.max(prevEnd, j.t1)
         acc += math.max(0, dur)
         println(f"job ${j.id}%3d ${dur}%7.3f s gap=${gap}%7.3f stages=${j.stages}%2d " +
-          f"tasks=${j.tasks}%4d  ${j.desc.take(80)}")
+          f"tasks=${j.tasks}%4d  ${j.desc.take(80)}%-80s  ${j.site}")
       }
       println(f"sum of job walls: $acc%.2f s (gaps = driver-side time)")
       Bench.resetSessionState(spark)

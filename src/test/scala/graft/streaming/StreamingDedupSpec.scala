@@ -100,6 +100,34 @@ class StreamingDedupSpec extends SparkFunSuite {
     assert(cat.currentVersion == 1)
   }
 
+  test("replay after a landed commit: a batch whose catalog commit landed " +
+    "before the checkpoint recorded it commits nothing again") {
+    val dir = tempDir("sreplay")
+    val inDir = s"$dir/in"
+    Files.createDirectories(Paths.get(inDir))
+    val work = s"$dir/work"
+    val cat = new Catalog(spark, s"$work/catalog")
+    val data = Fixtures.alignedDuplicated(blocks = 128, distinct = 8, seed = 13)
+    Fixtures.writeTemp(inDir, "r.dat", data)
+    StreamingDedup.start(spark, inDir, work,
+      DedupOptions(chunkBytes = 64)).awaitTermination()
+    assert(cat.currentVersion == 1)
+    // the process dies after the catalog commit and before Spark's
+    // commit log records batch 0: the restart replays batch 0 with the
+    // same output names
+    Seq("0", ".0.crc").map(n => Paths.get(s"$work/_checkpoint/commits/$n"))
+      .foreach(Files.deleteIfExists)
+    StreamingDedup.start(spark, inDir, work,
+      DedupOptions(chunkBytes = 64)).awaitTermination()
+    assert(cat.currentVersion == 1,
+      s"the replay must commit nothing, got v${cat.currentVersion}")
+    val names = cat.files().collect().map(_.getAs[String]("filename"))
+    assert(names.length == 1)
+    val engine = new graft.api.Deduplicator(spark, work)
+    engine.recoverFile(names.head, s"$dir/rec")
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(s"$dir/rec")), data))
+  }
+
   test("compact() after N micro-batches: fewer files, single live version, " +
     "recovery stays byte-equal") {
     val dir = tempDir("scompact")
