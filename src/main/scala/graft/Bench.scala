@@ -51,6 +51,8 @@ object Bench {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // every job of the run, for the per-tag job sums in gate_stages
+    val jobLog = new Jobs.Log(spark.sparkContext)
     // A broken query must be VISIBLE as an error entry, never disguised
     // as a timing (round-1 verdict item, "What's wrong" #4).
     // (jsonStr escapes all JSON-hostile chars; exception messages are
@@ -190,13 +192,19 @@ object Bench {
       case ((k, v, None, _), i) =>
         s"${jsonStr(k)}:${f"${v / epochAt(i + 0.5)}%.3f"}"
     }.mkString("{", ",", "}")
-    // Per-stage samples from the index gates (graft.Instr): each key
-    // lists one sample per invocation — two bench runs → two samples
-    // (for the session-cached q51/q53/q55 indexes, sample 1 is the
-    // build and sample 2 a ~0 s cache hit; probe samples time real
-    // work in both). Units: *.build/*.probe/*.count* seconds,
-    // *.index_files a file count.
-    val stages = Instr.snapshot().map { case (k, vs) =>
+    // Per-stage samples from the gates (graft.Instr): each key lists
+    // one sample per invocation — two bench runs → two samples (for
+    // the session-cached q51/q53/q55 indexes, sample 1 is the build
+    // and sample 2 a ~0 s cache hit; probe samples time real work in
+    // both). Units: *.build/*.probe/*.count* seconds, *.index_files a
+    // data-file count. Then one pair per engine stage tag
+    // (`graft:<key>` job descriptions) over the whole run: <key>.jobs
+    // the job count, <key>.job_s the summed job seconds.
+    val tagged = Jobs.byTag(jobLog.snapshot()).flatMap { case (k, n, sec) =>
+      Seq(s"$k.jobs" -> Seq(n.toDouble), s"$k.job_s" -> Seq(sec))
+    }
+    jobLog.close()
+    val stages = (Instr.snapshot() ++ tagged).map { case (k, vs) =>
       s"${jsonStr(k)}:${vs.map(v => f"$v%.3f").mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","method":"noop-sink, min of 2 runs per query (the fresh-state evidence gates q97/q103/q106 rebuild their state in BOTH runs — their min is the JIT-warmed build+probe cost, not a cached-state probe); calibration samples are single raw runs of a CPU-bound and an I/O-bound workload interleaved every $calStep queries; queries_norm = raw / geomean(cpu_local/cpu_ref, io_local/io_ref) at the query's interpolated position — both raw tracks are in calibration.cpu/io.samples","calibration":$cal,"gate_stages":$stages,"queries":$qs,"queries_norm":$qsNorm,"errors":$nErr,"flaky":$flaky,"dedup":$dedup,"sf":"$sfDir"}"""
@@ -266,7 +274,8 @@ object Bench {
           // width 1: the fixture's ~0.1% unique-chunk rate leaves a
           // catalog of ~1k links — 16 buckets is its honest layout;
           // the default 256 dirs cost ~2.5 s of pure commit overhead
-          // per run at this size (Catalog scaladoc, CommitDissect).
+          // per run at this size (Catalog scaladoc; CommitDissect at
+          // commit 7088c7d).
           val engine = new graft.api.Deduplicator(spark,
             dir.resolve(s"work$i").toString, bucketChars = 1)
           val t0 = System.nanoTime()
@@ -398,8 +407,9 @@ object Bench {
   /** `blockSize`-aligned repeated blocks from a 997-block pool (seeded —
     * deterministic across runs), ≙ the reference's
     * text_64_byte_duplicated.txt fixture class at bench scale, at the
-    * requested alignment width. Shared with ProfileApp so profile and
-    * bench numbers stay comparable.
+    * requested alignment width. The profiling main ProfileApp (at
+    * commit 7088c7d) drew the same fixture, so its numbers and the
+    * bench's are comparable.
     */
   private[graft] def benchFixture(bytes: Int, blockSize: Int = 64): Array[Byte] = {
     val rnd = new scala.util.Random(42)

@@ -1,53 +1,27 @@
 package graft
 
-/** Opt-in gate-stage instrumentation (round-12 verdict ask #1): the
-  * index-backed gates (q51/q53/q55/q103) record per-stage wall-times
-  * and index-layout gauges here, and [[Bench]] emits the samples as
-  * the `gate_stages` field of BENCH_LOCAL.json — so a cost regression
-  * in one of those gates is attributable to build vs probe vs layout
-  * instead of showing up as one opaque total.
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+/** Bench-harness stage samples: the oracle gates in [[SparkEntry]] time
+  * their stages and record layout gauges here, [[Bench]] times the
+  * `attrib_*` split of the dedup pipeline here, and [[Bench]] emits the
+  * samples in the `gate_stages` field of BENCH_LOCAL.json.
   *
-  * Every record is a SAMPLE (appended, never overwritten): the bench
-  * runs each query twice, and the two runs differ structurally for
-  * cached-index gates (run 1 builds + probes, run 2 probes a warm
-  * index), so both values matter. Thread-safe.
+  * Harness-only: engine code never records here. Its events go to
+  * [[graft.ext.MaintenanceEvents]], and its stages are named by Spark
+  * job descriptions ([[Jobs.tagged]]), which [[Bench]] reads through
+  * [[Jobs.Log]].
   *
-  * Retention is BOUNDED: each key keeps the most recent
-  * [[MaxSamplesPerKey]] samples in a ring buffer. Production paths
-  * (per-batch Deduplicator timers, index-probe timers) record on
-  * every invocation, so an unbounded list would be a slow memory
-  * leak in a long-lived streaming job — and appends here are O(1),
-  * not the O(n)-per-add a copy-on-write list would cost at that call
-  * rate. Bench gates record a handful of samples per key, far below
-  * the cap, so `gate_stages` output is unaffected.
+  * Every record appends a sample: the bench runs each query twice, and
+  * the two runs differ for cached-index gates (run 1 builds and probes,
+  * run 2 probes a warm index), so both values matter. A gate records a
+  * handful of samples per run, so the lists stay small. Thread-safe.
   */
 object Instr {
-  /** Ring capacity per key — generous for any bench run (each gate
-    * records ~2 samples per key per run) while bounding a streaming
-    * job's footprint to caps × keys doubles.
-    */
-  val MaxSamplesPerKey: Int = 1024
-
-  /** Fixed-capacity ring: O(1) append, keeps the newest `cap` values
-    * in insertion order. All access synchronized on the instance.
-    */
-  private final class Ring(cap: Int) {
-    private val buf = new Array[Double](cap)
-    private var next = 0L // total appends ever; next % cap = write slot
-    def add(v: Double): Unit = synchronized {
-      buf((next % cap).toInt) = v
-      next += 1
-    }
-    def toSeq: Seq[Double] = synchronized {
-      val n = math.min(next, cap.toLong).toInt
-      val start = if (next <= cap) 0 else (next % cap).toInt
-      (0 until n).map(i => buf((start + i) % cap))
-    }
-    def total: Long = synchronized(next)
-  }
-
-  private val samples = new java.util.concurrent.ConcurrentHashMap[
-    String, Ring]()
+  private val samples =
+    new ConcurrentHashMap[String, ConcurrentLinkedQueue[Double]]()
 
   /** Time `body`, appending the elapsed seconds under `key`. */
   def timed[T](key: String)(body: => T): T = {
@@ -58,40 +32,11 @@ object Instr {
 
   /** Append one sample (a duration, a file count, a row count). */
   def record(key: String, v: Double): Unit =
-    samples.computeIfAbsent(key, _ => new Ring(MaxSamplesPerKey)).add(v)
+    samples.computeIfAbsent(key, _ => new ConcurrentLinkedQueue[Double]())
+      .add(v)
 
-  /** Total samples EVER recorded under `key` — monotone even after
-    * the ring saturates at [[MaxSamplesPerKey]]. Count-delta consumers
-    * (e.g. "did a compaction fire during this run?") must use this,
-    * not `snapshot()` sizes, which stop growing at the cap.
-    */
-  def totalCount(key: String): Long = {
-    val r = samples.get(key)
-    if (r == null) 0L else r.total
-  }
-
-  /** Count of regular files under a local directory tree — the index
-    * layout gauge (file explosion is a probe-cost driver: every probe
-    * pays listing + a parquet footer read per file).
-    */
-  def fileCount(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) {
-        val kids = f.listFiles()
-        if (kids == null) 0L else kids.map(walk).sum
-      } else 1L
-    walk(new java.io.File(
-      path.stripPrefix("file:").stripPrefix("//")))
-  }
-
-  /** All retained samples, insertion-ordered per key (newest
-    * [[MaxSamplesPerKey]] per key).
-    */
-  def snapshot(): Seq[(String, Seq[Double])] = {
-    import scala.jdk.CollectionConverters._
+  /** All samples by key, insertion-ordered per key. */
+  def snapshot(): Seq[(String, Seq[Double])] =
     samples.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => k -> v.toSeq }
-  }
-
-  def clear(): Unit = samples.clear()
+      .map { case (k, v) => k -> v.asScala.toSeq }
 }

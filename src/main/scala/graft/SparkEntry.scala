@@ -257,6 +257,10 @@ object SparkEntry {
   private val gateIndexCache =
     scala.collection.concurrent.TrieMap.empty[(Int, String, String), String]
 
+  /** An index's data-file count as a `gate_stages` sample. */
+  private def dataFiles(s: SparkSession, path: String): Double =
+    graft.ext.IndexMaintenance.dataFileCount(s, path).toDouble
+
   private def withGateIndex(s: SparkSession, dir: String, kind: String)
       (build: String => Unit): String =
     gateIndexCache.getOrElseUpdate((System.identityHashCode(s), dir, kind), {
@@ -1330,7 +1334,7 @@ object SparkEntry {
         // mixed countDistinct+approx aggregate plans an Expand (2× rows,
         // no whole-stage codegen around the 2^14-register HLL buffer)
         // that measured 3.3 s vs 1.26 s for this shape at sf0.1
-        // (Q54Probe; values equal row-for-row).
+        // (Q54Probe at commit 7088c7d; values equal row-for-row).
         .distinct()
         .agg(count(lit(1)).as("n_distinct"),
           approx_count_distinct(col("h"), 0.01).as("n_approx"))
@@ -1369,7 +1373,7 @@ object SparkEntry {
       val idx = Instr.timed("q55.build")(withGateIndex(s, dir, "mhidx")(p =>
         DocDedup.buildMinHashIndex(docs, "doc_id", "text", p,
           bands = 8, rows = 4, sigBuckets = 8)))
-      Instr.record("q55.index_files", Instr.fileCount(idx).toDouble)
+      Instr.record("q55.index_files", dataFiles(s, idx))
       val probes = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text"))
       val pairs = Instr.timed("q55.probe")(DocDedup.probeMinHashIndex(
@@ -2712,7 +2716,7 @@ object SparkEntry {
       val idx = Instr.timed("q51.build")(withGateIndex(s, dir, "lshidx")(p =>
         Similarity.buildLshIndex(corpus, "vec_id", "embedding", p,
           bits = 4, tables = 4)))
-      Instr.record("q51.index_files", Instr.fileCount(idx).toDouble)
+      Instr.record("q51.index_files", dataFiles(s, idx))
       annRecallRows(
         Similarity.bruteForceTopK(corpus, q, "vec_id", "embedding", 9),
         Similarity.probeLshIndex(q, "vec_id", "embedding", idx, 9))
@@ -2735,7 +2739,7 @@ object SparkEntry {
       val idx = Instr.timed("q53.build")(withGateIndex(s, dir, "ivfidx")(p =>
         Similarity.buildIvfIndex(corpus, "vec_id", "embedding", p,
           nlist = 16)))
-      Instr.record("q53.index_files", Instr.fileCount(idx).toDouble)
+      Instr.record("q53.index_files", dataFiles(s, idx))
       annRecallRows(
         Similarity.bruteForceTopK(corpus, q, "vec_id", "embedding", 9),
         Similarity.probeIvfIndex(q, "vec_id", "embedding", idx, 9,
@@ -4068,7 +4072,7 @@ object SparkEntry {
         DocDedup.appendToMinHashIndex(half2, "doc_id", "text", idx))
       val rowsTotal = Instr.timed("q103.count2")(
         s.read.parquet(idx).count())
-      Instr.record("q103.index_files", Instr.fileCount(idx).toDouble)
+      Instr.record("q103.index_files", dataFiles(s, idx))
       val probes = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text"))
       val pairs = Instr.timed("q103.probe")(DocDedup.probeMinHashIndex(
@@ -5770,25 +5774,21 @@ object SparkEntry {
             .select((col("id") + 3000000L).as("id"), col("text"))), 1),
         () => feed("f2", docs.where(col("id") >= 25)
           .select((col("id") + 2000000L).as("id"), col("text")), 2))
-      // monotone total, not snapshot size: snapshot saturates at the
-      // ring cap, totalCount keeps counting
-      def nCompactSamples: Long =
-        graft.Instr.totalCount("streamNearDup.compact_files_before")
-      val samplesBefore = nCompactSamples
       // gate-size the stream: 50-doc micro-batches over 32-partition
       // shuffles are harness mis-sizing (AQE cannot downsize streaming
       // shuffles); see withGateStreamConf
-      withGateStreamConf(s) {
-        graft.Instr.timed("q238.stream")(
-          graft.streaming.StreamingNearDup.start(s, inDir.toString,
-              work.toString, 7, 10, bands = 8, rows = 4, sigBuckets = 8,
-              maxFilesPerTrigger = Some(1), compactEvery = Some(2))
-            .awaitTermination()
-        )
+      val events = withGateStreamConf(s) {
+        graft.Instr.timed("q238.stream") {
+          val q = graft.streaming.StreamingNearDup.start(s, inDir.toString,
+            work.toString, 7, 10, bands = 8, rows = 4, sigBuckets = 8,
+            maxFilesPerTrigger = Some(1), compactEvery = Some(2))
+          q.awaitTermination()
+          q.maintenanceStats()
+        }
       }
-      val compactRan = nCompactSamples > samplesBefore
-      Instr.record("q238.index_files",
-        Instr.fileCount(s"$work/index").toDouble)
+      val compactRan =
+        events.getOrElse(graft.ext.MaintenanceEvents.CompactFire, 0L) > 0L
+      Instr.record("q238.index_files", dataFiles(s, s"$work/index"))
       val m = s.read.parquet(s"$work/matches")
         .select("batch_id", "id_a", "id_b").localCheckpoint()
       val twinBatches = m
@@ -6117,9 +6117,10 @@ object SparkEntry {
     //      deterministic: 8, 16, 24. Threshold 20 ⇒ the cost check
     //      SKIPS at batches 1–2 (gauged with the observed count) and
     //      FIRES at batch 3 (24 > 20, compacting back to 8) — n_skips,
-    //      n_fires, and files_final pin all three from the Instr
-    //      samples, while found/within_ok keep the q238 correctness
-    //      constants (candidates with sigBuckets = 1 are a superset;
+    //      n_fires, and files_final pin all three from the stream's
+    //      maintenance events and the index's data-file count, while
+    //      found/within_ok keep the q238 correctness constants
+    //      (candidates with sigBuckets = 1 are a superset;
     //      exact-Jaccard verification yields the same match set).
     "q247_streaming_cost_compact" -> ((s, dir) => {
       val docs = t(s, dir, "documents").where(col("doc_id") < 50)
@@ -6150,28 +6151,23 @@ object SparkEntry {
             .select((col("id") + 3000000L).as("id"), col("text"))), 1),
         () => feed("f2", docs.where(col("id") >= 25)
           .select((col("id") + 2000000L).as("id"), col("text")), 2))
-      val skipsBefore =
-        graft.Instr.totalCount("streamNearDup.compact_skipped_files")
-      val firesBefore =
-        graft.Instr.totalCount("streamNearDup.compact_files_before")
       // gate-size the stream: 50-doc micro-batches over 32-partition
       // shuffles are harness mis-sizing (AQE cannot downsize streaming
       // shuffles); see withGateStreamConf
-      withGateStreamConf(s) {
-        graft.Instr.timed("q247.stream")(
-          graft.streaming.StreamingNearDup.start(s, inDir.toString,
-              work.toString, 7, 10, bands = 8, rows = 4, sigBuckets = 1,
-              maxFilesPerTrigger = Some(1), compactEvery = None,
-              compactMaxFiles = Some(20L))
-            .awaitTermination()
-        )
+      val events = withGateStreamConf(s) {
+        graft.Instr.timed("q247.stream") {
+          val q = graft.streaming.StreamingNearDup.start(s, inDir.toString,
+            work.toString, 7, 10, bands = 8, rows = 4, sigBuckets = 1,
+            maxFilesPerTrigger = Some(1), compactEvery = None,
+            compactMaxFiles = Some(20L))
+          q.awaitTermination()
+          q.maintenanceStats()
+        }
       }
       val nSkips =
-        graft.Instr.totalCount("streamNearDup.compact_skipped_files") -
-          skipsBefore
+        events.getOrElse(graft.ext.MaintenanceEvents.CompactSkip, 0L)
       val nFires =
-        graft.Instr.totalCount("streamNearDup.compact_files_before") -
-          firesBefore
+        events.getOrElse(graft.ext.MaintenanceEvents.CompactFire, 0L)
       val filesFinal = graft.ext.IndexMaintenance.dataFileCount(
         s, s"$work/index")
       val m = s.read.parquet(s"$work/matches")

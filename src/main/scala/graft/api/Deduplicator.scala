@@ -198,11 +198,12 @@ class Deduplicator(spark: SparkSession, workDir: String,
         when(isPtr, refFile).otherwise(lit(null).cast("long")).as("cat_file_id"))
 
       // ---- data first: one partitioned write, renamed per file ----
-      // Instr brackets (r12 verdict ask #5): the per-stage split of a
-      // dedup run, keyed by chunk width, surfaces in BENCH_LOCAL.json's
-      // gate_stages. This first action FUSES scan + hash + probe join +
-      // zstd write (one pass is the pipeline's shape); the bench's
-      // attrib_* probes split the fused stage separately.
+      // Stage tags: the jobs of each stage of a dedup run, keyed by
+      // chunk width, carry the description `graft:dedup.w<W>.<stage>`
+      // (BENCH_LOCAL.json's gate_stages sums them). This first action
+      // FUSES scan + hash + probe join + zstd write (one pass is the
+      // pipeline's shape); the bench's attrib_* probes split the fused
+      // stage separately.
       val w = opts.chunkBytes
       val staging = s"$workDir/encoded/.staging-${java.util.UUID.randomUUID()}"
       // Single-file counts ride the write action as observed metrics
@@ -221,7 +222,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
             lit(0L)).as("ptrs"))
         case None => encodedAll
       }
-      graft.Instr.timed(s"dedup.w$w.encoded_write")(
+      graft.Jobs.tagged(spark, s"dedup.w$w.encoded_write")(
         encodedOut.write.option("compression", "zstd")
           .partitionBy("fidx").parquet(staging))
       val fs = new org.apache.hadoop.fs.Path(staging)
@@ -268,7 +269,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
       // and deltas are complementary slices of the same batch-first-
       // occurrence rows, so materializing them separately would run the
       // probe lineage twice (per micro-batch, forever, in streaming).
-      val contrib = graft.Instr.timed(s"dedup.w$w.contrib_checkpoint")(
+      val contrib = graft.Jobs.tagged(spark, s"dedup.w$w.contrib_checkpoint")(
         probed
           .where(struct(col("fidx"), col("pos")) === col("first"))
           .select(col("fidx"), col("hash"), col("pos"), col("occ"),
@@ -287,7 +288,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
           val r = o.get
           Map(0 -> (r("n").asInstanceOf[Long], r("ptrs").asInstanceOf[Long]))
         case None if computeCounts =>
-          graft.Instr.timed(s"dedup.w$w.counts")(
+          graft.Jobs.tagged(spark, s"dedup.w$w.counts")(
             probed.groupBy("fidx")
               .agg(count(lit(1)).as("n"),
                 sum(when(isPtr, 1L).otherwise(0L)).as("ptrs"))
@@ -311,7 +312,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
       // row per hash by construction (contrib is per-hash). The public
       // path's re-checkpoints and defensive anti-join would re-pay two
       // jobs per micro-batch for invariants this plan establishes.
-      graft.Instr.timed(s"dedup.w$w.commit")(
+      graft.Jobs.tagged(spark, s"dedup.w$w.commit")(
         catalog.commitRunsPrechecked(
           names.zipWithIndex.map { case (name, i) =>
             Catalog.RunMeta(fidBase + i, name, opts.chunkBytes, algo.name)

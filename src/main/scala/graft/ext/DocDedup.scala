@@ -638,8 +638,8 @@ object DocDedup {
           // serializes on the block locks (observed multi-minute stalls).
           val sh = shingleSides(probes, corpusCand, idCol, textCol).persist()
           try {
-            graft.Instr.timed("probeMinHashIndex.warm")(sh.count())
-            graft.Instr.timed("probeMinHashIndex.verify")(
+            graft.Jobs.tagged(ss, "probeMinHashIndex.warm")(sh.count())
+            graft.Jobs.tagged(ss, "probeMinHashIndex.verify")(
               verifySides(sh, sh.where(col("side") === "b").drop("side"),
                   cand, num, den)(
                   _.where(col("side") === "b")
@@ -763,7 +763,8 @@ object DocDedup {
       // everything, cand included via the semi-join inside side "b"
       val sh = b.persist(shingleSides(batch, corpusCand, idCol, textCol))
       // action 2: warm the shingle + candidate caches in one job
-      graft.Instr.timed("foldMinHashBatch.warm")(sh.count())
+      graft.Jobs.tagged(batch.sparkSession, "foldMinHashBatch.warm")(
+        sh.count())
       // within-pair id_b values are BATCH docs: resolve id_b shingles
       // and counts against both sides. Batch and corpus ids are
       // disjoint by this function's contract, but the side-sum is

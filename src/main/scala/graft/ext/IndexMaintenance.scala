@@ -55,9 +55,12 @@ import org.apache.spark.sql.functions.col
   */
 object IndexMaintenance {
 
-  /** Before/after layout gauge returned by [[compactIndex]]. */
+  /** Before/after layout gauge returned by [[compactIndex]]. `detail`
+    * is extra `key=value` fields for the compaction's fire line (the
+    * catalog's compacted bucket count); index compactions leave it empty.
+    */
   final case class CompactStats(filesBefore: Long, filesAfter: Long,
-                                rows: Long)
+                                rows: Long, detail: String = "")
 
   /** WHEN the streaming maintenance window fires (r14 verdict ask #2).
     * `every` is the fixed cadence (compact after every n-th batch);
@@ -89,24 +92,21 @@ object IndexMaintenance {
     * configured and the cadence has not already fired (one directory
     * listing per micro-batch — metadata-cheap next to the batch's own
     * parquet commits, and it IS the quantity the trigger is about).
-    * Gauges land in gate_stages: `<prefix>.compact_files_before/after`
-    * on a fire; `<prefix>.compact_skipped_files` with the observed
-    * count on a cost-check that declined — so a gate can prove both the
-    * skip and the fire from the recorded samples. `dir` (the maintained
-    * directory) additionally keys the always-on [[MaintenanceEvents]]
-    * skip/fire counters and log lines (r15 verdict ask #2).
+    * Each decision is one [[MaintenanceEvents]] event against `dir`
+    * (the maintained directory): a [[MaintenanceEvents.CompactSkip]]
+    * with the observed count when a cost check declines, a
+    * [[MaintenanceEvents.CompactFire]] with the before/after file counts
+    * (and the stats' `detail`) when compaction runs — so a caller can
+    * prove both the skip and the fire from the directory's counters.
     */
-  def maybeCompact(policy: CompactPolicy, batchId: Long,
-                   gaugePrefix: String, dir: String, dataFiles: => Long)
-                  (compact: => CompactStats): Unit = {
+  def maybeCompact(policy: CompactPolicy, batchId: Long, dir: String,
+                   dataFiles: => Long)(compact: => CompactStats): Unit = {
     if (!policy.isDefined) return
     val cadenceDue = policy.every.exists(n => (batchId + 1) % n == 0)
     val costDue = !cadenceDue && policy.maxDataFiles.exists { threshold =>
       val files = dataFiles
       val due = files > threshold
       if (!due) {
-        graft.Instr.record(s"$gaugePrefix.compact_skipped_files",
-          files.toDouble)
         MaintenanceEvents.record(dir, MaintenanceEvents.CompactSkip,
           s"batch=$batchId files=$files threshold=$threshold")
       }
@@ -114,18 +114,16 @@ object IndexMaintenance {
     }
     if (cadenceDue || costDue) {
       val stats = compact
-      graft.Instr.record(s"$gaugePrefix.compact_files_before",
-        stats.filesBefore.toDouble)
-      graft.Instr.record(s"$gaugePrefix.compact_files_after",
-        stats.filesAfter.toDouble)
       MaintenanceEvents.record(dir, MaintenanceEvents.CompactFire,
         s"batch=$batchId trigger=${if (cadenceDue) "cadence" else "cost"} " +
-          s"files_before=${stats.filesBefore} files_after=${stats.filesAfter}")
+          s"files_before=${stats.filesBefore} files_after=${stats.filesAfter}" +
+          (if (stats.detail.isEmpty) "" else s" ${stats.detail}"))
     }
   }
 
   /** Count of data files under `path` (sidecars and `_SUCCESS`
-    * markers excluded) — the probe-cost gauge gate_stages tracks.
+    * markers excluded) — the probe-cost gauge, and the one file counter
+    * the streaming cost trigger and the bench gates' `*.index_files` read.
     */
   def dataFileCount(spark: SparkSession, path: String): Long =
     dataFilesAndBytes(spark, path)._1

@@ -139,7 +139,7 @@ object SafeTensors {
   /** Shared strict parse: returns (headerJson, per-tensor
     * (name, off0, off1, byteSum)) or a typed error.
     */
-  private def parse(bytes: Array[Byte], maxHeader: Long)
+  private[ext] def parse(bytes: Array[Byte], maxHeader: Long)
       : Either[String, (String, Seq[(String, Long, Long, Long)])] =
     parseScan(bytes, maxHeader).map { case (json, _, entries) =>
       (json, entries.map { case (e, sum) => (e.name, e.off0, e.off1, sum) })

@@ -157,7 +157,7 @@ private[graft] object SignatureIndex {
   private def touched(signed: DataFrame, layout: Layout[_],
                       op: String): (Seq[Long], Long) = {
     val cols = layout.partitionCols
-    val counts = graft.Instr.timed(s"$op.coords")(
+    val counts = graft.Jobs.tagged(signed.sparkSession, s"$op.coords")(
       signed.groupBy(cols.map(col): _*).agg(count(lit(1)).as("n")).collect())
     require(counts.length <= 65536,
       s"$op: ${counts.length} distinct (${cols.mkString(", ")}) " +
@@ -232,7 +232,7 @@ private[graft] object SignatureIndex {
     *     on the first batch.
     *
     * `op` names the kernel in the coordinate-cap message, the lock and
-    * the `<op>.coords/.matches/.append` timings.
+    * the `graft:<op>.coords/.matches/.append` job tags.
     */
   def fold[P](batch: DataFrame, indexPath: String, matchesPath: String,
               layout: Layout[P], defaults: P, op: String,
@@ -252,11 +252,11 @@ private[graft] object SignatureIndex {
         else Some(Probe(pruned(ss, indexPath, layout, keys), rows,
           broadcastLimit))
       val b = new Batch(signed, cross)
-      try graft.Instr.timed(s"$op.matches")(
+      try graft.Jobs.tagged(ss, s"$op.matches")(
         matches(b).write.mode("overwrite").parquet(matchesPath))
       finally b.release()
       WriterLock.withLock(ss, indexPath, s"$op.append") {
-        graft.Instr.timed(s"$op.append")(write(signed, indexPath, layout,
+        graft.Jobs.tagged(ss, s"$op.append")(write(signed, indexPath, layout,
           if (existing.isDefined) "append" else "overwrite"))
         if (existing.isEmpty) writeSidecar(ss, indexPath, layout, params)
       }

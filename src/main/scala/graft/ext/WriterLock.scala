@@ -828,7 +828,6 @@ object WriterLock {
     val won = withHealClaim(fs, lock, dir)(
       renameTakeover(fs, lock, holderInfo, f.get("token")))
     if (won) {
-      graft.Instr.record("writerLock.stale_taken_over", 1.0)
       MaintenanceEvents.record(dir, MaintenanceEvents.StaleTakeover,
         s"holder=[$holderInfo]")
     }
@@ -885,7 +884,6 @@ object WriterLock {
     val won = withHealClaim(fs, lock, dir)(
       renameTakeover(fs, lock, info0, Some(token)))
     if (won) {
-      graft.Instr.record("writerLock.lease_taken_over", 1.0)
       MaintenanceEvents.record(dir, MaintenanceEvents.LeaseTakeover,
         s"observed_silence_ms=$staleMs holder=[$info0]")
     }

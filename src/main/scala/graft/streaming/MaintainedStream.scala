@@ -80,8 +80,9 @@ object MaintainedStream {
     * `compactEvery`/`compactMaxFiles` policy says so, after the kernel,
     * on the foreachBatch thread — between batches the stream is the
     * index's single writer, which is exactly the maintenance window
-    * [[IndexMaintenance.compactIndex]] requires. Gauges land under
-    * `gaugePrefix` (see [[IndexMaintenance.maybeCompact]]).
+    * [[IndexMaintenance.compactIndex]] requires; each skip or fire is a
+    * [[MaintenanceEvents]] event against the index
+    * (see [[IndexMaintenance.maybeCompact]]).
     *
     * Why the loop is shaped this way:
     *  - the lease is registered on the index before anything can lock
@@ -99,7 +100,7 @@ object MaintainedStream {
     *    round-7 per-commit leak class).
     */
   private[streaming] def fold(spark: SparkSession, inputDir: String,
-      workDir: String, value: StructField, gaugePrefix: String,
+      workDir: String, value: StructField,
       trigger: Trigger, maxFilesPerTrigger: Option[Int],
       compactEvery: Option[Int], compactMaxFiles: Option[Long],
       lease: WriterLock.Lease)(
@@ -122,7 +123,7 @@ object MaintainedStream {
         val before = sc.getPersistentRDDs.keySet
         try {
           kernel(batch, index, s"$workDir/matches/batch_id=$batchId")
-          IndexMaintenance.maybeCompact(policy, batchId, gaugePrefix, index,
+          IndexMaintenance.maybeCompact(policy, batchId, index,
             IndexMaintenance.dataFileCount(spark, index))(compact(index))
         } finally {
           sc.getPersistentRDDs.filterNot(kv => before(kv._1)).values

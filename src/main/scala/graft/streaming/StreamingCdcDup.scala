@@ -46,7 +46,7 @@ object StreamingCdcDup {
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
     MaintainedStream.fold(spark, inputDir, workDir,
-        StructField("blob", BinaryType), "streamCdcDup", trigger,
+        StructField("blob", BinaryType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         // The fused kernel: cross-index + within-batch pairs, then the

@@ -126,28 +126,23 @@ object StreamingDedup {
         // thread is the catalog's single writer, so the streaming
         // maintenance window applies to it exactly like the ext/
         // indexes' compactIndex. maybeCompact records the skip/fire
-        // gauges; CompactStats.rows is not recomputed for the catalog
+        // events, the fire with the compacted bucket count;
+        // CompactStats.rows is not recomputed for the catalog
         // (compact() already row-verifies through writeVersion).
-        graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-          "streamDedup", catalogDir,
+        graft.ext.IndexMaintenance.maybeCompact(policy, batchId, catalogDir,
           graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir)) {
           val before =
             graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir)
-          graft.Instr.record("streamDedup.compacted_buckets",
-            dedup.catalog.compact(retainLast, retainMs).toDouble)
+          val buckets = dedup.catalog.compact(retainLast, retainMs)
           graft.ext.IndexMaintenance.CompactStats(before,
             graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir),
-            -1L)
+            -1L, s"compacted_buckets=$buckets")
         }
         // retention vacuum between batches (same single-writer window);
         // compact() above already vacuumed when it fired, but firing is
-        // the rare path — this bounds history growth BETWEEN fires
-        if (retentionOn) {
-          val removed = dedup.catalog.vacuum(retainLast, retainMs)
-          if (removed.nonEmpty)
-            graft.Instr.record("streamDedup.vacuum_versions_removed",
-              removed.size.toDouble)
-        }
+        // the rare path — this bounds history growth BETWEEN fires;
+        // vacuum records its own VacuumRemoved event
+        if (retentionOn) dedup.catalog.vacuum(retainLast, retainMs)
         ()
       }
       .start()

@@ -45,7 +45,7 @@ object StreamingExactDup {
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
     MaintainedStream.fold(spark, inputDir, workDir,
-        StructField("text", StringType), "streamExactDup", trigger,
+        StructField("text", StringType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         // The fused kernel: cross-index + within-batch matches, then

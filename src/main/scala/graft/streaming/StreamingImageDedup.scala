@@ -41,7 +41,7 @@ object StreamingImageDedup {
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
     MaintainedStream.fold(spark, inputDir, workDir,
-        StructField("blob", BinaryType), "streamImageDedup", trigger,
+        StructField("blob", BinaryType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         // The fused kernel: cross-index + within-batch matches, then

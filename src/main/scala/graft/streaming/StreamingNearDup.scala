@@ -63,7 +63,7 @@ object StreamingNearDup {
     val fs = new org.apache.hadoop.fs.Path(workDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     MaintainedStream.fold(spark, inputDir, workDir,
-        StructField("text", StringType), "streamNearDup", trigger,
+        StructField("text", StringType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         // The fused kernel: cross-index + within-batch matches, then

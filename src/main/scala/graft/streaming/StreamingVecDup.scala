@@ -43,7 +43,7 @@ object StreamingVecDup {
             lease: graft.ext.WriterLock.Lease =
               graft.ext.WriterLock.Lease()): MaintainedStream = {
     MaintainedStream.fold(spark, inputDir, workDir,
-        StructField("vec", ArrayType(FloatType)), "streamVecDup", trigger,
+        StructField("vec", ArrayType(FloatType)), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath) =>
         val b = batch.localCheckpoint()

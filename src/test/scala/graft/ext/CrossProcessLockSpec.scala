@@ -97,7 +97,6 @@ class CrossProcessLockSpec extends SparkFunSuite {
     val lock = WriterLock.lockPath(new Path(idx))
     val fs = new Path(idx).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val stale0 = graft.Instr.totalCount("writerLock.stale_taken_over")
     val ev0 = MaintenanceEvents.count(idx, MaintenanceEvents.StaleTakeover)
 
     // short lease so the parent's live-conflict probe (which observes
@@ -142,8 +141,6 @@ class CrossProcessLockSpec extends SparkFunSuite {
       assert(tookOver)
       assert(tookMs < 30000, s"dead-pid fast path took ${tookMs}ms — " +
         "did recovery fall through to the lease window?")
-      assert(graft.Instr.totalCount("writerLock.stale_taken_over") ==
-        stale0 + 1)
       assert(MaintenanceEvents.count(idx,
         MaintenanceEvents.StaleTakeover) == ev0 + 1)
       // the takeover event is scrape-visible (r17 ask: "visible in
@@ -175,8 +172,7 @@ class CrossProcessLockSpec extends SparkFunSuite {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     }
-    val lease0 = graft.Instr.totalCount("writerLock.lease_taken_over")
-    val stale0 = graft.Instr.totalCount("writerLock.stale_taken_over")
+    val stale0 = MaintenanceEvents.count(idx, MaintenanceEvents.StaleTakeover)
     val ev0 = MaintenanceEvents.count(idx, MaintenanceEvents.LeaseTakeover)
     val releaseGo = s"$dir/release_go"
     // 100 ms beat × 15 = 1.5 s declared window: long enough that the
@@ -207,9 +203,7 @@ class CrossProcessLockSpec extends SparkFunSuite {
         // tier-2, not tier-1: the window was genuinely observed
         assert(tookMs >= 1500, s"takeover after ${tookMs}ms — shorter " +
           "than the holder's declared stale window")
-        assert(graft.Instr.totalCount("writerLock.lease_taken_over") ==
-          lease0 + 1)
-        assert(graft.Instr.totalCount("writerLock.stale_taken_over") ==
+        assert(MaintenanceEvents.count(idx, MaintenanceEvents.StaleTakeover) ==
           stale0, "the frozen-but-alive holder tripped the dead-pid path")
         assert(MaintenanceEvents.count(idx,
           MaintenanceEvents.LeaseTakeover) == ev0 + 1)

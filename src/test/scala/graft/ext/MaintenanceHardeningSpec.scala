@@ -49,10 +49,11 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     var fires = 0
     var evals = 0
     def stats = IndexMaintenance.CompactStats(10, 1, 5)
+    val policyDir = "/tmp/mhs-policy-dir"
     def run(policy: IndexMaintenance.CompactPolicy, batchId: Long,
             files: Long): Unit =
-      IndexMaintenance.maybeCompact(policy, batchId, "mhs-policy",
-        "/tmp/mhs-policy-dir", { evals += 1; files }) { fires += 1; stats }
+      IndexMaintenance.maybeCompact(policy, batchId, policyDir,
+        { evals += 1; files }) { fires += 1; stats }
 
     // fixed cadence every 2: fires after batches 1 and 3 only, and the
     // file count is never consulted
@@ -63,11 +64,11 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     // cost threshold: at/below skips (and records the observed count),
     // above fires — regardless of batch id
     fires = 0
-    val skipsBefore = graft.Instr.totalCount("mhs-policy.compact_skipped_files")
+    def skips = MaintenanceEvents.count(policyDir, MaintenanceEvents.CompactSkip)
+    val skipsBefore = skips
     run(IndexMaintenance.CompactPolicy(maxDataFiles = Some(100L)), 0L, 100L)
     assert(fires == 0 && evals == 1)
-    assert(graft.Instr.totalCount("mhs-policy.compact_skipped_files") ==
-      skipsBefore + 1)
+    assert(skips == skipsBefore + 1)
     run(IndexMaintenance.CompactPolicy(maxDataFiles = Some(100L)), 0L, 101L)
     assert(fires == 1 && evals == 2)
 
@@ -197,7 +198,6 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     val host = java.net.InetAddress.getLocalHost.getHostName
     val boot = WriterLock.bootToken.getOrElse(
       cancel("no /proc boot_id on this platform"))
-    val t0 = graft.Instr.totalCount("writerLock.stale_taken_over")
     val c0 = MaintenanceEvents.count(idx, MaintenanceEvents.StaleTakeover)
     plantSentinel(idx, s"op=crashed host=$host pid=$deadPid boot=$boot " +
       "token=deadtok thread=x acquired_ms=0")
@@ -205,7 +205,6 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     // the restart proceeds: provably-dead holder, sentinel taken over
     DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx)
     assert(spark.read.parquet(idx).count() > rows)
-    assert(graft.Instr.totalCount("writerLock.stale_taken_over") == t0 + 1)
     assert(MaintenanceEvents.count(idx,
       MaintenanceEvents.StaleTakeover) == c0 + 1)
     assert(!WriterLock.isLocked(spark, idx))
@@ -236,7 +235,6 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     "machine is taken over after its own declared stale window (the " +
     "cluster-failover story the dead-pid path cannot decide)") {
     val (idx, _, rows) = freshIndex("mhs-lease-dead")
-    val l0 = graft.Instr.totalCount("writerLock.lease_taken_over")
     val c0 = MaintenanceEvents.count(idx, MaintenanceEvents.LeaseTakeover)
     // foreign boot, live-looking pid, a lease promise of 50 ms beats —
     // and NO beat file at all: the holder died before/with its first
@@ -250,7 +248,6 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     assert(spark.read.parquet(idx).count() > rows)
     // the takeover OBSERVED the full declared window (not a shortcut)
     assert(waitedMs >= 400, s"took over after only $waitedMs ms")
-    assert(graft.Instr.totalCount("writerLock.lease_taken_over") == l0 + 1)
     assert(MaintenanceEvents.count(idx,
       MaintenanceEvents.LeaseTakeover) == c0 + 1)
     assert(!WriterLock.isLocked(spark, idx))
@@ -1046,12 +1043,12 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     // 3. maintenance window: one gauged skip, then one fire
     IndexMaintenance.maybeCompact(
       IndexMaintenance.CompactPolicy(maxDataFiles = Some(100000L)), 0L,
-      "mhs-events", idx,
+      idx,
       IndexMaintenance.dataFileCount(spark, idx))(
       sys.error("must not fire"))
     IndexMaintenance.maybeCompact(
       IndexMaintenance.CompactPolicy(maxDataFiles = Some(1L)), 1L,
-      "mhs-events", idx,
+      idx,
       IndexMaintenance.dataFileCount(spark, idx))(
       DocDedup.compactMinHashIndex(spark, idx))
     assert(spark.read.parquet(idx).count() == rows)

@@ -67,7 +67,7 @@ class MaintenanceMetricsSpec extends SparkFunSuite {
     // compaction fire through the maintenance window
     IndexMaintenance.maybeCompact(
       IndexMaintenance.CompactPolicy(maxDataFiles = Some(1L)), 0L,
-      "mms", idx, IndexMaintenance.dataFileCount(spark, idx))(
+      idx, IndexMaintenance.dataFileCount(spark, idx))(
       DocDedup.compactMinHashIndex(spark, idx))
 
     // the gauges read the live counters: deltas visible without logs,

@@ -41,7 +41,15 @@ class ParserTotalitySpec extends SparkFunSuite {
     "pptx" -> (b => Pptx.parsePptx(b)),
     "charset" -> (b => Charset.decodeToUtf8(b)),
     "arrow" -> (b => ArrowIpc.parseArrow(b)),
-    "sniff" -> (b => FormatSniffer.sniff(b)))
+    "sniff" -> (b => FormatSniffer.sniff(b)),
+    "gzip" -> (b => Gzip.gzipMemberTable(b)),
+    "lz4" -> (b => Lz4.lz4FrameTable(b)),
+    "zstd" -> (b => Zstd.zstdFrameTable(b)),
+    "webm" -> (b => Matroska.webmSampleTable(b)),
+    "avro" -> (b => AvroOcf.avroBlockTable(b)),
+    "orc" -> (b => Orc.orcFooterTable(b)),
+    "npy" -> (b => Npy.npyTable(b)),
+    "safetensors" -> (b => SafeTensors.parse(b, 16L << 20)))
 
   private val magics: Seq[Array[Byte]] = Seq(
     "RIFF". getBytes, "OggS".getBytes, "fLaC".getBytes, "PAR1".getBytes,
@@ -52,7 +60,12 @@ class ParserTotalitySpec extends SparkFunSuite {
     Array[Byte]('B', 'Z', 'h', '9'),
     Array[Byte](0xFD.toByte, '7', 'z', 'X', 'Z', 0),
     Array[Byte]('7', 'z', 0xBC.toByte, 0xAF.toByte, 0x27, 0x1C),
-    "WARC/1.0\r\n".getBytes)
+    "WARC/1.0\r\n".getBytes,
+    Array[Byte](0x04, 0x22, 0x4D, 0x18), // lz4 frame
+    Array[Byte](0x28, 0xB5.toByte, 0x2F, 0xFD.toByte), // zstd frame
+    Array[Byte](0x1A, 0x45, 0xDF.toByte, 0xA3.toByte), // EBML (webm)
+    Array[Byte]('O', 'b', 'j', 1), "ORC".getBytes,
+    Array[Byte](0x93.toByte, 'N', 'U', 'M', 'P', 'Y', 1, 0))
 
   test("random and magic-prefixed blobs: every parser terminates " +
     "with a typed result") {

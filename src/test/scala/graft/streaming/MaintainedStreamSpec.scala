@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkFunSuite
-import graft.ext.{MaintenanceEvents, WriterLock}
+import graft.ext.{IndexMaintenance, MaintenanceEvents, WriterLock}
 import graft.fixtures.GateFixtures
 import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
@@ -47,17 +47,17 @@ class MaintainedStreamSpec extends SparkFunSuite {
     // the session is touched only when a batch closure runs
     import spark.implicits._
     Seq(
-      Family("NearDup", "streamNearDup",
+      Family("NearDup",
         () => twinBatches(text).map(_.toDF("id", "text")), lateTwins,
         (in, work, every) => StreamingNearDup.start(spark, in, work, 7, 10,
           bands = 8, rows = 4, sigBuckets = 4, maxFilesPerTrigger = Some(1),
           compactEvery = every, lease = lease)),
-      Family("ExactDup", "streamExactDup",
+      Family("ExactDup",
         () => twinBatches(text).map(_.toDF("id", "text")), lateTwins,
         (in, work, every) => StreamingExactDup.start(spark, in, work,
           fpBuckets = 8, maxFilesPerTrigger = Some(1),
           compactEvery = every, lease = lease)),
-      Family("CdcDup", "streamCdcDup",
+      Family("CdcDup",
         () => twinBatches(blob).map(_.toDF("id", "blob")), lateTwins,
         (in, work, every) => StreamingCdcDup.start(spark, in, work,
           minSize = 256, avgBits = 9, maxSize = 4096, hashBuckets = 8,
@@ -65,7 +65,7 @@ class MaintainedStreamSpec extends SparkFunSuite {
           lease = lease)),
       // the q137 gate's generator: an id >= 1000000 renders its base
       // image with a small pixel tweak, a near (not exact) twin
-      Family("ImageDedup", "streamImageDedup",
+      Family("ImageDedup",
         () => Seq(
           (0L to 9L).map(i => (i, GateFixtures.q137_png(i))),
           (0L to 4L).map(i => (i + 1000000L,
@@ -79,7 +79,7 @@ class MaintainedStreamSpec extends SparkFunSuite {
           compactEvery = every, lease = lease)),
       // identical twin vectors score cosine 1.0 and assign to their
       // original's cell; nprobe = nlist makes recall exhaustive
-      Family("VecDup", "streamVecDup",
+      Family("VecDup",
         () => twinBatches(vec).map(_.toDF("id", "vec")), lateTwins,
         (in, work, every) => StreamingVecDup.start(spark, in, work,
           threshold = 0.9999, nlist = 4, nprobe = 4,
@@ -111,7 +111,8 @@ class MaintainedStreamSpec extends SparkFunSuite {
 
   families.foreach { f =>
     test(s"${f.name}: three-batch twins, plain vs compactEvery=2") {
-      def run(tag: String, every: Option[Int]): Set[(Long, Long)] = {
+      /** The run's match pairs and its index's data-file count. */
+      def run(tag: String, every: Option[Int]): (Set[(Long, Long)], Long) = {
         val dir = tempDir(s"ms-${f.name}-$tag")
         val in = land(dir, f.batches())
         val work = s"$dir/work"
@@ -129,35 +130,35 @@ class MaintainedStreamSpec extends SparkFunSuite {
         val leaked =
           spark.sparkContext.getPersistentRDDs.keySet.filterNot(blocksBefore)
         assert(leaked.isEmpty, s"leaked blocks: $leaked")
-        spark.read.parquet(s"$work/matches").select("id_a", "id_b")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        (spark.read.parquet(s"$work/matches").select("id_a", "id_b")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+          IndexMaintenance.dataFileCount(spark, s"$work/index"))
       }
 
-      val plain = run("plain", None)
-      val compacted = run("compact", Some(2))
+      val (plain, plainFiles) = run("plain", None)
+      val (compacted, compactedFiles) = run("compact", Some(2))
       assert(compacted == plain,
         s"compaction changed stream output:\n plain=$plain\n comp=$compacted")
       // the third batch probed the compacted index: its twins are found
       val missed = f.lateTwins.filterNot { case (a, b) =>
         compacted((a, b)) || compacted((b, a)) }
       assert(missed.isEmpty, s"post-compaction probe missed $missed")
-      val gauges = graft.Instr.snapshot().toMap
-      val before = gauges(s"${f.prefix}.compact_files_before").last
-      val after = gauges(s"${f.prefix}.compact_files_after").last
-      assert(after < before,
-        s"compaction did not drop files: $before -> $after")
+      // batch 2 repeats batch 1's partitions, so the compacted index
+      // holds fewer files than the plain one
+      assert(compactedFiles < plainFiles,
+        s"compaction did not drop files: $plainFiles -> $compactedFiles")
     }
   }
 }
 
 object MaintainedStreamSpec {
 
-  /** One family: its gauge prefix, its three `(id, value)` batches,
+  /** One family: its three `(id, value)` batches,
     * the (twin, original) pairs of the third batch, and how to start
     * its stream on (input dir, work dir, compactEvery).
     */
   final case class Family(
-      name: String, prefix: String, batches: () => Seq[DataFrame],
+      name: String, batches: () => Seq[DataFrame],
       lateTwins: Seq[(Long, Long)],
       start: (String, String, Option[Int]) => MaintainedStream)
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.{Fixtures, SparkFunSuite}
 import graft.api.DedupOptions
+import graft.ext.MaintenanceEvents
 import graft.operators.Catalog
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -189,8 +190,6 @@ class StreamingDedupSpec extends SparkFunSuite {
       val inDir = s"$dir/in"
       Files.createDirectories(Paths.get(inDir))
       val work = s"$dir/work"
-      val skips0 = graft.Instr.totalCount("streamDedup.compact_skipped_files")
-      val fires0 = graft.Instr.totalCount("streamDedup.compact_files_before")
       (0 until 3).foreach { i =>
         Fixtures.writeTemp(inDir, s"f$i.dat", data)
         StreamingDedup.start(spark, inDir, work,
@@ -199,8 +198,8 @@ class StreamingDedupSpec extends SparkFunSuite {
       }
       val cat = new Catalog(spark, s"$work/catalog")
       (cat.links().orderBy("hash", "file_id", "line").collect().toSeq,
-        graft.Instr.totalCount("streamDedup.compact_skipped_files") - skips0,
-        graft.Instr.totalCount("streamDedup.compact_files_before") - fires0)
+        MaintenanceEvents.count(s"$work/catalog", MaintenanceEvents.CompactSkip),
+        MaintenanceEvents.count(s"$work/catalog", MaintenanceEvents.CompactFire))
     }
     // threshold no 3-batch catalog can reach: every check declines,
     // each decline recording the observed count
