@@ -580,8 +580,8 @@ object DocDedup {
     * corpus: band the probes with the index's own (bands, rows), read
     * only the probes' (band, sb) partitions, equi-join on the exact
     * band signature for candidates, then verify exact n-gram Jaccard
-    * ≥ num/den — re-shingling only the candidate corpus documents
-    * (semi-joined out of `corpus` by candidate id). Returns
+    * ≥ num/den — shingling only the candidate corpus documents
+    * (joined out of `corpus` by candidate id). Returns
     * (id_a = probe id, id_b = corpus id, common, na, nb), the
     * [[minHashPairs]] row shape; self-pairs (same id both sides) are
     * dropped so a corpus member can be probed against its own index.
@@ -593,8 +593,8 @@ object DocDedup {
     * just coordinates: `pBanded` holds probes × bands rows, so a caller
     * with few buckets but millions of probes would OOM the driver
     * inside `broadcast(...)` — above `broadcastLimit` rows the
-    * candidate join falls back to a shuffle join (same partition-pruned
-    * scan, same result).
+    * candidate join and the probe-text join fall back to shuffle joins
+    * (same partition-pruned scan, same result).
     */
   def probeMinHashIndex(probes: DataFrame, corpus: DataFrame,
                         idCol: String, textCol: String, path: String,
@@ -604,15 +604,15 @@ object DocDedup {
     graft.functions.VecExpressions.register(ss)
     val Seq(bands, rows, sigBuckets) =
       SignatureIndex.read(ss, path, MinHashLayout)
-    // NOT persisted: the probe batch is small by contract, re-banding
-    // it costs one narrow map — and the r12 bench attribution showed
-    // this function's cost is ACTION COUNT (per-job scheduling floor ×
-    // 6 jobs), not compute. Stages below are folded to 3 actions:
-    // one groupBy-collect (coords AND row count), one cache-warming
-    // count over the UNION of both shingle sides, the final checkpoint.
-    // Persisted: the banded rows feed BOTH the coords collect and the
-    // candidate join's probe side — unpersisted, the (spread + banding)
-    // pass ran twice per probe. Freed in the finally below.
+    // The r12 bench attribution showed this function's cost is ACTION
+    // COUNT (per-job scheduling floor), not compute, so it runs two
+    // actions: one groupBy-collect (coords AND row count) and the final
+    // checkpoint. Persisted: the banded rows feed BOTH the coords
+    // collect and the candidate join's probe side — unpersisted, the
+    // (spread + banding) pass ran twice per probe. The collect
+    // materializes the cache before the verify plan starts, so no
+    // exchange thread computes it for the first time. Freed in the
+    // finally below.
     val pBanded = bandedSignatures(probes, idCol, textCol,
       bands, rows, sigBuckets).withColumnRenamed("id", "id_a").persist()
     try SignatureIndex.probe(ss, path, MinHashLayout, "probeMinHashIndex",
@@ -626,86 +626,66 @@ object DocDedup {
           .join(idx.guarded(pBanded), Seq("band", "bsig", "sb"))
           .where(col("id_a") =!= col("id"))
           .select(col("id_a"), col("id").as("id_b")).distinct()
-          .persist()
-        try {
-          val corpusCand = corpus.select(col(idCol), col(textCol))
-            .join(cand.select(col("id_b").as(idCol)).distinct(), Seq(idCol),
-              "left_semi")
-          // BOTH shingle sides in one cache so one count materializes
-          // everything (cand included, via the semi-join inside side "b") —
-          // eager warming still matters: concurrent first-computation of
-          // the same persisted blocks from several exchange threads
-          // serializes on the block locks (observed multi-minute stalls).
-          val sh = shingleSides(probes, corpusCand, idCol, textCol).persist()
-          try {
-            graft.Jobs.tagged(ss, "probeMinHashIndex.warm")(sh.count())
-            graft.Jobs.tagged(ss, "probeMinHashIndex.verify")(
-              verifySides(sh, sh.where(col("side") === "b").drop("side"),
-                  cand, num, den)(
-                  _.where(col("side") === "b")
-                    .select(col("id").as("id_b"), col("n").as("nb")))
-                // no determinism orderBy here (guide §2.4): every caller
-                // joins/aggregates the pair set or re-orders its own final
-                // output, so the range exchange + sampling pass it cost per
-                // probe bought nothing
-                .localCheckpoint()) // materialize while the caches are alive
-          } finally sh.unpersist()
-        } finally cand.unpersist()
+        graft.Jobs.tagged(ss, "probeMinHashIndex.verify")(
+          verifyPairs(cand, probes, corpus, idCol, textCol, num, den)(
+              idx.guarded)
+            // no determinism orderBy here (guide §2.4): every caller
+            // joins/aggregates the pair set or re-orders its own final
+            // output, so the range exchange + sampling pass it cost per
+            // probe bought nothing
+            .localCheckpoint()) // materialize while pBanded is cached
     } finally pBanded.unpersist()
   }
 
-  /** Shingles of both verify sides in ONE frame, tagged `side` "a"
-    * (probe/batch docs) and "b" (candidate corpus docs), so one count
-    * warms everything and one (side, id) aggregation feeds both
-    * per-doc shingle counts.
+  /** Exact n-gram Jaccard ≥ num/den over distinct candidate pairs
+    * (id_a, id_b), verified from each pair's two bigram sets: id_a's
+    * text comes from `a` (through `guard`, the caller's broadcast row
+    * guard), id_b's from `b`. `common`, `na` and `nb` are the sizes of
+    * the sets' intersection and of each set.
+    *
+    * An id with several rows on a side — a duplicated probe, a replayed
+    * corpus append — verifies against the UNION of its rows' bigram
+    * sets, the same (id, shingle) relation [[shingles]] builds. The
+    * per-pair groupBy that forms the union plans no exchange of its
+    * own: `cand` arrives clustered by (id_a, id_b), or the shuffled
+    * b-side join re-clusters it by id_b, and both joins keep that
+    * clustering. Only pairs sharing a bigram are kept, as in the
+    * inverted-index recount of [[minHashPairs]].
     */
-  private def shingleSides(a: DataFrame, b: DataFrame, idCol: String,
-                           textCol: String): DataFrame =
-    shingles(a, idCol, textCol).withColumn("side", lit("a"))
-      .unionByName(shingles(b, idCol, textCol).withColumn("side", lit("b")))
-
-  /** Exact n-gram Jaccard ≥ num/den over candidate pairs (id_a, id_b)
-    * from a [[shingleSides]] frame: `shB` is the id_b shingle set and
-    * `nb` picks the id_b counts out of the (side, id) → n aggregation.
-    * ONE (side, id) aggregation feeds both count sides: the two per-side
-    * groupBys had non-identical children (different side filters below
-    * the exchange), so each paid its own scan + exchange over the
-    * shingle cache; keyed (side, id) the subtree is identical and the
-    * second branch is a ReusedExchange.
-    */
-  private def verifySides(sh: DataFrame, shB: DataFrame, cand: DataFrame,
+  private def verifyPairs(cand: DataFrame, a: DataFrame, b: DataFrame,
+                          idCol: String, textCol: String,
                           num: Int, den: Int)(
-                          nb: DataFrame => DataFrame): DataFrame = {
-    val common = sh.where(col("side") === "a").drop("side")
-      .toDF("id_a", "shingle")
-      .join(cand, "id_a")
-      .join(shB.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-    val counts = sh.groupBy("side", "id").agg(count(lit(1)).as("n"))
-    val na = counts.where(col("side") === "a")
-      .select(col("id").as("id_a"), col("n").as("na"))
-    common.join(na, "id_a").join(nb(counts), "id_b")
-      .where(lit(den) * col("common") >=
+                          guard: DataFrame => DataFrame): DataFrame = {
+    def texts(df: DataFrame, side: String) =
+      df.select(col(idCol).as(s"id_$side"), col(textCol).as(s"t$side"))
+    def bigramSet(t: String) = array_distinct(
+      flatten(collect_list(TextAnalysis.wordBigrams(col(t)))))
+    cand.join(texts(b, "b"), "id_b").join(guard(texts(a, "a")), "id_a")
+      .groupBy("id_a", "id_b")
+      .agg(bigramSet("ta").as("sa"), bigramSet("tb").as("sb"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("long").as("common"),
+        size(col("sa")).cast("long").as("na"),
+        size(col("sb")).cast("long").as("nb"))
+      .where(col("common") > 0 && lit(den) * col("common") >=
         lit(num) * (col("na") + col("nb") - col("common")))
-      .select("id_a", "id_b", "common", "na", "nb")
   }
 
   /** The streaming micro-batch kernel behind
     * [[graft.streaming.StreamingNearDup]]: cross-index matches,
     * within-batch matches, the matches write, AND the index
-    * append/build — banding and shingling the batch ONCE and spending
-    * exactly four Spark actions through [[SignatureIndex.fold]]. The
-    * unfused form (probeMinHashIndex + minHashPairs + two writes) costs
-    * eight: the r13 bench attribution showed the per-micro-batch cost of
-    * the streaming gates is ACTION COUNT (per-job scheduling floor), not
+    * append/build — banding the batch ONCE and spending exactly three
+    * Spark actions through [[SignatureIndex.fold]]. The unfused form
+    * (probeMinHashIndex + minHashPairs + two writes) costs eight: the
+    * r13 bench attribution showed the per-micro-batch cost of the
+    * streaming gates is ACTION COUNT (per-job scheduling floor), not
     * compute — the q55 lesson applied to q106.
     *
     * Actions: (1) the fold's coordinate collect over the batch's banded
     * signatures — the probe's pruning coordinates, its broadcast
     * row-guard, and the banded cache's materialization in one job;
-    * (2) one cache-warming count over the union of both shingle sides;
-    * (3) the matches WRITE, which doubles as the verify plan's
-    * materialization (no separate checkpoint); (4) the index append
+    * (2) the matches WRITE, which doubles as the verify plan's
+    * materialization (no separate checkpoint); (3) the index append
     * from the same banded cache, so the batch is banded once, not
     * three times.
     *
@@ -716,7 +696,10 @@ object DocDedup {
     * semantics to [[minHashPairs]] (same banding expression, same
     * exact-Jaccard verify). Batch ids must be distinct from corpus ids
     * (the streaming caller appends the batch to the corpus AFTER this
-    * fold, and id-uniqueness across batches is the caller's contract).
+    * fold, and id-uniqueness across batches is the caller's contract);
+    * an id found in both, as a replayed batch whose corpus append
+    * landed leaves it, verifies against the union of its rows' bigram
+    * sets, never a double count.
     *
     * When no index exists at `indexPath` yet (first batch), the
     * cross-index side is empty and the append becomes the initial
@@ -753,24 +736,12 @@ object DocDedup {
         .join(bandedIds.toDF("id_b", "band", "bsig"), Seq("band", "bsig"))
         .where(col("id_a") < col("id_b"))
         .select("id_a", "id_b")
-      val cand = b.persist(crossCand.unionByName(withinCand).distinct())
-      // corpus text only for the ids the cross side actually hit —
-      // batch-id id_b values simply never match (ids are disjoint)
-      val corpusCand = corpus.select(col(idCol), col(textCol))
-        .join(cand.select(col("id_b").as(idCol)).distinct(),
-          Seq(idCol), "left_semi")
-      // BOTH shingle sides in one cache so one count materializes
-      // everything, cand included via the semi-join inside side "b"
-      val sh = b.persist(shingleSides(batch, corpusCand, idCol, textCol))
-      // action 2: warm the shingle + candidate caches in one job
-      graft.Jobs.tagged(batch.sparkSession, "foldMinHashBatch.warm")(
-        sh.count())
-      // within-pair id_b values are BATCH docs: resolve id_b shingles
-      // and counts against both sides. Batch and corpus ids are
-      // disjoint by this function's contract, but the side-sum is
-      // exact even if they were not.
-      verifySides(sh, sh.drop("side"), cand, num, den)(
-        _.groupBy("id").agg(sum("n").as("nb")).toDF("id_b", "nb"))
+      // within-pair id_b values are BATCH docs, cross-pair ones corpus
+      // docs: the b side is both
+      verifyPairs(crossCand.unionByName(withinCand).distinct(), batch,
+          batch.select(idCol, textCol)
+            .unionByName(corpus.select(idCol, textCol)),
+          idCol, textCol, num, den)(df => b.cross.fold(df)(_.guarded(df)))
     }
   }
 

@@ -1359,7 +1359,13 @@ object Pdf {
           w = c.toString
         }
       }
-      if (w.nonEmpty) emit(codeOf(w))
+      if (w.nonEmpty) {
+        emit(codeOf(w))
+        // the decoder adds a table entry for this last code too, so EOD
+        // goes out at the width that entry may have widened to
+        dictN += 1
+        if (dictN >= (1 << width) && width < 12) width += 1
+      }
       emit(257) // EOD
       pad()
       out.toByteArray

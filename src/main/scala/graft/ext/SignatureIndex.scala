@@ -2,7 +2,11 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The persisted signature-index life cycle every index family shares —
   * MinHash and Hamming ([[DocDedup]]), [[Winnow]], [[Cdc]], and LSH,
@@ -138,14 +142,21 @@ private[graft] object SignatureIndex {
       if (rows <= broadcastLimit) broadcast(df) else df
   }
 
-  /** Does the index hold data files? An index built from an empty corpus
-    * has the sidecar but no partition directories, and `read.parquet`
-    * would fail schema inference on it.
+  /** The first data file under `path`, descending the partition
+    * directories; None when the index holds no data, as one built from
+    * an empty corpus has the sidecar but no partition directories.
     */
-  def hasData(ss: SparkSession, path: String, layout: Layout[_]): Boolean = {
-    val prefix = layout.partitionCols.headOption.fold("part-")(c => s"$c=")
-    fsOf(ss, path).listStatus(new Path(path))
-      .exists(_.getPath.getName.startsWith(prefix))
+  private def dataFile(ss: SparkSession, path: String,
+                       layout: Layout[_]): Option[Path] = {
+    val fs = fsOf(ss, path)
+    def first(dir: Path, cols: List[String]): Option[Path] = cols match {
+      case c :: rest => fs.listStatus(dir).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$c="))
+        .flatMap(s => first(s.getPath, rest)).nextOption()
+      case Nil => fs.listStatus(dir).iterator.map(_.getPath)
+        .find(_.getName.startsWith("part-"))
+    }
+    first(new Path(path), layout.partitionCols.toList)
   }
 
   /** ONE action: the distinct partition coordinates of `signed` (as
@@ -173,13 +184,31 @@ private[graft] object SignatureIndex {
     */
   private val KeyBase = 2147483648L
 
+  /** The whole index, None when it holds no data. Its data columns'
+    * schema is read on the driver from the Spark schema one file's
+    * footer carries: the layout fixes every column but the id, whose
+    * type is the caller's, and the footer read stands in for
+    * `read.parquet`'s schema inference, a Spark job. Partition columns
+    * are still discovered from the directory names.
+    */
+  def scan(ss: SparkSession, path: String,
+           layout: Layout[_]): Option[DataFrame] =
+    dataFile(ss, path, layout).map { file =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(file,
+        ss.sparkContext.hadoopConfiguration))
+      val schema = try DataType.fromJson(in.getFooter.getFileMetaData
+          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        finally in.close()
+      ss.read.schema(schema.asInstanceOf[StructType]).parquet(path)
+    }
+
   /** ONE In-expression over the combined key of the partition columns
     * only — Catalyst evaluates it against partition values at
     * file-listing time, so unlisted directories are never opened.
     */
-  private def pruned(ss: SparkSession, path: String, layout: Layout[_],
+  private def pruned(index: DataFrame, layout: Layout[_],
                      keys: Seq[Long]): DataFrame =
-    ss.read.parquet(path).where(layout.partitionCols
+    index.where(layout.partitionCols
       .map(c => col(c).cast("long"))
       .reduce((key, c) => key * KeyBase + c)
       .isin(keys: _*))
@@ -191,10 +220,11 @@ private[graft] object SignatureIndex {
             signed: DataFrame, broadcastLimit: Long): Option[Probe] = {
     require(broadcastLimit >= 1,
       s"broadcastLimit must be >= 1, got $broadcastLimit")
-    if (!hasData(ss, path, layout)) return None
-    val (keys, rows) = touched(signed, layout, op)
-    if (keys.isEmpty) None
-    else Some(Probe(pruned(ss, path, layout, keys), rows, broadcastLimit))
+    scan(ss, path, layout).flatMap { index =>
+      val (keys, rows) = touched(signed, layout, op)
+      if (keys.isEmpty) None
+      else Some(Probe(pruned(index, layout, keys), rows, broadcastLimit))
+    }
   }
 
   // ---------------------------------------------------------------- fold
@@ -203,33 +233,22 @@ private[graft] object SignatureIndex {
     * clustered by the partition columns) and the pruned index slice they
     * touch (None on the first batch, or when nothing is touched).
     */
-  final class Batch private[SignatureIndex] (
-      val signed: DataFrame, val cross: Option[Probe]) {
-    private var held = List.empty[DataFrame]
-
-    /** Persist a frame the matches plan reads several times; it is
-      * freed after the matches write.
-      */
-    def persist(df: DataFrame): DataFrame = { held ::= df; df.persist() }
-
-    private[SignatureIndex] def release(): Unit = held.foreach(_.unpersist())
-  }
+  final case class Batch(signed: DataFrame, cross: Option[Probe])
 
   /** The streaming fold skeleton: probe the index with a batch, write the
-    * batch's matches, append the batch — signing it ONCE:
+    * batch's matches, append the batch — signing it ONCE into a cache
+    * clustered by the partition columns (the index opened, healing
+    * first, or `defaults` when none exists), then three actions:
     *
-    *  1. open the index (heal first), or take `defaults` when none exists;
-    *  2. sign the batch into a cache clustered by the partition columns,
-    *     so the append writes straight from it with no re-shuffle and
-    *     one file per touched directory;
-    *  3. action: the touched coordinates and row count (materializing the
-    *     cache);
-    *  4. action: the matches write — `matches` plans cross pairs against
+    *  1. the touched coordinates and row count, which materialize the
+    *     cache;
+    *  2. the matches write — `matches` plans cross pairs against
     *     `Batch.cross` ∪ within-batch pairs; the write IS the plan's
     *     materialization;
-    *  5. action: the append from the cache under the writer lock
-    *     (reentrant on a stream's foreachBatch thread), plus the sidecar
-    *     on the first batch.
+    *  3. the append straight from the cache, with no re-shuffle and one
+    *     file per touched directory, under the writer lock (reentrant
+    *     on a stream's foreachBatch thread), plus the sidecar on the
+    *     first batch.
     *
     * `op` names the kernel in the coordinate-cap message, the lock and
     * the `graft:<op>.coords/.matches/.append` job tags.
@@ -247,14 +266,11 @@ private[graft] object SignatureIndex {
     try {
       val (keys, rows) = touched(signed, layout, op)
       val cross =
-        if (existing.isEmpty || keys.isEmpty ||
-          !hasData(ss, indexPath, layout)) None
-        else Some(Probe(pruned(ss, indexPath, layout, keys), rows,
-          broadcastLimit))
-      val b = new Batch(signed, cross)
-      try graft.Jobs.tagged(ss, s"$op.matches")(
-        matches(b).write.mode("overwrite").parquet(matchesPath))
-      finally b.release()
+        if (existing.isEmpty || keys.isEmpty) None
+        else scan(ss, indexPath, layout).map(index =>
+          Probe(pruned(index, layout, keys), rows, broadcastLimit))
+      graft.Jobs.tagged(ss, s"$op.matches")(matches(Batch(signed, cross))
+        .write.mode("overwrite").parquet(matchesPath))
       WriterLock.withLock(ss, indexPath, s"$op.append") {
         graft.Jobs.tagged(ss, s"$op.append")(write(signed, indexPath, layout,
           if (existing.isDefined) "append" else "overwrite"))

@@ -825,12 +825,13 @@ object Similarity {
     def emptyResult = q.select(col("query_id"),
       col("query_id").as("neighbor_id"), lit(1).as("rank"),
       lit(0.0).as("adc")).where(lit(false))
-    if (sample.isEmpty || !SignatureIndex.hasData(ss, path, PqLayout))
-      return emptyResult
+    val index =
+      if (sample.isEmpty) None else SignatureIndex.scan(ss, path, PqLayout)
+    if (index.isEmpty) return emptyResult
     // flat PQ has no coordinate collect to reuse: one count on the
     // (small by contract) probe batch prices the distance table
     val nQ = q.count()
-    adcTopK(ss.read.parquet(path), q,
+    adcTopK(index.get, q,
       codewordsDf(ss, sample, m, dsub), dsub, m, k,
       broadcastDtable = nQ * m * sample.length <= broadcastLimit)
   }

@@ -17,7 +17,7 @@ import graft.ext.DocDedup
   * The per-batch pipeline is the FUSED
   * [[graft.ext.DocDedup.foldMinHashBatch]] kernel — cross-index
   * matches, within-batch matches, the matches write, and the index
-  * append in four Spark actions, banding and shingling the batch once
+  * append in three Spark actions, banding the batch once
   * (the unfused probe + pairs + two writes form cost eight actions,
   * and the r13 bench attribution showed action count, not compute,
   * dominates the micro-batch floor). One more action per batch here:
@@ -39,8 +39,9 @@ import graft.ext.DocDedup
   * batch re-emits its `batch_id`-tagged matches), while index/corpus
   * state is replay-SAFE: duplicate appended rows cannot change any
   * later batch's verified pairs — candidates are `distinct()`ed ids and
-  * shingle relations are distinct (id, shingle) sets, so re-appended
-  * rows collapse before verification. Consumers keyed on
+  * each id verifies against the union of its rows' bigram sets (the
+  * per-pair `array_distinct` over every text the joins bring), so
+  * re-appended rows collapse before verification. Consumers keyed on
   * (batch_id, id_a, id_b) read the matches exactly-once.
   */
 object StreamingNearDup {

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.commons.io.FileUtils
 
 import graft.api.{DedupOptions, Deduplicator}
-import graft.ext.DocDedup
+import graft.ext.{DocDedup, Winnow}
 
 /** Per-call job budgets. A small call's floor is set by how many Spark
   * jobs its plan launches, not by its compute, so each row pins one
@@ -112,7 +112,7 @@ class JobBudgetSpec extends SparkFunSuite {
         () => assert(chunks == Seq(40L, 40L))
       }
     }),
-    Budget("probeMinHashIndex of ten twins against a built index", 23, { dir =>
+    Budget("probeMinHashIndex of ten twins against a built index", 9, { dir =>
       val idx = s"$dir/index"
       val corpus = docs(0, 40)
       DocDedup.buildMinHashIndex(corpus, "id", "text", idx,
@@ -123,7 +123,7 @@ class JobBudgetSpec extends SparkFunSuite {
         () => assert(twins(pairs, 1000L) == (0L until 10L).toSet)
       }
     }),
-    Budget("foldMinHashBatch of a second batch into an index one batch old", 26, { dir =>
+    Budget("foldMinHashBatch of a second batch into an index one batch old", 11, { dir =>
       val first = docs(0, 20)
       def fold(batch: org.apache.spark.sql.DataFrame, idx: String,
                matches: String): Unit =
@@ -135,6 +135,15 @@ class JobBudgetSpec extends SparkFunSuite {
         val m = s"$idx-matches"
         fold(docs(0, 10, idOffset = 1000L), idx, m)
         () => assert(twins(spark.read.parquet(m), 1000L) == (0L until 10L).toSet)
+      }
+    }),
+    Budget("probeWinnowIndex of ten twins against a built index", 9, { dir =>
+      val idx = s"$dir/index"
+      Winnow.buildWinnowIndex(docs(0, 40), "id", "text", idx, fpBuckets = 8)
+      () => {
+        val pairs = Winnow.probeWinnowIndex(docs(0, 10, idOffset = 1000L),
+          "id", "text", idx)
+        () => assert(twins(pairs, 1000L) == (0L until 10L).toSet)
       }
     }),
     Budget("compactMinHashIndex of an index built and appended twice", 6, { dir =>
