@@ -1235,8 +1235,9 @@ object SparkEntry {
 
     // ---- J1/J2: the ENGINE's dedup-encode semantics on dataset chunks —
     //      hash every 64-char chunk, first occurrence (by doc_id, pos)
-    //      wins, later ones become pointers to it. This is Dedup.plan's
-    //      window logic, oracle-checked.
+    //      wins, later ones become pointers to it. This is
+    //      Deduplicator.deduplicateBatch's first-occurrence rule,
+    //      oracle-checked.
     "q28_dedup_encode" -> ((s, dir) => {
       val chunks = t(s, dir, "documents")
         .select(col("doc_id"),

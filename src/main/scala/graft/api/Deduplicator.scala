@@ -1,10 +1,12 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.Hashing
-import graft.operators.{Catalog, Dedup, Recovery}
+import graft.operators.{Catalog, Recovery}
 import graft.sources.{BinFormat, ChunkSource, OrderedBinarySink}
 
 /** Options of one dedup run — mirrors the reference's option surface
@@ -61,16 +63,8 @@ class Deduplicator(spark: SparkSession, workDir: String,
   private def parquetPath(name: String) = s"$workDir/encoded/$name.parquet"
   private def binPath(name: String) = s"$workDir/encoded/$name"
 
-  // (catalog version, next file_id at that version) — refreshed after
-  // every commit this instance makes. catalog.nextFileId is a Spark job
-  // over the files table; a streaming session runs one dedup batch per
-  // micro-batch forever, and this instance is the catalog's single
-  // writer there, so the id only needs re-reading when the version
-  // moved under us (checked against an FS listing, not a job).
-  private var fidCache: Option[(Long, Long)] = None
-
   /** Dedupe one file: chunk → hash → probe → encode → write encoded table
-    * → commit catalog last (SURVEY §3.1's translation, 2–3 Spark jobs).
+    * → commit catalog last (SURVEY §3.1's translation).
     */
   def deduplicateFile(input: String, opts: DedupOptions = DedupOptions()): DedupResult =
     deduplicateBatch(Seq(input), opts).head
@@ -84,6 +78,11 @@ class Deduplicator(spark: SparkSession, workDir: String,
     * but a 10k-file batch costs one job chain, not 10k sequential ones.
     * Encoded outputs land as one partitioned write renamed into the
     * per-file directories.
+    *
+    * Spark actions: the encoded write, the contributions checkpoint and
+    * the catalog's two version writes, with their AQE stage jobs (11 for
+    * a small batch). Per-file counts, touched buckets and the bloom
+    * delta are observed metrics of the first two.
     */
   def deduplicateBatch(inputs: Seq[String],
                        opts: DedupOptions = DedupOptions(),
@@ -95,10 +94,9 @@ class Deduplicator(spark: SparkSession, workDir: String,
     require(inputs.distinct.size == inputs.size,
       "duplicate input paths in one batch would collide on output names")
     val algo = Hashing.resolve(opts.algorithm)
-    val fidBase = fidCache match {
-      case Some((v, fid)) if v == catalog.currentVersion => fid
-      case _ => catalog.nextFileId
-    }
+    // The catalog version this batch probes and commits on top of.
+    val version = catalog.currentVersion
+    val fidBase = catalog.nextFileId
     val statuses = inputs.map(requireSingleFile)
     // Raw-string distinctness above is not enough: two aliases of one
     // file ('dir//a' vs 'dir/a', relative vs absolute) resolve to the
@@ -153,7 +151,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
     val stats = hashed.groupBy("hash")
       .agg(min(struct(col("fidx"), col("pos"))).as("first"),
         count(lit(1)).as("occ"))
-    val catLinks = catalog.links().select(col("hash"),
+    val catLinks = catalog.linksAt(version).select(col("hash"),
       col("line").as("cat_line"), col("file_id").as("cat_file_id"))
     // Bloom prefilter (when the catalog maintains its sidecar): rows
     // whose hash is certainly novel — no false negatives at any fill
@@ -206,20 +204,19 @@ class Deduplicator(spark: SparkSession, workDir: String,
       // stage separately.
       val w = opts.chunkBytes
       val staging = s"$workDir/encoded/.staging-${java.util.UUID.randomUUID()}"
-      // Single-file counts ride the write action as observed metrics
-      // (guide §1.2 — don't run a separate job for numbers a running
-      // job can report): with one fidx the per-file split IS the global
-      // aggregate. Multi-file batches that want counts still pay the
-      // grouped collect below; streaming callers that discard the
-      // DedupResults skip it entirely (computeCounts = false).
+      // Per-file (chunks, pointers) ride the write action as one
+      // observed aggregate (guide §1.2 — don't run a separate job for
+      // numbers a running job can report), for any number of files.
+      // Streaming callers that discard the DedupResults skip it
+      // (computeCounts = false).
       val countsObs =
-        if (computeCounts && inputs.size == 1)
-          Some(new org.apache.spark.sql.Observation())
+        if (computeCounts) Some(new org.apache.spark.sql.Observation())
         else None
       val encodedOut = countsObs match {
-        case Some(o) => encodedAll.observe(o, count(lit(1)).as("n"),
-          coalesce(sum(when(col("is_pointer"), 1L).otherwise(0L)),
-            lit(0L)).as("ptrs"))
+        case Some(o) => encodedAll.observe(o,
+          udaf(new FileCounts(inputs.size),
+            Encoders.tuple(Encoders.scalaInt, Encoders.scalaBoolean))(
+            col("fidx"), col("is_pointer")).as("counts"))
         case None => encodedAll
       }
       graft.Jobs.tagged(spark, s"dedup.w$w.encoded_write")(
@@ -227,9 +224,6 @@ class Deduplicator(spark: SparkSession, workDir: String,
           .partitionBy("fidx").parquet(staging))
       val fs = new org.apache.hadoop.fs.Path(staging)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val emptyEncoded = Dedup.encode(
-        Dedup.probe(hashed.where(lit(false)).select("pos", "chunk"),
-          algo, catalog.links()))
       names.zipWithIndex.foreach { case (name, i) =>
         val src = new org.apache.hadoop.fs.Path(staging, s"fidx=$i")
         val dst = new org.apache.hadoop.fs.Path(parquetPath(name))
@@ -244,7 +238,8 @@ class Deduplicator(spark: SparkSession, workDir: String,
           // partition; anything else means its chunks were lost.
           require(statuses(i).getLen == 0,
             s"no staged output for non-empty input ${inputs(i)}")
-          emptyEncoded.write.mode("overwrite").parquet(dst.toString)
+          spark.createDataFrame(java.util.List.of[Row](),
+            Recovery.encodedSchema).write.mode("overwrite").parquet(dst.toString)
         }
       }
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
@@ -259,8 +254,8 @@ class Deduplicator(spark: SparkSession, workDir: String,
         }
       }
 
-      // ---- catalog contributions (small) + per-file counts, then the
-      //      single commit, LAST. The checkpoint blocks are freed after
+      // ---- catalog contributions (small), then the single commit,
+      //      LAST. The checkpoint blocks are freed after
       //      the commit (registry delta — localCheckpoint pins internal
       //      RDDs): a streaming session runs this once per micro-batch,
       //      and leaked per-run blocks would accumulate forever. ----
@@ -269,12 +264,13 @@ class Deduplicator(spark: SparkSession, workDir: String,
       // and deltas are complementary slices of the same batch-first-
       // occurrence rows, so materializing them separately would run the
       // probe lineage twice (per micro-batch, forever, in streaming).
-      val contrib = graft.Jobs.tagged(spark, s"dedup.w$w.contrib_checkpoint")(
-        probed
-          .where(struct(col("fidx"), col("pos")) === col("first"))
-          .select(col("fidx"), col("hash"), col("pos"), col("occ"),
-            col("cat_line").isNotNull.as("known"))
-          .localCheckpoint())
+      // The commit's touched buckets and bloom delta ride the same pass.
+      val (contribDf, contribSeen) = catalog.observeCommit(probed
+        .where(struct(col("fidx"), col("pos")) === col("first"))
+        .select(col("fidx"), col("hash"), col("pos"), col("occ"),
+          col("cat_line").isNotNull.as("known")), version, Some(!col("known")))
+      val contrib = graft.Jobs.tagged(spark,
+        s"dedup.w$w.contrib_checkpoint")(contribDf.localCheckpoint())
       val newLinksAll = contrib.where(!col("known"))
         .select(col("fidx"), col("hash"), col("pos").as("line"),
           col("occ").as("refs_num"))
@@ -283,20 +279,8 @@ class Deduplicator(spark: SparkSession, workDir: String,
       cpPinned =
         spark.sparkContext.getPersistentRDDs
           .filterNot(kv => beforeCp(kv._1)).values.toSeq
-      val countRows: Map[Int, (Long, Long)] = countsObs match {
-        case Some(o) =>
-          val r = o.get
-          Map(0 -> (r("n").asInstanceOf[Long], r("ptrs").asInstanceOf[Long]))
-        case None if computeCounts =>
-          graft.Jobs.tagged(spark, s"dedup.w$w.counts")(
-            probed.groupBy("fidx")
-              .agg(count(lit(1)).as("n"),
-                sum(when(isPtr, 1L).otherwise(0L)).as("ptrs"))
-              .collect())
-            .map(r => r.getAs[Int]("fidx") ->
-              (r.getAs[Long]("n"), r.getAs[Long]("ptrs"))).toMap
-        case None => Map.empty
-      }
+      val counts = countsObs.fold(Seq.fill(2 * inputs.size)(0L))(
+        _.get("counts").asInstanceOf[scala.collection.Seq[Long]].toSeq)
       // Commit the batch-wide links AS ONE DataFrame (file_id = fidx +
       // fidBase), never split per file and re-unioned: an N-way union
       // here makes the commit plan O(files × partitions) tasks — ~3× the
@@ -312,6 +296,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
       // row per hash by construction (contrib is per-hash). The public
       // path's re-checkpoints and defensive anti-join would re-pay two
       // jobs per micro-batch for invariants this plan establishes.
+      val (touched, deltaBloom) = contribSeen()
       graft.Jobs.tagged(spark, s"dedup.w$w.commit")(
         catalog.commitRunsPrechecked(
           names.zipWithIndex.map { case (name, i) =>
@@ -320,11 +305,9 @@ class Deduplicator(spark: SparkSession, workDir: String,
           newLinksAll.select(col("hash"),
             (col("fidx").cast("long") + fidBase).as("file_id"),
             col("line"), col("refs_num")),
-          deltasAll))
-      fidCache = Some((catalog.currentVersion, fidBase + inputs.size))
+          deltasAll, version, touched, deltaBloom))
       names.zipWithIndex.map { case (name, i) =>
-        val (n, p) = countRows.getOrElse(i, (0L, 0L))
-        DedupResult(name, fidBase + i, n, p)
+        DedupResult(name, fidBase + i, counts(2 * i), counts(2 * i + 1))
       }
     } finally {
       probed.unpersist()
@@ -428,4 +411,26 @@ class Deduplicator(spark: SparkSession, workDir: String,
     val h = md.digest(s"$input:${catalog.currentVersion + 1}".getBytes("UTF-8"))
     h.map("%02x".format(_)).mkString + ".bin"
   }
+}
+
+/** Per-file (chunks, pointers) of a batch of `files` runs as one
+  * aggregate over (fidx, is_pointer): slot 2·fidx counts the file's
+  * chunks, slot 2·fidx + 1 its pointers.
+  */
+private[api] final class FileCounts(files: Int)
+    extends Aggregator[(Int, Boolean), Array[Long], Array[Long]] {
+  def zero: Array[Long] = new Array[Long](2 * files)
+  def reduce(b: Array[Long], row: (Int, Boolean)): Array[Long] = {
+    b(2 * row._1) += 1
+    if (row._2) b(2 * row._1 + 1) += 1
+    b
+  }
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+  def finish(b: Array[Long]): Array[Long] = b
+  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
 }

@@ -180,12 +180,17 @@ object IndexMaintenance {
 
     val uuid = java.util.UUID.randomUUID.toString.take(8)
     val tmp = new Path(root.getParent, s".compact_tmp_${root.getName}-$uuid")
+    // Both reads below take this schema from one data file's footer,
+    // so neither runs a schema-inference job.
+    val schema = SignatureIndex.dataSchema(spark, path, partitionCols)
+    def read(p: Path) =
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(p.toString)
     // Row count observed DURING the rewrite job instead of a separate
     // count() pass — one full index read per compaction, not two. The
     // observed metric counts exactly the rows that flowed into the
     // staged write, which is what the row-preservation check compares.
     val obs = new org.apache.spark.sql.Observation()
-    val df = spark.read.parquet(path)
+    val df = read(root)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
     val clustered =
@@ -211,7 +216,7 @@ object IndexMaintenance {
     // row-preservation check BEFORE anything becomes visible: a lost
     // or duplicated row aborts with the fragmented-but-correct index
     // untouched. Parquet count() is footer-metadata cheap.
-    val rowsAfter = spark.read.parquet(tmp.toString).count()
+    val rowsAfter = read(tmp).count()
     if (rowsAfter != rows) {
       fs.delete(tmp, true)
       throw new IllegalStateException(

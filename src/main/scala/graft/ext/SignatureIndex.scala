@@ -143,11 +143,12 @@ private[graft] object SignatureIndex {
   }
 
   /** The first data file under `path`, descending the partition
-    * directories; None when the index holds no data, as one built from
-    * an empty corpus has the sidecar but no partition directories.
+    * directories `partitionCols`; None when the index holds no data, as
+    * one built from an empty corpus has the sidecar but no partition
+    * directories.
     */
   private def dataFile(ss: SparkSession, path: String,
-                       layout: Layout[_]): Option[Path] = {
+                       partitionCols: Seq[String]): Option[Path] = {
     val fs = fsOf(ss, path)
     def first(dir: Path, cols: List[String]): Option[Path] = cols match {
       case c :: rest => fs.listStatus(dir).iterator
@@ -156,7 +157,7 @@ private[graft] object SignatureIndex {
       case Nil => fs.listStatus(dir).iterator.map(_.getPath)
         .find(_.getName.startsWith("part-"))
     }
-    first(new Path(path), layout.partitionCols.toList)
+    first(new Path(path), partitionCols.toList)
   }
 
   /** ONE action: the distinct partition coordinates of `signed` (as
@@ -184,23 +185,31 @@ private[graft] object SignatureIndex {
     */
   private val KeyBase = 2147483648L
 
-  /** The whole index, None when it holds no data. Its data columns'
-    * schema is read on the driver from the Spark schema one file's
-    * footer carries: the layout fixes every column but the id, whose
-    * type is the caller's, and the footer read stands in for
-    * `read.parquet`'s schema inference, a Spark job. Partition columns
-    * are still discovered from the directory names.
+  /** The data columns' schema of the parquet table at `path`, read on
+    * the driver from the Spark schema one data file's footer carries;
+    * None when the table holds no data file. The footer read stands in
+    * for `read.parquet`'s schema inference, a Spark job. Partition
+    * columns are not in it: a read still discovers them from the
+    * directory names.
+    */
+  def dataSchema(ss: SparkSession, path: String,
+                 partitionCols: Seq[String]): Option[StructType] =
+    dataFile(ss, path, partitionCols).map { file =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(file,
+        ss.sparkContext.hadoopConfiguration))
+      try DataType.fromJson(in.getFooter.getFileMetaData
+          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .asInstanceOf[StructType]
+      finally in.close()
+    }
+
+  /** The whole index, None when it holds no data, read with its
+    * [[dataSchema]] (the id column's type is the caller's).
     */
   def scan(ss: SparkSession, path: String,
            layout: Layout[_]): Option[DataFrame] =
-    dataFile(ss, path, layout).map { file =>
-      val in = ParquetFileReader.open(HadoopInputFile.fromPath(file,
-        ss.sparkContext.hadoopConfiguration))
-      val schema = try DataType.fromJson(in.getFooter.getFileMetaData
-          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        finally in.close()
-      ss.read.schema(schema.asInstanceOf[StructType]).parquet(path)
-    }
+    dataSchema(ss, path, layout.partitionCols)
+      .map(ss.read.schema(_).parquet(path))
 
   /** ONE In-expression over the combined key of the partition columns
     * only — Catalyst evaluates it against partition values at

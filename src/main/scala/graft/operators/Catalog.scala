@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Dedup catalog — the reference's two Postgres tables re-expressed as
   * versioned Parquet (SURVEY §1.1, §2.1 S4/S7/S8, §2.5 A2/A4).
@@ -155,7 +158,8 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   /** Distributed serialized-bloom sketch of `df.hash` at the given
     * sizing (None for an empty input — the agg returns null rather
-    * than an empty filter).
+    * than an empty filter). Only [[compact]]'s saturation rebuild runs
+    * it; commits observe their delta through [[observeCommit]].
     */
   private def sketchHashes(df: DataFrame, cap: Long,
                            bits: Long): Option[Array[Byte]] = {
@@ -163,6 +167,31 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     Option(df.select(call_function("graft_bloom_agg",
         xxhash64(col("hash")), lit(cap), lit(bits)).as("bf"))
       .head().getAs[Array[Byte]]("bf"))
+  }
+
+  /** `df` observing, on the pass that materializes it, what a commit on
+    * top of version `v` needs besides its rows: the buckets of every
+    * row's `hash` (the set the commit rewrites) and, given `isNew`, the
+    * bloom delta over the rows where it holds, at `v`'s sizing (None
+    * when empty or disabled). The reader returns both once that pass
+    * ran.
+    */
+  private[graft] def observeCommit(df: DataFrame, v: Long, isNew: Option[Column])
+      : (DataFrame, () => (Set[String], Option[Array[Byte]])) = {
+    graft.functions.VecExpressions.register(spark)
+    val (cap, bits) = bloomParamsAt(v)
+    // the aggregate skips null keys; `when` stays outside xxhash64,
+    // which hashes a null to its seed
+    val bloom = isNew match {
+      case Some(n) if cap > 0L => call_function("graft_bloom_agg",
+        when(n, xxhash64(col("hash"))), lit(cap), lit(bits))
+      case _ => lit(null).cast(BinaryType)
+    }
+    val o = new Observation()
+    (df.observe(o, collect_set(bucketCol(col("hash"))).as("touched"),
+        bloom.as("bloom")),
+      () => (o.get("touched").asInstanceOf[scala.collection.Seq[String]].toSet,
+        Option(o.get("bloom").asInstanceOf[Array[Byte]])))
   }
 
   private def readBloom(v: Long): Option[Array[Byte]] = {
@@ -224,9 +253,31 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
       .foldLeft(0L)(math.max)
   }
 
-  /** file_id the next committed run will receive. */
-  def nextFileId: Long =
-    files().agg(coalesce(max("file_id"), lit(0L))).head().getLong(0) + 1
+  /** file_id the next committed run will receive: max(`file_id`) + 1,
+    * read on the driver from the column statistics in the files table's
+    * parquet footers, so it runs no Spark job. A non-empty row group
+    * whose footer carries no statistics falls back to the aggregate.
+    */
+  def nextFileId: Long = {
+    val v = currentVersion
+    val conf = spark.sparkContext.hadoopConfiguration
+    val maxima: Seq[Option[Long]] =
+      if (v == 0) Nil
+      else fs.listStatus(new Path(versionDir(v), "files")).toSeq
+        .filter(_.getPath.getName.startsWith("part-"))
+        .flatMap { st =>
+          val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          try in.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+            .map(_.getColumns.asScala
+              .find(_.getPath.toDotString == "file_id")
+              .map(_.getStatistics)
+              .filter(s => s != null && s.hasNonNullValue)
+              .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+          finally in.close()
+        }
+    if (maxima.forall(_.isDefined)) maxima.flatten.foldLeft(0L)(math.max) + 1
+    else files().agg(coalesce(max("file_id"), lit(0L))).head().getLong(0) + 1
+  }
 
   // ---------------------------------------------------------------- reads
 
@@ -425,7 +476,9 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     // and leaked per-commit blocks would accumulate for its whole
     // lifetime.
     val beforeCp = spark.sparkContext.getPersistentRDDs.keySet
-    val staged = newLinks
+    val v = currentVersion
+    // the touched buckets ride this checkpoint as an observed metric
+    val (stagedDf, stagedSeen) = observeCommit(newLinks
       .select(col("hash"), col("file_id").cast(LongType).as("file_id"),
         col("line"), col("refs_num").cast(LongType).as("refs_num"),
         lit(null).cast(LongType).as("delta"),
@@ -436,8 +489,8 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
         .select(col("hash"), lit(null).cast(LongType).as("file_id"),
           lit(null).cast(LongType).as("line"),
           lit(null).cast(LongType).as("refs_num"),
-          col("delta"), lit(true).as("is_delta")))
-      .localCheckpoint()
+          col("delta"), lit(true).as("is_delta"))), v, None)
+    val staged = stagedDf.localCheckpoint()
     def cpPinned = spark.sparkContext.getPersistentRDDs
       .filterNot(kv => beforeCp(kv._1)).values.toSeq
     try {
@@ -445,21 +498,20 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
         .select("hash", "file_id", "line", "refs_num")
       val allDeltas = staged.where(col("is_delta"))
         .select("hash", "delta")
-      val v = currentVersion
-      val touched = bucketsOf(staged)
+      val touched = stagedSeen()._1
       // Defensive anti-join: uniqueness of `hash` must hold by
       // construction even if a caller's newLinks overlaps the catalog
       // (idempotent re-runs). A matching old link can only live in the
       // bucket its hash prefixes to, so the anti-join's right side is
       // the TOUCHED buckets, never a full links scan — a commit's cost
       // must stay ∝ the run, and this was the one full-catalog read
-      // left on the commit path. Checkpointed: the result feeds both
-      // the bloom sketch and the merged write.
-      val allNew = allNewRaw
+      // left on the commit path. Checkpointed: the result feeds the
+      // merged write, and its pass observes the bloom delta.
+      val (allNewDf, newSeen) = observeCommit(allNewRaw
         .join(linksTouched(v, touched).select("hash"), Seq("hash"),
-          "left_anti")
-        .localCheckpoint()
-      commitChecked(metas, v, allNew, allDeltas, touched)
+          "left_anti"), v, Some(lit(true)))
+      val allNew = allNewDf.localCheckpoint()
+      commitChecked(metas, v, allNew, allDeltas, touched, newSeen()._2)
     } finally cpPinned.foreach(_.unpersist(false))
   }
 
@@ -469,34 +521,32 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * (graft's own dedup plan: contributions are complementary slices of
     * one checkpointed batch-first-occurrence pass). Contract, on top of
     * [[commitRuns]]': `newLinks`/`deltas` derive from materialized
-    * (checkpointed/persisted) data — they will be evaluated more than
-    * once; `newLinks.hash` is disjoint from the committed catalog (the
-    * caller probed the SAME catalog version under the single-writer
-    * window); `deltas` carries one row per hash. Spark-job cost per
-    * commit: one tiny touched-bucket collect plus the two version
-    * writes — the two localCheckpoint passes and the catalog-side
-    * anti-join of the public path are gone.
+    * (checkpointed/persisted) data; `newLinks.hash` is disjoint from
+    * the catalog at `probedVersion` (the caller probed that version
+    * under the single-writer window); `deltas` carries one row per
+    * hash; `touched` and `deltaBloom` are what [[observeCommit]] saw of
+    * newLinks ∪ deltas on the pass that materialized them. Fails loudly
+    * if the catalog moved past `probedVersion`. Spark-job cost per
+    * commit: the two version writes only.
     */
   private[graft] def commitRunsPrechecked(metas: Seq[RunMeta],
                                           newLinks: DataFrame,
-                                          deltas: DataFrame): Unit = {
+                                          deltas: DataFrame,
+                                          probedVersion: Long,
+                                          touched: Set[String],
+                                          deltaBloom: Option[Array[Byte]]): Unit = {
     if (metas.isEmpty) return
-    val allNew = newLinks
-      .select(col("hash"), col("file_id").cast(LongType).as("file_id"),
-        col("line"), col("refs_num").cast(LongType).as("refs_num"))
-    val allDeltas = deltas
-      .select(col("hash"), col("delta").cast(LongType).as("delta"))
-    val touched = bucketsOf(allNew.select("hash")
-      .unionByName(allDeltas.select("hash")))
-    commitChecked(metas, currentVersion, allNew, allDeltas, touched)
+    val v = currentVersion
+    if (v != probedVersion)
+      throw new IllegalStateException(
+        s"commitRunsPrechecked: the catalog moved from version " +
+          s"$probedVersion to $v since the probe; nothing written")
+    commitChecked(metas, v,
+      newLinks.select(col("hash"), col("file_id").cast(LongType).as("file_id"),
+        col("line"), col("refs_num").cast(LongType).as("refs_num")),
+      deltas.select(col("hash"), col("delta").cast(LongType).as("delta")),
+      touched, deltaBloom)
   }
-
-  /** Distinct digest-prefix buckets of `df.hash` — the touched set a
-    * commit rewrites. Tiny: ≤ 16^width values.
-    */
-  private def bucketsOf(df: DataFrame): Set[String] =
-    df.select(bucketCol(col("hash")).as("b")).distinct()
-      .collect().map(_.getString(0)).toSet
 
   /** `hash_links` restricted to `buckets` at version `v` — the commit
     * path's bucket-pruned read: prunes at the PATH level (only the
@@ -518,17 +568,18 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   /** Shared tail of the two commit fronts. `allNew` is the final
     * new-link row set (already catalog-disjoint) and `allDeltas` one
-    * row per hash; both must be deterministic and cheap to re-evaluate
-    * (checkpointed/persisted lineage — they are evaluated up to twice:
-    * bloom sketch, merged write). `touched` is the bucket set this
-    * commit rewrites — a superset of allNew ∪ allDeltas' buckets;
-    * everything else is carried forward by manifest reference, so
-    * commit cost stays ∝ the run, never ∝ catalog history.
+    * row per hash; both must be deterministic (checkpointed/persisted
+    * lineage). `touched` is the bucket set this commit rewrites — a
+    * superset of allNew ∪ allDeltas' buckets; everything else is
+    * carried forward by manifest reference, so commit cost stays ∝ the
+    * run, never ∝ catalog history. `deltaBloom` is the sketch of
+    * allNew's hashes at `v`'s bloom sizing (None when empty).
     */
   private def commitChecked(metas: Seq[RunMeta], v: Long,
                             allNew: DataFrame,
                             allDeltas: DataFrame,
-                            touched: Set[String]): Unit = {
+                            touched: Set[String],
+                            deltaBloom: Option[Array[Byte]]): Unit = {
     val oldManifest = readManifest(v)
 
     val newFiles = files().unionByName(
@@ -538,7 +589,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
     {
       val oldTouched = linksTouched(v, touched)
-      // Rolling bloom sidecar: a distributed delta sketch over ONLY this
+      // Rolling bloom sidecar: the caller's delta sketch over ONLY this
       // commit's new hashes (cost ∝ run; deltas touch pre-bloomed
       // hashes), OR-merged into the carried filter. (capacity, numBits)
       // come from the pinned meta, so every delta is bit-compatible
@@ -548,9 +599,8 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
         if (bCap <= 0L) None
         else {
           import org.apache.spark.util.sketch.BloomFilter
-          val deltaBytes = sketchHashes(allNew, bCap, bBits)
           val merged = (readBloom(v).map(BloomFilter.readFrom),
-              deltaBytes.map(BloomFilter.readFrom)) match {
+              deltaBloom.map(BloomFilter.readFrom)) match {
             case (Some(o), Some(d)) => o.mergeInPlace(d)
             case (Some(o), None)    => o
             case (None, Some(d))    => d

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.api.{DedupOptions, Deduplicator}
 import graft.functions.Hashing
-import graft.operators.Dedup
 import graft.sources.ChunkSource
 
 /** Incremental / streaming dedup (SURVEY §2.8).
@@ -116,8 +115,8 @@ object StreamingDedup {
         val todo = named.filterNot { case (_, name) => held(name) }
         if (todo.nonEmpty) {
           // computeCounts = false: the per-file (chunks, pointers)
-          // DedupResults are discarded here, and their grouped collect
-          // is one whole Spark action per micro-batch, forever
+          // DedupResults are discarded here, so their observed
+          // aggregate is not attached to the encoded write
           dedup.deduplicateBatch(todo.map(_._1), opts,
             outputNames = todo.map(_._2), computeCounts = false)
         }

@@ -41,12 +41,23 @@ class CommitPathSpec extends SparkFunSuite {
     catB.commitRun("seed", 64, "sha", mkLinks(seed).drop("file_id"),
       mkDeltas(Nil))
     // the prechecked contract: materialized lineage, hashes disjoint
-    // from the catalog, deltas one row per hash
+    // from the catalog, deltas one row per hash, and the touched
+    // buckets and bloom delta the caller observed on them
+    val v = catB.currentVersion
+    val (observed, seen) = catB.observeCommit(
+      mkLinks(newL).select($"hash", lit(true).as("is_new"))
+        .unionByName(mkDeltas(deltas).select($"hash", lit(false).as("is_new"))),
+      v, Some($"is_new"))
+    observed.collect()
+    val (touched, deltaBloom) = seen()
+    assert(touched == Set("a", "b"))
     catB.commitRunsPrechecked(
       Seq(Catalog.RunMeta(2L, "run2", 64, "sha")),
-      mkLinks(newL).localCheckpoint(), mkDeltas(deltas).localCheckpoint())
+      mkLinks(newL).localCheckpoint(), mkDeltas(deltas).localCheckpoint(),
+      v, touched, deltaBloom)
 
     assert(snapshot(catA) == snapshot(catB))
+    assert(catA.seenBloom().get.sameElements(catB.seenBloom().get))
     // and both applied the delta to the seeded hash
     assert(catA.links().where($"hash" === "aa11")
       .head().getAs[Long]("refs_num") == 4L)
@@ -111,7 +122,7 @@ class CommitPathSpec extends SparkFunSuite {
       graft.api.DedupOptions(chunkBytes = 64))
     assert(r2.head.fileId == r1.head.fileId + 1)
     // a SECOND writer commits through its own instance: the first
-    // instance's cache must notice the version moved and re-read
+    // instance must read the file ids of the version that moved
     val other = new graft.api.Deduplicator(spark,
       base.resolve("work").toString, bucketChars = 1, bloomItems = 0L)
     val r3 = other.deduplicateBatch(Seq(write("c.bin")),

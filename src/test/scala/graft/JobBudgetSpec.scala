@@ -7,6 +7,7 @@ import org.apache.commons.io.FileUtils
 
 import graft.api.{DedupOptions, Deduplicator}
 import graft.ext.{DocDedup, Winnow}
+import graft.operators.Catalog
 
 /** Per-call job budgets. A small call's floor is set by how many Spark
   * jobs its plan launches, not by its compute, so each row pins one
@@ -100,7 +101,7 @@ class JobBudgetSpec extends SparkFunSuite {
         () => assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(s"$dir/t.out")), data))
       }
     }),
-    Budget("deduplicateBatch of two small files into a seeded store", 17, { dir =>
+    Budget("deduplicateBatch of two small files into a seeded store", 11, { dir =>
       val d = new Deduplicator(spark, s"$dir/work", bucketChars = 1)
       d.deduplicateFile(Fixtures.writeTemp(dir, "seed", blocks(0, 64)), DedupOptions(W))
       val inputs = Seq(
@@ -110,6 +111,48 @@ class JobBudgetSpec extends SparkFunSuite {
       () => {
         val chunks = d.deduplicateBatch(inputs, DedupOptions(W)).map(_.chunks)
         () => assert(chunks == Seq(40L, 40L))
+      }
+    }),
+    Budget("deduplicateBatch after a compaction moved the catalog", 11, { dir =>
+      val d = new Deduplicator(spark, s"$dir/work", bucketChars = 1)
+      d.deduplicateFile(Fixtures.writeTemp(dir, "seed", blocks(0, 64)), DedupOptions(W))
+      val inputs = Seq(
+        Fixtures.writeTemp(dir, "f1", blocks(0, 32) ++ blocks(300, 8)),
+        Fixtures.writeTemp(dir, "f2", blocks(32, 32) ++ blocks(400, 8)))
+      d.catalog.compact()
+      // the check, which runs after the count, compacts again: every
+      // counted call starts on a catalog version its engine never saw
+      () => {
+        val rs = d.deduplicateBatch(inputs, DedupOptions(W))
+        () => {
+          assert(rs.map(_.chunks) == Seq(40L, 40L))
+          assert(rs.map(_.fileId) == Seq(d.catalog.nextFileId - 2, d.catalog.nextFileId - 1))
+          d.catalog.compact()
+        }
+      }
+    }),
+    Budget("Catalog.commitRuns of two runs into a seeded catalog", 8, { dir =>
+      import org.apache.spark.sql.functions.{col, lit, sha1}
+      val cat = new Catalog(spark, s"$dir/catalog", bucketChars = 1)
+      def links(from: Int, n: Int) = spark.range(from, from + n)
+        .select(sha1(col("id").cast("string")).as("hash"),
+          (col("id") - from).as("line"), lit(1L).as("refs_num"))
+      // every seeded hash seen once more by each run
+      val deltas = links(0, 8).select(col("hash"), lit(1L).as("delta"))
+      cat.commitRun("seed", W, "sha", links(0, 8),
+        deltas.where(lit(false)))
+      var k = 0
+      () => {
+        k += 1
+        val fid = cat.nextFileId
+        cat.commitRuns(Seq(
+          Catalog.RunSpec(fid, s"a$k", W, "sha", links(1000 * k, 20), deltas),
+          Catalog.RunSpec(fid + 1, s"b$k", W, "sha", links(1000 * k + 500, 20), deltas)))
+        () => {
+          assert(cat.links().where(col("file_id") >= fid).count() == 40L)
+          assert(cat.links().where(col("file_id") === 1L)
+            .collect().forall(_.getAs[Long]("refs_num") == 1L + 2 * k))
+        }
       }
     }),
     Budget("probeMinHashIndex of ten twins against a built index", 9, { dir =>
@@ -146,7 +189,7 @@ class JobBudgetSpec extends SparkFunSuite {
         () => assert(twins(pairs, 1000L) == (0L until 10L).toSet)
       }
     }),
-    Budget("compactMinHashIndex of an index built and appended twice", 6, { dir =>
+    Budget("compactMinHashIndex of an index built and appended twice", 4, { dir =>
       val idx = s"$dir/index"
       DocDedup.buildMinHashIndex(docs(0, 20), "id", "text", idx,
         bands = 8, rows = 4, sigBuckets = 4)
