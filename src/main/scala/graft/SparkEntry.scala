@@ -5739,9 +5739,9 @@ object SparkEntry {
     }),
 
     // ---- STREAMING MID-STREAM COMPACTION gate: the q106 three-batch
-    //      equivalence protocol with compactEvery=2 — the index is
-    //      compacted ON the foreachBatch thread after the second
-    //      micro-batch, so batch 3 probes the COMPACTED index. Every
+    //      equivalence protocol with compactEvery=2 — the second
+    //      micro-batch is published by a compaction ON the foreachBatch
+    //      thread, so batch 3 probes the COMPACTED index. Every
     //      q106 constant must still hold (compaction changes layout,
     //      never the row set), and `compact_ran` pins that the
     //      maintenance really fired mid-stream (via the gauge samples
@@ -6114,10 +6114,12 @@ object SparkEntry {
     //      sigBuckets = 1 the layout is exactly one (band, sb=0)
     //      partition per band and every write is pre-clustered to one
     //      file per touched partition (build AND fold append), so the
-    //      file count after each of the three single-file batches is
+    //      count the cost check reads at each of the three single-file
+    //      batches (the index's files plus the batch's) is
     //      deterministic: 8, 16, 24. Threshold 20 ⇒ the cost check
     //      SKIPS at batches 1–2 (gauged with the observed count) and
-    //      FIRES at batch 3 (24 > 20, compacting back to 8) — n_skips,
+    //      FIRES at batch 3 (24 > 20: the batch is published by a
+    //      compaction back to 8) — n_skips,
     //      n_fires, and files_final pin all three from the stream's
     //      maintenance events and the index's data-file count, while
     //      found/within_ok keep the q238 correctness constants

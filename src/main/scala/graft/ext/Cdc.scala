@@ -362,18 +362,24 @@ object Cdc {
     * shuffle-free. First batch: the append becomes the initial
     * [[buildCdcIndex]] layout + sidecar; afterwards the sidecar's pinned
     * chunking parameters win, exactly like [[appendToCdcIndex]].
+    *
+    * `window` is a stream's maintenance window for this batch (None for
+    * a direct call): when it fires, the batch is published by a
+    * compaction of index ∪ batch instead of an append
+    * ([[SignatureIndex.fold]]).
     */
   def foldCdcBatch(batch: DataFrame, idCol: String, binCol: String,
                    indexPath: String, matchesPath: String,
                    minSize: Int = 2048, avgBits: Int = 13,
                    maxSize: Int = 65536, hashBuckets: Int = 64,
                    maxDocsPerChunk: Int = 256, minShared: Int = 1,
-                   broadcastLimit: Long = 4L << 20): Unit = {
+                   broadcastLimit: Long = 4L << 20,
+                   window: Option[IndexMaintenance.Window] = None): Unit = {
     require(maxDocsPerChunk >= 2,
       s"cdc: maxDocsPerChunk >= 2, got $maxDocsPerChunk")
     SignatureIndex.fold(batch, indexPath, matchesPath, CdcLayout,
         Seq(minSize, avgBits, maxSize, hashBuckets), "foldCdcBatch",
-        broadcastLimit) {
+        broadcastLimit, window) {
       case Seq(mn, ab, mx, hbuckets) =>
         requireHashBuckets(hbuckets)
         signedChunks(batch, idCol, binCol, mn, ab, mx, hbuckets)

@@ -706,6 +706,11 @@ object DocDedup {
     * [[buildMinHashIndex]]-layout write plus the parameter sidecar;
     * afterwards the sidecar's pinned (bands, rows, sigBuckets) always
     * win over the caller's, exactly like [[appendToMinHashIndex]].
+    *
+    * `window` is a stream's maintenance window for this batch (None for
+    * a direct call): when it fires, the batch is published by a
+    * compaction of index ∪ batch instead of an append
+    * ([[SignatureIndex.fold]]).
     */
   def foldMinHashBatch(batch: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String,
@@ -713,10 +718,13 @@ object DocDedup {
                        num: Int, den: Int,
                        bands: Int = 16, rows: Int = 8,
                        sigBuckets: Int = 8,
-                       broadcastLimit: Long = 4L << 20): Unit = {
+                       broadcastLimit: Long = 4L << 20,
+                       window: Option[IndexMaintenance.Window] = None)
+      : Unit = {
     graft.functions.VecExpressions.register(batch.sparkSession)
     SignatureIndex.fold(batch, indexPath, matchesPath, MinHashLayout,
-        Seq(bands, rows, sigBuckets), "foldMinHashBatch", broadcastLimit) {
+        Seq(bands, rows, sigBuckets), "foldMinHashBatch", broadcastLimit,
+        window) {
       case p @ Seq(eBands, eRows, eSigBuckets) =>
         requireMinHashParams(p)
         bandedSignatures(batch, idCol, textCol, eBands, eRows, eSigBuckets)
@@ -1064,15 +1072,22 @@ object DocDedup {
     * First batch: the append becomes the initial
     * [[buildHammingIndex]] layout + sidecar; afterwards the sidecar's
     * pinned qBuckets win, exactly like [[appendToHammingIndex]].
+    *
+    * `window` is a stream's maintenance window for this batch (None for
+    * a direct call): when it fires, the batch is published by a
+    * compaction of index ∪ batch instead of an append
+    * ([[SignatureIndex.fold]]).
     */
   def foldHammingBatch(sig: DataFrame, idCol: String, hashCol: String,
                        indexPath: String, matchesPath: String,
                        maxDist: Int, qBuckets: Int = 64,
-                       broadcastLimit: Long = 4L << 20): Unit = {
+                       broadcastLimit: Long = 4L << 20,
+                       window: Option[IndexMaintenance.Window] = None)
+      : Unit = {
     require(maxDist >= 0 && maxDist <= 3,
       s"quarter blocking guarantees recall only to distance 3, got $maxDist")
     SignatureIndex.fold(sig, indexPath, matchesPath, HammingLayout,
-        Seq(qBuckets), "foldHammingBatch", broadcastLimit) {
+        Seq(qBuckets), "foldHammingBatch", broadcastLimit, window) {
       case Seq(eQBuckets) =>
         requireQBuckets(eQBuckets)
         quarters(sig, idCol, hashCol, eQBuckets)

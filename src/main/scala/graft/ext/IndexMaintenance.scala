@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Layout-preserving compaction for the persisted append-index
   * families (MinHash, Hamming, Winnow, CDC, IVF, PQ, IVF-PQ — r13
@@ -30,6 +31,13 @@ import org.apache.spark.sql.functions.col
   * after — compaction changes the file layout, never the row set —
   * and IndexMaintenanceSpec plus the q237/q238 gates pin that.
   *
+  * A compaction may carry a batch: a streaming micro-batch whose
+  * maintenance window fires ([[Window]]) is published BY the
+  * compaction — index ∪ batch rewritten into the staging directory,
+  * the row check covering both (staged rows = index rows + batch
+  * rows) — instead of being appended and then rewritten with the
+  * rest. The index is written once per micro-batch either way.
+  *
   * Concurrency contract — ENFORCED since r15 (r14 verdict ask #4): run
   * it from the maintenance window of the ONE writer that owns the
   * index — it swaps the index directory out from under concurrent
@@ -37,9 +45,9 @@ import org.apache.spark.sql.functions.col
   * directory. [[compactIndex]] and every family's append helper take
   * the [[WriterLock]] sentinel for the duration of the mutation, so a
   * second overlapping writer fails loudly instead of silently losing
-  * files. The streaming folds honor the contract by compacting between
-  * micro-batches on the foreachBatch thread (the stream IS the single
-  * writer; the lock is reentrant on that thread).
+  * files. The streaming folds honor the contract by compacting in a
+  * micro-batch's publish step on the foreachBatch thread (the stream
+  * IS the single writer; the lock is reentrant on that thread).
   *
   * Crash safety: the rewrite stages into `.compact_tmp_*` (invisible
   * to parquet partition discovery, idempotently re-runnable); the
@@ -51,7 +59,10 @@ import org.apache.spark.sql.functions.col
   * deterministically completes or rolls back; every index open
   * ([[SignatureIndex]]: probes, appends and fold batches) calls
   * [[ensureReadable]] first, so a month-old unattended stream
-  * recovers on its next touch instead of needing a human.
+  * recovers on its next touch instead of needing a human. A swap
+  * that carried a batch is rolled back, never completed: its batch
+  * was not published, so the caller's replay of the batch folds it
+  * into the index exactly once.
   */
 object IndexMaintenance {
 
@@ -84,9 +95,16 @@ object IndexMaintenance {
   private def maxPartBytes(spark: SparkSession): Long =
     spark.sessionState.conf.filesMaxPartitionBytes
 
-  /** The streaming maintenance window: run `compact` after a micro-batch
-    * when `policy` says so. Called from a foreachBatch body BETWEEN
-    * batches — the stream is the index's single writer there, which is
+  /** A stream's maintenance window for one micro-batch: its policy and
+    * batch id. [[SignatureIndex]]'s publish step takes one to decide,
+    * before anything is written, whether the batch is appended or
+    * published by a compaction of index ∪ batch.
+    */
+  final case class Window(policy: CompactPolicy, batchId: Long)
+
+  /** The streaming maintenance window: run `compact` when `policy` says
+    * so, and report whether it ran. Called from a foreachBatch body,
+    * where the stream is the maintained directory's single writer —
     * exactly the concurrency contract [[compactIndex]] requires.
     * `dataFiles` is evaluated lazily, only when the cost trigger is
     * configured and the cadence has not already fired (one directory
@@ -100,8 +118,8 @@ object IndexMaintenance {
     * prove both the skip and the fire from the directory's counters.
     */
   def maybeCompact(policy: CompactPolicy, batchId: Long, dir: String,
-                   dataFiles: => Long)(compact: => CompactStats): Unit = {
-    if (!policy.isDefined) return
+                   dataFiles: => Long)(compact: => CompactStats): Boolean = {
+    if (!policy.isDefined) return false
     val cadenceDue = policy.every.exists(n => (batchId + 1) % n == 0)
     val costDue = !cadenceDue && policy.maxDataFiles.exists { threshold =>
       val files = dataFiles
@@ -119,6 +137,7 @@ object IndexMaintenance {
           s"files_before=${stats.filesBefore} files_after=${stats.filesAfter}" +
           (if (stats.detail.isEmpty) "" else s" ${stats.detail}"))
     }
+    cadenceDue || costDue
   }
 
   /** Count of data files under `path` (sidecars and `_SUCCESS`
@@ -156,15 +175,30 @@ object IndexMaintenance {
     * one per scan split, never one set per append). Returns the
     * before/after file counts and the (verified-preserved) row count.
     * A sidecar-only index (built from an empty corpus) is a no-op.
+    *
+    * `batch` is rows in the index's layout that this compaction
+    * publishes: the rewrite is of index ∪ batch, and the row check
+    * expects the index's rows plus the batch's. `filesBefore` counts
+    * the index's files only. A batch is read once, so a caller passes
+    * a cached frame (a fold's signed rows).
     */
   def compactIndex(spark: SparkSession, path: String,
-                   partitionCols: Seq[String]): CompactStats =
+                   partitionCols: Seq[String],
+                   batch: Option[DataFrame] = None): CompactStats =
     WriterLock.withLock(spark, path, "compactIndex") {
-      compactLocked(spark, path, partitionCols)
+      compactLocked(spark, path, partitionCols, batch)
     }
 
+  /** Staging names of a compaction that carries a batch take this mark
+    * after the index name (`.compact_tmp_index-batch-<uuid>`), so a
+    * heal can tell a swap that would publish a batch from one that
+    * only re-lays rows out.
+    */
+  private val BatchMark = "batch-"
+
   private def compactLocked(spark: SparkSession, path: String,
-                            partitionCols: Seq[String]): CompactStats = {
+                            partitionCols: Seq[String],
+                            batch: Option[DataFrame]): CompactStats = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // A previous compaction of this index may have crashed mid-swap —
@@ -176,23 +210,32 @@ object IndexMaintenance {
     val hasData = entries.exists(s => !s.getPath.getName.startsWith("_") &&
       !s.getPath.getName.startsWith("."))
     val (filesBefore, bytesBefore) = dataFilesAndBytes(spark, path)
-    if (!hasData) return CompactStats(filesBefore, filesBefore, 0L)
+    if (!hasData && batch.isEmpty)
+      return CompactStats(filesBefore, filesBefore, 0L)
 
     val uuid = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(root.getParent, s".compact_tmp_${root.getName}-$uuid")
-    // Both reads below take this schema from one data file's footer,
-    // so neither runs a schema-inference job.
-    val schema = SignatureIndex.dataSchema(spark, path, partitionCols)
-    def read(p: Path) =
-      schema.fold(spark.read)(spark.read.schema(_)).parquet(p.toString)
+    val tag = if (batch.isDefined) BatchMark + uuid else uuid
+    val tmp = new Path(root.getParent, s".compact_tmp_${root.getName}-$tag")
+    // The index is read with the schema of one data file's footer, so
+    // the rewrite runs no schema-inference job.
+    val index = if (!hasData) None else Some {
+      val schema = SignatureIndex.dataSchema(spark, path, partitionCols)
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+    }
+    // the batch's columns in the index's order and types (partition
+    // columns read back as discovered from the directory names)
+    val rowsIn = (index, batch) match {
+      case (Some(i), Some(b)) =>
+        i.union(b.select(i.schema.map(f => col(f.name).cast(f.dataType)): _*))
+      case (i, b) => i.orElse(b).get
+    }
     // Row count observed DURING the rewrite job instead of a separate
     // count() pass — one full index read per compaction, not two. The
     // observed metric counts exactly the rows that flowed into the
-    // staged write, which is what the row-preservation check compares.
+    // staged write (index rows plus batch rows), which is what the
+    // row-preservation check compares.
     val obs = new org.apache.spark.sql.Observation()
-    val df = read(root)
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
+    val df = rowsIn.observe(obs, count(lit(1)).as("rows"))
     val clustered =
       if (partitionCols.nonEmpty)
         // all rows of one partition value land in one task → one file
@@ -211,17 +254,21 @@ object IndexMaintenance {
           (bytesBefore + maxPartBytes(spark) - 1) / maxPartBytes(spark)))
         df.repartition(target.toInt).write.mode("overwrite")
       }
-    clustered.parquet(tmp.toString)
+    graft.Jobs.tagged(spark, "compactIndex.rewrite")(
+      clustered.parquet(tmp.toString))
     val rows = obs.get("rows").asInstanceOf[Long]
     // row-preservation check BEFORE anything becomes visible: a lost
     // or duplicated row aborts with the fragmented-but-correct index
     // untouched. Parquet count() is footer-metadata cheap.
-    val rowsAfter = read(tmp).count()
+    val rowsAfter = graft.Jobs.tagged(spark, "compactIndex.verify")(
+      stagedRows(spark, fs, tmp, StructType(
+        rowsIn.schema.filterNot(f => partitionCols.contains(f.name)))))
     if (rowsAfter != rows) {
       fs.delete(tmp, true)
       throw new IllegalStateException(
         s"compactIndex: rewrite of $path produced $rowsAfter rows, " +
-          s"expected $rows; aborted, index unchanged")
+          s"expected $rows${if (batch.isDefined) " (index + batch)" else ""}" +
+          "; aborted, index unchanged")
     }
     // sidecars carry the index's immutable parameters — copy verbatim
     entries.iterator.filter(_.getPath.getName.startsWith("_graft_"))
@@ -248,7 +295,7 @@ object IndexMaintenance {
           "window) — aborting before the swap; index unchanged")
     }
     // swap: old layout aside, new layout in, old layout gone
-    val old = new Path(root.getParent, s".compact_old_${root.getName}-$uuid")
+    val old = new Path(root.getParent, s".compact_old_${root.getName}-$tag")
     if (!fs.rename(root, old)) {
       fs.delete(tmp, true)
       throw new IllegalStateException(
@@ -275,6 +322,21 @@ object IndexMaintenance {
     // batch or per probe
     sweepAgedLockResidue(spark, path)
     CompactStats(filesBefore, dataFileCount(spark, path), rows)
+  }
+
+  /** Rows of the staged rewrite at `tmp`: a read of its top-level
+    * entries under `basePath`, so every staged file is counted without
+    * naming the dot-directory itself (which Spark reads, but reports as
+    * ignored in a WARN line on every compaction).
+    */
+  private def stagedRows(spark: SparkSession,
+                         fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
+                         dataSchema: StructType): Long = {
+    val parts = fs.listStatus(tmp).map(_.getPath).filterNot(p =>
+      p.getName.startsWith("_") || p.getName.startsWith("."))
+    if (parts.isEmpty) 0L
+    else spark.read.schema(dataSchema).option("basePath", tmp.toString)
+      .parquet(parts.map(_.toString).toIndexedSeq: _*).count()
   }
 
   /** Age-gated sweep of LOCK residue next to the index at `path` (r16
@@ -368,8 +430,11 @@ object IndexMaintenance {
     *    BETWEEN the two swap renames. The tmp rewrite was row-count
     *    verified BEFORE the swap began (compactIndex's invariant), so
     *    recovery COMPLETES the swap forward — publish tmp, delete old.
-    *  - live layout ABSENT with only `old` (or a tmp from a different
-    *    swap attempt): roll back — `old` is the authoritative data.
+    *  - live layout ABSENT with only `old`, a tmp from a different swap
+    *    attempt, or a tmp that carries a batch: roll back — `old` is the
+    *    authoritative data, and a batch whose publish did not finish is
+    *    replayed by its caller, so publishing it here would index it
+    *    twice.
     *
     * Takes the [[WriterLock]] (healing is a mutation): concurrent
     * healers serialize, and a probe that reaches this while a live
@@ -416,7 +481,9 @@ object IndexMaintenance {
           "single-writer contract violated, recover by hand")
       (olds.headOption, tmps.headOption) match {
         case (Some(old), Some(tmp))
-            if uuidOf(old.getPath) == uuidOf(tmp.getPath) =>
+            if uuidOf(old.getPath) == uuidOf(tmp.getPath) &&
+              !tmp.getPath.getName.startsWith(
+                s".compact_tmp_$name-$BatchMark") =>
           if (!fs.rename(tmp.getPath, root))
             throw new IllegalStateException(
               s"recoverInterruptedSwap: could not publish ${tmp.getPath} " +

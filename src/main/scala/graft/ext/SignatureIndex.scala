@@ -22,16 +22,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     pinned reducer count, then `partitionBy` — the small-files
   *     discipline of every build, append and fold;
   *   - append: under the [[WriterLock]], open, sign with the sidecar's
-  *     parameters, write;
+  *     parameters, publish;
   *   - probe: one groupBy-collect for the touched coordinates and the
   *     signed row count, a read of only those partitions, and the
   *     broadcast row guard;
   *   - fold: the streaming micro-batch skeleton (sign once into a
-  *     clustered cache, coordinates, matches write, locked append).
+  *     clustered cache, coordinates, matches write, locked publish).
   *
-  * Compaction stays in [[IndexMaintenance.compactIndex]]; it copies the
-  * sidecars verbatim, so their bytes are whatever the codec rendered at
-  * build time.
+  * Build, append and fold write a batch through one publish step. Given
+  * a stream's maintenance window ([[IndexMaintenance.Window]]) it
+  * decides first, by the stream's policy, whether the window fires;
+  * if it does, the batch is published by a compaction of index ∪ batch
+  * ([[IndexMaintenance.compactIndex]] with the batch), otherwise it is
+  * written as new files — so the index is written once per batch.
+  * Compaction copies the sidecars verbatim, so their bytes are whatever
+  * the codec rendered at build time.
   */
 private[graft] object SignatureIndex {
 
@@ -109,24 +114,75 @@ private[graft] object SignatureIndex {
      else w.partitionBy(layout.partitionCols: _*)).parquet(path)
   }
 
-  /** A fresh index: the signed rows, then the parameter sidecar. */
+  /** A fresh index: the signed rows, then the parameter sidecar, both
+    * through [[publish]] (a stream's `window` can fire on its first
+    * batch).
+    */
   def build[P](signed: DataFrame, path: String, layout: Layout[P],
-               params: P): Unit = {
-    write(clustered(signed, layout), path, layout, "overwrite")
-    writeSidecar(signed.sparkSession, path, layout, params)
+               params: P,
+               window: Option[IndexMaintenance.Window] = None): Unit = {
+    val rows = clustered(signed, layout)
+    publish(rows, path, layout, None, Some(params), window)(
+      touched(rows, layout, "build")._1.size)
   }
 
   /** Extend an index with a batch signed by `sign` under the SIDECAR's
-    * parameters, so an append can never mix regimes. Existing files are
-    * never rewritten; cost ∝ the batch. Callers own id-uniqueness
-    * across batches.
+    * parameters, so an append can never mix regimes. Without a firing
+    * `window`, existing files are never rewritten; cost ∝ the batch.
+    * Callers own id-uniqueness across batches.
     */
   def append[P](ss: SparkSession, path: String, layout: Layout[P],
-                op: String)(sign: P => DataFrame): Unit =
+                op: String,
+                window: Option[IndexMaintenance.Window] = None)(
+                sign: P => DataFrame): Unit =
     WriterLock.withLock(ss, path, op) {
-      write(clustered(sign(read(ss, path, layout)), layout), path, layout,
-        "append")
+      val rows = clustered(sign(read(ss, path, layout)), layout)
+      publish(rows, path, layout, Some(op), None, window)(
+        touched(rows, layout, op)._1.size)
     }
+
+  /** The one step that makes a batch's clustered rows part of the index
+    * at `path`; its caller holds the writer lock when the index exists.
+    * `fresh` is the sidecar's parameters when there is no index yet.
+    *
+    * With a stream's `window`, [[IndexMaintenance.maybeCompact]] runs
+    * BEFORE anything is written. Its cost check counts the index's data
+    * files now plus `added`, the files this append would add: one per
+    * touched partition coordinate. When the window fires on an existing
+    * index, [[IndexMaintenance.compactIndex]] publishes the batch by
+    * rewriting index ∪ batch, so `rows` should be cached; on a fresh
+    * index the write already holds one file per partition, so it is
+    * the compaction. Otherwise — no window, or one that does not
+    * fire — the batch is written as new files, tagged `<op>.append`.
+    * A fire line's `files_before` counts the files on disk before the
+    * publish.
+    */
+  private def publish[P](rows: DataFrame, path: String, layout: Layout[P],
+                         op: Option[String], fresh: Option[P],
+                         window: Option[IndexMaintenance.Window])(
+                         added: => Long): Unit = {
+    val ss = rows.sparkSession
+    def put(frame: DataFrame): Unit = {
+      def w(): Unit = write(frame, path, layout,
+        if (fresh.isDefined) "overwrite" else "append")
+      op.fold(w())(o => graft.Jobs.tagged(ss, s"$o.append")(w()))
+      fresh.foreach(writeSidecar(ss, path, layout, _))
+    }
+    val fired = window.exists(w => IndexMaintenance.maybeCompact(w.policy,
+        w.batchId, path, IndexMaintenance.dataFileCount(ss, path) + added) {
+      if (fresh.isEmpty)
+        IndexMaintenance.compactIndex(ss, path, layout.partitionCols,
+          Some(rows))
+      else {
+        val obs = new org.apache.spark.sql.Observation()
+        put(rows.observe(obs, count(lit(1)).as("rows")))
+        IndexMaintenance.CompactStats(0L,
+          IndexMaintenance.dataFileCount(ss, path),
+          obs.get("rows").asInstanceOf[Long])
+      }
+    })
+    if (!fired) put(rows)
+  }
 
   // --------------------------------------------------------------- probe
 
@@ -245,7 +301,7 @@ private[graft] object SignatureIndex {
   final case class Batch(signed: DataFrame, cross: Option[Probe])
 
   /** The streaming fold skeleton: probe the index with a batch, write the
-    * batch's matches, append the batch — signing it ONCE into a cache
+    * batch's matches, publish the batch — signing it ONCE into a cache
     * clustered by the partition columns (the index opened, healing
     * first, or `defaults` when none exists), then three actions:
     *
@@ -254,17 +310,22 @@ private[graft] object SignatureIndex {
     *  2. the matches write — `matches` plans cross pairs against
     *     `Batch.cross` ∪ within-batch pairs; the write IS the plan's
     *     materialization;
-    *  3. the append straight from the cache, with no re-shuffle and one
-    *     file per touched directory, under the writer lock (reentrant
-    *     on a stream's foreachBatch thread), plus the sidecar on the
-    *     first batch.
+    *  3. the [[publish]] straight from the cache, under the writer lock
+    *     (reentrant on a stream's foreachBatch thread), plus the
+    *     sidecar on the first batch: an append with no re-shuffle and
+    *     one file per touched directory or, when the stream's `window`
+    *     fires, a compaction of index ∪ batch that reads the batch from
+    *     the cache — never an append and then a rewrite.
     *
     * `op` names the kernel in the coordinate-cap message, the lock and
-    * the `graft:<op>.coords/.matches/.append` job tags.
+    * the `graft:<op>.coords/.matches/.append` job tags; a compaction's
+    * jobs are tagged `graft:compactIndex.rewrite/.verify`.
     */
   def fold[P](batch: DataFrame, indexPath: String, matchesPath: String,
               layout: Layout[P], defaults: P, op: String,
-              broadcastLimit: Long)(sign: P => DataFrame)(
+              broadcastLimit: Long,
+              window: Option[IndexMaintenance.Window])(
+              sign: P => DataFrame)(
               matches: Batch => DataFrame): Unit = {
     require(broadcastLimit >= 1,
       s"broadcastLimit must be >= 1, got $broadcastLimit")
@@ -281,9 +342,8 @@ private[graft] object SignatureIndex {
       graft.Jobs.tagged(ss, s"$op.matches")(matches(Batch(signed, cross))
         .write.mode("overwrite").parquet(matchesPath))
       WriterLock.withLock(ss, indexPath, s"$op.append") {
-        graft.Jobs.tagged(ss, s"$op.append")(write(signed, indexPath, layout,
-          if (existing.isDefined) "append" else "overwrite"))
-        if (existing.isEmpty) writeSidecar(ss, indexPath, layout, params)
+        publish(signed, indexPath, layout, Some(op),
+          if (existing.isEmpty) Some(params) else None, window)(keys.size)
       }
     } finally signed.unpersist()
   }

@@ -360,9 +360,14 @@ object Similarity {
     * clustered partitioned write. With nlist=4096 and a 10^10-vector
     * corpus, a probe at nprobe=64 reads ~1.6% of the index as a
     * partition-pruned scan.
+    *
+    * `window` is a stream's maintenance window for its first batch: the
+    * fresh write already holds one file per cell, so a window that
+    * fires records its compaction without a rewrite.
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    path: String, nlist: Int = 16): Unit = {
+                    path: String, nlist: Int = 16,
+                    window: Option[IndexMaintenance.Window] = None): Unit = {
     require(nlist >= 1 && nlist <= (1 << 20),
       s"need 1 <= nlist <= 2^20, got nlist=$nlist")
     val ss = corpus.sparkSession
@@ -382,7 +387,7 @@ object Similarity {
       SignatureIndex.build(
         c.join(assignCells(c, "vec", centroidsDf(ss, cents)), "id")
           .select("cid", "id", "vec"),
-        path, IvfLayout, Quantizer(Seq(nlist), Seq(cents)))
+        path, IvfLayout, Quantizer(Seq(nlist), Seq(cents)), window)
     } finally c.unpersist()
   }
 
@@ -405,13 +410,18 @@ object Similarity {
     * SIDECAR centroids (never re-clustered — the cell geometry is
     * pinned at build time, so existing partitions stay valid) and
     * appended into the same `cid=` partitioning. Append cost ∝ batch;
-    * existing files are never rewritten.
+    * existing files are never rewritten, unless a stream's `window`
+    * fires: then the batch is published by a compaction of index ∪
+    * batch ([[SignatureIndex.append]]).
     */
   def appendToIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                       path: String): Unit = {
+                       path: String,
+                       window: Option[IndexMaintenance.Window] = None)
+      : Unit = {
     val ss = corpus.sparkSession
     graft.functions.VecExpressions.register(ss)
-    SignatureIndex.append(ss, path, IvfLayout, "appendToIvfIndex") { q =>
+    SignatureIndex.append(ss, path, IvfLayout, "appendToIvfIndex",
+        window) { q =>
       val Seq(cents) = q.blocks
       require(cents.nonEmpty, "cannot append into an empty-centroid index")
       val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))

@@ -262,16 +262,23 @@ object Winnow {
     * becomes the initial [[buildWinnowIndex]] layout + sidecar;
     * afterwards the sidecar's pinned (k, w, fpBuckets) win, exactly
     * like [[appendToWinnowIndex]].
+    *
+    * `window` is a stream's maintenance window for this batch (None for
+    * a direct call): when it fires, the batch is published by a
+    * compaction of index ∪ batch instead of an append
+    * ([[SignatureIndex.fold]]).
     */
   def foldWinnowBatch(batch: DataFrame, idCol: String, textCol: String,
                       indexPath: String, matchesPath: String,
                       k: Int = 8, w: Int = 16, fpBuckets: Int = 64,
                       maxDocsPerFp: Int = 256, minMatches: Int = 1,
-                      broadcastLimit: Long = 4L << 20): Unit = {
+                      broadcastLimit: Long = 4L << 20,
+                      window: Option[IndexMaintenance.Window] = None)
+      : Unit = {
     require(maxDocsPerFp >= 2,
       s"winnow: maxDocsPerFp >= 2, got $maxDocsPerFp")
     SignatureIndex.fold(batch, indexPath, matchesPath, WinnowLayout,
-        Seq(k, w, fpBuckets), "foldWinnowBatch", broadcastLimit) {
+        Seq(k, w, fpBuckets), "foldWinnowBatch", broadcastLimit, window) {
       case Seq(ek, ew, eBuckets) =>
         requireFpBuckets(eBuckets)
         signedFingerprints(batch, idCol, textCol, ek, ew, eBuckets)

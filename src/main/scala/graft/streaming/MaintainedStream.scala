@@ -66,23 +66,27 @@ object MaintainedStream {
     * ([[StreamingNearDup]], [[StreamingExactDup]], [[StreamingCdcDup]],
     * [[StreamingImageDedup]], [[StreamingVecDup]]): read `(id, value)`
     * parquet files from `inputDir`, and per micro-batch run `kernel`
-    * — probe `$workDir/index`, write the batch's matches, append the
-    * batch to the index — then give the index its maintenance window.
+    * — probe `$workDir/index`, write the batch's matches, publish the
+    * batch into the index.
     *
-    * `kernel(batch, index, matches)` gets the raw micro-batch, the
-    * index directory and the batch's `$workDir/matches/batch_id=N`
+    * `kernel(batch, index, matches, window)` gets the raw micro-batch,
+    * the index directory, the batch's `$workDir/matches/batch_id=N`
     * output directory (batch_id comes back as a partition column on
     * read; writing it into the files too would collide with partition
-    * discovery). The batch is not checkpointed here: a FILE-source
-    * micro-batch re-reads its own parquet files deterministically and
-    * cheaply, so a kernel persists only what it consumes several times.
-    * `compact(index)` rewrites the index; it runs when the
-    * `compactEvery`/`compactMaxFiles` policy says so, after the kernel,
-    * on the foreachBatch thread — between batches the stream is the
-    * index's single writer, which is exactly the maintenance window
-    * [[IndexMaintenance.compactIndex]] requires; each skip or fire is a
-    * [[MaintenanceEvents]] event against the index
-    * (see [[IndexMaintenance.maybeCompact]]).
+    * discovery) and the batch's maintenance window: the
+    * `compactEvery`/`compactMaxFiles` policy and the batch id. The
+    * kernel hands the window to its index's publish step
+    * ([[graft.ext.SignatureIndex]]), which decides before anything is
+    * written: a batch that is due for compaction is published by a
+    * compaction of index ∪ batch, any other batch is appended. Either
+    * way the index is written once per batch, on the foreachBatch
+    * thread — where the stream is the index's single writer, which is
+    * exactly the maintenance window [[IndexMaintenance.compactIndex]]
+    * requires; each skip or fire is a [[MaintenanceEvents]] event
+    * against the index (see [[IndexMaintenance.maybeCompact]]). The
+    * batch is not checkpointed here: a FILE-source micro-batch re-reads
+    * its own parquet files deterministically and cheaply, so a kernel
+    * persists only what it consumes several times.
     *
     * Why the loop is shaped this way:
     *  - the lease is registered on the index before anything can lock
@@ -104,8 +108,8 @@ object MaintainedStream {
       trigger: Trigger, maxFilesPerTrigger: Option[Int],
       compactEvery: Option[Int], compactMaxFiles: Option[Long],
       lease: WriterLock.Lease)(
-      kernel: (DataFrame, String, String) => Unit)(
-      compact: String => IndexMaintenance.CompactStats): MaintainedStream = {
+      kernel: (DataFrame, String, String, IndexMaintenance.Window) => Unit)
+      : MaintainedStream = {
     val policy = IndexMaintenance.CompactPolicy(
       every = compactEvery, maxDataFiles = compactMaxFiles)
     val index = s"$workDir/index"
@@ -122,9 +126,8 @@ object MaintainedStream {
         val sc = spark.sparkContext
         val before = sc.getPersistentRDDs.keySet
         try {
-          kernel(batch, index, s"$workDir/matches/batch_id=$batchId")
-          IndexMaintenance.maybeCompact(policy, batchId, index,
-            IndexMaintenance.dataFileCount(spark, index))(compact(index))
+          kernel(batch, index, s"$workDir/matches/batch_id=$batchId",
+            IndexMaintenance.Window(policy, batchId))
         } finally {
           sc.getPersistentRDDs.filterNot(kv => before(kv._1)).values
             .foreach(_.unpersist(false))

@@ -48,7 +48,7 @@ object StreamingCdcDup {
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("blob", BinaryType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
-      (batch, indexPath, matchesPath) =>
+      (batch, indexPath, matchesPath, window) =>
         // The fused kernel: cross-index + within-batch pairs, then the
         // index append — from ONE chunking of the batch (the unfused
         // probe + pairs + append form chunked every blob four times).
@@ -56,7 +56,7 @@ object StreamingCdcDup {
         // afterwards the sidecar's pinned chunking regime wins.
         Cdc.foldCdcBatch(batch, "id", "blob", indexPath, matchesPath,
           minSize, avgBits, maxSize, hashBuckets,
-          maxDocsPerChunk, minShared)
-    }(Cdc.compactCdcIndex(spark, _))
+          maxDocsPerChunk, minShared, window = Some(window))
+    }
   }
 }

@@ -47,7 +47,7 @@ object StreamingExactDup {
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("text", StringType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
-      (batch, indexPath, matchesPath) =>
+      (batch, indexPath, matchesPath, window) =>
         // The fused kernel: cross-index + within-batch matches, then
         // the index append — from ONE fingerprinting of the batch (the
         // unfused probe + pairs + append form fingerprinted it three
@@ -56,7 +56,7 @@ object StreamingExactDup {
         // index with the caller's parameters; afterwards the sidecar's
         // pinned regime wins.
         Winnow.foldWinnowBatch(batch, "id", "text", indexPath, matchesPath,
-          k, w, fpBuckets, maxDocsPerFp, minMatches)
-    }(Winnow.compactWinnowIndex(spark, _))
+          k, w, fpBuckets, maxDocsPerFp, minMatches, window = Some(window))
+    }
   }
 }

@@ -43,7 +43,7 @@ object StreamingImageDedup {
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("blob", BinaryType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
-      (batch, indexPath, matchesPath) =>
+      (batch, indexPath, matchesPath, window) =>
         // The fused kernel: cross-index + within-batch matches, then
         // the index append — the batch's images are DECODED ONCE into
         // the fold's quarter cache (the unfused probe + pairs + append
@@ -55,7 +55,7 @@ object StreamingImageDedup {
           .where(col("img.ok"))
           .select(col("id"), col("img.ahash").as("ahash"))
         DocDedup.foldHammingBatch(sig, "id", "ahash", indexPath,
-          matchesPath, maxDist, qBuckets)
-    }(DocDedup.compactHammingIndex(spark, _))
+          matchesPath, maxDist, qBuckets, window = Some(window))
+    }
   }
 }

@@ -17,23 +17,27 @@ import graft.ext.DocDedup
   * The per-batch pipeline is the FUSED
   * [[graft.ext.DocDedup.foldMinHashBatch]] kernel — cross-index
   * matches, within-batch matches, the matches write, and the index
-  * append in three Spark actions, banding the batch once
+  * publish in three Spark actions, banding the batch once
   * (the unfused probe + pairs + two writes form cost eight actions,
   * and the r13 bench attribution showed action count, not compute,
   * dominates the micro-batch floor). One more action per batch here:
-  * the corpus append.
+  * the corpus append (job tag `graft:StreamingNearDup.corpus_append`).
+  * The corpus is read with the batch's `(id, text)` schema, so no
+  * micro-batch runs a schema-inference job for it.
   *
   * State lives entirely in external storage (index + corpus parquet),
   * not the state store — the same unbounded-key trade as
   * [[StreamingDedup]]: the corpus grows forever; per-batch cost is
   * probe (∝ batch) + append (∝ batch), never ∝ history. The flip side
-  * of per-batch appends is small-file accumulation (one file set per
-  * touched partition per batch); `compactEvery = Some(n)` runs
-  * [[graft.ext.DocDedup.compactMinHashIndex]] after every n-th batch,
-  * in the between-batches maintenance window of
-  * [[MaintainedStream.fold]]. Probe results are
-  * bit-identical across a compaction, so match output is unaffected
-  * (IndexMaintenanceSpec + the q238 gate pin this).
+  * of per-batch appends is small-file accumulation (one file per
+  * touched partition per batch); with `compactEvery = Some(n)` (or the
+  * `compactMaxFiles` cost trigger) a batch whose maintenance window
+  * fires is published by a compaction of index ∪ batch
+  * ([[graft.ext.IndexMaintenance.compactIndex]], reading the batch
+  * from the kernel's cache) instead of an append, so the index is
+  * written once per batch ([[MaintainedStream.fold]]). Probe results
+  * are bit-identical across a compaction, so match output is
+  * unaffected (IndexMaintenanceSpec + the q238 gate pin this).
   *
   * Delivery semantics: match emission is at-least-once (a replayed
   * batch re-emits its `batch_id`-tagged matches), while index/corpus
@@ -66,7 +70,7 @@ object StreamingNearDup {
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("text", StringType), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
-      (batch, indexPath, matchesPath) =>
+      (batch, indexPath, matchesPath, window) =>
         // The fused kernel: cross-index + within-batch matches, then
         // the index append — from ONE banding of the batch. First
         // batch: builds the index with the caller's (bands, rows,
@@ -84,12 +88,15 @@ object StreamingNearDup {
             !nm.startsWith("_") && !nm.startsWith(".")
           }
         }
+        // the batch's (id, text) schema: a schema-less read would run
+        // one inference job per micro-batch
         DocDedup.foldMinHashBatch(batch,
-          if (corpusHasData) spark.read.parquet(corpusPath)
+          if (corpusHasData) spark.read.schema(batch.schema).parquet(corpusPath)
           else batch.where(org.apache.spark.sql.functions.lit(false)),
           "id", "text", indexPath, matchesPath,
-          num, den, bands, rows, sigBuckets)
-        batch.write.mode("append").parquet(corpusPath)
-    }(DocDedup.compactMinHashIndex(spark, _))
+          num, den, bands, rows, sigBuckets, window = Some(window))
+        graft.Jobs.tagged(spark, "StreamingNearDup.corpus_append")(
+          batch.write.mode("append").parquet(corpusPath))
+    }
   }
 }

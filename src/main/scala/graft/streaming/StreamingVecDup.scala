@@ -45,7 +45,7 @@ object StreamingVecDup {
     MaintainedStream.fold(spark, inputDir, workDir,
         StructField("vec", ArrayType(FloatType)), trigger,
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
-      (batch, indexPath, matchesPath) =>
+      (batch, indexPath, matchesPath, window) =>
         val b = batch.localCheckpoint()
         // heal a crashed compaction BEFORE deciding "first batch": an
         // index caught between its swap renames is not a missing index
@@ -75,11 +75,13 @@ object StreamingVecDup {
         cross.unionByName(within)
           .write.mode("overwrite")
           .parquet(matchesPath)
-        // 3. fold the batch into the index
+        // 3. publish the batch into the index (a compaction of index ∪
+        //    batch when the window fires)
         if (indexExists)
-          Similarity.appendToIvfIndex(b, "id", "vec", indexPath)
+          Similarity.appendToIvfIndex(b, "id", "vec", indexPath, Some(window))
         else
-          Similarity.buildIvfIndex(b, "id", "vec", indexPath, nlist)
-    }(Similarity.compactIvfIndex(spark, _))
+          Similarity.buildIvfIndex(b, "id", "vec", indexPath, nlist,
+            Some(window))
+    }
   }
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.commons.io.FileUtils
 
 import graft.api.{DedupOptions, Deduplicator}
-import graft.ext.{DocDedup, Winnow}
+import graft.ext.{DocDedup, IndexMaintenance, RecordingLocalFs, Winnow}
 import graft.operators.Catalog
 
 /** Per-call job budgets. A small call's floor is set by how many Spark
@@ -178,6 +178,42 @@ class JobBudgetSpec extends SparkFunSuite {
         val m = s"$idx-matches"
         fold(docs(0, 10, idOffset = 1000L), idx, m)
         () => assert(twins(spark.read.parquet(m), 1000L) == (0L until 10L).toSet)
+      }
+    }),
+    Budget("foldMinHashBatch whose maintenance window fires, into an index one batch old", 14, { dir =>
+      val first = docs(0, 20)
+      // the cadence fires on every batch
+      val window = IndexMaintenance.Window(
+        IndexMaintenance.CompactPolicy(every = Some(1)), 1L)
+      RecordingLocalFs.register(spark.sparkContext.hadoopConfiguration)
+      DocDedup.foldMinHashBatch(first, first, "id", "text",
+        s"$dir/index", s"$dir/m0", 7, 10, bands = 8, rows = 4, sigBuckets = 4)
+      // twins of every first-batch doc: the batch touches exactly the
+      // index's partition coordinates
+      val batch = docs(0, 20, idOffset = 1000L)
+      val touched = DocDedup.bandedSignatures(batch, "id", "text", 8, 4, 4)
+        .select("band", "sb").distinct().count()
+      () => {
+        val idx = copyOf(s"$dir/index")
+        RecordingLocalFs.reset()
+        DocDedup.foldMinHashBatch(batch, first, "id", "text",
+          RecordingLocalFs.uri(idx), RecordingLocalFs.uri(s"$idx-matches"),
+          7, 10, bands = 8, rows = 4, sigBuckets = 4, window = Some(window))
+        () => {
+          assert(twins(spark.read.parquet(s"$idx-matches"), 1000L) == (0L until 20L).toSet)
+          // the parquet files the call wrote under the index or its
+          // staging sibling: one per touched partition (an append and
+          // then a compaction would write two)
+          val indexName = new java.io.File(idx).getName
+          val written = RecordingLocalFs.createdPaths.count { p =>
+            val under = p.stripPrefix(new java.io.File(idx).getParent + "/")
+            (under.startsWith(s"$indexName/") ||
+              under.startsWith(s".compact_tmp_$indexName-")) && p.endsWith(".parquet")
+          }
+          info(s"$written parquet files written")
+          assert(written == touched, s"$written parquet files for $touched touched partitions")
+          assert(IndexMaintenance.dataFileCount(spark, idx) == touched)
+        }
       }
     }),
     Budget("probeWinnowIndex of ten twins against a built index", 9, { dir =>

@@ -21,6 +21,12 @@ import org.apache.spark.sql.functions.{col, lit}
   * before deciding "first batch": batch 1's twin of a batch-0 doc is
   * matched, the index holds both batches, and a later compaction leaves
   * no residue and loses no id.
+  *
+  * Fused publish (the four kernels): a fold whose maintenance window
+  * fires publishes its batch by a compaction of index ∪ batch. Its
+  * matches and index rows are those of an append, and a crash inside
+  * that compaction — after the staged rewrite, or between the swap
+  * renames — heals so that the batch's replay indexes it exactly once.
   */
 class FoldBatchSpec extends SparkFunSuite {
   import FoldBatchSpec._
@@ -39,12 +45,14 @@ class FoldBatchSpec extends SparkFunSuite {
 
   private val hBase = 0x5A5A1234ABCD9876L
 
-  /** Batch `step` folded into `$work/index`; returns its matches dir. */
-  private def kernel(fold: (DataFrame, DataFrame, String, String) => Unit)
-      : (String, Int, DataFrame, Seq[DataFrame]) => String = {
-    (work, step, batch, earlier) =>
+  /** Batch `step` folded into `$work/index` in a maintenance window;
+    * returns its matches dir.
+    */
+  private def kernel(fold: (DataFrame, DataFrame, String, String,
+                            Option[IndexMaintenance.Window]) => Unit): Kernel = {
+    (work, step, batch, earlier, window) =>
       val corpus = earlier.foldLeft(batch.where(lit(false)))(_ union _)
-      fold(batch, corpus, s"$work/index", s"$work/m$step")
+      fold(batch, corpus, s"$work/index", s"$work/m$step", window)
       s"$work/m$step"
   }
 
@@ -60,9 +68,9 @@ class FoldBatchSpec extends SparkFunSuite {
             Seq((101L, text(1)), (102L, text(1)), (103L, text(5)))
               .toDF("id", "text")),
           (101L, 1L),
-          kernel((b, corpus, idx, m) => DocDedup.foldMinHashBatch(b, corpus,
+          kernel((b, corpus, idx, m, w) => DocDedup.foldMinHashBatch(b, corpus,
             "id", "text", idx, m, 7, 10, bands = 8, rows = 4,
-            sigBuckets = 4)),
+            sigBuckets = 4, window = w)),
           DocDedup.compactMinHashIndex(spark, _)),
         Seq("id_a", "id_b", "common", "na", "nb"),
         DocDedup.minHashPairs(_, "id", "text", 7, 10, bands = 8, rows = 4),
@@ -79,8 +87,8 @@ class FoldBatchSpec extends SparkFunSuite {
             Seq((101L, hBase ^ 1L), (102L, hBase ^ 1L),
               (103L, 0x1111222233334444L)).toDF("id", "sh")),
           (101L, 1L),
-          kernel((b, _, idx, m) => DocDedup.foldHammingBatch(b, "id", "sh",
-            idx, m, maxDist = 2, qBuckets = 8)),
+          kernel((b, _, idx, m, w) => DocDedup.foldHammingBatch(b, "id", "sh",
+            idx, m, maxDist = 2, qBuckets = 8, window = w)),
           DocDedup.compactHammingIndex(spark, _)),
         Seq("id_a", "id_b", "hamming"),
         DocDedup.hammingPairs(_, "id", "sh", 2),
@@ -92,8 +100,8 @@ class FoldBatchSpec extends SparkFunSuite {
           () => (Seq((1L, words(1)), (2L, words(2))).toDF("id", "text"),
             Seq((101L, words(11)), (102L, words(12))).toDF("id", "text")),
           (101L, 1L),
-          kernel((b, _, idx, m) => Winnow.foldWinnowBatch(b, "id", "text",
-            idx, m, k = 8, w = 4, fpBuckets = 8)),
+          kernel((b, _, idx, m, w) => Winnow.foldWinnowBatch(b, "id", "text",
+            idx, m, k = 8, w = 4, fpBuckets = 8, window = w)),
           Winnow.compactWinnowIndex(spark, _)),
         Seq("id_a", "id_b", "n_matches"),
         Winnow.verifiedPairs(_, "id", "text", k = 8, w = 4),
@@ -108,8 +116,9 @@ class FoldBatchSpec extends SparkFunSuite {
           () => (Seq((1L, blob(1)), (2L, blob(2))).toDF("id", "blob"),
             Seq((101L, blob(11)), (102L, blob(12))).toDF("id", "blob")),
           (101L, 1L),
-          kernel((b, _, idx, m) => Cdc.foldCdcBatch(b, "id", "blob", idx, m,
-            minSize = 256, avgBits = 9, maxSize = 4096, hashBuckets = 8)),
+          kernel((b, _, idx, m, w) => Cdc.foldCdcBatch(b, "id", "blob", idx, m,
+            minSize = 256, avgBits = 9, maxSize = 4096, hashBuckets = 8,
+            window = w)),
           Cdc.compactCdcIndex(spark, _)),
         Seq("id_a", "id_b", "n_shared"),
         Cdc.sharedChunkPairs(_, "id", "blob", 256, 9, 4096),
@@ -120,8 +129,9 @@ class FoldBatchSpec extends SparkFunSuite {
 
   /** VecDup's kernel lives inside its stream: each batch lands as one
     * parquet file and one `AvailableNow` run folds it as the next batch
-    * id. Identical twin vectors score cosine 1.0; nprobe = nlist makes
-    * recall exhaustive.
+    * id, in the stream's own window (no policy), so `run`'s window
+    * argument is not used. Identical twin vectors score cosine 1.0;
+    * nprobe = nlist makes recall exhaustive.
     */
   private def vecDup: Fold = {
     import spark.implicits._
@@ -133,7 +143,7 @@ class FoldBatchSpec extends SparkFunSuite {
       () => ((0L to 3L).map(i => (i, vec(i))).toDF("id", "vec"),
         Seq((100L, vec(0)), (104L, vec(4))).toDF("id", "vec")),
       (100L, 0L),
-      (work, step, batch, _) => {
+      (work, step, batch, _, _) => {
         val in = s"$work-in"
         batch.repartition(1).write.parquet(s"$work-stage$step")
         val part = new java.io.File(s"$work-stage$step").listFiles()
@@ -163,8 +173,8 @@ class FoldBatchSpec extends SparkFunSuite {
       "index = build + append") {
       val (b0, b1) = f.fold.batches()
       val work = s"${tempDir(s"fold-${f.fold.name}")}/work"
-      val m0 = f.fold.run(work, 0, b0, Nil)
-      val m1 = f.fold.run(work, 1, b1, Seq(b0))
+      val m0 = f.fold.run(work, 0, b0, Nil, None)
+      val m1 = f.fold.run(work, 1, b1, Seq(b0), None)
       // batch 0: within pairs only (no index yet)
       assert(rows(spark.read.parquet(m0), f.cols) ==
         rows(f.within(b0), f.cols))
@@ -190,7 +200,7 @@ class FoldBatchSpec extends SparkFunSuite {
       val work = s"${tempDir(s"foldcrash-${f.name}")}/work"
       val index = new Path(s"$work/index")
       val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.run(work, 0, b0, Nil)
+      f.run(work, 0, b0, Nil, None)
       // the on-disk state of a compaction that crashed between its two
       // swap renames: the live layout moved aside to .compact_old_*,
       // optionally next to its verified staged rewrite (same uuid)
@@ -200,7 +210,7 @@ class FoldBatchSpec extends SparkFunSuite {
           new Path(s"$work/.compact_tmp_index-$uuid"), false,
           spark.sparkContext.hadoopConfiguration))
       assert(fs.rename(index, new Path(s"$work/.compact_old_index-$uuid")))
-      val m1 = f.run(work, 1, b1, Seq(b0))
+      val m1 = f.run(work, 1, b1, Seq(b0), None)
       val pairs = rows(spark.read.parquet(m1), Seq("id_a", "id_b"))
       assert(pairs(Seq(f.twin._1, f.twin._2)) ||
         pairs(Seq(f.twin._2, f.twin._1)),
@@ -214,19 +224,137 @@ class FoldBatchSpec extends SparkFunSuite {
       assert(ids(spark.read.parquet(index.toString)) == want,
         "compaction lost ids")
     }
+
+  /** A window whose cadence fires on every batch. */
+  private def firing(batchId: Long) = Some(IndexMaintenance.Window(
+    IndexMaintenance.CompactPolicy(every = Some(1)), batchId))
+
+  /** Data files in each partition directory of the index at `path`. */
+  private def filesPerPartition(path: String): Seq[Int] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(dir: Path): Seq[Int] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .partition(_.isDirectory)
+      dirs.flatMap(d => walk(d.getPath)) ++
+        (if (files.isEmpty) Nil else Seq(files.size))
+    }
+    walk(new Path(path))
+  }
+
+  private def residue(fs: org.apache.hadoop.fs.FileSystem, work: String) =
+    fs.listStatus(new Path(work)).map(_.getPath.getName)
+      .filter(_.startsWith(".compact_")).toSeq
+
+  families.foreach { f =>
+    test(s"${f.fold.name}: a fold whose window fires publishes the batch " +
+      "by one compaction: matches and index rows as an append, one file " +
+      "per partition") {
+      val (b0, b1) = f.fold.batches()
+      val work = s"${tempDir(s"fused-${f.fold.name}")}/work"
+      f.fold.run(work, 0, b0, Nil, None)
+      val m1 = f.fold.run(work, 1, b1, Seq(b0), firing(1L))
+      val ref = s"${tempDir(s"fused-${f.fold.name}-ref")}/index"
+      f.build(b0, ref)
+      assert(rows(spark.read.parquet(m1), f.cols) ==
+        rows(f.probe(b1, ref, b0), f.cols) ++ rows(f.within(b1), f.cols))
+      f.append(b1, ref)
+      assert(indexRows(s"$work/index") == indexRows(ref))
+      val perPartition = filesPerPartition(s"$work/index")
+      assert(perPartition.nonEmpty && perPartition.forall(_ == 1),
+        s"data files per partition directory: $perPartition")
+    }
+  }
+
+  families.foreach { f =>
+    test(s"${f.fold.name}: a cost window decides on the index's files " +
+      "plus the batch's, the count an append would leave") {
+      import IndexMaintenance.{CompactPolicy, Window, dataFileCount}
+      val (b0, b1) = f.fold.batches()
+      val base = tempDir(s"cost-${f.fold.name}")
+      f.fold.run(s"$base/w0", 0, b0, Nil, None)
+      // two copies of the one-batch work dir, one per threshold
+      Seq("w1", "w2").foreach(c => org.apache.commons.io.FileUtils
+        .copyDirectory(new java.io.File(s"$base/w0"), new java.io.File(s"$base/$c")))
+      f.fold.run(s"$base/w0", 1, b1, Seq(b0), None)
+      val appended = dataFileCount(spark, s"$base/w0/index")
+      /** (skips, fires) of folding batch 1 under `threshold`. */
+      def decide(work: String, threshold: Long): (Long, Long) = {
+        val idx = s"$work/index"
+        def n(e: String) = MaintenanceEvents.count(idx, e)
+        val (s0, f0) = (n(MaintenanceEvents.CompactSkip),
+          n(MaintenanceEvents.CompactFire))
+        f.fold.run(work, 1, b1, Seq(b0), Some(Window(
+          CompactPolicy(maxDataFiles = Some(threshold)), 1L)))
+        (n(MaintenanceEvents.CompactSkip) - s0,
+          n(MaintenanceEvents.CompactFire) - f0)
+      }
+      assert(decide(s"$base/w1", appended) == ((1L, 0L)))
+      assert(dataFileCount(spark, s"$base/w1/index") == appended)
+      assert(decide(s"$base/w2", appended - 1) == ((0L, 1L)))
+      assert(dataFileCount(spark, s"$base/w2/index") < appended)
+      assert(indexRows(s"$base/w2/index") == indexRows(s"$base/w0/index"))
+    }
+  }
+
+  // A crash inside the compaction that publishes a batch: (a) while
+  // copying the sidecars into the verified staged rewrite, before the
+  // swap; (b) at the second swap rename, with the live index moved
+  // aside. The injected filesystem throws there, as a crash would.
+  private val crashes = Seq[(String, String, Path => Boolean)](
+    ("after the staged rewrite, before the swap", "create",
+      p => p.getParent.getName.startsWith(".compact_tmp_") &&
+        p.getName.startsWith("_graft_")),
+    ("between the two swap renames", "rename",
+      _.getName.startsWith(".compact_tmp_")))
+
+  for (f <- families; (where, op, at) <- crashes)
+    test(s"${f.fold.name}: a fused publish that crashed $where heals; the " +
+      "replayed batch is indexed once and its twin matched") {
+      RecordingLocalFs.register(spark.sparkContext.hadoopConfiguration)
+      val (b0, b1) = f.fold.batches()
+      val work = RecordingLocalFs.uri(
+        s"${tempDir(s"fusedcrash-${f.fold.name}")}/work")
+      val index = new Path(s"$work/index")
+      val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      f.fold.run(work, 0, b0, Nil, None)
+      RecordingLocalFs.failOnce(op)(at)
+      val e = intercept[java.io.IOException](
+        f.fold.run(work, 1, b1, Seq(b0), firing(1L)))
+      assert(e.getMessage.contains("injected") && !RecordingLocalFs.pending)
+      assert(residue(fs, work).exists(_.startsWith(".compact_tmp_")))
+      // the stream replays the batch it did not commit
+      val m1 = f.fold.run(work, 1, b1, Seq(b0), firing(1L))
+      val pairs = rows(spark.read.parquet(m1), Seq("id_a", "id_b"))
+      assert(pairs(Seq(f.fold.twin._1, f.fold.twin._2)) ||
+        pairs(Seq(f.fold.twin._2, f.fold.twin._1)),
+        s"cross twin ${f.fold.twin} missed; matches $pairs")
+      val ref = s"${tempDir(s"fusedcrash-${f.fold.name}-ref")}/index"
+      f.build(b0, ref)
+      f.append(b1, ref)
+      assert(indexRows(index.toString) == indexRows(ref),
+        "the index is not build(b0) + append(b1)")
+      f.fold.compact(index.toString)
+      assert(residue(fs, work).isEmpty, s"residue ${residue(fs, work)}")
+      assert(indexRows(index.toString) == indexRows(ref))
+    }
 }
 
 object FoldBatchSpec {
 
+  /** Folds batch `step` into `$work/index` given the earlier batches and
+    * a maintenance window; returns the batch's matches dir.
+    */
+  type Kernel = (String, Int, DataFrame, Seq[DataFrame],
+    Option[IndexMaintenance.Window]) => String
+
   /** A fold family: its two batches (the second carries `twin._1`, a
-    * twin of batch-0 doc `twin._2`), how to fold batch `step` into
-    * `$work/index` given the earlier batches (returning the batch's
-    * matches dir), and its compaction.
+    * twin of batch-0 doc `twin._2`), its kernel, and its compaction.
     */
   final case class Fold(
       name: String, batches: () => (DataFrame, DataFrame),
-      twin: (Long, Long),
-      run: (String, Int, DataFrame, Seq[DataFrame]) => String,
+      twin: (Long, Long), run: Kernel,
       compact: String => IndexMaintenance.CompactStats)
 
   /** A fold kernel's unfused reference: the match columns, the

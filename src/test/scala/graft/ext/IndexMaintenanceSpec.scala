@@ -163,6 +163,32 @@ class IndexMaintenanceSpec extends SparkFunSuite {
     assert(spark.read.parquet(idx).count() > 0)
   }
 
+  test("a compaction that carries a batch publishes it, also on a " +
+    "sidecar-only index") {
+    val s = spark; import s.implicits._
+    val idx = tempDir("im-batch") + "/index"
+    DocDedup.buildMinHashIndex(Seq.empty[(Long, String)].toDF("id", "text"),
+      "id", "text", idx, bands = 4, rows = 2, sigBuckets = 4)
+    def banded(lo: Int, hi: Int) =
+      DocDedup.bandedSignatures(docs(lo, hi), "id", "text", 4, 2, 4)
+    val ref = tempDir("im-batch-ref") + "/index"
+    DocDedup.buildMinHashIndex(docs(0, 5), "id", "text", ref,
+      bands = 4, rows = 2, sigBuckets = 4)
+    DocDedup.appendToMinHashIndex(docs(5, 10), "id", "text", ref)
+    val first = IndexMaintenance.compactIndex(spark, idx, Seq("band", "sb"),
+      Some(banded(0, 5)))
+    assert(first.filesBefore == 0L && first.rows == banded(0, 5).count())
+    val second = IndexMaintenance.compactIndex(spark, idx, Seq("band", "sb"),
+      Some(banded(5, 10)))
+    assert(second.rows == first.rows + banded(5, 10).count())
+    assert(sorted(spark.read.parquet(idx)) == sorted(spark.read.parquet(ref)))
+    // one file per partition, and the sidecar still pins the regime
+    assert(second.filesAfter ==
+      spark.read.parquet(idx).select("band", "sb").distinct().count())
+    DocDedup.appendToMinHashIndex(docs(10, 12), "id", "text", idx)
+    assert(spark.read.parquet(idx).count() > second.rows)
+  }
+
   test("missing index fails loudly") {
     intercept[IllegalArgumentException] {
       IndexMaintenance.compactIndex(spark, tempDir("im-miss") + "/nope",

@@ -1,0 +1,94 @@
+package graft.ext
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The local filesystem under the `graftrec` scheme: it records every
+  * file it creates, and can fail one chosen create or rename by
+  * throwing, which leaves the disk as a process that crashed at that
+  * step would. Like `LockSchemeGateSpec`'s filesystems it is
+  * registered per scheme with its cache disabled, so every lookup makes
+  * a new instance and the state lives in the companion object.
+  */
+class RecordingLocalFs extends RawLocalFileSystem {
+  import RecordingLocalFs._
+
+  override def getScheme: String = Scheme
+  override def getUri: java.net.URI = java.net.URI.create(s"$Scheme:///")
+
+  // RawLocalFileSystem implements both public creates without going
+  // through the other, so both are recorded
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    record(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    record(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  private def record(f: Path): Unit = {
+    failIfArmed("create", f)
+    created.add(f.toUri.getPath)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    failIfArmed("rename", src)
+    super.rename(src, dst)
+  }
+}
+
+object RecordingLocalFs {
+  val Scheme = "graftrec"
+
+  private val created = new ConcurrentLinkedQueue[String]()
+
+  private val armed = new AtomicReference[Option[(String, Path => Boolean)]](None)
+
+  /** Register the scheme on `conf`, trust its lock sentinel (a single
+    * test writer), and forget earlier creates and armed failures.
+    */
+  def register(conf: Configuration): Unit = {
+    conf.setClass(s"fs.$Scheme.impl", classOf[RecordingLocalFs],
+      classOf[FileSystem])
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+    WriterLock.trustSchemeAtomicCreate(Scheme)
+    reset()
+  }
+
+  def reset(): Unit = { created.clear(); armed.set(None) }
+
+  /** `local` as a path on this scheme. */
+  def uri(local: String): String = s"$Scheme://$local"
+
+  /** Fail the next `op` ("create" or "rename") whose (source) path
+    * matches `at`, once.
+    */
+  def failOnce(op: String)(at: Path => Boolean): Unit =
+    armed.set(Some((op, at)))
+
+  /** Whether an armed failure is still waiting for its operation. */
+  def pending: Boolean = armed.get.isDefined
+
+  /** Local path of every file created since the last [[reset]]. */
+  def createdPaths: Seq[String] = created.asScala.toSeq
+
+  private def failIfArmed(op: String, p: Path): Unit = armed.get match {
+    case s @ Some((o, at)) if o == op && at(p) && armed.compareAndSet(s, None) =>
+      throw new java.io.IOException(s"injected $op failure at $p")
+    case _ => ()
+  }
+}
