@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{ListenerDrain, SparkContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -14,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   * group, description and call site. A user sees the tags in the Spark
   * UI and in any listener; `graft.Bench` sums jobs and job seconds per
   * tag into `gate_stages`, and `graft.ProfileJobs` prints them per job.
+  * A step that pins storage blocks learns which from [[pinnedBy]], so
+  * it can free them.
   */
 object Jobs {
 
@@ -36,6 +39,24 @@ object Jobs {
     sc.setLocalProperty(Description, Prefix + key)
     try body
     finally sc.setLocalProperty(Description, previous)
+  }
+
+  /** Run `body` and return its value with the RDDs it left persisted,
+    * for the caller to unpersist when it is done with them. A
+    * `localCheckpoint` pins its blocks behind an internal RDD the
+    * returned DataFrame does not expose (`df.rdd` is a fresh wrapper,
+    * and unpersisting it frees nothing), so the registry's before/after
+    * delta is the only handle on them; it also counts whatever another
+    * thread persists on `sc` meanwhile. If `body` throws, what it pinned
+    * is unpersisted before the exception propagates.
+    */
+  def pinnedBy[T](sc: SparkContext)(body: => T): (T, Seq[RDD[_]]) = {
+    val before = sc.getPersistentRDDs.keySet
+    def pinned = sc.getPersistentRDDs.filterNot(kv => before(kv._1)).values.toSeq
+    val out =
+      try body
+      catch { case e: Throwable => pinned.foreach(_.unpersist(false)); throw e }
+    (out, pinned)
   }
 
   /** One job. `site` is the call site a caller set, else the short call

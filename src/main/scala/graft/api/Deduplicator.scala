@@ -94,9 +94,10 @@ class Deduplicator(spark: SparkSession, workDir: String,
     require(inputs.distinct.size == inputs.size,
       "duplicate input paths in one batch would collide on output names")
     val algo = Hashing.resolve(opts.algorithm)
-    // The catalog version this batch probes and commits on top of.
+    // The catalog version this batch probes and commits on top of: the
+    // batch's one resolution; every catalog read below is of it.
     val version = catalog.currentVersion
-    val fidBase = catalog.nextFileId
+    val fidBase = catalog.nextFileIdAt(version)
     val statuses = inputs.map(requireSingleFile)
     // Raw-string distinctness above is not enough: two aliases of one
     // file ('dir//a' vs 'dir/a', relative vs absolute) resolve to the
@@ -109,8 +110,8 @@ class Deduplicator(spark: SparkSession, workDir: String,
           statuses.map(_.getPath.toString).distinct).distinct.mkString(", "))
     val names = inputs.zipWithIndex.map { case (input, i) =>
       if (outputNames.nonEmpty) outputNames(i)
-      else if (inputs.size == 1) opts.outputName.getOrElse(generateName(input))
-      else opts.outputName.map(n => s"$n-$i").getOrElse(generateName(input))
+      else if (inputs.size == 1) opts.outputName.getOrElse(generateName(input, version))
+      else opts.outputName.map(n => s"$n-$i").getOrElse(generateName(input, version))
     }
     // e.g. same basename from two dirs: the second rename would destroy
     // the first file's encoded output and corrupt cross-file pointers
@@ -122,7 +123,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
     // anything is written. An uncommitted orphan (a crash between the
     // data write and the commit) is not held and is overwritten — the
     // crash-retry path.
-    val held = committedNames(names)
+    val held = committedNames(names, version)
     require(held.isEmpty,
       s"output name(s) already committed to the catalog: ${held.mkString(", ")}")
 
@@ -162,7 +163,7 @@ class Deduplicator(spark: SparkSession, workDir: String,
     // dominant cost from "shuffle everything" into "shuffle the few".
     // A saturated or absent filter degrades to the plain join — the
     // result is identical either way, only the split ratio moves.
-    val catJoined = catalog.seenBloom() match {
+    val catJoined = catalog.bloomAt(version) match {
       case Some(bloom) =>
         graft.functions.VecExpressions.register(spark) // graft_bloom_might_contain
         val mc = graft.functions.BloomMembership.mightContain(bloom, col("hash"))
@@ -255,11 +256,9 @@ class Deduplicator(spark: SparkSession, workDir: String,
       }
 
       // ---- catalog contributions (small), then the single commit,
-      //      LAST. The checkpoint blocks are freed after
-      //      the commit (registry delta — localCheckpoint pins internal
-      //      RDDs): a streaming session runs this once per micro-batch,
-      //      and leaked per-run blocks would accumulate forever. ----
-      val beforeCp = spark.sparkContext.getPersistentRDDs.keySet
+      //      LAST. The checkpoint blocks are freed after the commit: a
+      //      streaming session runs this once per micro-batch, and
+      //      leaked per-run blocks would accumulate forever. ----
       // ONE checkpointed pass for both catalog contributions: new links
       // and deltas are complementary slices of the same batch-first-
       // occurrence rows, so materializing them separately would run the
@@ -269,16 +268,15 @@ class Deduplicator(spark: SparkSession, workDir: String,
         .where(struct(col("fidx"), col("pos")) === col("first"))
         .select(col("fidx"), col("hash"), col("pos"), col("occ"),
           col("cat_line").isNotNull.as("known")), version, Some(!col("known")))
-      val contrib = graft.Jobs.tagged(spark,
-        s"dedup.w$w.contrib_checkpoint")(contribDf.localCheckpoint())
+      val (contrib, pinned) = graft.Jobs.pinnedBy(spark.sparkContext)(
+        graft.Jobs.tagged(spark, s"dedup.w$w.contrib_checkpoint")(
+          contribDf.localCheckpoint()))
+      cpPinned = pinned
       val newLinksAll = contrib.where(!col("known"))
         .select(col("fidx"), col("hash"), col("pos").as("line"),
           col("occ").as("refs_num"))
       val deltasAll = contrib.where(col("known"))
         .select(col("hash"), col("occ").as("delta"))
-      cpPinned =
-        spark.sparkContext.getPersistentRDDs
-          .filterNot(kv => beforeCp(kv._1)).values.toSeq
       val counts = countsObs.fold(Seq.fill(2 * inputs.size)(0L))(
         _.get("counts").asInstanceOf[scala.collection.Seq[Long]].toSeq)
       // Commit the batch-wide links AS ONE DataFrame (file_id = fidx +
@@ -315,18 +313,20 @@ class Deduplicator(spark: SparkSession, workDir: String,
     }
   }
 
-  /** The names among `names` the catalog already holds. A run's
-    * encoded file is written before its commit, so only a name whose
-    * encoded file exists can be held: the catalog is read only then,
-    * and the common path runs no job.
+  /** The names among `names` the catalog holds at `version` (by
+    * default the current one). A run's encoded file is written before
+    * its commit, so only a name whose encoded file exists can be held:
+    * the catalog is read only then, and the common path resolves no
+    * version and runs no job.
     */
-  private[graft] def committedNames(names: Seq[String]): Set[String] = {
+  private[graft] def committedNames(names: Seq[String],
+      version: => Long = catalog.currentVersion): Set[String] = {
     val fs = new org.apache.hadoop.fs.Path(workDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val present = names.filter(n =>
       fs.exists(new org.apache.hadoop.fs.Path(parquetPath(n))))
     if (present.isEmpty) Set.empty
-    else catalog.files().where(col("filename").isin(present: _*))
+    else catalog.filesAt(version).where(col("filename").isin(present: _*))
       .select("filename").collect().map(_.getString(0)).toSet
   }
 
@@ -403,12 +403,12 @@ class Deduplicator(spark: SparkSession, workDir: String,
   }
 
   /** Output-name generation ≙ P5 (deduplicator.ex:217-224 uses
-    * md5(hex(now_ms))+".bin"); ours is deterministic per (input, catalog
-    * version) so re-runs are idempotent.
+    * md5(hex(now_ms))+".bin"); ours is deterministic per (input, the
+    * catalog version the run commits) so re-runs are idempotent.
     */
-  private def generateName(input: String): String = {
+  private def generateName(input: String, probedVersion: Long): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(s"$input:${catalog.currentVersion + 1}".getBytes("UTF-8"))
+    val h = md.digest(s"$input:${probedVersion + 1}".getBytes("UTF-8"))
     h.map("%02x".format(_)).mkString + ".bin"
   }
 }

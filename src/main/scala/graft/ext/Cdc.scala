@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * 100 TB shape: chunking is a NARROW per-partition map over blobs
   * (no shuffle); dedup joins shuffle on the 64-bit chunk hash only —
   * the same join discipline as the fixed-size path
-  * ([[graft.operators.Dedup]] J1/J2). [[sharedChunkPairs]] carries the
+  * ([[graft.api.Deduplicator.deduplicateBatch]] J1/J2). [[sharedChunkPairs]] carries the
   * hot-chunk cap ([[Winnow]]'s / q149's argument): a chunk content
   * appearing in more than `maxDocsPerChunk` documents is boilerplate,
   * non-discriminative for pairing, and would otherwise go quadratic on

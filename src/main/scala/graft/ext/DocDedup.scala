@@ -26,11 +26,11 @@ object DocDedup {
 
   /** First-wins exact dedup: keep the lowest-`idCol` row per distinct
     * `textCol` value — the dataset analog of the engine's in-run
-    * first-occurrence logic (Dedup.scala J2). groupBy(min) + semi-join
-    * rather than a row_number window: the aggregate partial-combines
-    * and the semi-join keys on the UNIQUE id column, so a text
-    * duplicated a billion times cannot serialize one task the way a
-    * partitionBy(digest) window would.
+    * first-occurrence logic (`Deduplicator.deduplicateBatch` J2).
+    * groupBy(min) + semi-join rather than a row_number window: the
+    * aggregate partial-combines and the semi-join keys on the UNIQUE
+    * id column, so a text duplicated a billion times cannot serialize
+    * one task the way a partitionBy(digest) window would.
     */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val keepers = df
@@ -794,19 +794,11 @@ object DocDedup {
     */
   private[ext] def nearDupClustersImpl(pairs: DataFrame): (DataFrame, Int) = {
     val sc = pairs.sparkSession.sparkContext
-    // localCheckpoint pins blocks behind an INTERNAL RDD the returned
-    // DataFrame does not expose (`df.rdd` is a fresh deserialization
-    // wrapper — unpersisting it frees nothing). Capture the backing
-    // RDD through the persistent-RDD registry delta so superseded
-    // rounds can actually be freed; without this every iteration pins
-    // another copy of the edge table for the caller's whole session.
-    def checkpointPinned(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      val pinned = sc.getPersistentRDDs
-        .filterNot(kv => before(kv._1)).values.toSeq
-      (out, pinned)
-    }
+    // Each checkpoint's blocks are captured so superseded rounds can
+    // actually be freed; without this every iteration pins another copy
+    // of the edge table for the caller's whole session.
+    def checkpointPinned(df: DataFrame) =
+      graft.Jobs.pinnedBy(sc)(df.localCheckpoint())
     // Every id that appears in a pair (the output cover) — pinned once,
     // up front: component minima lose all their edges at the star
     // fixpoint's left side, so the final labels must re-join the cover.

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -144,30 +145,33 @@ object IndexMaintenance {
     * markers excluded) — the probe-cost gauge, and the one file counter
     * the streaming cost trigger and the bench gates' `*.index_files` read.
     */
-  def dataFileCount(spark: SparkSession, path: String): Long =
-    dataFilesAndBytes(spark, path)._1
-
-  /** (file count, total bytes) of data files under `path`. Recurses
-    * on the FileStatus objects listStatus already returned — one
-    * metadata RPC per DIRECTORY, not per file (this runs twice per
-    * compaction on exactly the many-thousand-file layouts compaction
-    * targets).
-    */
-  private def dataFilesAndBytes(spark: SparkSession,
-                                path: String): (Long, Long) = {
+  def dataFileCount(spark: SparkSession, path: String): Long = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (0L, 0L)
-    def walk(st: org.apache.hadoop.fs.FileStatus): (Long, Long) =
+    if (!fs.exists(root)) return 0L
+    // recurses on the FileStatus objects listStatus already returned:
+    // one metadata RPC per DIRECTORY, not per file
+    def walk(st: org.apache.hadoop.fs.FileStatus): Long =
       if (st.isDirectory)
         fs.listStatus(st.getPath).iterator
           .filterNot(s => s.getPath.getName.startsWith("_") ||
             s.getPath.getName.startsWith("."))
-          .map(walk)
-          .foldLeft((0L, 0L)) { case ((f, b), (f2, b2)) => (f + f2, b + b2) }
-      else (1L, st.getLen)
+          .map(walk).sum
+      else 1L
     walk(fs.getFileStatus(root))
   }
+
+  /** (data files, total bytes) of `df`, a plain parquet read, from the
+    * file listing Spark made when it resolved the read — no second walk
+    * of the tree. Spark's listing skips the same `_`/`.` names
+    * [[dataFileCount]] does.
+    */
+  private def listedFiles(df: DataFrame): (Long, Long) =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation } match {
+      case Some(h: HadoopFsRelation) =>
+        (h.location.inputFiles.length.toLong, h.location.sizeInBytes)
+      case _ => (0L, 0L)
+    }
 
   /** Rewrite the index at `path` so each partition directory holds a
     * single file (or, for an unpartitioned index like flat PQ, so the
@@ -209,9 +213,7 @@ object IndexMaintenance {
     val entries = fs.listStatus(root)
     val hasData = entries.exists(s => !s.getPath.getName.startsWith("_") &&
       !s.getPath.getName.startsWith("."))
-    val (filesBefore, bytesBefore) = dataFilesAndBytes(spark, path)
-    if (!hasData && batch.isEmpty)
-      return CompactStats(filesBefore, filesBefore, 0L)
+    if (!hasData && batch.isEmpty) return CompactStats(0L, 0L, 0L)
 
     val uuid = java.util.UUID.randomUUID.toString.take(8)
     val tag = if (batch.isDefined) BatchMark + uuid else uuid
@@ -222,6 +224,8 @@ object IndexMaintenance {
       val schema = SignatureIndex.dataSchema(spark, path, partitionCols)
       schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
     }
+    // the index's files and bytes, from the listing its read just made
+    val (filesBefore, bytesBefore) = index.fold((0L, 0L))(listedFiles)
     // the batch's columns in the index's order and types (partition
     // columns read back as discovered from the directory names)
     val rowsIn = (index, batch) match {
@@ -260,8 +264,8 @@ object IndexMaintenance {
     // row-preservation check BEFORE anything becomes visible: a lost
     // or duplicated row aborts with the fragmented-but-correct index
     // untouched. Parquet count() is footer-metadata cheap.
-    val rowsAfter = graft.Jobs.tagged(spark, "compactIndex.verify")(
-      stagedRows(spark, fs, tmp, StructType(
+    val (rowsAfter, filesAfter) = graft.Jobs.tagged(spark, "compactIndex.verify")(
+      staged(spark, fs, tmp, StructType(
         rowsIn.schema.filterNot(f => partitionCols.contains(f.name)))))
     if (rowsAfter != rows) {
       fs.delete(tmp, true)
@@ -321,22 +325,26 @@ object IndexMaintenance {
     // ask #6): one extra parent listing per compaction fire, never per
     // batch or per probe
     sweepAgedLockResidue(spark, path)
-    CompactStats(filesBefore, dataFileCount(spark, path), rows)
+    CompactStats(filesBefore, filesAfter, rows)
   }
 
-  /** Rows of the staged rewrite at `tmp`: a read of its top-level
-    * entries under `basePath`, so every staged file is counted without
-    * naming the dot-directory itself (which Spark reads, but reports as
-    * ignored in a WARN line on every compaction).
+  /** (rows, data files) of the staged rewrite at `tmp` — the files are
+    * the index's after the swap: a read of its top-level entries under
+    * `basePath`, so every staged file is counted without naming the
+    * dot-directory itself (which Spark reads, but reports as ignored in
+    * a WARN line on every compaction).
     */
-  private def stagedRows(spark: SparkSession,
-                         fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
-                         dataSchema: StructType): Long = {
+  private def staged(spark: SparkSession,
+                     fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
+                     dataSchema: StructType): (Long, Long) = {
     val parts = fs.listStatus(tmp).map(_.getPath).filterNot(p =>
       p.getName.startsWith("_") || p.getName.startsWith("."))
-    if (parts.isEmpty) 0L
-    else spark.read.schema(dataSchema).option("basePath", tmp.toString)
-      .parquet(parts.map(_.toString).toIndexedSeq: _*).count()
+    if (parts.isEmpty) (0L, 0L)
+    else {
+      val df = spark.read.schema(dataSchema).option("basePath", tmp.toString)
+        .parquet(parts.map(_.toString).toIndexedSeq: _*)
+      (df.count(), listedFiles(df)._1)
+    }
   }
 
   /** Age-gated sweep of LOCK residue next to the index at `path` (r16

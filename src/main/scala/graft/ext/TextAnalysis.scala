@@ -374,11 +374,8 @@ object TextAnalysis {
     val ss = words.sparkSession
     val sc = ss.sparkContext
     import ss.implicits._
-    def checkpointPinned(ds: org.apache.spark.sql.Dataset[(Seq[String], Long)]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = ds.localCheckpoint()
-      (out, sc.getPersistentRDDs.filterNot(kv => before(kv._1)).values.toSeq)
-    }
+    def checkpointPinned(ds: org.apache.spark.sql.Dataset[(Seq[String], Long)]) =
+      graft.Jobs.pinnedBy(sc)(ds.localCheckpoint())
     val init =
       if (byteLevel)
         words.select(col(wordCol).cast("string").as("w"),

@@ -3,9 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.spark.util.sketch.BloomFilter
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
@@ -67,6 +69,13 @@ import scala.jdk.CollectionConverters._
   * to measured cardinality (the rescaled sizing rides a per-version
   * BLOOM_META next to the filter), so the prefilter's cheapness is
   * restored by routine maintenance, not a new-catalog migration.
+  *
+  * One version per call: every public call resolves [[currentVersion]]
+  * once, at entry, and reads only that version, whose MANIFEST, BLOOM
+  * and BLOOM_META it reads at most once. Every writer publishes through
+  * [[writeVersion]], which resolves the version once more and refuses,
+  * writing nothing, to publish on top of a version the writer did not
+  * read.
   */
 class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
               bloomItems: Long = 1000000L) {
@@ -80,80 +89,97 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   private def metaPath = new Path(dir, "_graft_catalog_meta")
 
-  /** Effective bucket width: the persisted value if the catalog exists,
-    * else the constructor's (persisted by the first commit). Read once —
-    * the width of an existing catalog never changes.
-    */
-  private def readMetaText(): Option[String] =
-    if (!fs.exists(metaPath)) None
-    else {
-      val in = fs.open(metaPath)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](256)
-        var n = in.read(b)
-        while (n >= 0) { if (n > 0) buf.write(b, 0, n); n = in.read(b) }
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
+  /** The whole of file `p`, or None when it does not exist. */
+  private def readAll(p: Path): Option[Array[Byte]] =
+    try {
+      val in = fs.open(p)
+      try Some(in.readAllBytes()) finally in.close()
+    } catch { case _: FileNotFoundException => None }
 
-  private lazy val bucketWidth: Int =
-    readMetaText() match {
-      case Some(text) =>
-        text.linesIterator.collectFirst {
-          case l if l.startsWith("bucket_chars=") =>
-            l.stripPrefix("bucket_chars=").trim.toInt
-        }.getOrElse(2)
+  /** The `key=value` lines of a sidecar, values trimmed. */
+  private def keyValues(bytes: Array[Byte]): Map[String, String] =
+    new String(bytes, StandardCharsets.UTF_8).linesIterator
+      .filter(_.contains('='))
+      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1).trim }
+      .toMap
+
+  /** The layout knobs, parsed once per instance from the meta sidecar:
+    * the effective bucket width and the CREATION bloom capacity. A
+    * missing line, or a catalog that predates the meta, reads as the
+    * historic value (width 2, bloom disabled); an empty catalog takes
+    * the constructor's knobs, which its first commit pins. Both are
+    * immutable; the EFFECTIVE bloom sizing of a version is
+    * [[Sidecars.bloomParams]].
+    */
+  private lazy val (bucketWidth, bloomCapacity): (Int, Long) =
+    readAll(metaPath).map(keyValues) match {
+      case Some(kv) => (kv.get("bucket_chars").fold(2)(_.toInt),
+        kv.get("bloom_items").fold(0L)(_.toLong))
       case None =>
-        if (currentVersion > 0) 2 // pre-meta layout: the historic constant
-        else bucketChars
+        if (currentVersion > 0) (2, 0L) // pre-meta layout
+        else (bucketChars, bloomItems)
     }
 
-  /** CREATION bloom capacity: the persisted value on reopen (a missing
-    * line or a pre-meta catalog → 0 = bloom disabled), else the
-    * constructor's. Immutable like the bucket width; the EFFECTIVE
-    * sizing of a given version is [[bloomParamsAt]] — a compact-time
-    * saturation rebuild rescales it through a per-version BLOOM_META
-    * without touching this creation default.
-    */
-  private lazy val bloomCapacity: Long =
-    readMetaText() match {
-      case Some(text) =>
-        text.linesIterator.collectFirst {
-          case l if l.startsWith("bloom_items=") =>
-            l.stripPrefix("bloom_items=").trim.toLong
-        }.getOrElse(0L)
-      case None => if (currentVersion > 0) 0L else bloomItems
+  /** Committed version `v`'s sidecars, each read on first use. */
+  private final class Sidecars(val v: Long) {
+    private def file(name: String) =
+      if (v <= 0) None else readAll(new Path(versionDir(v), name))
+
+    /** bucket → version that last rewrote that bucket. A committed
+      * version without a MANIFEST (written by a pre-manifest layout)
+      * degrades gracefully: every bucket directory physically present
+      * under that version is treated as written there.
+      */
+    lazy val manifest: Map[String, Long] = file("MANIFEST") match {
+      case Some(bytes) =>
+        new String(bytes, StandardCharsets.UTF_8).split("\n").iterator
+          .filter(_.nonEmpty).map { line =>
+            val Array(b, ver) = line.split(",")
+            b -> ver.toLong
+          }.toMap
+      case None if v > 0 =>
+        try fs.listStatus(new Path(versionDir(v), "hash_links")).iterator
+          .map(_.getPath.getName)
+          .collect { case BucketRe(b) => b -> v }.toMap
+        catch { case _: FileNotFoundException => Map.empty }
+      case None => Map.empty
     }
 
-  private def bloomNumBits: Long = org.apache.spark.util.sketch
-    .BloomFilter.optimalNumOfBits(bloomCapacity, BloomFpp)
+    lazy val bloom: Option[Array[Byte]] = file("BLOOM")
 
-  /** Effective (capacity, numBits) of version `v`'s bloom sidecar. The
-    * root meta's `bloom_items` is the CREATION sizing; a saturated
-    * filter rebuilt by [[compact]] carries its rescaled sizing in a
-    * per-version `BLOOM_META` (staged atomically with the BLOOM it
-    * describes), and every later commit's delta sketch must match the
-    * CARRIED filter's sizing — (capacity, numBits) is that
-    * bit-compatibility contract, so it is resolved per version, newest
-    * sidecar winning, root meta as the pre-rebuild fallback.
-    */
-  private def bloomParamsAt(v: Long): (Long, Long) = {
-    val p = new Path(versionDir(v), "BLOOM_META")
-    val fromSidecar: Option[(Long, Long)] =
-      if (v <= 0 || !fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = text.linesIterator.filter(_.contains('='))
-          .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1).trim }
-          .toMap
+    /** Effective (capacity, numBits) of the bloom sidecar. The root
+      * meta's `bloom_items` is the CREATION sizing; a saturated filter
+      * rebuilt by [[compact]] carries its rescaled sizing in a
+      * per-version `BLOOM_META` (staged atomically with the BLOOM it
+      * describes), and every later commit's delta sketch must match the
+      * CARRIED filter's sizing — (capacity, numBits) is that
+      * bit-compatibility contract, so it is resolved per version, newest
+      * sidecar winning, root meta as the pre-rebuild fallback.
+      */
+    lazy val bloomParams: (Long, Long) = file("BLOOM_META").map(keyValues)
+      .flatMap { kv =>
         for (c <- kv.get("capacity").flatMap(_.toLongOption);
              b <- kv.get("num_bits").flatMap(_.toLongOption)) yield (c, b)
       }
-    fromSidecar.getOrElse((bloomCapacity,
-      if (bloomCapacity > 0) bloomNumBits else 0L))
+      .getOrElse((bloomCapacity, if (bloomCapacity <= 0) 0L
+        else BloomFilter.optimalNumOfBits(bloomCapacity, BloomFpp)))
+  }
+
+  /** The sidecars of the version [[currentVersion]] resolved last. A
+    * committed version never changes (it is published whole by one
+    * rename, and no version number is committed twice), so every read
+    * of it — a call's readers and commit steps, a dedup batch's probe
+    * and commit — shares one read of each file.
+    */
+  @volatile private var resolved = new Sidecars(0L)
+
+  private def at(v: Long): Sidecars =
+    Some(resolved).filter(_.v == v).getOrElse(new Sidecars(v))
+
+  private def bytesOf(bf: BloomFilter): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    bos.toByteArray
   }
 
   /** Distributed serialized-bloom sketch of `df.hash` at the given
@@ -179,7 +205,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   private[graft] def observeCommit(df: DataFrame, v: Long, isNew: Option[Column])
       : (DataFrame, () => (Set[String], Option[Array[Byte]])) = {
     graft.functions.VecExpressions.register(spark)
-    val (cap, bits) = bloomParamsAt(v)
+    val (cap, bits) = at(v).bloomParams
     // the aggregate skips null keys; `when` stays outside xxhash64,
     // which hashes a null to its seed
     val bloom = isNew match {
@@ -194,21 +220,6 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
         Option(o.get("bloom").asInstanceOf[Array[Byte]])))
   }
 
-  private def readBloom(v: Long): Option[Array[Byte]] = {
-    val p = new Path(versionDir(v), "BLOOM")
-    if (v == 0 || !fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](1 << 16)
-        var n = in.read(b)
-        while (n >= 0) { if (n > 0) buf.write(b, 0, n); n = in.read(b) }
-        Some(buf.toByteArray)
-      } finally in.close()
-    }
-  }
-
   /** Serialized bloom filter over EVERY hash ever committed (None when
     * the catalog is empty, was created with `bloomItems = 0`, or
     * predates the sidecar). A bloom filter has no false negatives at
@@ -217,8 +228,14 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * ([[graft.functions.BloomMembership.certainlyNovel]]) stays exact
     * even long past capacity; saturation only degrades it toward
     * flagging everything, which is the plain join-everything path.
+    * The array is the caller's own copy.
     */
-  def seenBloom(): Option[Array[Byte]] = readBloom(currentVersion)
+  def seenBloom(): Option[Array[Byte]] = bloomAt(currentVersion).map(_.clone)
+
+  /** [[seenBloom]] at committed version `v`, shared with the catalog's
+    * own reads of `v`: read-only.
+    */
+  private[graft] def bloomAt(v: Long): Option[Array[Byte]] = at(v).bloom
 
   /** Operational health of the bloom sidecar: (measured expected
     * false-positive rate, set-bit count of the underlying filter —
@@ -230,11 +247,13 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * FPP drifts 10x past design — this is the pull-side twin for a
     * live session or a capacity-planning pass.
     */
-  def bloomHealth(): Option[(Double, Long, Long)] =
-    seenBloom().map { bytes =>
-      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-      (bf.expectedFpp(), bf.cardinality(), bloomParamsAt(currentVersion)._1)
+  def bloomHealth(): Option[(Double, Long, Long)] = {
+    val s = at(currentVersion)
+    s.bloom.map { bytes =>
+      val bf = BloomFilter.readFrom(bytes)
+      (bf.expectedFpp(), bf.cardinality(), s.bloomParams._1)
     }
+  }
 
   private def bucketOf(hash: String): String = hash.substring(0, bucketWidth)
   private def bucketCol(hash: org.apache.spark.sql.Column) =
@@ -242,15 +261,29 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   private def versionDir(v: Long) = new Path(dir, f"v_$v%06d")
 
-  /** Highest committed version, or 0 (empty catalog). */
-  def currentVersion: Long = {
-    val base = new Path(dir)
-    if (!fs.exists(base)) 0L
-    else fs.listStatus(base).iterator
-      .map(_.getPath.getName)
-      .collect { case VersionRe(n) => n.toLong }
+  /** The entries of the catalog root (none when it does not exist). */
+  private def rootEntries(): Seq[FileStatus] =
+    try fs.listStatus(new Path(dir)).toSeq
+    catch { case _: FileNotFoundException => Nil }
+
+  /** The committed versions among root `entries`, newest first; each
+    * COMMIT marker is checked only when the iterator reaches it.
+    */
+  private def committedOf(entries: Seq[FileStatus]): Iterator[Long] =
+    entries.map(_.getPath.getName).collect { case VersionRe(n) => n.toLong }
+      .sorted(Ordering[Long].reverse).iterator
       .filter(v => fs.exists(new Path(versionDir(v), "COMMIT")))
-      .foldLeft(0L)(math.max)
+
+  /** Highest committed version, or 0 (empty catalog): one root listing
+    * and, in the common case, one COMMIT check. Every public call
+    * resolves it once, at entry, and reads only that version; a writer
+    * resolves it once more, in [[writeVersion]], to refuse publishing
+    * on top of a version it did not read.
+    */
+  def currentVersion: Long = {
+    val v = committedOf(rootEntries()).nextOption().getOrElse(0L)
+    if (resolved.v != v) resolved = new Sidecars(v)
+    v
   }
 
   /** file_id the next committed run will receive: max(`file_id`) + 1,
@@ -258,8 +291,10 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * parquet footers, so it runs no Spark job. A non-empty row group
     * whose footer carries no statistics falls back to the aggregate.
     */
-  def nextFileId: Long = {
-    val v = currentVersion
+  def nextFileId: Long = nextFileIdAt(currentVersion)
+
+  /** [[nextFileId]] at committed version `v`. */
+  private[graft] def nextFileIdAt(v: Long): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val maxima: Seq[Option[Long]] =
       if (v == 0) Nil
@@ -276,7 +311,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
           finally in.close()
         }
     if (maxima.forall(_.isDefined)) maxima.flatten.foldLeft(0L)(math.max) + 1
-    else files().agg(coalesce(max("file_id"), lit(0L))).head().getLong(0) + 1
+    else filesAt(v).agg(coalesce(max("file_id"), lit(0L))).head().getLong(0) + 1
   }
 
   // ---------------------------------------------------------------- reads
@@ -285,43 +320,22 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  def files(): DataFrame = {
-    val v = currentVersion
+  def files(): DataFrame = filesAt(currentVersion)
+
+  /** The files table at committed version `v`. */
+  private[graft] def filesAt(v: Long): DataFrame =
     if (v == 0) emptyDf(filesSchema)
     else spark.read.schema(filesSchema)
       .parquet(new Path(versionDir(v), "files").toString)
-  }
-
-  /** bucket → version that last rewrote that bucket, at version `v`.
-    * A committed version without a MANIFEST (written by a pre-manifest
-    * layout) degrades gracefully: every bucket directory physically
-    * present under that version is treated as written there.
-    */
-  private def readManifest(v: Long): Map[String, Long] =
-    if (v == 0) Map.empty
-    else if (!fs.exists(new Path(versionDir(v), "MANIFEST"))) {
-      val linksDir = new Path(versionDir(v), "hash_links")
-      if (!fs.exists(linksDir)) Map.empty
-      else fs.listStatus(linksDir).iterator
-        .map(_.getPath.getName)
-        .collect { case BucketRe(b) => b -> v }.toMap
-    } else {
-      val in = fs.open(new Path(versionDir(v), "MANIFEST"))
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](8192)
-        var n = in.read(b)
-        while (n >= 0) { if (n > 0) buf.write(b, 0, n); n = in.read(b) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      text.split("\n").iterator.filter(_.nonEmpty).map { line =>
-        val Array(b, ver) = line.split(",")
-        b -> ver.toLong
-      }.toMap
-    }
 
   private def bucketPath(bucket: String, ver: Long): Path =
     new Path(new Path(versionDir(ver), "hash_links"), s"bucket=$bucket")
+
+  /** `hash_links` as manifest `man` maps its buckets. */
+  private def linksOf(man: Map[String, Long]): DataFrame =
+    if (man.isEmpty) emptyDf(linksSchema)
+    else spark.read.schema(linksSchema)
+      .parquet(man.map { case (b, ver) => bucketPath(b, ver).toString }.toSeq: _*)
 
   def links(): DataFrame = linksAt(currentVersion)
 
@@ -335,12 +349,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * chunks did the store know when THIS corpus snapshot was built?").
     * [[vacuum]] is the explicit, logged end of that guarantee.
     */
-  def linksAt(version: Long): DataFrame = {
-    val man = readManifest(version)
-    if (man.isEmpty) emptyDf(linksSchema)
-    else spark.read.schema(linksSchema)
-      .parquet(man.map { case (b, ver) => bucketPath(b, ver).toString }.toSeq: _*)
-  }
+  def linksAt(version: Long): DataFrame = linksOf(at(version).manifest)
 
   /** Changefeed between two committed versions — the CDC surface an
     * incremental consumer (a downstream index, a replication target, a
@@ -377,7 +386,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   def getFile(filename: String): DataFrame =
     files().where(col("filename") === filename)
   def getHashLink(hash: String): DataFrame =
-    readManifest(currentVersion).get(bucketOf(hash)) match {
+    at(currentVersion).manifest.get(bucketOf(hash)) match {
       case None => emptyDf(linksSchema)
       case Some(ver) => spark.read.schema(linksSchema)
         .parquet(bucketPath(bucketOf(hash), ver).toString)
@@ -390,18 +399,19 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * admin or capacity-planning pass reads: distinct-link count, total
     * reference count (= every chunk occurrence ever committed),
     * duplicated-link count, committed file count, and the current
-    * version. One bucket-pruned links scan + the files table; every
-    * value exact (counts, not sketches — [[seenBloom]] is the
-    * approximate tier).
+    * version, all of one version. One bucket-pruned links scan + the
+    * files table; every value exact (counts, not sketches —
+    * [[seenBloom]] is the approximate tier).
     */
   def stats(): DataFrame = {
-    val l = links().agg(
+    val v = currentVersion
+    val l = linksAt(v).agg(
       count(lit(1)).as("n_links"),
       coalesce(sum("refs_num"), lit(0L)).as("sum_refs"),
       coalesce(sum(when(col("refs_num") > 1, 1L).otherwise(0L)), lit(0L))
         .as("n_dup_links"))
-    val f = files().agg(count(lit(1)).as("n_files"))
-    l.crossJoin(f).withColumn("version", lit(currentVersion))
+    val f = filesAt(v).agg(count(lit(1)).as("n_files"))
+    l.crossJoin(f).withColumn("version", lit(v))
   }
 
   /** The reference's only pure relational query: duplicate-frequency
@@ -415,11 +425,14 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   // -------------------------------------------------------------- commits
 
-  /** Single-run commit (S7/S8/A2/A4). Returns the run's file_id. */
+  /** Single-run commit (S7/S8/A2/A4). Returns the run's file_id, taken
+    * at the version the run commits on top of.
+    */
   def commitRun(filename: String, chunkBytes: Int, algorithm: String,
                 newLinks: DataFrame, deltas: DataFrame): Long = {
-    val fid = nextFileId
-    commitRuns(Seq(RunSpec(fid, filename, chunkBytes, algorithm,
+    val v = currentVersion
+    val fid = nextFileIdAt(v)
+    commitRunsAt(v, Seq(RunSpec(fid, filename, chunkBytes, algorithm,
       newLinks, deltas)))
     fid
   }
@@ -436,9 +449,11 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * Deltas may reference both old-catalog hashes and this batch's new
     * hashes; both get their refs_num incremented.
     */
-  def commitRuns(runs: Seq[RunSpec]): Unit = {
-    if (runs.isEmpty) return
-    commitRunsPrelinked(
+  def commitRuns(runs: Seq[RunSpec]): Unit =
+    if (runs.nonEmpty) commitRunsAt(currentVersion, runs)
+
+  private def commitRunsAt(v: Long, runs: Seq[RunSpec]): Unit =
+    commitPrelinkedAt(v,
       runs.map(r => RunMeta(r.fileId, r.filename, r.chunkBytes, r.algorithm)),
       runs.map { r =>
         r.newLinks.select(col("hash"), lit(r.fileId).as("file_id"),
@@ -446,7 +461,6 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
       }.reduce(_ unionByName _),
       runs.map(_.deltas.select(col("hash"), col("delta")))
         .reduce(_ unionByName _))
-  }
 
   /** [[commitRuns]] with the links already combined: `newLinks` carries
     * its own `file_id` column instead of one DataFrame per run. This is
@@ -462,38 +476,36 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * and new hashes.
     */
   def commitRunsPrelinked(metas: Seq[RunMeta], newLinks: DataFrame,
-                          deltas: DataFrame): Unit = {
-    if (metas.isEmpty) return
+                          deltas: DataFrame): Unit =
+    if (metas.nonEmpty) commitPrelinkedAt(currentVersion, metas, newLinks, deltas)
+
+  private def commitPrelinkedAt(v: Long, metas: Seq[RunMeta],
+                                newLinks: DataFrame, deltas: DataFrame): Unit = {
     // Materialized once, BOTH contributions through ONE checkpoint pass
     // (a union with a marker column — two separate localCheckpoints
     // would cost two jobs per commit, forever, in streaming). Without
     // pinning, a caller's non-deterministic input could yield different
     // buckets across the executions below — and a bucket written but
     // absent from `touched` would silently drop its pre-existing rows.
-    // The checkpoint blocks are freed on exit (registry delta:
-    // localCheckpoint pins an internal RDD the DataFrame does not
-    // expose) — a streaming session commits hundreds of micro-batches,
-    // and leaked per-commit blocks would accumulate for its whole
-    // lifetime.
-    val beforeCp = spark.sparkContext.getPersistentRDDs.keySet
-    val v = currentVersion
-    // the touched buckets ride this checkpoint as an observed metric
-    val (stagedDf, stagedSeen) = observeCommit(newLinks
-      .select(col("hash"), col("file_id").cast(LongType).as("file_id"),
-        col("line"), col("refs_num").cast(LongType).as("refs_num"),
-        lit(null).cast(LongType).as("delta"),
-        lit(false).as("is_delta"))
-      .unionByName(deltas
-        .select(col("hash"), col("delta").cast(LongType).as("delta"))
-        .groupBy("hash").agg(sum("delta").as("delta"))
-        .select(col("hash"), lit(null).cast(LongType).as("file_id"),
-          lit(null).cast(LongType).as("line"),
-          lit(null).cast(LongType).as("refs_num"),
-          col("delta"), lit(true).as("is_delta"))), v, None)
-    val staged = stagedDf.localCheckpoint()
-    def cpPinned = spark.sparkContext.getPersistentRDDs
-      .filterNot(kv => beforeCp(kv._1)).values.toSeq
-    try {
+    // The checkpoint blocks are freed on exit: a streaming session
+    // commits hundreds of micro-batches, and leaked per-commit blocks
+    // would accumulate for its whole lifetime.
+    val base = at(v)
+    val (_, pinned) = graft.Jobs.pinnedBy(spark.sparkContext) {
+      // the touched buckets ride this checkpoint as an observed metric
+      val (stagedDf, stagedSeen) = observeCommit(newLinks
+        .select(col("hash"), col("file_id").cast(LongType).as("file_id"),
+          col("line"), col("refs_num").cast(LongType).as("refs_num"),
+          lit(null).cast(LongType).as("delta"),
+          lit(false).as("is_delta"))
+        .unionByName(deltas
+          .select(col("hash"), col("delta").cast(LongType).as("delta"))
+          .groupBy("hash").agg(sum("delta").as("delta"))
+          .select(col("hash"), lit(null).cast(LongType).as("file_id"),
+            lit(null).cast(LongType).as("line"),
+            lit(null).cast(LongType).as("refs_num"),
+            col("delta"), lit(true).as("is_delta"))), v, None)
+      val staged = stagedDf.localCheckpoint()
       val allNewRaw = staged.where(!col("is_delta"))
         .select("hash", "file_id", "line", "refs_num")
       val allDeltas = staged.where(col("is_delta"))
@@ -508,11 +520,12 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
       // left on the commit path. Checkpointed: the result feeds the
       // merged write, and its pass observes the bloom delta.
       val (allNewDf, newSeen) = observeCommit(allNewRaw
-        .join(linksTouched(v, touched).select("hash"), Seq("hash"),
+        .join(linksTouched(base, touched).select("hash"), Seq("hash"),
           "left_anti"), v, Some(lit(true)))
       val allNew = allNewDf.localCheckpoint()
-      commitChecked(metas, v, allNew, allDeltas, touched, newSeen()._2)
-    } finally cpPinned.foreach(_.unpersist(false))
+      commitChecked(metas, base, allNew, allDeltas, touched, newSeen()._2)
+    }
+    pinned.foreach(_.unpersist(false))
   }
 
   /** [[commitRunsPrelinked]] minus the defensive anti-join and the
@@ -525,30 +538,26 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * the catalog at `probedVersion` (the caller probed that version
     * under the single-writer window); `deltas` carries one row per
     * hash; `touched` and `deltaBloom` are what [[observeCommit]] saw of
-    * newLinks ∪ deltas on the pass that materialized them. Fails loudly
-    * if the catalog moved past `probedVersion`. Spark-job cost per
-    * commit: the two version writes only.
+    * newLinks ∪ deltas on the pass that materialized them. Commits on
+    * top of `probedVersion`, reading its sidecars through the same
+    * shared read as the probe; [[writeVersion]] fails loudly, writing
+    * nothing, if the catalog moved past it. Spark-job cost per commit:
+    * the two version writes only.
     */
   private[graft] def commitRunsPrechecked(metas: Seq[RunMeta],
                                           newLinks: DataFrame,
                                           deltas: DataFrame,
                                           probedVersion: Long,
                                           touched: Set[String],
-                                          deltaBloom: Option[Array[Byte]]): Unit = {
-    if (metas.isEmpty) return
-    val v = currentVersion
-    if (v != probedVersion)
-      throw new IllegalStateException(
-        s"commitRunsPrechecked: the catalog moved from version " +
-          s"$probedVersion to $v since the probe; nothing written")
-    commitChecked(metas, v,
-      newLinks.select(col("hash"), col("file_id").cast(LongType).as("file_id"),
-        col("line"), col("refs_num").cast(LongType).as("refs_num")),
-      deltas.select(col("hash"), col("delta").cast(LongType).as("delta")),
-      touched, deltaBloom)
-  }
+                                          deltaBloom: Option[Array[Byte]]): Unit =
+    if (metas.nonEmpty)
+      commitChecked(metas, at(probedVersion),
+        newLinks.select(col("hash"), col("file_id").cast(LongType).as("file_id"),
+          col("line"), col("refs_num").cast(LongType).as("refs_num")),
+        deltas.select(col("hash"), col("delta").cast(LongType).as("delta")),
+        touched, deltaBloom)
 
-  /** `hash_links` restricted to `buckets` at version `v` — the commit
+  /** `hash_links` restricted to `buckets` at version `base` — the commit
     * path's bucket-pruned read: prunes at the PATH level (only the
     * touched buckets' files are opened), where a filter over
     * [[linksAt]] would scan every bucket and drop rows. Sound because
@@ -556,15 +565,8 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * prefixes to it (the partitioned write's own column). An empty
     * bucket set reads nothing.
     */
-  private def linksTouched(v: Long, buckets: Set[String]): DataFrame =
-    if (buckets.isEmpty) emptyDf(linksSchema)
-    else {
-      val man = readManifest(v).filter { case (b, _) => buckets(b) }
-      if (man.isEmpty) emptyDf(linksSchema)
-      else spark.read.schema(linksSchema)
-        .parquet(man.map { case (b, ver) => bucketPath(b, ver).toString }
-          .toSeq: _*)
-    }
+  private def linksTouched(base: Sidecars, buckets: Set[String]): DataFrame =
+    linksOf(base.manifest.filter { case (b, _) => buckets(b) })
 
   /** Shared tail of the two commit fronts. `allNew` is the final
     * new-link row set (already catalog-disjoint) and `allDeltas` one
@@ -573,72 +575,59 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * superset of allNew ∪ allDeltas' buckets; everything else is
     * carried forward by manifest reference, so commit cost stays ∝ the
     * run, never ∝ catalog history. `deltaBloom` is the sketch of
-    * allNew's hashes at `v`'s bloom sizing (None when empty).
+    * allNew's hashes at `base`'s bloom sizing (None when empty).
     */
-  private def commitChecked(metas: Seq[RunMeta], v: Long,
+  private def commitChecked(metas: Seq[RunMeta], base: Sidecars,
                             allNew: DataFrame,
                             allDeltas: DataFrame,
                             touched: Set[String],
                             deltaBloom: Option[Array[Byte]]): Unit = {
-    val oldManifest = readManifest(v)
-
-    val newFiles = files().unionByName(
+    val newFiles = filesAt(base.v).unionByName(
       spark.createDataFrame(
         metas.map(r => (r.fileId, r.filename, r.chunkBytes, r.algorithm)))
         .toDF("file_id", "filename", "chunk_bytes", "algorithm"))
-
-    {
-      val oldTouched = linksTouched(v, touched)
-      // Rolling bloom sidecar: the caller's delta sketch over ONLY this
-      // commit's new hashes (cost ∝ run; deltas touch pre-bloomed
-      // hashes), OR-merged into the carried filter. (capacity, numBits)
-      // come from the pinned meta, so every delta is bit-compatible
-      // with every predecessor by construction.
-      val (bCap, bBits) = bloomParamsAt(v)
-      val newBloom: Option[Array[Byte]] =
-        if (bCap <= 0L) None
-        else {
-          import org.apache.spark.util.sketch.BloomFilter
-          val merged = (readBloom(v).map(BloomFilter.readFrom),
-              deltaBloom.map(BloomFilter.readFrom)) match {
-            case (Some(o), Some(d)) => o.mergeInPlace(d)
-            case (Some(o), None)    => o
-            case (None, Some(d))    => d
-            // bloom-enabled catalog, empty first commit: write the
-            // empty filter so the sidecar exists from version 1 on
-            case (None, None) => BloomFilter.create(bCap, bBits)
-          }
-          // Saturation watch (r16, free — the filter is already in
-          // memory): a capacity-pinned filter fed past its design point
-          // stays CORRECT (no false negatives) but stops being a useful
-          // prefilter. Warned per commit while saturated, so an
-          // alerting scrape sees a sustained rate; the next
-          // [[compact]] fire self-heals it by rebuilding the sidecar
-          // at a capacity rescaled to the measured cardinality.
-          val fpp = merged.expectedFpp()
-          if (fpp > BloomFpp * 10)
-            graft.ext.MaintenanceEvents.record(dir,
-              graft.ext.MaintenanceEvents.BloomSaturated,
-              f"expected_fpp=$fpp%.4f design_fpp=$BloomFpp " +
-                f"cardinality=${merged.cardinality()} " +
-                f"capacity=$bCap")
-          val bos = new java.io.ByteArrayOutputStream()
-          merged.writeTo(bos)
-          Some(bos.toByteArray)
+    // Rolling bloom sidecar: the caller's delta sketch over ONLY this
+    // commit's new hashes (cost ∝ run; deltas touch pre-bloomed
+    // hashes), OR-merged into the carried filter. (capacity, numBits)
+    // come from the pinned meta, so every delta is bit-compatible
+    // with every predecessor by construction.
+    val (bCap, bBits) = base.bloomParams
+    val newBloom: Option[Array[Byte]] =
+      if (bCap <= 0L) None
+      else {
+        val merged = (base.bloom.map(BloomFilter.readFrom),
+            deltaBloom.map(BloomFilter.readFrom)) match {
+          case (Some(o), Some(d)) => o.mergeInPlace(d)
+          case (Some(o), None)    => o
+          case (None, Some(d))    => d
+          // bloom-enabled catalog, empty first commit: write the
+          // empty filter so the sidecar exists from version 1 on
+          case (None, None) => BloomFilter.create(bCap, bBits)
         }
-
-      val bParams = if (bCap > 0L) Some((bCap, bBits)) else None
-      if (touched.isEmpty) {
-        writeVersion(v + 1, newFiles, None, oldManifest, newBloom, bParams)
-      } else {
-        val mergedData = oldTouched.unionByName(allNew)
-          .join(allDeltas, Seq("hash"), "left")
-          .withColumn("refs_num", col("refs_num") + coalesce(col("delta"), lit(0L)))
-          .drop("delta")
-        writeVersion(v + 1, newFiles, Some(mergedData), oldManifest,
-          newBloom, bParams)
+        // Saturation watch (r16, free — the filter is already in
+        // memory): a capacity-pinned filter fed past its design point
+        // stays CORRECT (no false negatives) but stops being a useful
+        // prefilter. Warned per commit while saturated, so an
+        // alerting scrape sees a sustained rate; the next
+        // [[compact]] fire self-heals it by rebuilding the sidecar
+        // at a capacity rescaled to the measured cardinality.
+        val fpp = merged.expectedFpp()
+        if (fpp > BloomFpp * 10)
+          graft.ext.MaintenanceEvents.record(dir,
+            graft.ext.MaintenanceEvents.BloomSaturated,
+            f"expected_fpp=$fpp%.4f design_fpp=$BloomFpp " +
+              f"cardinality=${merged.cardinality()} " +
+              f"capacity=$bCap")
+        Some(bytesOf(merged))
       }
-    }
+    val mergedData =
+      if (touched.isEmpty) None
+      else Some(linksTouched(base, touched).unionByName(allNew)
+        .join(allDeltas, Seq("hash"), "left")
+        .withColumn("refs_num", col("refs_num") + coalesce(col("delta"), lit(0L)))
+        .drop("delta"))
+    writeVersion(base.v + 1, newFiles, mergedData, base.manifest, newBloom,
+      if (bCap > 0L) Some((bCap, bBits)) else None)
   }
 
   /** Retention/deletion: remove a stored file and its reference counts
@@ -677,18 +666,17 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     */
   def dropRun(filename: String, chunkHashes: DataFrame): Long = {
     val v = currentVersion
-    val oldManifest = readManifest(v)
-    val fRows = files().where(col("filename") === filename).collect()
+    val base = at(v)
+    val files = filesAt(v)
+    val fRows = files.where(col("filename") === filename).collect()
     require(fRows.length == 1,
       s"dropRun: '$filename' has ${fRows.length} catalog rows, need 1")
     val fid = fRows(0).getAs[Long]("file_id")
-    val beforeCp = spark.sparkContext.getPersistentRDDs.keySet
-    val occ = chunkHashes.select(col("hash"))
-      .groupBy("hash").agg(count(lit(1)).as("occ")).localCheckpoint()
-    val cpPinned = spark.sparkContext.getPersistentRDDs
-      .filterNot(kv => beforeCp(kv._1)).values.toSeq
+    val (occ, pinned) = graft.Jobs.pinnedBy(spark.sparkContext)(
+      chunkHashes.select(col("hash"))
+        .groupBy("hash").agg(count(lit(1)).as("occ")).localCheckpoint())
     try {
-      val oldLinks = links()
+      val oldLinks = linksOf(base.manifest)
       val audited = oldLinks.join(occ, Seq("hash"), "left")
         .withColumn("refs2",
           col("refs_num") - coalesce(col("occ"), lit(0L)))
@@ -716,23 +704,21 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
           bad.map { case (k, n) => s"$k=$n" }.mkString(", "))
       val touched = viol.getAs[scala.collection.Seq[String]]("touched")
         .toSet
-      val newFiles = files().where(col("file_id") =!= fid)
-      if (touched.isEmpty) // zero-chunk file: files-table change only
-        writeVersion(v + 1, newFiles, None, oldManifest, readBloom(v),
-          Some(bloomParamsAt(v)))
-      else {
-        val merged = oldLinks
+      // a zero-chunk file touches no bucket: files-table change only
+      val merged =
+        if (touched.isEmpty) None
+        else Some(oldLinks
           .where(bucketCol(col("hash")).isin(touched.toSeq: _*))
           .join(occ, Seq("hash"), "left")
           .withColumn("refs_num",
             col("refs_num") - coalesce(col("occ"), lit(0L)))
           .drop("occ")
-          .where(col("refs_num") > 0)
-        writeVersion(v + 1, newFiles, Some(merged), oldManifest,
-          readBloom(v), Some(bloomParamsAt(v)), dropBuckets = touched)
-      }
+          .where(col("refs_num") > 0))
+      writeVersion(v + 1, files.where(col("file_id") =!= fid), merged,
+        base.manifest, base.bloom, Some(base.bloomParams),
+        dropBuckets = touched)
       v + 1
-    } finally cpPinned.foreach(_.unpersist(false))
+    } finally pinned.foreach(_.unpersist(false))
   }
 
   /** Delete version directories that the CURRENT manifest no longer
@@ -766,10 +752,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   def vacuum(retainLast: Int = 1, retainMs: Long = 0L): Seq[Long] = {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
     require(retainMs >= 0, s"retainMs must be >= 0, got $retainMs")
-    val base = new Path(dir)
-    if (!fs.exists(base)) return Seq.empty
-    val current = currentVersion
-    val entries = fs.listStatus(base)
+    val entries = rootEntries()
     // Orphan sweep with a grace window: a fresh .tmp_* dir is most
     // likely an IN-FLIGHT commit's staging area — deleting it would
     // kill that commit mid-write. "Fresh" is judged by the NEWEST
@@ -788,7 +771,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
         // rather than crashing the sweep.
         case _: java.io.FileNotFoundException => true
       }
-    entries.iterator
+    entries
       .filter(s => s.getPath.getName.startsWith(".tmp_") &&
         !activeSince(s.getPath, cutoff))
       .foreach(s => fs.delete(s.getPath, true))
@@ -798,7 +781,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     // version number — reclaim it under the same grace window. (A
     // healthy in-flight commit never produces one: data + COMMIT appear
     // together in the atomic publish rename.)
-    entries.iterator
+    entries
       .filter { s =>
         s.getPath.getName match {
           case VersionRe(_) =>
@@ -812,13 +795,11 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     // to anchor `referenced` — the orphan sweeps above must run even on
     // an otherwise-empty catalog, where a stale bare v_000001 would
     // permanently block the FIRST commit and this method is the
-    // designated remediation.
+    // designated remediation. The current version is the newest
+    // committed one of the same listing.
+    val committed = committedOf(entries).toSeq
+    val current = committed.headOption.getOrElse(0L)
     if (current == 0) return Seq.empty
-    val committed = entries.iterator
-      .map(_.getPath.getName)
-      .collect { case VersionRe(n) => n.toLong }
-      .filter(v => fs.exists(new Path(versionDir(v), "COMMIT")))
-      .toSeq
     // Retained heads: newest `retainLast` + age window + current. Each
     // head pins its manifest's whole reference closure (readability is
     // a property of the head's manifest, not of the head's own dir).
@@ -834,7 +815,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
       }
     val heads = committed.filter(_ > current - retainLast).toSet ++
       ageKept + current
-    val referenced = heads.flatMap(h => readManifest(h).values.toSet + h)
+    val referenced = heads.flatMap(h => at(h).manifest.values.toSet + h)
     val deletable = committed
       .filter(v => v < current && !referenced.contains(v))
       .sorted
@@ -873,7 +854,8 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   def compact(retainLast: Int = 1, retainMs: Long = 0L): Long = {
     val v = currentVersion
     if (v == 0) return 0L
-    val allLinks = links().repartition(
+    val base = at(v)
+    val allLinks = linksOf(base.manifest).repartition(
       spark.sessionState.conf.numShufflePartitions, bucketCol(col("hash")))
     // The bloom is normally carried forward unchanged. But compact is
     // also the saturation self-heal point (r16 verdict): it already
@@ -884,13 +866,12 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     // saturation heals at the next compaction fire instead of forcing a
     // new-catalog migration. The rescaled sizing rides a per-version
     // BLOOM_META so later delta sketches stay bit-compatible
-    // ([[bloomParamsAt]]). Rebuilding from LIVE links is exact: the
+    // ([[Sidecars.bloomParams]]). Rebuilding from LIVE links is exact: the
     // prefilter's no-false-negatives contract is over currently
     // cataloged hashes, so a hash dropRun purged correctly reads
     // "certainly novel" again — the join it skips would find nothing.
-    import org.apache.spark.util.sketch.BloomFilter
-    val (cap0, bits0) = bloomParamsAt(v)
-    val (bloomOut, paramsOut) = readBloom(v) match {
+    val (cap0, bits0) = base.bloomParams
+    val (bloomOut, paramsOut) = base.bloom match {
       case None => (None, None)
       case Some(bytes) =>
         val bf = BloomFilter.readFrom(bytes)
@@ -907,12 +888,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
           val newCap = math.max(cap0, 2L * card)
           val newBits = BloomFilter.optimalNumOfBits(newCap, BloomFpp)
           val rebuilt = sketchHashes(allLinks, newCap, newBits)
-            .getOrElse {
-              val empty = BloomFilter.create(newCap, newBits)
-              val bos = new java.io.ByteArrayOutputStream()
-              empty.writeTo(bos)
-              bos.toByteArray
-            }
+            .getOrElse(bytesOf(BloomFilter.create(newCap, newBits)))
           graft.ext.MaintenanceEvents.record(dir,
             graft.ext.MaintenanceEvents.BloomRebuilt,
             f"expected_fpp=$fpp%.4f design_fpp=$BloomFpp " +
@@ -920,7 +896,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
           (Some(rebuilt), Some((newCap, newBits)))
         }
     }
-    writeVersion(v + 1, files(), Some(allLinks), Map.empty, bloomOut,
+    writeVersion(v + 1, filesAt(v), Some(allLinks), Map.empty, bloomOut,
       paramsOut)
     vacuum(retainLast, retainMs)
     v + 1
@@ -928,13 +904,17 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   /** Stage the whole version (data + MANIFEST + COMMIT) into a unique
     * hidden temp dir, then publish it with ONE atomic rename to
-    * `v_NNNNNN`. The rename is the commit point: a losing concurrent
-    * committer of the same version fails loudly at the rename — BEFORE
-    * any of its bytes become visible — so it cannot overwrite a winner's
-    * already-committed files/hash_links/MANIFEST the way in-place writes
-    * could. A crashed commit leaves only an orphaned `.tmp_*` dir
-    * (never matched by VersionRe, so invisible to readers and
-    * idempotently retryable); [[vacuum]] sweeps those up.
+    * `v_NNNNNN`. Every writer passes through here, so this is the one
+    * moved-catalog check: before anything is staged, the current
+    * version is resolved once more, and a catalog that moved past
+    * `v - 1` — the version the caller read its plan from — fails the
+    * commit loudly, writing nothing. The rename is the commit point: a
+    * losing concurrent committer of the same version fails loudly at
+    * the rename — BEFORE any of its bytes become visible — so it cannot
+    * overwrite a winner's already-committed files/hash_links/MANIFEST
+    * the way in-place writes could. A crashed commit leaves only an
+    * orphaned `.tmp_*` dir (never matched by VersionRe, so invisible to
+    * readers and idempotently retryable); [[vacuum]] sweeps those up.
     */
   private def writeVersion(v: Long, filesDf: DataFrame,
                            changedLinks: Option[DataFrame],
@@ -942,6 +922,11 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
                            bloom: Option[Array[Byte]],
                            bloomParams: Option[(Long, Long)] = None,
                            dropBuckets: Set[String] = Set.empty): Unit = {
+    val now = currentVersion
+    if (now != v - 1)
+      throw new IllegalStateException(
+        s"the catalog moved from version ${v - 1} to $now since the " +
+          "probe; nothing written")
     // Pin the layout knobs before the first version becomes visible; an
     // existing meta is never rewritten (width and bloom sizing of a
     // catalog are immutable — see the class scaladoc).

@@ -123,15 +123,10 @@ object MaintainedStream {
       .trigger(trigger)
       .option("checkpointLocation", s"$workDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        try {
+        graft.Jobs.pinnedBy(spark.sparkContext)(
           kernel(batch, index, s"$workDir/matches/batch_id=$batchId",
-            IndexMaintenance.Window(policy, batchId))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => before(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
+            IndexMaintenance.Window(policy, batchId)))
+          ._2.foreach(_.unpersist(false))
       }
       .start()
     new MaintainedStream(q, Seq(index), baseline)

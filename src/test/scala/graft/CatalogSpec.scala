@@ -713,4 +713,102 @@ class CatalogSpec extends SparkFunSuite {
     }
     assert(cat.files().count() == 0 && cat.links().count() == 0)
   }
+
+  test("commitRun refuses, writing nothing, a catalog that moved between " +
+    "its file-id read and its publish") {
+    val s = spark; import s.implicits._
+    val dir = tempDir("cat-moved") + "/catalog"
+    val none = Seq.empty[(String, Long)].toDF("hash", "delta")
+    def run(hash: String) = Seq((hash, 0L, 1L)).toDF("hash", "line", "refs_num")
+    val other = new Catalog(spark, dir, bucketChars = 1)
+    other.commitRun("seed", 64, "sha", run("aa11"), none)
+    // Another writer's commit lands just before this writer's second
+    // resolution of the version — the deterministic form of the race.
+    var resolutions = 0
+    val cat = new Catalog(spark, dir, bucketChars = 1) {
+      override def currentVersion: Long = {
+        resolutions += 1
+        if (resolutions == 2) other.commitRun("winner", 64, "sha", run("bb22"), none)
+        super.currentVersion
+      }
+    }
+    val e = intercept[IllegalStateException](
+      cat.commitRun("loser", 64, "sha", run("cc33"), none))
+    assert(e.getMessage.contains("moved from version 1 to 2"), e.getMessage)
+    assert(other.currentVersion == 2L)
+    assert(other.files().orderBy("file_id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq == Seq(1L -> "seed", 2L -> "winner"))
+    assert(other.links().where($"hash" === "cc33").count() == 0L)
+    val staged = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith(".tmp_"))
+    assert(staged.isEmpty, s"staged: ${staged.mkString(",")}")
+  }
+
+  test("every public call resolves the catalog version once, and every " +
+    "writer once more to refuse a moved catalog") {
+    val s = spark; import s.implicits._
+    val dir = tempDir("cat-resolve") + "/catalog"
+    val none = Seq.empty[(String, Long)].toDF("hash", "delta")
+    def run(hash: String) = Seq((hash, 0L, 1L)).toDF("hash", "line", "refs_num")
+    val seed = new Catalog(spark, dir, bucketChars = 1)
+    seed.commitRun("a", 64, "sha", Seq(("aa11", 0L, 2L), ("bb22", 1L, 1L))
+      .toDF("hash", "line", "refs_num"), none)
+    seed.commitRun("b", 64, "sha", run("cc33"), Seq(("aa11", 1L)).toDF("hash", "delta"))
+    var resolutions = 0
+    val cat = new Catalog(spark, dir, bucketChars = 1) {
+      override def currentVersion: Long = {
+        resolutions += 1
+        super.currentVersion
+      }
+    }
+    // the prechecked front takes the version its caller probed, with
+    // what the caller observed on its contributions
+    def prechecked(): Unit = {
+      val v = cat.currentVersion
+      val fid = cat.nextFileId
+      val links = Seq(("ff66", fid, 0L, 1L)).toDF("hash", "file_id", "line", "refs_num")
+      val (observed, seen) = cat.observeCommit(
+        links.select($"hash", org.apache.spark.sql.functions.lit(true).as("n")),
+        v, Some($"n"))
+      observed.collect()
+      val (touched, bloom) = seen()
+      resolutions = 0
+      cat.commitRunsPrechecked(Seq(Catalog.RunMeta(fid, "f", 64, "sha")),
+        links.localCheckpoint(), none, v, touched, bloom)
+    }
+    val rows: Seq[(String, Int, () => Any)] = Seq(
+      ("files", 1, () => cat.files().collect()),
+      ("links", 1, () => cat.links().collect()),
+      ("getFile", 1, () => cat.getFile("a").collect()),
+      ("getHashLink", 1, () => cat.getHashLink("aa11").collect()),
+      ("getHashLinkByLine", 1, () => cat.getHashLinkByLine(0L).collect()),
+      ("stats", 1, () => cat.stats().collect()),
+      ("chunkRepetition", 1, () => cat.chunkRepetition().collect()),
+      ("seenBloom", 1, () => cat.seenBloom()),
+      ("bloomHealth", 1, () => cat.bloomHealth()),
+      ("nextFileId", 1, () => cat.nextFileId),
+      ("linksAt", 0, () => cat.linksAt(1L).collect()),
+      ("changes", 0, () => cat.changes(1L, 2L).collect()),
+      ("vacuum", 0, () => cat.vacuum(retainLast = 100)),
+      ("commitRun", 2, () => cat.commitRun("c", 64, "sha", run("dd44"), none)),
+      ("commitRuns", 2, () => cat.commitRuns(Seq(Catalog.RunSpec(
+        4L, "d", 64, "sha", run("ee55"), none)))),
+      ("commitRunsPrelinked", 2, () => cat.commitRunsPrelinked(
+        Seq(Catalog.RunMeta(100L, "e", 64, "sha")),
+        Seq(("ab77", 100L, 0L, 1L)).toDF("hash", "file_id", "line", "refs_num"),
+        Seq(("cc33", 1L)).toDF("hash", "delta"))),
+      ("commitRunsPrechecked", 1, () => prechecked()),
+      ("dropRun", 2, () => cat.dropRun("e", Seq("ab77", "cc33").toDF("hash"))),
+      ("compact", 2, () => cat.compact()))
+    val counted = rows.map { case (call, _, body) =>
+      resolutions = 0
+      body()
+      call -> resolutions
+    }
+    info(counted.map { case (c, n) => s"$c=$n" }.mkString(" "))
+    assert(counted == rows.map { case (call, n, _) => call -> n })
+    // and the reads still see every commit above
+    assert(cat.files().count() == 5L)
+    assert(cat.links().where($"hash" === "ab77").count() == 0L)
+  }
 }

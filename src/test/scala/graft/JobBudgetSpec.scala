@@ -16,6 +16,10 @@ import graft.operators.Catalog
   * catalog-cache work) runs under a job group, and every job the
   * shared [[Jobs.Log]] sees in that group is counted. A count above its
   * budget fails. The call's output is checked after the count.
+  *
+  * Rows whose catalog lives on the counting [[RecordingLocalFs]] also
+  * pin the `listStatus`, `open` and `getFileStatus` calls the counted
+  * call makes under the catalog directory, each at its own ceiling.
   */
 class JobBudgetSpec extends SparkFunSuite {
 
@@ -68,10 +72,19 @@ class JobBudgetSpec extends SparkFunSuite {
 
   /** A budget row: what to call, its job ceiling, and a set-up that
     * returns the call. The call returns its output check, which runs
-    * after the count.
+    * after the count. `catalogOps` is the catalog directory under the
+    * row's directory, on the counting filesystem, with a ceiling per
+    * filesystem operation.
     */
   private case class Budget(call: String, maxJobs: Int,
-                            setUp: String => () => () => Unit)
+                            setUp: String => () => () => Unit,
+                            catalogOps: Option[(String, Map[String, Int])] = None)
+
+  /** The row's own directory on the counting filesystem. */
+  private def counted(dir: String): String = {
+    RecordingLocalFs.register(spark.sparkContext.hadoopConfiguration)
+    RecordingLocalFs.uri(dir)
+  }
 
   private val budgets = Seq(
     Budget("recoverFile of a run pointing into itself and two earlier runs", 4, { dir =>
@@ -102,7 +115,7 @@ class JobBudgetSpec extends SparkFunSuite {
       }
     }),
     Budget("deduplicateBatch of two small files into a seeded store", 11, { dir =>
-      val d = new Deduplicator(spark, s"$dir/work", bucketChars = 1)
+      val d = new Deduplicator(spark, counted(s"$dir/work"), bucketChars = 1)
       d.deduplicateFile(Fixtures.writeTemp(dir, "seed", blocks(0, 64)), DedupOptions(W))
       val inputs = Seq(
         Fixtures.writeTemp(dir, "f1", blocks(0, 32) ++ blocks(300, 8)),
@@ -112,7 +125,7 @@ class JobBudgetSpec extends SparkFunSuite {
         val chunks = d.deduplicateBatch(inputs, DedupOptions(W)).map(_.chunks)
         () => assert(chunks == Seq(40L, 40L))
       }
-    }),
+    }, Some("work/catalog" -> Map("listStatus" -> 48, "open" -> 41, "getFileStatus" -> 232))),
     Budget("deduplicateBatch after a compaction moved the catalog", 11, { dir =>
       val d = new Deduplicator(spark, s"$dir/work", bucketChars = 1)
       d.deduplicateFile(Fixtures.writeTemp(dir, "seed", blocks(0, 64)), DedupOptions(W))
@@ -133,7 +146,7 @@ class JobBudgetSpec extends SparkFunSuite {
     }),
     Budget("Catalog.commitRuns of two runs into a seeded catalog", 8, { dir =>
       import org.apache.spark.sql.functions.{col, lit, sha1}
-      val cat = new Catalog(spark, s"$dir/catalog", bucketChars = 1)
+      val cat = new Catalog(spark, counted(s"$dir/catalog"), bucketChars = 1)
       def links(from: Int, n: Int) = spark.range(from, from + n)
         .select(sha1(col("id").cast("string")).as("hash"),
           (col("id") - from).as("line"), lit(1L).as("refs_num"))
@@ -154,7 +167,7 @@ class JobBudgetSpec extends SparkFunSuite {
             .collect().forall(_.getAs[Long]("refs_num") == 1L + 2 * k))
         }
       }
-    }),
+    }, Some("catalog" -> Map("listStatus" -> 47, "open" -> 38, "getFileStatus" -> 224))),
     Budget("probeMinHashIndex of ten twins against a built index", 9, { dir =>
       val idx = s"$dir/index"
       val corpus = docs(0, 40)
@@ -237,14 +250,25 @@ class JobBudgetSpec extends SparkFunSuite {
       }
     }))
 
-  budgets.foreach { case Budget(call, maxJobs, setUp) =>
+  budgets.foreach { case Budget(call, maxJobs, setUp, catalogOps) =>
     test(s"job budget: $call runs at most $maxJobs jobs") {
-      val run = setUp(tempDir("budget"))
+      val dir = tempDir("budget")
+      val run = setUp(dir)
       run()()
+      RecordingLocalFs.reset()
       val (jobs, check) = jobsOf(run())
+      val ops = catalogOps.map { case (sub, _) =>
+        RecordingLocalFs.operationsUnder(s"$dir/$sub") }
       check()
       info(s"$jobs jobs")
       assert(jobs <= maxJobs, s"$call ran $jobs jobs, budget $maxJobs")
+      for ((_, ceilings) <- catalogOps; made <- ops) {
+        info(s"catalog operations: $made")
+        ceilings.foreach { case (op, max) =>
+          val n = made.getOrElse(op, 0)
+          assert(n <= max, s"$call made $n $op calls under its catalog, budget $max")
+        }
+      }
     }
   }
 }

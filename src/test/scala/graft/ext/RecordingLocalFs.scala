@@ -6,14 +6,15 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** The local filesystem under the `graftrec` scheme: it records every
-  * file it creates, and can fail one chosen create or rename by
-  * throwing, which leaves the disk as a process that crashed at that
-  * step would. Like `LockSchemeGateSpec`'s filesystems it is
+  * file it creates and counts every `listStatus`, `open` and
+  * `getFileStatus` per path, and can fail one chosen create or rename
+  * by throwing, which leaves the disk as a process that crashed at
+  * that step would. Like `LockSchemeGateSpec`'s filesystems it is
   * registered per scheme with its cache disabled, so every lookup makes
   * a new instance and the state lives in the companion object.
   */
@@ -49,12 +50,30 @@ class RecordingLocalFs extends RawLocalFileSystem {
     failIfArmed("rename", src)
     super.rename(src, dst)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    touch("listStatus", f)
+    super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    touch("open", f)
+    super.open(f, bufferSize)
+  }
+
+  override def getFileStatus(f: Path): FileStatus = {
+    touch("getFileStatus", f)
+    super.getFileStatus(f)
+  }
 }
 
 object RecordingLocalFs {
   val Scheme = "graftrec"
 
   private val created = new ConcurrentLinkedQueue[String]()
+
+  /** (operation, local path) of every counted read-side operation. */
+  private val touched = new ConcurrentLinkedQueue[(String, String)]()
 
   private val armed = new AtomicReference[Option[(String, Path => Boolean)]](None)
 
@@ -69,7 +88,7 @@ object RecordingLocalFs {
     reset()
   }
 
-  def reset(): Unit = { created.clear(); armed.set(None) }
+  def reset(): Unit = { created.clear(); touched.clear(); armed.set(None) }
 
   /** `local` as a path on this scheme. */
   def uri(local: String): String = s"$Scheme://$local"
@@ -85,6 +104,20 @@ object RecordingLocalFs {
 
   /** Local path of every file created since the last [[reset]]. */
   def createdPaths: Seq[String] = created.asScala.toSeq
+
+  /** How many of each counted operation (`listStatus`, `open`,
+    * `getFileStatus`) hit `local` or a path under it since the last
+    * [[reset]]; an operation with no hit is absent.
+    */
+  def operationsUnder(local: String): Map[String, Int] = {
+    val root = local.stripSuffix("/")
+    touched.asScala.toSeq
+      .collect { case (op, p) if p == root || p.startsWith(root + "/") => op }
+      .groupBy(identity).map { case (op, hits) => op -> hits.size }
+  }
+
+  private def touch(op: String, f: Path): Unit =
+    touched.add(op -> f.toUri.getPath)
 
   private def failIfArmed(op: String, p: Path): Unit = armed.get match {
     case s @ Some((o, at)) if o == op && at(p) && armed.compareAndSet(s, None) =>
