@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ext.{DocDedup, Mp3, Multimodal, Similarity, TextAnalysis, WebArchive}
+import graft.ext.{DocDedup, Mp3, Multimodal, SignatureIndex, Similarity, TextAnalysis, WebArchive}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -4067,12 +4067,12 @@ object SparkEntry {
       Instr.timed("q103.build")(
         DocDedup.buildMinHashIndex(half1, "doc_id", "text", idx,
           bands = 8, rows = 4, sigBuckets = 8))
-      val rowsBuilt = Instr.timed("q103.count1")(
-        s.read.parquet(idx).count())
+      def indexRows = SignatureIndex.scan(s, idx, DocDedup.MinHashLayout)
+        .fold(0L)(_.count())
+      val rowsBuilt = Instr.timed("q103.count1")(indexRows)
       Instr.timed("q103.append")(
         DocDedup.appendToMinHashIndex(half2, "doc_id", "text", idx))
-      val rowsTotal = Instr.timed("q103.count2")(
-        s.read.parquet(idx).count())
+      val rowsTotal = Instr.timed("q103.count2")(indexRows)
       Instr.record("q103.index_files", dataFiles(s, idx))
       val probes = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text"))
@@ -5687,7 +5687,7 @@ object SparkEntry {
     //      appends fragment the MinHash index (one file set per
     //      touched (band, sb) partition per write), probe, COMPACT,
     //      probe again. `pre_eq_post` pins bit-identical probe results
-    //      across the swap (any row the compaction lost, duplicated,
+    //      across the compaction (any row the compaction lost, duplicated,
     //      or invented lands in the symmetric difference and flips the
     //      column); `files_dropped` pins that the rewrite actually
     //      de-fragmented; `found` is the q103 probability-1 twin
@@ -5714,7 +5714,7 @@ object SparkEntry {
       val probes = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text"))
       // probeMinHashIndex returns a localCheckpoint — `pre` is fully
-      // materialized BEFORE the compaction swaps the directory
+      // materialized BEFORE the compaction vacuums what it read
       val pre = Instr.timed("q237.probe_pre")(DocDedup.probeMinHashIndex(
         probes, docs, "doc_id", "text", idx, 7, 10))
       val stats = Instr.timed("q237.compact")(

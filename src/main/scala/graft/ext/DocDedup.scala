@@ -513,7 +513,7 @@ object DocDedup {
       path, MinHashLayout, Seq(bands, rows, sigBuckets))
   }
 
-  private val MinHashLayout =
+  private[graft] val MinHashLayout =
     SignatureIndex.intsLayout("_graft_minhash_meta", "band", "sb")
 
   private def requireMinHashParams(p: Seq[Int]): Unit = {
@@ -568,7 +568,7 @@ object DocDedup {
     * (band, sb) partition — the maintenance op a long-running append/
     * streaming index needs (every append adds a file set per touched
     * partition; probes pay listing + a footer read per file). Probe
-    * results are bit-identical across the swap; sidecar and layout are
+    * results are bit-identical across it; sidecar and layout are
     * preserved. See [[IndexMaintenance.compactIndex]] for the
     * single-writer/maintenance-window contract.
     */

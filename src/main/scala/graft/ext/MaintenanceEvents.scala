@@ -4,8 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 /** The one event channel of the index/catalog maintenance surface:
-  * lock conflicts, stale and lease takeovers, swap heals, compaction
-  * skips and fires, retention vacuums. Each event is recorded once,
+  * lock conflicts, stale and lease takeovers, compaction skips and
+  * fires, retention vacuums, bloom saturation, lock-residue sweeps. Each event is recorded once,
   * here, and reaches two cheap outlets:
   *
   *  - ONE structured log line (`logger "graft.maintenance"`, strict
@@ -32,12 +32,6 @@ object MaintenanceEvents {
     * declared stale window).
     */
   val LeaseTakeover = "lease_takeover"
-  /** Interrupted compaction swap completed forward (tmp published). */
-  val HealCompleted = "heal_completed"
-  /** Interrupted compaction swap rolled back (old restored). */
-  val HealRolledBack = "heal_rolled_back"
-  /** Residue swept next to a live layout (no swap needed). */
-  val HealSwept = "heal_swept"
   /** Maintenance-window compaction fired. */
   val CompactFire = "compact_fire"
   /** Maintenance-window cost check declined (observed count gauged). */
@@ -67,8 +61,8 @@ object MaintenanceEvents {
     * is removed.
     */
   val ReleaseSkipped = "release_skipped"
-  /** Aged maintenance residue (`.stale_*` tombstones, interrupted-swap
-    * temporaries) swept by the age-gated sweeper.
+  /** Aged lock residue (`.stale_*` tombstones, orphaned beat files)
+    * swept by the age-gated sweeper.
     */
   val ResidueSwept = "residue_swept"
   /** A winning healer could not release its heal claim after the

@@ -3,11 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.util.sketch.BloomFilter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
@@ -26,14 +25,14 @@ import scala.jdk.CollectionConverters._
   * row-at-a-time upserts. Spark-first shape: uniqueness by construction
   * (anti-join before append, A4 ≙ `on_conflict: :nothing`), refs_num
   * increments as a grouped delta merge (A1+A2, one job — never per-row),
-  * and atomicity via versioned directories with a COMMIT marker: each run
-  * stages its version in full into a hidden temp dir, then publishes it
-  * with one atomic rename; readers use the highest committed version.
-  * Failed writes leave only an orphaned temp dir and are invisible —
-  * idempotent re-runs (SURVEY §7.4.2). The rename is the commit point:
-  * of two concurrent committers of the same version, exactly one rename
-  * lands — the loser fails loudly BEFORE any of its bytes are visible,
-  * so it can never overwrite a winner's committed data.
+  * and atomicity via the [[VersionStore]]: each run stages its version
+  * in full into a hidden temp dir, then publishes it with one atomic
+  * rename; readers use the highest committed version. Failed writes
+  * leave only an orphaned temp dir and are invisible — idempotent
+  * re-runs (SURVEY §7.4.2). Of two concurrent committers of the same
+  * version exactly one rename lands — the loser fails loudly BEFORE any
+  * of its bytes are visible, so it can never overwrite a winner's
+  * committed data.
   *
   * Scale design (100 TB): hash_links is hash-partitioned by a hex digest
   * prefix of `bucketChars` chars (16^bucketChars buckets, default 256),
@@ -87,14 +86,9 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   private val fs = FileSystem.get(new java.net.URI(dir),
     spark.sparkContext.hadoopConfiguration)
 
-  private def metaPath = new Path(dir, "_graft_catalog_meta")
+  private val store = new VersionStore(fs, dir, "catalog")
 
-  /** The whole of file `p`, or None when it does not exist. */
-  private def readAll(p: Path): Option[Array[Byte]] =
-    try {
-      val in = fs.open(p)
-      try Some(in.readAllBytes()) finally in.close()
-    } catch { case _: FileNotFoundException => None }
+  private def metaPath = new Path(dir, "_graft_catalog_meta")
 
   /** The `key=value` lines of a sidecar, values trimmed. */
   private def keyValues(bytes: Array[Byte]): Map[String, String] =
@@ -112,7 +106,7 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     * [[Sidecars.bloomParams]].
     */
   private lazy val (bucketWidth, bloomCapacity): (Int, Long) =
-    readAll(metaPath).map(keyValues) match {
+    VersionStore.readAll(fs, metaPath).map(keyValues) match {
       case Some(kv) => (kv.get("bucket_chars").fold(2)(_.toInt),
         kv.get("bloom_items").fold(0L)(_.toLong))
       case None =>
@@ -122,26 +116,20 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
 
   /** Committed version `v`'s sidecars, each read on first use. */
   private final class Sidecars(val v: Long) {
-    private def file(name: String) =
-      if (v <= 0) None else readAll(new Path(versionDir(v), name))
+    private def file(name: String) = store.file(v, name)
 
     /** bucket → version that last rewrote that bucket. A committed
       * version without a MANIFEST (written by a pre-manifest layout)
       * degrades gracefully: every bucket directory physically present
       * under that version is treated as written there.
       */
-    lazy val manifest: Map[String, Long] = file("MANIFEST") match {
-      case Some(bytes) =>
-        new String(bytes, StandardCharsets.UTF_8).split("\n").iterator
-          .filter(_.nonEmpty).map { line =>
-            val Array(b, ver) = line.split(",")
-            b -> ver.toLong
-          }.toMap
+    lazy val manifest: Map[String, Long] = store.manifest(v) match {
+      case Some(m) => m.map { case (b, vs) => b -> vs.head }
       case None if v > 0 =>
         try fs.listStatus(new Path(versionDir(v), "hash_links")).iterator
           .map(_.getPath.getName)
           .collect { case BucketRe(b) => b -> v }.toMap
-        catch { case _: FileNotFoundException => Map.empty }
+        catch { case _: java.io.FileNotFoundException => Map.empty }
       case None => Map.empty
     }
 
@@ -259,29 +247,16 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
   private def bucketCol(hash: org.apache.spark.sql.Column) =
     substring(hash, 1, bucketWidth)
 
-  private def versionDir(v: Long) = new Path(dir, f"v_$v%06d")
-
-  /** The entries of the catalog root (none when it does not exist). */
-  private def rootEntries(): Seq[FileStatus] =
-    try fs.listStatus(new Path(dir)).toSeq
-    catch { case _: FileNotFoundException => Nil }
-
-  /** The committed versions among root `entries`, newest first; each
-    * COMMIT marker is checked only when the iterator reaches it.
-    */
-  private def committedOf(entries: Seq[FileStatus]): Iterator[Long] =
-    entries.map(_.getPath.getName).collect { case VersionRe(n) => n.toLong }
-      .sorted(Ordering[Long].reverse).iterator
-      .filter(v => fs.exists(new Path(versionDir(v), "COMMIT")))
+  private def versionDir(v: Long) = store.versionDir(v)
 
   /** Highest committed version, or 0 (empty catalog): one root listing
     * and, in the common case, one COMMIT check. Every public call
     * resolves it once, at entry, and reads only that version; a writer
-    * resolves it once more, in [[writeVersion]], to refuse publishing
-    * on top of a version it did not read.
+    * resolves it once more, in [[VersionStore.publish]], to refuse
+    * publishing on top of a version it did not read.
     */
   def currentVersion: Long = {
-    val v = committedOf(rootEntries()).nextOption().getOrElse(0L)
+    val v = store.current()
     if (resolved.v != v) resolved = new Sidecars(v)
     v
   }
@@ -721,112 +696,39 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     } finally pinned.foreach(_.unpersist(false))
   }
 
-  /** Delete version directories that the CURRENT manifest no longer
-    * references (bucket-pruned commits keep old versions partially
-    * alive — a bucket last written at v3 lives in v_000003 until some
-    * later commit rewrites it), plus orphaned `.tmp_*` staging dirs
-    * left by crashed commits, plus bare version dirs lacking a COMMIT
-    * marker (stray artifacts that would otherwise block their version
-    * number forever). Never touches the current version or any
-    * directory holding a still-referenced bucket. Returns the
-    * committed versions deleted (orphan sweeps are not reported).
+  /** Delete what no reader can reach ([[VersionStore.vacuum]]): version
+    * directories the retained manifests no longer reference
+    * (bucket-pruned commits keep old versions partially alive — a bucket
+    * last written at v3 lives in v_000003 until a later commit rewrites
+    * it), plus `.tmp_*` staging of crashed commits and bare version
+    * directories without a COMMIT, each after an hour without writes.
+    * Returns the committed versions deleted.
     *
     * Retention (r15 verdict ask #3, the long-lived-stream knob): the
     * newest `retainLast` committed versions, plus every version whose
-    * commit is younger than `retainMs`, stay TIME-TRAVEL READABLE —
-    * i.e. each retained head keeps alive every older version its
-    * manifest still references, so [[linksAt]]/[[changes]] hold their
-    * contract on the whole retained window, not just its head
-    * versions. The defaults (`retainLast = 1`, `retainMs = 0`) are
-    * exactly the pre-retention behavior: only the current version's
-    * reference set survives. Cost: one directory listing plus one
-    * manifest read per retained head — metadata, never data.
+    * commit is younger than `retainMs`, stay TIME-TRAVEL READABLE — each
+    * retained head keeps alive every older version its manifest
+    * references, so [[linksAt]]/[[changes]] hold on the whole retained
+    * window. The defaults keep only the current version's reference
+    * set. Cost: one listing plus one manifest read per retained head.
     *
     * NOT safe concurrently with everything: a lazily-evaluated DataFrame
-    * planned from [[links]]/[[getHashLink]] under an OLDER manifest still
-    * references version dirs this may delete (FileNotFound at its next
-    * action), and an in-flight commit's staging dir would be swept. Run
-    * it when no queries planned against earlier versions are still
-    * pending and no commit is in flight.
+    * planned from [[links]]/[[getHashLink]] under an OLDER manifest
+    * still references version dirs this may delete (FileNotFound at its
+    * next action). Run it when no such queries are pending.
     */
   def vacuum(retainLast: Int = 1, retainMs: Long = 0L): Seq[Long] = {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
     require(retainMs >= 0, s"retainMs must be >= 0, got $retainMs")
-    val entries = rootEntries()
-    // Orphan sweep with a grace window: a fresh .tmp_* dir is most
-    // likely an IN-FLIGHT commit's staging area — deleting it would
-    // kill that commit mid-write. "Fresh" is judged by the NEWEST
-    // mtime anywhere under the dir (a long parquet write mutates files
-    // deep inside bucket=* without touching the top-level dir's mtime),
-    // with early exit on the first recent file.
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    def activeSince(p: Path, t: Long): Boolean =
-      try {
-        val st = fs.getFileStatus(p)
-        st.getModificationTime >= t ||
-          (st.isDirectory && fs.listStatus(p).exists(c => activeSince(c.getPath, t)))
-      } catch {
-        // A concurrent commit can rename its staging dir away mid-walk;
-        // a vanished entry is treated as active (skipped this pass)
-        // rather than crashing the sweep.
-        case _: java.io.FileNotFoundException => true
-      }
-    entries
-      .filter(s => s.getPath.getName.startsWith(".tmp_") &&
-        !activeSince(s.getPath, cutoff))
-      .foreach(s => fs.delete(s.getPath, true))
-    // A bare version dir without a COMMIT marker (stray artifact, or the
-    // debris of a non-atomic-rename store) is invisible to readers by
-    // construction but permanently blocks every future committer of that
-    // version number — reclaim it under the same grace window. (A
-    // healthy in-flight commit never produces one: data + COMMIT appear
-    // together in the atomic publish rename.)
-    entries
-      .filter { s =>
-        s.getPath.getName match {
-          case VersionRe(_) =>
-            !fs.exists(new Path(s.getPath, "COMMIT")) &&
-              !activeSince(s.getPath, cutoff)
-          case _ => false
-        }
-      }
-      .foreach(s => fs.delete(s.getPath, true))
-    // Only the committed-version deletion stage needs a committed version
-    // to anchor `referenced` — the orphan sweeps above must run even on
-    // an otherwise-empty catalog, where a stale bare v_000001 would
-    // permanently block the FIRST commit and this method is the
-    // designated remediation. The current version is the newest
-    // committed one of the same listing.
-    val committed = committedOf(entries).toSeq
-    val current = committed.headOption.getOrElse(0L)
-    if (current == 0) return Seq.empty
-    // Retained heads: newest `retainLast` + age window + current. Each
-    // head pins its manifest's whole reference closure (readability is
-    // a property of the head's manifest, not of the head's own dir).
-    val ageKept: Set[Long] =
-      if (retainMs <= 0) Set.empty
-      else {
-        val cutoff = System.currentTimeMillis() - retainMs
-        committed.filter { v =>
-          try fs.getFileStatus(new Path(versionDir(v), "COMMIT"))
-            .getModificationTime >= cutoff
-          catch { case _: java.io.FileNotFoundException => false }
-        }.toSet
-      }
-    val heads = committed.filter(_ > current - retainLast).toSet ++
-      ageKept + current
-    val referenced = heads.flatMap(h => at(h).manifest.values.toSet + h)
-    val deletable = committed
-      .filter(v => v < current && !referenced.contains(v))
-      .sorted
-    deletable.foreach(v => fs.delete(versionDir(v), true))
-    if (deletable.nonEmpty)
+    // a fresh .tmp_* dir may be an IN-FLIGHT concurrent commit
+    val (deleted, heads) = store.vacuum(retainLast, retainMs, 60L * 60 * 1000)
+    if (deleted.nonEmpty)
       graft.ext.MaintenanceEvents.record(dir,
         graft.ext.MaintenanceEvents.VacuumRemoved,
-        s"versions=${deletable.mkString(",")} retained_heads=" +
+        s"versions=${deleted.mkString(",")} retained_heads=" +
           heads.toSeq.sorted.mkString(","),
-        n = deletable.size.toLong)
-    deletable
+        n = deleted.size.toLong)
+    deleted
   }
 
   /** Compact the catalog: rewrite EVERY currently-referenced bucket into
@@ -902,133 +804,99 @@ class Catalog(spark: SparkSession, dir: String, bucketChars: Int = 2,
     v + 1
   }
 
-  /** Stage the whole version (data + MANIFEST + COMMIT) into a unique
-    * hidden temp dir, then publish it with ONE atomic rename to
-    * `v_NNNNNN`. Every writer passes through here, so this is the one
-    * moved-catalog check: before anything is staged, the current
-    * version is resolved once more, and a catalog that moved past
-    * `v - 1` — the version the caller read its plan from — fails the
-    * commit loudly, writing nothing. The rename is the commit point: a
-    * losing concurrent committer of the same version fails loudly at
-    * the rename — BEFORE any of its bytes become visible — so it cannot
-    * overwrite a winner's already-committed files/hash_links/MANIFEST
-    * the way in-place writes could. A crashed commit leaves only an
-    * orphaned `.tmp_*` dir (never matched by VersionRe, so invisible to
-    * readers and idempotently retryable); [[vacuum]] sweeps those up.
+  /** Publish version `v` through the [[VersionStore]]: the files
+    * table, the rewritten link buckets and the bloom sidecars, staged
+    * together with the MANIFEST and COMMIT and made visible by one
+    * rename. Every writer passes through here, so the store's
+    * moved-base refusal is the catalog's one moved-catalog check.
     */
   private def writeVersion(v: Long, filesDf: DataFrame,
                            changedLinks: Option[DataFrame],
                            oldManifest: Map[String, Long],
                            bloom: Option[Array[Byte]],
                            bloomParams: Option[(Long, Long)] = None,
-                           dropBuckets: Set[String] = Set.empty): Unit = {
-    val now = currentVersion
-    if (now != v - 1)
-      throw new IllegalStateException(
-        s"the catalog moved from version ${v - 1} to $now since the " +
-          "probe; nothing written")
-    // Pin the layout knobs before the first version becomes visible; an
-    // existing meta is never rewritten (width and bloom sizing of a
-    // catalog are immutable — see the class scaladoc).
-    if (!fs.exists(metaPath)) {
-      // Exclusive create: this pin ARBITRATES concurrent first
-      // committers' layout knobs, so it needs the truly atomic
-      // create-if-absent (on the local FS, Hadoop's
-      // create(overwrite=false) is check-then-act — two racers could
-      // both "win" and the knob comparison below would never run;
-      // see WriterLock.createExclusive).
-      val won = graft.ext.WriterLock.createExclusive(fs, metaPath,
-        s"bucket_chars=$bucketWidth\nbloom_items=$bloomCapacity\n"
-          .getBytes(StandardCharsets.UTF_8))
-      if (!won) {
-        // Lost the meta race to a concurrent first committer. Safe iff
-        // it pinned the SAME knobs this commit's data was staged with;
-        // otherwise fail before publishing mixed-layout data.
-        val other = new Catalog(spark, dir)
-        require(other.bucketWidth == bucketWidth,
-          s"concurrent catalog creation with different bucket widths: " +
-            s"this commit staged width $bucketWidth, meta pinned " +
-            s"${other.bucketWidth}")
-        require(other.bloomCapacity == bloomCapacity,
-          s"concurrent catalog creation with different bloom sizing: " +
-            s"this commit staged $bloomCapacity, meta pinned " +
-            s"${other.bloomCapacity}")
+                           dropBuckets: Set[String] = Set.empty): Unit =
+    store.publish(v, currentVersion) { tmp =>
+      // Pin the layout knobs before the first version becomes visible;
+      // an existing meta is never rewritten (width and bloom sizing of a
+      // catalog are immutable — see the class scaladoc).
+      if (!fs.exists(metaPath)) {
+        // Exclusive create: this pin ARBITRATES concurrent first
+        // committers' layout knobs, so it needs the truly atomic
+        // create-if-absent (on the local FS, Hadoop's
+        // create(overwrite=false) is check-then-act — two racers could
+        // both "win" and the knob comparison below would never run;
+        // see WriterLock.createExclusive).
+        val won = graft.ext.WriterLock.createExclusive(fs, metaPath,
+          s"bucket_chars=$bucketWidth\nbloom_items=$bloomCapacity\n"
+            .getBytes(StandardCharsets.UTF_8))
+        if (!won) {
+          // Lost the meta race to a concurrent first committer. Safe iff
+          // it pinned the SAME knobs this commit's data was staged with;
+          // otherwise fail before publishing mixed-layout data.
+          val other = new Catalog(spark, dir)
+          require(other.bucketWidth == bucketWidth,
+            s"concurrent catalog creation with different bucket widths: " +
+              s"this commit staged width $bucketWidth, meta pinned " +
+              s"${other.bucketWidth}")
+          require(other.bloomCapacity == bloomCapacity,
+            s"concurrent catalog creation with different bloom sizing: " +
+              s"this commit staged $bloomCapacity, meta pinned " +
+              s"${other.bloomCapacity}")
+        }
       }
-    }
-    val vd = versionDir(v)
-    val tmp = new Path(dir,
-      s".tmp_v$v-${java.util.UUID.randomUUID.toString.take(8)}")
-    filesDf.write.mode("overwrite").parquet(new Path(tmp, "files").toString)
-    val written: Set[String] = changedLinks match {
-      case None => Set.empty
-      case Some(df) =>
-        df.withColumn("bucket", bucketCol(col("hash")))
-          // Cluster by bucket before the partitioned write (the same
-          // idiom as compact() and the LSH index build): without it
-          // every shuffle-partitioned task opens a file in every bucket
-          // it sees — tasks × touched-buckets tiny files PER COMMIT,
-          // the fragmentation compact() exists to clean up. After it a
-          // bucket is written by one task: files ≈ touched buckets.
-          // Reducer count pinned so AQE cannot coalesce a small
-          // commit to ONE task that writes every bucket file serially.
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(new Path(tmp, "hash_links").toString)
-        // The buckets actually written (a touched bucket could have been
-        // computed from deltas that matched nothing).
-        fs.listStatus(new Path(tmp, "hash_links")).iterator
-          .map(_.getPath.getName)
-          .collect { case BucketRe(b) => b }.toSet
-    }
-    // dropBuckets (dropRun only): buckets whose links may ALL have been
-    // deleted. They must leave the manifest FIRST — a dropped-empty
-    // bucket writes no partition, and carrying its old manifest entry
-    // forward would resurrect the deleted links. Buckets that still
-    // have rows re-enter via `written`.
-    val manifest = (oldManifest -- dropBuckets) ++ written.map(_ -> v)
-    val manifestBytes = manifest.toSeq.sorted
-      .map { case (b, ver) => s"$b,$ver" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)
-    val mOut = fs.create(new Path(tmp, "MANIFEST"), true)
-    try mOut.write(manifestBytes) finally mOut.close()
-    // BLOOM is staged with everything else so the sidecar is atomic
-    // with the commit it describes (no version can be visible with a
-    // filter missing its hashes).
-    bloom.foreach { bytes =>
-      val bOut = fs.create(new Path(tmp, "BLOOM"), true)
-      try bOut.write(bytes) finally bOut.close()
-      // The filter's effective sizing travels WITH the filter (atomic
-      // under the same version rename), so a compact-time rebuild's
-      // rescaled capacity survives reopen and later commits' delta
-      // sketches stay bit-compatible with the carried filter.
-      bloomParams.foreach { case (c, b) =>
-        val mOut2 = fs.create(new Path(tmp, "BLOOM_META"), true)
-        try mOut2.write(s"capacity=$c\nnum_bits=$b\n"
-          .getBytes(StandardCharsets.UTF_8))
-        finally mOut2.close()
+      filesDf.write.mode("overwrite").parquet(new Path(tmp, "files").toString)
+      val written: Set[String] = changedLinks match {
+        case None => Set.empty
+        case Some(df) =>
+          df.withColumn("bucket", bucketCol(col("hash")))
+            // Cluster by bucket before the partitioned write (the same
+            // idiom as compact() and the LSH index build): without it
+            // every shuffle-partitioned task opens a file in every
+            // bucket it sees — tasks × touched-buckets tiny files PER
+            // COMMIT, the fragmentation compact() exists to clean up.
+            // After it a bucket is written by one task: files ≈ touched
+            // buckets. Reducer count pinned so AQE cannot coalesce a
+            // small commit to ONE task that writes every bucket file
+            // serially.
+            .repartition(spark.sessionState.conf.numShufflePartitions,
+              col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket")
+            .parquet(new Path(tmp, "hash_links").toString)
+          // The buckets actually written (a touched bucket could have
+          // been computed from deltas that matched nothing).
+          fs.listStatus(new Path(tmp, "hash_links")).iterator
+            .map(_.getPath.getName)
+            .collect { case BucketRe(b) => b }.toSet
       }
+      // BLOOM is staged with everything else so the sidecar is atomic
+      // with the commit it describes (no version can be visible with a
+      // filter missing its hashes). The filter's effective sizing
+      // travels WITH it, so a compact-time rebuild's rescaled capacity
+      // survives reopen and later commits' delta sketches stay
+      // bit-compatible with the carried filter.
+      def put(name: String, bytes: Array[Byte]): Unit = {
+        val out = fs.create(new Path(tmp, name), true)
+        try out.write(bytes) finally out.close()
+      }
+      bloom.foreach { bytes =>
+        put("BLOOM", bytes)
+        bloomParams.foreach { case (c, b) =>
+          put("BLOOM_META", s"capacity=$c\nnum_bits=$b\n"
+            .getBytes(StandardCharsets.UTF_8))
+        }
+      }
+      // dropBuckets (dropRun only): buckets whose links may ALL have
+      // been deleted. They must leave the manifest FIRST — a
+      // dropped-empty bucket writes no partition, and carrying its old
+      // manifest entry forward would resurrect the deleted links.
+      // Buckets that still have rows re-enter via `written`.
+      ((oldManifest -- dropBuckets) ++ written.map(_ -> v))
+        .map { case (b, ver) => b -> Seq(ver) }
     }
-    val cOut = fs.create(new Path(tmp, "COMMIT"), false)
-    cOut.close()
-    def loseRace(): Nothing = {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"concurrent commit: version $v already exists at $vd; " +
-          "re-read the catalog and retry on the new base")
-    }
-    if (fs.exists(vd)) loseRace()
-    if (!fs.rename(tmp, vd)) loseRace()
-    // Hadoop rename semantics: if `vd` appeared between the exists check
-    // and the rename, some implementations move `tmp` INSIDE it instead
-    // of failing. Detect and undo.
-    val nested = new Path(vd, tmp.getName)
-    if (fs.exists(nested)) { fs.delete(nested, true); loseRace() }
-  }
 }
 
 object Catalog {
-  private val VersionRe = "v_(\\d+)".r
   /** Target false-positive rate the bloom sidecar is sized for at its
     * pinned capacity (optimalNumOfBits(bloomItems, BloomFpp) bits).
     */

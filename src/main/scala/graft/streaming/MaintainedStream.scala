@@ -16,7 +16,7 @@ import graft.ext.{IndexMaintenance, MaintenanceEvents, WriterLock}
   * [[MaintenanceEvents]] registry is JVM-lifetime; the stream's
   * `start` snapshots the baseline BEFORE the query starts — see
   * [[MaintainedStream.fold]]), keyed by the [[MaintenanceEvents]] event
-  * names — lock conflicts, stale/lease takeovers, swap heals,
+  * names — lock conflicts, stale/lease takeovers,
   * compaction skips/fires, retention vacuums. Zero-valued events are included
   * only if they were ever recorded against these directories in this
   * JVM, so `getOrElse(event, 0L)` is the read idiom.

@@ -121,17 +121,18 @@ object StreamingDedup {
             outputNames = todo.map(_._2), computeCounts = false)
         }
         // the catalog has its OWN versioned compaction (touched-bucket
-        // rewrite + atomic version swap); between micro-batches this
+        // rewrite + one version rename); between micro-batches this
         // thread is the catalog's single writer, so the streaming
         // maintenance window applies to it exactly like the ext/
         // indexes' compactIndex. maybeCompact records the skip/fire
         // events, the fire with the compacted bucket count;
         // CompactStats.rows is not recomputed for the catalog
         // (compact() already row-verifies through writeVersion).
+        // files_before is the cost check's own count when it made one
+        lazy val before =
+          graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir)
         graft.ext.IndexMaintenance.maybeCompact(policy, batchId, catalogDir,
-          graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir)) {
-          val before =
-            graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir)
+          before) {
           val buckets = dedup.catalog.compact(retainLast, retainMs)
           graft.ext.IndexMaintenance.CompactStats(before,
             graft.ext.IndexMaintenance.dataFileCount(spark, catalogDir),

@@ -47,8 +47,7 @@ object StreamingVecDup {
         maxFilesPerTrigger, compactEvery, compactMaxFiles, lease) {
       (batch, indexPath, matchesPath, window) =>
         val b = batch.localCheckpoint()
-        // heal a crashed compaction BEFORE deciding "first batch": an
-        // index caught between its swap renames is not a missing index
+        // "first batch" is decided by the committed sidecar
         val indexExists =
           SignatureIndex.exists(spark, indexPath, Similarity.IvfLayout)
         // 1. cross-batch: probe the accumulated index, exact-cosine

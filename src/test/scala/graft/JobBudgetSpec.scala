@@ -17,9 +17,10 @@ import graft.operators.Catalog
   * shared [[Jobs.Log]] sees in that group is counted. A count above its
   * budget fails. The call's output is checked after the count.
   *
-  * Rows whose catalog lives on the counting [[RecordingLocalFs]] also
-  * pin the `listStatus`, `open` and `getFileStatus` calls the counted
-  * call makes under the catalog directory, each at its own ceiling.
+  * Rows whose catalog or index lives on the counting
+  * [[RecordingLocalFs]] also pin the `listStatus`, `open`,
+  * `getFileStatus` and `rename` calls the counted call makes under that
+  * directory, each at its own ceiling.
   */
 class JobBudgetSpec extends SparkFunSuite {
 
@@ -72,13 +73,13 @@ class JobBudgetSpec extends SparkFunSuite {
 
   /** A budget row: what to call, its job ceiling, and a set-up that
     * returns the call. The call returns its output check, which runs
-    * after the count. `catalogOps` is the catalog directory under the
-    * row's directory, on the counting filesystem, with a ceiling per
+    * after the count. `dirOps` is the catalog or index directory under
+    * the row's directory, on the counting filesystem, with a ceiling per
     * filesystem operation.
     */
   private case class Budget(call: String, maxJobs: Int,
                             setUp: String => () => () => Unit,
-                            catalogOps: Option[(String, Map[String, Int])] = None)
+                            dirOps: Option[(String, Map[String, Int])] = None)
 
   /** The row's own directory on the counting filesystem. */
   private def counted(dir: String): String = {
@@ -169,7 +170,7 @@ class JobBudgetSpec extends SparkFunSuite {
       }
     }, Some("catalog" -> Map("listStatus" -> 47, "open" -> 38, "getFileStatus" -> 224))),
     Budget("probeMinHashIndex of ten twins against a built index", 9, { dir =>
-      val idx = s"$dir/index"
+      val idx = counted(s"$dir/index")
       val corpus = docs(0, 40)
       DocDedup.buildMinHashIndex(corpus, "id", "text", idx,
         bands = 8, rows = 4, sigBuckets = 4)
@@ -178,7 +179,7 @@ class JobBudgetSpec extends SparkFunSuite {
           corpus, "id", "text", idx, 7, 10)
         () => assert(twins(pairs, 1000L) == (0L until 10L).toSet)
       }
-    }),
+    }, Some("index" -> Map("listStatus" -> 26, "open" -> 27, "rename" -> 0))),
     Budget("foldMinHashBatch of a second batch into an index one batch old", 11, { dir =>
       val first = docs(0, 20)
       def fold(batch: org.apache.spark.sql.DataFrame, idx: String,
@@ -207,28 +208,31 @@ class JobBudgetSpec extends SparkFunSuite {
       val touched = DocDedup.bandedSignatures(batch, "id", "text", 8, 4, 4)
         .select("band", "sb").distinct().count()
       () => {
-        val idx = copyOf(s"$dir/index")
+        // every call starts from a copy of the one-batch index, in place
+        val idx = s"$dir/work/index"
+        FileUtils.deleteDirectory(new java.io.File(s"$dir/work"))
+        FileUtils.copyDirectory(new java.io.File(s"$dir/index"), new java.io.File(idx))
         RecordingLocalFs.reset()
         DocDedup.foldMinHashBatch(batch, first, "id", "text",
-          RecordingLocalFs.uri(idx), RecordingLocalFs.uri(s"$idx-matches"),
+          RecordingLocalFs.uri(idx), RecordingLocalFs.uri(s"$dir/work/matches"),
           7, 10, bands = 8, rows = 4, sigBuckets = 4, window = Some(window))
         () => {
-          assert(twins(spark.read.parquet(s"$idx-matches"), 1000L) == (0L until 20L).toSet)
-          // the parquet files the call wrote under the index or its
-          // staging sibling: one per touched partition (an append and
+          assert(twins(spark.read.parquet(s"$dir/work/matches"), 1000L) == (0L until 20L).toSet)
+          // the parquet files the call wrote under the index, its
+          // staging included: one per touched partition (an append and
           // then a compaction would write two)
-          val indexName = new java.io.File(idx).getName
-          val written = RecordingLocalFs.createdPaths.count { p =>
-            val under = p.stripPrefix(new java.io.File(idx).getParent + "/")
-            (under.startsWith(s"$indexName/") ||
-              under.startsWith(s".compact_tmp_$indexName-")) && p.endsWith(".parquet")
-          }
+          val written = RecordingLocalFs.createdPaths
+            .count(p => p.startsWith(s"$idx/") && p.endsWith(".parquet"))
           info(s"$written parquet files written")
           assert(written == touched, s"$written parquet files for $touched touched partitions")
           assert(IndexMaintenance.dataFileCount(spark, idx) == touched)
         }
       }
-    }),
+      // renames: Spark's committer merges task outputs in an order that
+      // varies (29 to 32 seen), so the ceiling is its bound for the 30
+      // files of 4 tasks — a rename per task and per file — plus the
+      // one commit rename
+    }, Some("work/index" -> Map("listStatus" -> 89, "open" -> 96, "rename" -> 35))),
     Budget("probeWinnowIndex of ten twins against a built index", 9, { dir =>
       val idx = s"$dir/index"
       Winnow.buildWinnowIndex(docs(0, 40), "id", "text", idx, fpBuckets = 8)
@@ -250,23 +254,23 @@ class JobBudgetSpec extends SparkFunSuite {
       }
     }))
 
-  budgets.foreach { case Budget(call, maxJobs, setUp, catalogOps) =>
+  budgets.foreach { case Budget(call, maxJobs, setUp, dirOps) =>
     test(s"job budget: $call runs at most $maxJobs jobs") {
       val dir = tempDir("budget")
       val run = setUp(dir)
       run()()
       RecordingLocalFs.reset()
       val (jobs, check) = jobsOf(run())
-      val ops = catalogOps.map { case (sub, _) =>
+      val ops = dirOps.map { case (sub, _) =>
         RecordingLocalFs.operationsUnder(s"$dir/$sub") }
       check()
       info(s"$jobs jobs")
       assert(jobs <= maxJobs, s"$call ran $jobs jobs, budget $maxJobs")
-      for ((_, ceilings) <- catalogOps; made <- ops) {
-        info(s"catalog operations: $made")
+      for ((sub, ceilings) <- dirOps; made <- ops) {
+        info(s"operations under $sub: $made")
         ceilings.foreach { case (op, max) =>
           val n = made.getOrElse(op, 0)
-          assert(n <= max, s"$call made $n $op calls under its catalog, budget $max")
+          assert(n <= max, s"$call made $n $op calls under $sub, budget $max")
         }
       }
     }

@@ -196,8 +196,7 @@ class CdcSpec extends SparkFunSuite {
       val probe = Seq((999L, doc1.take(firstCut))).toDF("id", "bin")
       val hits = Cdc.probeCdcIndex(probe, "id", "bin", path).collect()
       assert(hits.nonEmpty)
-      val total = new java.io.File(path).listFiles()
-        .count(_.getName.startsWith("hb="))
+      val total = IndexFiles.partitions(spark, path)
       def scans(p: org.apache.spark.sql.execution.SparkPlan):
           Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

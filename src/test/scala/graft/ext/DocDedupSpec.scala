@@ -297,9 +297,7 @@ class DocDedupSpec extends SparkFunSuite {
       DocDedup.probeMinHashIndex(
         corpus.where(col("doc_id") === 1), corpus, "doc_id", "text",
         path, 7, 10).collect()
-      val total = new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("band=")).flatMap(_.listFiles())
-        .count(_.getName.startsWith("sb="))
+      val total = IndexFiles.partitions(spark, path)
       def scans(p: org.apache.spark.sql.execution.SparkPlan):
           Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -376,7 +374,7 @@ class DocDedupSpec extends SparkFunSuite {
     assert(found.contains((101L, 1L)) && found.contains((104L, 4L)),
       s"probe must see both the built and the appended half: $found")
     // sidecar params are reused, not re-derived: row width is 8 bands/doc
-    val perDoc = s.read.parquet(path).groupBy("id").count()
+    val perDoc = IndexFiles.rows(s, path).groupBy("id").count()
       .collect().map(r => r.getLong(1)).toSet
     assert(perDoc == Set(8L), s"every doc must carry 8 band rows: $perDoc")
   }
@@ -487,9 +485,7 @@ class DocDedupSpec extends SparkFunSuite {
     val df = DocDedup.probeHammingIndex(
       corpus.where(col("doc_id") === 1), "doc_id", "h", s"$dir/idx", 3)
     df.collect()
-    val total = new java.io.File(s"$dir/idx").listFiles()
-      .filter(_.getName.startsWith("q=")).flatMap(_.listFiles())
-      .count(_.getName.startsWith("qb="))
+    val total = IndexFiles.partitions(spark, s"$dir/idx")
     def scans(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -537,10 +533,9 @@ class DocDedupSpec extends SparkFunSuite {
     assert(viaInc == (0L until 40L by 2)
       .flatMap(k => Seq((k, k + 1, 1), (k + 1, k, 1))).toSet)
     // the append created no partition dirs outside the (q, qb) scheme
-    val dirs = new java.io.File(s"$dir/inc").listFiles()
-      .filter(_.getName.startsWith("q=")).flatMap(_.listFiles())
-      .filter(_.getName.startsWith("qb="))
-    assert(dirs.nonEmpty && dirs.length <= 4 * 8)
+    val dirs = new SignatureIndex.Version(spark, s"$dir/inc").manifest.keys
+    assert(dirs.nonEmpty && dirs.size <= 4 * 8 &&
+      dirs.forall(_.matches("q=\\d+/qb=\\d+")), s"partitions $dirs")
   }
 
   test("hammingClusters: labels every id, equals CC over the full pair " +

@@ -15,18 +15,22 @@ import org.apache.spark.sql.functions.{col, lit}
   * append.
   *
   * Interrupted compaction (those four plus VecDup's stream kernel): a
-  * compaction that crashed between its two swap renames leaves the
-  * index at `.compact_old_index-<uuid>` (optionally next to its verified
-  * `.compact_tmp_index-<uuid>` rewrite). The next fold must heal that
-  * before deciding "first batch": batch 1's twin of a batch-0 doc is
-  * matched, the index holds both batches, and a later compaction leaves
-  * no residue and loses no id.
+  * compaction that crashed before its commit rename leaves a `.tmp_*`
+  * staging directory inside the index — its rewritten partitions only,
+  * or the whole staged version with its MANIFEST and COMMIT. The next
+  * fold must read the committed version past it: batch 1's twin of a
+  * batch-0 doc is matched, the index holds both batches, and a later
+  * compaction leaves no residue and loses no id. (The rows keep the
+  * names they had when a compaction swapped directories by two
+  * renames.)
   *
   * Fused publish (the four kernels): a fold whose maintenance window
   * fires publishes its batch by a compaction of index ∪ batch. Its
   * matches and index rows are those of an append, and a crash inside
-  * that compaction — after the staged rewrite, or between the swap
-  * renames — heals so that the batch's replay indexes it exactly once.
+  * that compaction — after the staged rewrite, or at its commit rename
+  * — leaves the index as it was, so the batch's replay indexes it
+  * exactly once. [[CrashSweepSpec]] sweeps every step of the same
+  * commit.
   */
 class FoldBatchSpec extends SparkFunSuite {
   import FoldBatchSpec._
@@ -163,7 +167,7 @@ class FoldBatchSpec extends SparkFunSuite {
     df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
 
   private def indexRows(path: String): Seq[String] =
-    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    IndexFiles.rows(spark, path).collect().map(_.toString).sorted.toSeq
 
   private def ids(df: DataFrame): Set[Long] =
     df.select("id").distinct().collect().map(_.getLong(0)).toSet
@@ -201,27 +205,25 @@ class FoldBatchSpec extends SparkFunSuite {
       val index = new Path(s"$work/index")
       val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
       f.run(work, 0, b0, Nil, None)
-      // the on-disk state of a compaction that crashed between its two
-      // swap renames: the live layout moved aside to .compact_old_*,
-      // optionally next to its verified staged rewrite (same uuid)
-      val uuid = "beadfeed"
-      if (withTmp)
-        assert(FileUtil.copy(fs, index, fs,
-          new Path(s"$work/.compact_tmp_index-$uuid"), false,
-          spark.sparkContext.hadoopConfiguration))
-      assert(fs.rename(index, new Path(s"$work/.compact_old_index-$uuid")))
+      // the on-disk state of a compaction that crashed before its
+      // commit rename: the staged rewrite of version 2 in .tmp_*, with
+      // its MANIFEST and COMMIT when the whole version was staged
+      val tmp = new Path(index, ".tmp_v2-beadfeed")
+      assert(FileUtil.copy(fs, new Path(index, "v_000001"), fs, tmp, false,
+        spark.sparkContext.hadoopConfiguration))
+      if (!withTmp) Seq("MANIFEST", "COMMIT").foreach(n =>
+        assert(fs.delete(new Path(tmp, n), false)))
       val m1 = f.run(work, 1, b1, Seq(b0), None)
       val pairs = rows(spark.read.parquet(m1), Seq("id_a", "id_b"))
       assert(pairs(Seq(f.twin._1, f.twin._2)) ||
         pairs(Seq(f.twin._2, f.twin._1)),
         s"cross twin ${f.twin} missed; matches $pairs")
-      assert(ids(spark.read.parquet(index.toString)) == want,
+      assert(ids(IndexFiles.rows(spark, index.toString)) == want,
         "the index lost the pre-crash batch")
       f.compact(index.toString)
-      val residue = fs.listStatus(new Path(work)).map(_.getPath.getName)
-        .filter(_.startsWith(".compact_"))
-      assert(residue.isEmpty, s"residue ${residue.toSeq}")
-      assert(ids(spark.read.parquet(index.toString)) == want,
+      val residue = IndexFiles.residue(spark, index.toString)
+      assert(residue.isEmpty, s"residue $residue")
+      assert(ids(IndexFiles.rows(spark, index.toString)) == want,
         "compaction lost ids")
     }
 
@@ -229,23 +231,11 @@ class FoldBatchSpec extends SparkFunSuite {
   private def firing(batchId: Long) = Some(IndexMaintenance.Window(
     IndexMaintenance.CompactPolicy(every = Some(1)), batchId))
 
-  /** Data files in each partition directory of the index at `path`. */
-  private def filesPerPartition(path: String): Seq[Int] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(dir: Path): Seq[Int] = {
-      val (dirs, files) = fs.listStatus(dir).toSeq
-        .filterNot(s => s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.startsWith("."))
-        .partition(_.isDirectory)
-      dirs.flatMap(d => walk(d.getPath)) ++
-        (if (files.isEmpty) Nil else Seq(files.size))
-    }
-    walk(new Path(path))
-  }
+  /** Data files in each partition of the index at `path`. */
+  private def filesPerPartition(path: String): Seq[Int] =
+    IndexFiles.filesPerPartition(spark, path)
 
-  private def residue(fs: org.apache.hadoop.fs.FileSystem, work: String) =
-    fs.listStatus(new Path(work)).map(_.getPath.getName)
-      .filter(_.startsWith(".compact_")).toSeq
+  private def residue(index: Path) = IndexFiles.residue(spark, index.toString)
 
   families.foreach { f =>
     test(s"${f.fold.name}: a fold whose window fires publishes the batch " +
@@ -298,16 +288,17 @@ class FoldBatchSpec extends SparkFunSuite {
     }
   }
 
-  // A crash inside the compaction that publishes a batch: (a) while
-  // copying the sidecars into the verified staged rewrite, before the
-  // swap; (b) at the second swap rename, with the live index moved
-  // aside. The injected filesystem throws there, as a crash would.
+  // A crash inside the compaction that publishes a batch: (a) after
+  // the verified staged rewrite, at its MANIFEST; (b) at the commit
+  // rename of the whole staged version. The injected filesystem throws
+  // there, as a crash would. (The rows keep the names they had when
+  // the compaction swapped directories by two renames.)
   private val crashes = Seq[(String, String, Path => Boolean)](
     ("after the staged rewrite, before the swap", "create",
-      p => p.getParent.getName.startsWith(".compact_tmp_") &&
-        p.getName.startsWith("_graft_")),
+      p => p.getParent.getName.startsWith(".tmp_") &&
+        p.getName == "MANIFEST"),
     ("between the two swap renames", "rename",
-      _.getName.startsWith(".compact_tmp_")))
+      _.getName.startsWith(".tmp_")))
 
   for (f <- families; (where, op, at) <- crashes)
     test(s"${f.fold.name}: a fused publish that crashed $where heals; the " +
@@ -317,13 +308,12 @@ class FoldBatchSpec extends SparkFunSuite {
       val work = RecordingLocalFs.uri(
         s"${tempDir(s"fusedcrash-${f.fold.name}")}/work")
       val index = new Path(s"$work/index")
-      val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
       f.fold.run(work, 0, b0, Nil, None)
       RecordingLocalFs.failOnce(op)(at)
       val e = intercept[java.io.IOException](
         f.fold.run(work, 1, b1, Seq(b0), firing(1L)))
       assert(e.getMessage.contains("injected") && !RecordingLocalFs.pending)
-      assert(residue(fs, work).exists(_.startsWith(".compact_tmp_")))
+      assert(residue(index).exists(_.startsWith(".tmp_")))
       // the stream replays the batch it did not commit
       val m1 = f.fold.run(work, 1, b1, Seq(b0), firing(1L))
       val pairs = rows(spark.read.parquet(m1), Seq("id_a", "id_b"))
@@ -336,7 +326,7 @@ class FoldBatchSpec extends SparkFunSuite {
       assert(indexRows(index.toString) == indexRows(ref),
         "the index is not build(b0) + append(b1)")
       f.fold.compact(index.toString)
-      assert(residue(fs, work).isEmpty, s"residue ${residue(fs, work)}")
+      assert(residue(index).isEmpty, s"residue ${residue(index)}")
       assert(indexRows(index.toString) == indexRows(ref))
     }
 }

@@ -34,19 +34,19 @@ class IndexMaintenanceSpec extends SparkFunSuite {
     val pre = sorted(DocDedup.probeMinHashIndex(
       probes, corpus, "id", "text", idx, 7, 10))
     assert(pre.nonEmpty) // twins at J=1 must hit
-    val rowsPre = spark.read.parquet(idx).count()
+    val rowsPre = IndexFiles.rows(spark, idx).count()
     val stats = DocDedup.compactMinHashIndex(spark, idx)
     assert(stats.filesAfter < stats.filesBefore,
       s"expected fewer files, got $stats")
     assert(stats.rows == rowsPre)
-    assert(spark.read.parquet(idx).count() == rowsPre)
+    assert(IndexFiles.rows(spark, idx).count() == rowsPre)
     val post = sorted(DocDedup.probeMinHashIndex(
       probes, corpus, "id", "text", idx, 7, 10))
     assert(post == pre)
     // sidecar still pins the build parameters: an append after compact
     // must land in the same regime
     DocDedup.appendToMinHashIndex(docs(120, 130), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > rowsPre)
+    assert(IndexFiles.rows(spark, idx).count() > rowsPre)
   }
 
   test("hamming: probe bit-identical across compact, files drop") {
@@ -160,7 +160,7 @@ class IndexMaintenanceSpec extends SparkFunSuite {
     assert(stats.rows == 0L)
     // the sidecar must survive so the index remains appendable
     DocDedup.appendToMinHashIndex(docs(0, 5), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > 0)
+    assert(IndexFiles.rows(spark, idx).count() > 0)
   }
 
   test("a compaction that carries a batch publishes it, also on a " +
@@ -181,12 +181,34 @@ class IndexMaintenanceSpec extends SparkFunSuite {
     val second = IndexMaintenance.compactIndex(spark, idx, Seq("band", "sb"),
       Some(banded(5, 10)))
     assert(second.rows == first.rows + banded(5, 10).count())
-    assert(sorted(spark.read.parquet(idx)) == sorted(spark.read.parquet(ref)))
+    assert(sorted(IndexFiles.rows(spark, idx)) == sorted(IndexFiles.rows(spark, ref)))
     // one file per partition, and the sidecar still pins the regime
     assert(second.filesAfter ==
-      spark.read.parquet(idx).select("band", "sb").distinct().count())
+      IndexFiles.rows(spark, idx).select("band", "sb").distinct().count())
     DocDedup.appendToMinHashIndex(docs(10, 12), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > second.rows)
+    assert(IndexFiles.rows(spark, idx).count() > second.rows)
+  }
+
+  test("a compaction after an append that touched one partition " +
+    "rewrites that partition only") {
+    RecordingLocalFs.register(spark.sparkContext.hadoopConfiguration)
+    val idx = RecordingLocalFs.uri(tempDir("im-one") + "/index")
+    // one band: every document lands in exactly one (band, sb) partition
+    DocDedup.buildMinHashIndex(docs(0, 40), "id", "text", idx,
+      bands = 1, rows = 4, sigBuckets = 4)
+    DocDedup.appendToMinHashIndex(docs(40, 41), "id", "text", idx)
+    val partitions = IndexFiles.partitions(spark, idx)
+    assert(partitions > 1)
+    val rowsPre = IndexFiles.rows(spark, idx).count()
+    RecordingLocalFs.reset()
+    val stats = DocDedup.compactMinHashIndex(spark, idx)
+    val written = RecordingLocalFs.createdPaths.count(_.endsWith(".parquet"))
+    assert(written == 1, s"$written files written for one touched partition")
+    assert(stats.filesBefore == partitions + 1 && stats.filesAfter == partitions,
+      s"$stats over $partitions partitions")
+    assert(stats.rows == rowsPre)
+    assert(IndexFiles.rows(spark, idx).count() == rowsPre)
+    assert(IndexFiles.residue(spark, idx).isEmpty)
   }
 
   test("missing index fails loudly") {

@@ -6,9 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** r14 verdict asks #2/#3/#4: cost-triggered compaction policy,
-  * deterministic auto-heal of an interrupted compaction swap (the swap
-  * killed at EACH of its two windows), and single-writer enforcement
+/** r14 verdict asks #2/#4: cost-triggered compaction policy, staging
+  * residue of an interrupted compaction, and single-writer enforcement
   * (two interleaved committers — the loser throws, the survivor's rows
   * verify) for both the ext/ indexes (lock sentinel) and the catalog
   * (the pre-existing version-rename CAS, pinned here).
@@ -39,7 +38,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
       bands = 4, rows = 2, sigBuckets = 4)
     val pre = probe(idx)
     assert(pre.nonEmpty)
-    (idx, pre, spark.read.parquet(idx).count())
+    (idx, pre, IndexFiles.rows(spark, idx).count())
   }
 
   // ------------------------------------------------ compaction policy
@@ -89,69 +88,21 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
 
   // ------------------------------------------- interrupted-swap heal
 
-  test("heal: crash BETWEEN the two swap renames (old + verified tmp) " +
-    "completes forward; probes read a consistent row set") {
-    val (idx, pre, rows) = freshIndex("mhs-heal-mid")
-    val fs = fsOf(idx)
-    val root = new Path(idx)
-    // Reproduce compactIndex's exact on-disk state at the inter-rename
-    // window: a verified staged rewrite at .compact_tmp_* and the live
-    // layout moved aside to .compact_old_* with the SAME uuid, root
-    // absent. (The tmp here is a full identical layout — rename the
-    // build aside, rebuild, rename the rebuild aside too.)
-    val tmp = new Path(root.getParent, ".compact_tmp_index-abc12345")
-    val old = new Path(root.getParent, ".compact_old_index-abc12345")
-    assert(fs.rename(root, tmp))
-    DocDedup.buildMinHashIndex(docs(0, 40), "id", "text", idx,
-      bands = 4, rows = 2, sigBuckets = 4)
-    assert(fs.rename(root, old))
-    assert(!fs.exists(root) && fs.exists(tmp) && fs.exists(old))
-    // open-time heal: the probe's index open detects and completes
-    assert(probe(idx) == pre)
-    assert(fs.exists(root) && !fs.exists(tmp) && !fs.exists(old))
-    assert(spark.read.parquet(idx).count() == rows)
-  }
-
-  test("heal: crash AFTER aside-rename with no publishable tmp (the " +
-    "rollback window) restores the old layout") {
-    val (idx, pre, rows) = freshIndex("mhs-heal-old")
-    val fs = fsOf(idx)
-    val root = new Path(idx)
-    val old = new Path(root.getParent, ".compact_old_index-beadfeed")
-    assert(fs.rename(root, old))
-    assert(probe(idx) == pre) // heal rolled the old layout back
-    assert(fs.exists(root) && !fs.exists(old))
-    assert(spark.read.parquet(idx).count() == rows)
-  }
-
   test("heal: crash BEFORE the swap (stray tmp, live root) leaves " +
     "probes untouched; the next compaction sweeps the residue") {
     val (idx, pre, rows) = freshIndex("mhs-heal-pre")
     val fs = fsOf(idx)
     val root = new Path(idx)
-    val tmp = new Path(root.getParent, ".compact_tmp_index-cafe0000")
+    // an uncommitted version's staging: no reader looks inside
+    val tmp = new Path(root, ".tmp_v2-cafe0000")
     fs.mkdirs(tmp)
     val junk = fs.create(new Path(tmp, "part-junk.parquet"), true)
     try junk.write(Array.fill(8)(0x5A.toByte)) finally junk.close()
-    // live root is authoritative: reads ignore the dot-dir entirely
     assert(probe(idx) == pre)
     val stats = DocDedup.compactMinHashIndex(spark, idx)
     assert(stats.rows == rows)
-    assert(!fs.exists(tmp), "compaction must sweep pre-swap residue")
+    assert(!fs.exists(tmp), "compaction must sweep staging residue")
     assert(probe(idx) == pre)
-  }
-
-  test("heal: ambiguous residue (two interrupted swaps) fails loudly " +
-    "instead of guessing") {
-    val (idx, _, _) = freshIndex("mhs-heal-ambig")
-    val fs = fsOf(idx)
-    val root = new Path(idx)
-    assert(fs.rename(root, new Path(root.getParent,
-      ".compact_old_index-11111111")))
-    fs.mkdirs(new Path(root.getParent, ".compact_old_index-22222222"))
-    val ex = intercept[IllegalArgumentException](
-      IndexMaintenance.recoverInterruptedSwap(spark, idx))
-    assert(ex.getMessage.contains("ambiguous"))
   }
 
   // -------------------------------------------- single-writer locks
@@ -168,13 +119,13 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     intercept[WriterLock.ConcurrentWriterException](
       DocDedup.compactMinHashIndex(spark, idx))
     // nothing was written by the losers
-    assert(spark.read.parquet(idx).count() == rows)
+    assert(IndexFiles.rows(spark, idx).count() == rows)
     assert(probe(idx) == pre)
     // remediation: break the stale sentinel, writers work again
     assert(WriterLock.breakLock(spark, idx))
     assert(!WriterLock.isLocked(spark, idx))
     DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > rows)
+    assert(IndexFiles.rows(spark, idx).count() > rows)
   }
 
   private def plantSentinel(idx: String, info: String): Path = {
@@ -204,7 +155,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     assert(WriterLock.isLocked(spark, idx))
     // the restart proceeds: provably-dead holder, sentinel taken over
     DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > rows)
+    assert(IndexFiles.rows(spark, idx).count() > rows)
     assert(MaintenanceEvents.count(idx,
       MaintenanceEvents.StaleTakeover) == c0 + 1)
     assert(!WriterLock.isLocked(spark, idx))
@@ -245,7 +196,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     val t0 = System.nanoTime()
     DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx)
     val waitedMs = (System.nanoTime() - t0) / 1000000L
-    assert(spark.read.parquet(idx).count() > rows)
+    assert(IndexFiles.rows(spark, idx).count() > rows)
     // the takeover OBSERVED the full declared window (not a shortcut)
     assert(waitedMs >= 400, s"took over after only $waitedMs ms")
     assert(MaintenanceEvents.count(idx,
@@ -283,7 +234,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
         DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx))
       // nothing stolen, nothing written
       assert(WriterLock.isLocked(spark, idx))
-      assert(spark.read.parquet(idx).count() == rows)
+      assert(IndexFiles.rows(spark, idx).count() == rows)
       assert(probe(idx) == pre)
     } finally {
       beating = false
@@ -363,7 +314,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
       .getOrElse(MaintenanceEvents.LeaseTakeover, 0L) == 1L)
     assert(!WriterLock.isLocked(spark, s"$work/index"))
     // and the takeover wrote real work: batch 1's docs are indexed
-    assert(spark.read.parquet(s"$work/index")
+    assert(IndexFiles.rows(spark, s"$work/index")
       .where(col("id") >= 100L).count() > 0)
   }
 
@@ -547,10 +498,9 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
       assert(fs.delete(hb, false)) // restore releasability
     }
     // live index untouched, no staged residue left behind
-    assert(spark.read.parquet(idx).count() == rows)
+    assert(IndexFiles.rows(spark, idx).count() == rows)
     assert(probe(idx) == pre)
-    assert(!fsOf(idx).listStatus(new Path(idx).getParent)
-      .exists(_.getPath.getName.startsWith(".compact_tmp_")))
+    assert(IndexFiles.residue(spark, idx).isEmpty)
     // and a HEALTHY hold still compacts (the guard is jeopardy-gated)
     DocDedup.compactMinHashIndex(spark, idx)
     assert(probe(idx) == pre)
@@ -586,7 +536,7 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     val still = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     assert(still == absurd, "the sentinel was taken over instantly")
-    assert(spark.read.parquet(idx).count() == rows)
+    assert(IndexFiles.rows(spark, idx).count() == rows)
     // interrupting the observer resolves it as a loud conflict
     t.interrupt()
     t.join(30000)
@@ -688,12 +638,12 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     intercept[WriterLock.ConcurrentWriterException](
       DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx))
     assert(fs.exists(claim) && WriterLock.isLocked(spark, idx))
-    assert(spark.read.parquet(idx).count() == rows)
+    assert(IndexFiles.rows(spark, idx).count() == rows)
     // the claim's holder crashed: once the claim ages past its TTL the
     // next healer sweeps it and completes the takeover unattended
     fs.setTimes(claim, System.currentTimeMillis() - 11L * 60 * 1000, -1)
     DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx)
-    assert(spark.read.parquet(idx).count() > rows)
+    assert(IndexFiles.rows(spark, idx).count() > rows)
     assert(!fs.exists(claim), "winning healer must release its claim")
     assert(!WriterLock.isLocked(spark, idx))
   }
@@ -1024,23 +974,15 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     val fs = fsOf(idx)
     val root = new Path(idx)
     val before = Seq(MaintenanceEvents.LockConflict,
-      MaintenanceEvents.HealCompleted, MaintenanceEvents.CompactFire,
-      MaintenanceEvents.CompactSkip)
+      MaintenanceEvents.CompactFire, MaintenanceEvents.CompactSkip)
       .map(e => e -> MaintenanceEvents.count(idx, e)).toMap
     // 1. forced conflict: an opaque foreign sentinel
     fs.create(WriterLock.lockPath(root), false).close()
     intercept[WriterLock.ConcurrentWriterException](
       DocDedup.appendToMinHashIndex(docs(40, 50), "id", "text", idx))
     WriterLock.breakLock(spark, idx)
-    // 2. heal: interrupted swap (both halves present, root absent)
-    val tmp = new Path(root.getParent, ".compact_tmp_index-0bs11111")
-    val old = new Path(root.getParent, ".compact_old_index-0bs11111")
-    assert(fs.rename(root, tmp))
-    DocDedup.buildMinHashIndex(docs(0, 40), "id", "text", idx,
-      bands = 4, rows = 2, sigBuckets = 4)
-    assert(fs.rename(root, old))
-    assert(probe(idx) == pre) // open-time heal completes the swap
-    // 3. maintenance window: one gauged skip, then one fire
+    assert(probe(idx) == pre)
+    // 2. maintenance window: one gauged skip, then one fire
     IndexMaintenance.maybeCompact(
       IndexMaintenance.CompactPolicy(maxDataFiles = Some(100000L)), 0L,
       idx,
@@ -1051,10 +993,9 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
       idx,
       IndexMaintenance.dataFileCount(spark, idx))(
       DocDedup.compactMinHashIndex(spark, idx))
-    assert(spark.read.parquet(idx).count() == rows)
+    assert(IndexFiles.rows(spark, idx).count() == rows)
     def delta(e: String) = MaintenanceEvents.count(idx, e) - before(e)
     assert(delta(MaintenanceEvents.LockConflict) == 1)
-    assert(delta(MaintenanceEvents.HealCompleted) == 1)
     assert(delta(MaintenanceEvents.CompactSkip) == 1)
     assert(delta(MaintenanceEvents.CompactFire) == 1)
     // per-directory isolation: an untouched sibling dir reads zero
@@ -1084,14 +1025,14 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
     release.countDown()
     survivor.join(120000)
     assert(survivorDone)
-    val after = spark.read.parquet(idx)
+    val after = IndexFiles.rows(spark, idx)
     assert(after.count() > rows)
     // survivor's ids present, loser's absent
     assert(after.where(col("id") >= 40 && col("id") < 60).count() > 0)
     assert(after.where(col("id") >= 60).count() == 0)
     // sentinel released: a later (properly serialized) writer proceeds
     DocDedup.appendToMinHashIndex(docs(60, 80), "id", "text", idx)
-    assert(spark.read.parquet(idx).where(col("id") >= 60).count() > 0)
+    assert(IndexFiles.rows(spark, idx).where(col("id") >= 60).count() > 0)
   }
 
   test("writer lock: reentrant on the owning thread (fold append " +
@@ -1108,19 +1049,6 @@ class MaintenanceHardeningSpec extends SparkFunSuite {
         throw new RuntimeException("boom")
       })
     assert(!WriterLock.isLocked(spark, dir))
-  }
-
-  test("heal under a held lock: a reader that would heal an unreadable " +
-    "index fails loudly instead of racing a live compactor") {
-    val (idx, _, _) = freshIndex("mhs-lock-heal")
-    val fs = fsOf(idx)
-    val root = new Path(idx)
-    assert(fs.rename(root, new Path(root.getParent,
-      ".compact_old_index-feedf00d")))
-    fs.create(WriterLock.lockPath(root), false).close()
-    intercept[WriterLock.ConcurrentWriterException](probe(idx))
-    WriterLock.breakLock(spark, idx)
-    assert(probe(idx).nonEmpty) // now heals and reads
   }
 
   // ------------------------------------------------ catalog CAS pin

@@ -124,9 +124,7 @@ class SimilaritySpec extends SparkFunSuite {
     assert(rows(viaIndex) == viaJoin)
     // partition pruning actually happened: the scan touched at most the
     // probed (tbl, sig) buckets, strictly fewer than the index total
-    val total = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("tbl=")).flatMap(_.listFiles())
-      .count(_.getName.startsWith("sig="))
+    val total = IndexFiles.partitions(spark, path)
     def scans(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -207,8 +205,7 @@ class SimilaritySpec extends SparkFunSuite {
     assert(rows(viaIndex) == viaJoin)
     // partition pruning actually happened: the scan touched at most the
     // probed cells, strictly fewer than the index's cell count
-    val total = new java.io.File(path).listFiles()
-      .count(_.getName.startsWith("cid="))
+    val total = IndexFiles.partitions(spark, path)
     def scans(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -254,7 +251,7 @@ class SimilaritySpec extends SparkFunSuite {
     // cells of the SAME index read back directly.
     Similarity.buildIvfIndex(half1, "vec_id", "embedding", split, nlist = 8)
     Similarity.appendToIvfIndex(half2, "vec_id", "embedding", split)
-    val stored = spark.read.parquet(split)
+    val stored = IndexFiles.rows(spark, split)
     assert(stored.count() == 200L)
     assert(stored.select("id").distinct().count() == 200L)
     // every appended vector landed in its argmax cell: re-deriving the
@@ -384,10 +381,10 @@ class SimilaritySpec extends SparkFunSuite {
     assert(viaIdx == direct, s"index $viaIdx != join form $direct")
     // the code table carries NO vectors: 4 bytes of codes replace 64
     // bytes of floats per vector -- the whole point of PQ
-    val schema = spark.read.parquet(s"$dir/idx").schema
+    val schema = IndexFiles.rows(spark, s"$dir/idx").schema
     assert(schema.fieldNames.sorted.sameElements(
       Array("code", "id", "s")), schema.treeString)
-    assert(spark.read.parquet(s"$dir/idx").count() == 120 * 4)
+    assert(IndexFiles.rows(spark, s"$dir/idx").count() == 120 * 4)
   }
 
 
@@ -431,8 +428,7 @@ class SimilaritySpec extends SparkFunSuite {
         scans(m.relation.cachedPlan)
       case other => other.children.flatMap(scans)
     }
-    val total = new java.io.File(s"$dir/idx").listFiles()
-      .count(_.getName.startsWith("cid="))
+    val total = IndexFiles.partitions(spark, s"$dir/idx")
     val scanned = scans(res.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString
         .contains("ivfpq-index")))
@@ -466,7 +462,7 @@ class SimilaritySpec extends SparkFunSuite {
     assert(viaInc.exists(_._2 % 2 == 1) && viaInc.exists(_._2 % 2 == 0),
       s"append boundary not crossed: $viaInc")
     // the incremental index holds every (id, s) exactly once
-    assert(spark.read.parquet(s"$dir/inc").count() == 100 * 4)
+    assert(IndexFiles.rows(spark, s"$dir/inc").count() == 100 * 4)
     // IVF-PQ: same boundary argument through the partitioned layout
     Similarity.buildIvfPqIndex(evens, "vec_id", "embedding",
       s"$dir/ivfinc", nlist = 8, m = 4, ksub = 16)
@@ -476,7 +472,7 @@ class SimilaritySpec extends SparkFunSuite {
       "embedding", s"$dir/ivfinc", 5, nprobe = 8)) // nprobe=nlist: full
     assert(ivfRows.exists(_._2 % 2 == 1) && ivfRows.exists(_._2 % 2 == 0),
       s"ivf-pq append boundary not crossed: $ivfRows")
-    assert(spark.read.parquet(s"$dir/ivfinc").count() == 100 * 4)
+    assert(IndexFiles.rows(spark, s"$dir/ivfinc").count() == 100 * 4)
     // at nprobe = nlist the composed probe degenerates to flat ADC
     // over the same codebook sample -> identical result sets
     assert(ivfRows == viaInc,
